@@ -22,8 +22,54 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  private def materialize(df: org.apache.spark.sql.DataFrame): Unit =
+  /** Worker threads of the bench layout: `SPARK_GRAFT_CPUS`, else every
+    * core the JVM sees — a fixed default over- or under-subscribes any
+    * host but the one it was picked on.
+    */
+  private[graft] def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  private[graft] def sfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** The bench-layout session every timing main shares (see scaladoc
+    * above for the split sizing).
+    */
+  private[graft] def session(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // 50+ headline queries generate far more than the default 100
+      // codegen cache entries, so ROUND-ROBIN passes would re-pay
+      // janino compilation for every query every pass (+0.3-0.8 s
+      // uniformly, measured) — size the cache to the workload
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
+      // split sizing for the small local files (see scaladoc): without
+      // this, file packing undoes the multi-file layout below
+      .config("spark.sql.files.maxPartitionBytes", (512L << 10).toString)
+      .config("spark.sql.files.openCostInBytes", (64L << 10).toString)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  private[graft] def materialize(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
+
+  /** JVM + whole-stage-codegen warmup: run each query once at the
+    * smallest SF so measured numbers reflect steady-state execution
+    * (first use of each plan shape pays one-time janino compilation).
+    * Failures are left to the measured run to report.
+    */
+  private[graft] def warm(spark: SparkSession, names: Seq[String]): Unit =
+    names.foreach { name =>
+      try materialize(SparkEntry.queries(name)(spark, "/root/testdata/sf0.001"))
+      catch { case _: Throwable => () }
+    }
 
   /** Rewrite `sfDir` tables into `cpus`-way multi-file parquet under a
     * temp dir; returns the new dir. Nanos timestamps pass through as
@@ -50,35 +96,17 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // 50+ headline queries generate far more than the default 100
-      // codegen cache entries, so ROUND-ROBIN passes would re-pay
-      // janino compilation for every query every pass (+0.3-0.8 s
-      // uniformly, measured) — size the cache to the workload
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // split sizing for the small local files (see scaladoc): without
-      // this, file packing undoes the multi-file layout below
-      .config("spark.sql.files.maxPartitionBytes", (512L << 10).toString)
-      .config("spark.sql.files.openCostInBytes", (64L << 10).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val benchDir = rematerialize(spark, sfDir, cpus.toInt)
-    // JVM + whole-stage-codegen warmup: run every headline query once at
-    // the smallest SF so measured numbers reflect steady-state execution
-    // (first use of each plan shape pays one-time janino compilation).
-    val warmDir = "/root/testdata/sf0.001"
-    SparkEntry.benchQueries.foreach { name =>
-      try materialize(SparkEntry.queries(name)(spark, warmDir))
-      catch { case _: Throwable => () }
-    }
+    // optional query names restrict the run (per-query iteration); with
+    // none, every bench query is timed. Unknown names fail loudly, as in
+    // Verify.
+    val names = if (args.nonEmpty) args.toSeq.distinct else SparkEntry.benchQueries
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val sfDir = this.sfDir
+    val cpus = this.cpus
+    val spark = session(cpus)
+    val benchDir = rematerialize(spark, sfDir, cpus)
+    warm(spark, names)
     // MIN of 3 interleaved runs per query. The workload is deterministic,
     // so the true cost is the fastest observed run; anything above it is
     // background load, GC, or scheduling jitter. Median-of-interleaved
@@ -113,21 +141,20 @@ object Bench {
         errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
         samples.remove(name)
       }
-    for (_ <- 1 to 3; name <- SparkEntry.benchQueries if !errors.contains(name))
+    for (_ <- 1 to 3; name <- names if !errors.contains(name))
       timeOne(name)
-    for (_ <- 1 to 6; name <- SparkEntry.benchQueries
-         if driverLoop(name) && !errors.contains(name))
+    for (_ <- 1 to 6; name <- names if driverLoop(name) && !errors.contains(name))
       timeOne(name)
-    val results = SparkEntry.benchQueries.flatMap { name =>
+    val results = names.flatMap { name =>
       samples.get(name).map(ts => name -> ts.min)
     }
     val timed = results.toMap
-    val qs = SparkEntry.benchQueries.map { n =>
+    val qs = names.map { n =>
       "\"" + n + "\":" + timed.get(n).map(v => f"$v%.3f").getOrElse("null")
     }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"errors":${Jsons.obj(errors)},"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"errors":${Jsons.obj(errors)},"cpus":$cpus,"sf":"$sfDir"}"""
     // The stdout line lands in a log TAIL the driver regex-mines, and
     // the tail window is ~2 KB: the full 90-query map (~2.5 KB) arrives
     // front-truncated and parses as nothing, so per-query timings have
@@ -139,7 +166,7 @@ object Bench {
     println(json)
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     val compact =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"sf":"$sfDir","detail":"$out"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"cpus":$cpus,"sf":"$sfDir","detail":"$out"}"""
     println(compact)
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

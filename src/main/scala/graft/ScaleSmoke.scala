@@ -31,9 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object ScaleSmoke {
 
-  private def materialize(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-
   /** Per-copy key offset: one stride for every key family keeps FKs
     * aligned; divisible by the quantizer strides (25, 5, 7, 9, 10, 97
     * need not divide — only densities matter for those panels).
@@ -104,33 +101,18 @@ object ScaleSmoke {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = Bench.sfDir
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Bench.cpus
     val slack = 3.0
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.files.maxPartitionBytes", (512L << 10).toString)
-      .config("spark.sql.files.openCostInBytes", (64L << 10).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val baseDir = Bench.rematerialize(spark, sfDir, cpus.toInt)
-    val scaledDir = scaleUp(spark, sfDir, factor, cpus.toInt)
-    // warm codegen/JIT once per plan shape at the smallest SF
-    SparkEntry.benchQueries.foreach { name =>
-      try materialize(SparkEntry.queries(name)(spark, "/root/testdata/sf0.001"))
-      catch { case _: Throwable => () }
-    }
+    val spark = Bench.session(cpus)
+    val baseDir = Bench.rematerialize(spark, sfDir, cpus)
+    val scaledDir = scaleUp(spark, sfDir, factor, cpus)
+    Bench.warm(spark, SparkEntry.benchQueries)
     def timeOne(name: String, dir: String): Option[Double] =
       try {
         val t0 = System.nanoTime()
-        materialize(SparkEntry.queries(name)(spark, dir))
+        Bench.materialize(SparkEntry.queries(name)(spark, dir))
         Some((System.nanoTime() - t0) / 1e9)
       } catch { case e: Throwable =>
         System.err.println(s"[scale] $name at $dir FAILED: ${e.getMessage}")

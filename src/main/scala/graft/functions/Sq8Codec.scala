@@ -102,13 +102,15 @@ object Sq8CodecUtil {
     var i = 0
     while (i < n) {
       val l = lo(i); val h = hi(i)
+      // read before the degenerate-dim branch: a NaN refuses at every
+      // dim, not only where the model has a range
+      val xd = elemAt(vec, et, i)
+      if (xd.isNaN && !clamp) throw new IllegalArgumentException(
+        s"sq8_encode: NaN component at dim $i — refusing a silent code " +
+          "(clamped appends map NaN to the hi boundary)")
       val code =
         if (h == l) 0
         else {
-          val xd = elemAt(vec, et, i)
-          if (xd.isNaN && !clamp) throw new IllegalArgumentException(
-            s"sq8_encode: NaN component at dim $i — refusing a silent code " +
-              "(clamped appends map NaN to the hi boundary)")
           // NaN clamps to hi: Spark's least/greatest (the replaced
           // Column form) order NaN as the largest double
           val xc = if (clamp) {
@@ -286,15 +288,17 @@ object Sq8Codec {
   // ordering) would make every per-element guard useless: h == l is
   // false for NaN, every comparison against NaN is false, and
   // Math.floor(NaN).toInt mints code 0 for EVERY vector at that dim.
+  // An infinite bound does the same: (hi - lo) is infinite, so
+  // (x - lo) * 255 / Inf is 0 (or NaN for lo = -Inf).
   // Refuse the model once at expression construction — zero hot-path
   // cost — so a poisoned train fails loudly at build time.
   private def requireFinite(name: String, a: Array[Double]): Unit = {
     var i = 0
     while (i < a.length) {
-      if (java.lang.Double.isNaN(a(i))) throw new IllegalArgumentException(
-        s"Sq8Codec: model $name has NaN at dim $i — a NaN component in " +
-          "the build corpus poisoned the min/max train; refusing a model " +
-          "that would silently mint code 0 at that dim")
+      if (!java.lang.Double.isFinite(a(i))) throw new IllegalArgumentException(
+        s"Sq8Codec: model $name has ${a(i)} at dim $i — a non-finite " +
+          "component in the build corpus poisoned the min/max train; " +
+          "refusing a model that would silently mint code 0 at that dim")
       i += 1
     }
   }

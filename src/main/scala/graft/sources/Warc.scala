@@ -659,6 +659,12 @@ object Warc {
     * rendered on the filesystem; Spark refuses a self-overwriting
     * plan, and rewriting unaffected shards to dodge that would be the
     * full rebuild again.
+    *
+    * `segments.schema` must equal the index schema the layout was
+    * written with: the layout is read with that schema GIVEN, not
+    * inferred. A committed layout with no shard yet (a
+    * [[writeCdxShards]] build over zero rows leaves only `_SUCCESS`)
+    * is empty: the surviving segment rows become a one-shard layout.
     */
   def compactCdxShards(dir: String, segments: DataFrame,
                        tombstones: Option[DataFrame] = None): Unit = {
@@ -668,13 +674,25 @@ object Warc {
     // With a given schema the old "no shard column" require can never
     // fire (the schema always carries it), so the layout guard is an
     // FS-level one instead: a writeCdxShards dir holds shard=<id>
-    // partition directories
+    // partition directories, or only its commit marker when empty
     val dirPath = new org.apache.hadoop.fs.Path(dir)
     val dirFs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(dirFs.exists(dirPath) && dirFs.listStatus(dirPath)
-        .exists(st => st.isDirectory && st.getPath.getName.startsWith("shard=")),
+    val listing =
+      if (dirFs.exists(dirPath)) dirFs.listStatus(dirPath)
+      else Array.empty[org.apache.hadoop.fs.FileStatus]
+    val hasShards =
+      listing.exists(st => st.isDirectory && st.getPath.getName.startsWith("shard="))
+    require(hasShards || listing.exists(_.getPath.getName == "_SUCCESS"),
       s"compactCdxShards: $dir is not a writeCdxShards layout " +
-        "(no shard=<id> partition directories)")
+        "(no shard=<id> partition directories and no _SUCCESS commit)")
+    if (!hasShards) {
+      val live = tombstones.fold(segments) { t =>
+        segments.join(broadcast(t.select(col("file_id"), col("offset")).distinct()),
+          Seq("file_id", "offset"), "left_anti")
+      }
+      writeCdxShards(live, dir, numShards = 1)
+      return
+    }
     val current = readCdxShards(spark, dir, segments.schema)
     val cluster = cdxClusterIndex(current)
     // the routed delta is consumed twice (the affected-shard collect

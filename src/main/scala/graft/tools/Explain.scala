@@ -1,23 +1,16 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump formatted physical plans for the headline queries — the
-  * shuffle/broadcast/pushdown audit loop. Run:
+  * shuffle/broadcast/pushdown audit loop — in the bench session on
+  * SPARK_GRAFT_SF_DIR. Run:
   *   sbt "runMain graft.tools.Explain q01_pricing_summary q03_revenue_by_segment"
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session(graft.Bench.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else graft.SparkEntry.benchQueries
-    val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val sf = graft.Bench.sfDir
     names.foreach { n =>
       println(s"\n========== $n ==========")
       graft.SparkEntry.queries(n)(spark, sf).explain("formatted")

@@ -1,79 +1,81 @@
 package graft.tools
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.BusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev harness for the core-scaling blind spot: at bench SF every query
   * is 0.2-3 s and per-job scheduling/planning overhead dominates, so
   * wall-clock core-scaling ratios measure the scheduler, not the
-  * engine. This main runs the WHOLE bench suite once (after the bench's
-  * own warmup) and reports, per query, wall seconds alongside
-  * sum-of-job seconds — the in-job share is the part that scales with
-  * cores; the gap is driver work (planning, commits, collects) that no
-  * core count removes. One JSON line + sidecar
-  * (SPARK_GRAFT_JOBTIME_OUT, default jobtime_report.json).
-  * Same env contract as Bench; NOT part of the driver surface.
+  * engine. This main runs the named queries (default: the WHOLE bench
+  * suite) once in the bench session after the bench's own warmup and
+  * reports, per query, wall seconds alongside sum-of-job seconds — the
+  * in-job share is the part that scales with cores; the gap is driver
+  * work (planning, commits, collects) that no core count removes. One
+  * JSON line + sidecar (SPARK_GRAFT_JOBTIME_OUT, default
+  * jobtime_report.json); the sidecar also lists each query's jobs as
+  * (id, seconds, callsite) — the where-do-the-seconds-go view for
+  * multi-job lifecycle entries whose cost the SQL plan can't attribute.
+  * Same env contract as Bench; a dev tool, not a measured surface. Run:
+  *   sbt "runMain graft.tools.JobTimes p218_sq8_lifecycle"
   */
 object JobTimes {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.files.maxPartitionBytes", (512L << 10).toString)
-      .config("spark.sql.files.openCostInBytes", (64L << 10).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def materialize(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    val benchDir = graft.Bench.rematerialize(spark, sfDir, cpus.toInt)
+    val sfDir = graft.Bench.sfDir
+    val cpus = graft.Bench.cpus
+    val spark = graft.Bench.session(cpus)
+    val benchDir = graft.Bench.rematerialize(spark, sfDir, cpus)
     val names = if (args.nonEmpty) args.toSeq else graft.SparkEntry.benchQueries
-    names.foreach { n =>
-      try materialize(graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001"))
-      catch { case _: Throwable => () }
-    }
-    // single-threaded suite: every job between a query's start and end
-    // belongs to that query, so a plain accumulator attributes exactly
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    val jobMillis = new java.util.concurrent.atomic.AtomicLong()
-    val jobCount = new java.util.concurrent.atomic.AtomicLong()
+    graft.Bench.warm(spark, names)
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String)]()
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        starts.put(js.jobId, js.time)
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        // the result stage is created last (highest id) and named after
+        // the job's short call site; the "callSite.short" job property
+        // is only set when user code called setCallSite
+        val site = js.stageInfos.sortBy(_.stageId).lastOption.map(_.name).getOrElse("?")
+        starts.put(js.jobId, (js.time, site))
+      }
       override def onJobEnd(je: SparkListenerJobEnd): Unit =
-        Option(starts.remove(je.jobId)).foreach { t0 =>
-          jobMillis.addAndGet(je.time - t0)
-          jobCount.incrementAndGet()
+        Option(starts.remove(je.jobId)).foreach { case (t0, site) =>
+          jobs.add((je.jobId, (je.time - t0) / 1e3, site))
         }
     })
-    // failure-honest like Bench: one bad name or throwing query must
-    // not lose the whole report — it appears with wall = -1
+    // single-threaded suite: every job between a query's start and end
+    // belongs to that query. Events reach the listener asynchronously,
+    // so the bus is drained before the reset (nothing of the previous
+    // query arrives late) and before the read (nothing of this one is
+    // missing).
+    // Failure-honest like Bench: one bad name or throwing query must
+    // not lose the whole report — it appears with wall = -1.
     val rows = names.map { n =>
-      jobMillis.set(0L); jobCount.set(0L)
+      BusBridge.drain(spark.sparkContext)
+      jobs.clear()
       val t0 = System.nanoTime()
-      val ok = try { materialize(graft.SparkEntry.queries(n)(spark, benchDir)); true }
+      val ok = try { graft.Bench.materialize(graft.SparkEntry.queries(n)(spark, benchDir)); true }
         catch { case e: Throwable =>
           System.err.println(s"[jobtimes] $n FAILED: ${e.getMessage}"); false }
       val wall = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      Thread.sleep(50) // let the last JobEnd event drain
-      (n, wall, jobMillis.get() / 1e3, jobCount.get())
+      BusBridge.drain(spark.sparkContext)
+      (n, wall, jobs.asScala.toVector.sortBy(_._1))
     }
-    val body = rows.map { case (n, w, j, c) =>
-      f"""\"$n\":{\"wall\":$w%.3f,\"in_jobs\":$j%.3f,\"n_jobs\":$c}"""
-    }.mkString("{", ",", "}")
-    val totalWall = rows.filter(_._2 >= 0).map(_._2).sum
-    val totalJobs = rows.map(_._3).sum
-    val json = f"""{"metric":"jobtime","wall_total":$totalWall%.3f,"in_jobs_total":$totalJobs%.3f,"cpus":$cpus,"sf":"$sfDir","queries":$body}"""
-    println(json)
+    def report(withJobs: Boolean): String = {
+      val body = rows.map { case (n, w, js) =>
+        val detail = if (!withJobs) "" else js.map { case (id, s, site) =>
+          f"""{"id":$id,"s":$s%.3f,"site":${graft.Jsons.str(site)}}"""
+        }.mkString(""","jobs":[""", ",", "]")
+        f"""\"$n\":{\"wall\":$w%.3f,\"in_jobs\":${js.map(_._2).sum}%.3f,\"n_jobs\":${js.size}$detail}"""
+      }.mkString("{", ",", "}")
+      val totalWall = rows.filter(_._2 >= 0).map(_._2).sum
+      val totalJobs = rows.flatMap(_._3).map(_._2).sum
+      f"""{"metric":"jobtime","wall_total":$totalWall%.3f,"in_jobs_total":$totalJobs%.3f,"cpus":$cpus,"sf":"$sfDir","queries":$body}"""
+    }
+    println(report(withJobs = false))
     val out = sys.env.getOrElse("SPARK_GRAFT_JOBTIME_OUT", "jobtime_report.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      (report(withJobs = true) + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Throwable => System.err.println(s"jobtime write failed: $e") }
     spark.stop()
   }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: sweep every declared query's physical plan for scale
   * anti-patterns — unpartitioned (global) windows, SortAggregates,
   * cartesian products, nested-loop joins — and print one line per
@@ -113,10 +111,7 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Bench.session(graft.Bench.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val skip = Set("q30_streaming_window", "q31_streaming_dedup",
       "q37_stream_stream_join", "q22_session_window", "p26_streaming_curation",

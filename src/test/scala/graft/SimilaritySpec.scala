@@ -890,6 +890,31 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
+  test("Sq8Codec: a NaN or ±Inf model refuses at build time; an unclamped NaN refuses at a degenerate dim too") {
+    import graft.functions.Sq8Codec
+    val ok = Array(0.0, 2.0)
+    Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity).foreach { bad =>
+      val e1 = intercept[IllegalArgumentException](
+        Sq8Codec.roundTrip(col("v"), Array(0.0, bad), Array(10.0, 2.0)))
+      assert(e1.getMessage.contains("model lo has"), e1.getMessage)
+      val e2 = intercept[IllegalArgumentException](
+        Sq8Codec.encode(col("v"), ok, Array(bad, 2.0), clamp = false))
+      assert(e2.getMessage.contains("model hi has"), e2.getMessage)
+    }
+    // dim 1 is degenerate (lo == hi): a finite component mints code 0,
+    // a NaN one refuses like it does at any ranged dim
+    val hi = Array(10.0, 2.0)
+    def codes(v: Array[Float]): Array[Byte] =
+      Seq(Tuple1(v)).toDF("v")
+        .select(Sq8Codec.encode(col("v"), ok, hi, clamp = false))
+        .as[Array[Byte]].head()
+    assert(codes(Array(10f, 2f)).toSeq == Seq(255.toByte, 0.toByte))
+    val e3 = intercept[Exception](TestSpark.quietly(codes(Array(10f, Float.NaN))))
+    assert(Iterator.iterate[Throwable](e3)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("NaN component at dim 1"))),
+      e3.toString)
+  }
+
   test("appendToSq8Store: frozen-model clamp counted, id collisions refuse, drift flags at the threshold") {
     val base = java.nio.file.Files.createTempDirectory("graft_sq8_app").toString
     try {

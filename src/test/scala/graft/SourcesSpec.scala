@@ -588,6 +588,37 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
+  test("Warc: compactCdxShards over an empty committed layout writes the segment as one shard; a missing dir still refuses") {
+    import org.apache.spark.sql.functions.{col, lit}
+    import graft.sources.Warc
+    val cdx = Seq(("com,b)/p", 2L, 200L), ("com,a)/p", 1L, 100L),
+        ("com,c)/p", 3L, 300L))
+      .map { case (k, f, o) => (k, f, o, 50L, s"d$f") }
+      .toDF("surt_key", "file_id", "offset", "record_bytes", "digest")
+      .withColumn("target_uri", col("surt_key"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_lsm_empty").toString
+    try {
+      Warc.writeCdxShards(cdx.filter(lit(false)), dir, numShards = 4)
+      assert(!new java.io.File(dir).list().exists(_.startsWith("shard=")))
+      Warc.compactCdxShards(dir, cdx, tombstones = Some(
+        Seq((3L, 300L)).toDF("file_id", "offset")))
+      val shards = Warc.readCdxShards(spark, dir, cdx.schema)
+      // serve: every key routes through the re-derived cluster index to
+      // the shard that holds its row; the tombstoned segment row is gone
+      val served = Warc.assignShards(cdx.select(col("surt_key")),
+          col("surt_key"), Warc.cdxClusterIndex(shards))
+        .join(shards, Seq("shard", "surt_key"))
+        .select(col("surt_key"), col("file_id"), col("offset"))
+        .as[(String, Long, Long)].collect().sorted.toSeq
+      assert(served == Seq(("com,a)/p", 1L, 100L), ("com,b)/p", 2L, 200L)))
+      val e = intercept[IllegalArgumentException](
+        Warc.compactCdxShards(dir + "-missing", cdx))
+      assert(e.getMessage.contains("not a writeCdxShards layout"), e.getMessage)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
   test("Warc: splitCdxShard moves ONE shard's rows into fresh sorted pieces — other shards' files never move, the total order re-derives") {
     import org.apache.spark.sql.functions.col
     import graft.sources.Warc
