@@ -5420,8 +5420,7 @@ object PipelineQueries {
         .select(col("doc_id"), htmlFixtureText.as("text")))
       graft.sources.Warc.parseWarc(warcs, col("file_id"), col("payload"))
         .filter(col("warc_type") === "conversion")
-        .select(regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-            .cast("long").as("doc_id"),
+        .select(fixtureDocId.as("doc_id"),
           TextFunctions.htmlTitle(col("body")).as("title"),
           TextFunctions.htmlExtract(col("body")).as("text"),
           size(TextFunctions.extractHrefs(col("body"))).cast("long")
@@ -5540,8 +5539,7 @@ object PipelineQueries {
       graft.sources.Warc.fetchRecords(warcs, col("file_id"), col("payload"),
           hits.select(col("file_id"), col("record_idx"), col("offset"),
             col("record_bytes")))
-        .select(regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-            .cast("long").as("doc_id"),
+        .select(fixtureDocId.as("doc_id"),
           col("content_length"), col("body"))
         .orderBy(col("doc_id"))
     }, Some("""
@@ -5561,8 +5559,7 @@ object PipelineQueries {
           warcFixtureFrom(Tables.documents(s, d)),
           col("file_id"), col("payload"))
         .filter(col("warc_type") === "conversion")
-        .select(regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-            .cast("long").as("doc_id"),
+        .select(fixtureDocId.as("doc_id"),
           col("warc_type"), col("target_uri"),
           col("content_length"), col("body"))
       val planned = graft.sources.Warc.reshardByBytes(recs, col("doc_id"),
@@ -5570,8 +5567,7 @@ object PipelineQueries {
       val rewritten = graft.sources.Warc.writeWarc(planned, col("shard"),
         col("doc_id"), col("warc_type"), col("target_uri"), col("body"))
       graft.sources.Warc.parseWarc(rewritten, col("file_id"), col("payload"))
-        .select(regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-            .cast("long").as("doc_id"),
+        .select(fixtureDocId.as("doc_id"),
           col("file_id").as("shard"), col("record_idx"),
           col("content_length"))
         .orderBy(col("doc_id"))
@@ -5604,8 +5600,7 @@ object PipelineQueries {
       val cdx = graft.sources.Warc.cdxIndex(
         graft.sources.Warc.parseWarc(warcs, col("file_id"), col("payload")))
       graft.sources.Warc.cdxRevisits(cdx)
-        .select(regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-            .cast("long").as("doc_id"),
+        .select(fixtureDocId.as("doc_id"),
           col("file_id"), col("offset"), col("is_revisit"),
           col("orig_file"), col("orig_offset"))
         .orderBy(col("file_id"), col("offset"))
@@ -5646,27 +5641,17 @@ object PipelineQueries {
         graft.sources.Warc.parseWarc(warcs, col("file_id"), col("payload")))
       val dir = graft.sources.Sinks.tempArtifactDir("cdx_shards")
       graft.sources.Warc.writeCdxShards(cdx, dir, numShards = 8)
-      val shards = s.read.parquet(dir)
-      val cluster = graft.sources.Warc.cdxClusterIndex(shards)
       val panel = docs.filter(col("doc_id") % 97 === 0)
         .select(concat(lit("HTTPS://WWW.SRC"),
           (col("doc_id") % 20).cast("string"), lit(".COM:443/p/"),
           col("doc_id").cast("string"), lit("?utm_source=x#frag")).as("url"))
         .select(graft.functions.SourceFamily.surtKey(col("url")).as("surt_key"))
-      val assigned = graft.sources.Warc.assignShards(panel, col("surt_key"),
-        cluster)
-      // the lookup batch KNOWS its shards (panel-sized, config-bounded
-      // by the lookup contract) — collect them so the scan prunes
-      // statically to those directories
-      val ids = assigned.select(col("shard")).distinct()
-        .collect().map(_.getInt(0)).sorted
-      val hits = shards.filter(col("shard").isin(ids: _*))
-        .join(broadcast(assigned), Seq("shard", "surt_key"))
+      val hits = graft.sources.Warc.serveCdx(
+        graft.sources.Warc.readCdxShards(s, dir, cdx.schema), panel)
       graft.sources.Warc.fetchRecords(warcs, col("file_id"), col("payload"),
           hits.select(col("file_id"), col("record_idx"), col("offset"),
             col("record_bytes")))
-        .select(regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-            .cast("long").as("doc_id"), col("body"))
+        .select(fixtureDocId.as("doc_id"), col("body"))
         .orderBy(col("doc_id"))
     }, Some("""
       SELECT doc_id, text AS body
@@ -5695,8 +5680,7 @@ object PipelineQueries {
         col("file_id"), col("record_idx"), col("t"), col("target_uri"),
         col("b"))
       graft.sources.Warc.parseWarc(wet, col("file_id"), col("payload"))
-        .select(regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-            .cast("long").as("doc_id"),
+        .select(fixtureDocId.as("doc_id"),
           col("warc_type"), col("content_length"), col("body"))
         .orderBy(col("doc_id"))
     }, Some("""
@@ -5724,8 +5708,7 @@ object PipelineQueries {
       graft.sources.Warc.parseWarcMembers(warcs, col("file_id"),
           col("payload"))
         .filter(col("warc_type") === "conversion")
-        .select(regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-            .cast("long").as("doc_id"),
+        .select(fixtureDocId.as("doc_id"),
           col("warc_type"), col("content_length"), col("body"),
           col("warc_date"))
         .orderBy(col("doc_id"))
@@ -5758,8 +5741,7 @@ object PipelineQueries {
           col("payload"),
           hits.select(col("file_id"), col("record_idx"), col("offset"),
             col("record_bytes")))
-        .select(regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-            .cast("long").as("doc_id"),
+        .select(fixtureDocId.as("doc_id"),
           col("content_length"), col("body"))
         .orderBy(col("doc_id"))
     }, Some("""
@@ -5833,8 +5815,7 @@ object PipelineQueries {
         .filter(col("warc_type") === "response" &&
           col("content_type").startsWith("application/http"))
       graft.sources.Warc.splitHttp(recs)
-        .select(regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-            .cast("long").as("doc_id"),
+        .select(fixtureDocId.as("doc_id"),
           col("http_status"), col("mime_type"), col("charset"),
           when(col("http_status") === 200 &&
               col("mime_type") === "text/html",
@@ -5910,8 +5891,7 @@ object PipelineQueries {
       graft.sources.Warc.splitHttp(
           graft.sources.Warc.parseWarcBinary(warcs, col("file_id"),
             col("payload")))
-        .select(regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-            .cast("long").as("doc_id"), col("text"))
+        .select(fixtureDocId.as("doc_id"), col("text"))
         .orderBy(col("doc_id"))
     }, Some("SELECT doc_id, text FROM documents ORDER BY doc_id")),
 
@@ -5947,8 +5927,7 @@ object PipelineQueries {
       graft.sources.Warc.splitHttp(
           graft.sources.Warc.parseWarcBinary(warcs, col("file_id"),
             col("payload")))
-        .select(regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-            .cast("long").as("doc_id"), col("charset"), col("text"))
+        .select(fixtureDocId.as("doc_id"), col("charset"), col("text"))
         .orderBy(col("doc_id"))
     }, Some("""
       WITH x AS (SELECT doc_id,
@@ -6011,8 +5990,7 @@ object PipelineQueries {
       graft.sources.Warc.splitHttp(routed)
         .filter(col("http_status") === 200 &&
           col("mime_type") === "text/html")
-        .select(regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-            .cast("long").as("doc_id"),
+        .select(fixtureDocId.as("doc_id"),
           TextFunctions.htmlTitle(col("text")).as("title"),
           TextFunctions.htmlExtract(col("text")).as("text"),
           size(TextFunctions.extractHrefs(col("text"))).cast("long")
@@ -6075,28 +6053,19 @@ object PipelineQueries {
         .filter(col("is_revisit"))
         .select(col("file_id"), col("offset"))
       Warc.compactCdxShards(dir, seg3, tombstones = Some(tomb))
-      // layout schema is fixed by the write contract: read it given,
-      // not inferred (skips the per-open driver footer pass)
-      val shards = Warc.readCdxShards(s, dir, seg3.schema)
-      val cluster = Warc.cdxClusterIndex(shards)
       val panel = docs.filter(col("doc_id") % 97 === 0)
         .select(concat(lit("https://www.src"),
           (col("doc_id") % 20).cast("string"), lit(".com/p/"),
           col("doc_id").cast("string")).as("url"))
         .select(graft.functions.SourceFamily.surtKey(col("url"))
           .as("surt_key"))
-      // lookup-batch-sized; consumed by the prune collect AND the join
-      val assigned = Warc.assignShards(panel, col("surt_key"), cluster)
-        .localCheckpoint(eager = false)
-      val ids = assigned.select(col("shard")).distinct()
-        .collect().map(_.getInt(0)).sorted
-      val hits = shards.filter(col("shard").isin(ids: _*))
-        .join(broadcast(assigned), Seq("shard", "surt_key"))
+      // layout schema is fixed by the write contract: read it given,
+      // not inferred (skips the per-open driver footer pass)
+      val hits = Warc.serveCdx(Warc.readCdxShards(s, dir, seg3.schema), panel)
       Warc.fetchRecords(wAll, col("file_id"), col("payload"),
           hits.select(col("file_id"), col("record_idx"), col("offset"),
             col("record_bytes")))
-        .select(regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-            .cast("long").as("doc_id"), col("body"))
+        .select(fixtureDocId.as("doc_id"), col("body"))
         .orderBy(col("doc_id"))
     }, Some("""
       SELECT doc_id, text || ' page ' || CAST(doc_id AS VARCHAR) AS body
@@ -6135,8 +6104,7 @@ object PipelineQueries {
         col("file_id"), col("record_idx"), col("t"), col("target_uri"),
         col("b"), contentType = lit("text/plain"))
       graft.sources.Warc.parseWarc(wet, col("file_id"), col("payload"))
-        .select(regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-            .cast("long").as("doc_id"),
+        .select(fixtureDocId.as("doc_id"),
           col("warc_type"), col("content_type"), col("content_length"),
           col("body"))
         .orderBy(col("doc_id"))
@@ -6170,21 +6138,20 @@ object PipelineQueries {
       def cdxOf(w: DataFrame) = Warc.cdxIndex(
         Warc.parseWarc(w, col("file_id"), col("payload")))
       val dir = graft.sources.Sinks.tempArtifactDir("cdx_tail")
-      Warc.writeCdxShards(cdxOf(w1), dir, numShards = 8)
-      val shards = s.read.parquet(dir)
+      val cdx1 = cdxOf(w1)
+      Warc.writeCdxShards(cdx1, dir, numShards = 8)
       val panel = docs.filter(col("doc_id") % 97 === 0)
         .select(concat(lit("https://www.src"),
           (col("doc_id") % 20).cast("string"), lit(".com/p/"),
           col("doc_id").cast("string")).as("url"))
         .select(graft.functions.SourceFamily.surtKey(col("url"))
           .as("surt_key"))
-      val hits = Warc.serveCdxWithTail(shards, Warc.cdxClusterIndex(shards),
-        cdxOf(w2), panel)
+      val hits = Warc.serveCdxWithTail(
+        Warc.readCdxShards(s, dir, cdx1.schema), cdxOf(w2), panel)
       Warc.fetchRecords(w1.unionByName(w2), col("file_id"), col("payload"),
           hits.select(col("file_id"), col("record_idx"), col("offset"),
             col("record_bytes")))
-        .select(regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-            .cast("long").as("doc_id"), col("body"))
+        .select(fixtureDocId.as("doc_id"), col("body"))
         .orderBy(col("doc_id"))
     }, Some("""
       SELECT doc_id, text AS body
@@ -6224,8 +6191,7 @@ object PipelineQueries {
         col("file_id"), col("record_idx"), col("t"), col("target_uri"),
         col("b"), contentType = lit("application/json"))
       graft.sources.Warc.parseWarc(wat, col("file_id"), col("payload"))
-        .select(regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-            .cast("long").as("doc_id"),
+        .select(fixtureDocId.as("doc_id"),
           col("warc_type"), col("content_type"), col("body"))
         .orderBy(col("doc_id"))
     }, Some("""
@@ -6267,8 +6233,7 @@ object PipelineQueries {
         graft.sources.Warc.parseWarcBinary(warcs, col("file_id"),
           col("payload")))
       val hops = split.filter(col("http_status") === 301)
-        .select(regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-            .cast("long").as("doc_id"),
+        .select(fixtureDocId.as("doc_id"),
           graft.functions.SourceFamily.surtKey(
             element_at(col("http_headers"), "location")).as("surt_key"))
       val targets = split.filter(col("http_status") === 200)
@@ -6324,8 +6289,7 @@ object PipelineQueries {
           col("payload")))
       split.withColumn("sniffed_mime",
           graft.functions.MimeSniff(col("payload")))
-        .select(regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-            .cast("long").as("doc_id"),
+        .select(fixtureDocId.as("doc_id"),
           col("mime_type").as("declared_mime"), col("sniffed_mime"),
           when(col("sniffed_mime") === "text/html",
             TextFunctions.htmlTitle(coalesce(col("text"),
@@ -6410,8 +6374,7 @@ object PipelineQueries {
         .join(plan.select(col("target_uri"),
           col("if_none_match").as("sent_if_none_match")),
           Seq("target_uri"))
-        .select(regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-            .cast("long").as("doc_id"),
+        .select(fixtureDocId.as("doc_id"),
           col("fetch"), col("body"), col("sent_if_none_match"))
         .orderBy(col("doc_id"))
     }, Some("""
@@ -7006,8 +6969,7 @@ object PipelineQueries {
         .localCheckpoint()
       val dir = graft.sources.Sinks.tempArtifactDir("cdx_coalesce")
       Warc.writeCdxShards(cdx, dir, numShards = 16)
-      val did = regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-        .cast("long")
+      val did = fixtureDocId
       // partial takedown: 4 of every 5 records of the src10..19
       // families leave — the middle shards SHRINK (to ~a fifth)
       // rather than vanish, so coalesce faces a genuine undersized
@@ -7017,10 +6979,6 @@ object PipelineQueries {
           .select(col("file_id"), col("offset"))))
       val total = Warc.readCdxShards(s, dir, cdx.schema).count()
       Warc.coalesceCdxShards(dir, minRows = math.max(2L, total / 12))
-      // layout schema is fixed by the write contract: read it given,
-      // not inferred (skips the per-open driver footer pass)
-      val shards = Warc.readCdxShards(s, dir, cdx.schema)
-      val cluster = Warc.cdxClusterIndex(shards)
       val panel = docs
         .filter(col("doc_id") % 43 === 0 && col("doc_id") % 20 < 10)
         .select(concat(lit("https://www.src"),
@@ -7028,18 +6986,13 @@ object PipelineQueries {
           col("doc_id").cast("string")).as("url"))
         .select(graft.functions.SourceFamily.surtKey(col("url"))
           .as("surt_key"))
-      // lookup-batch-sized; consumed by the prune collect AND the join
-      val assigned = Warc.assignShards(panel, col("surt_key"), cluster)
-        .localCheckpoint(eager = false)
-      val ids = assigned.select(col("shard")).distinct()
-        .collect().map(_.getInt(0)).sorted
-      val hits = shards.filter(col("shard").isin(ids: _*))
-        .join(broadcast(assigned), Seq("shard", "surt_key"))
+      // layout schema is fixed by the write contract: read it given,
+      // not inferred (skips the per-open driver footer pass)
+      val hits = Warc.serveCdx(Warc.readCdxShards(s, dir, cdx.schema), panel)
       Warc.fetchRecords(warcs, col("file_id"), col("payload"),
           hits.select(col("file_id"), col("record_idx"), col("offset"),
             col("record_bytes")))
-        .select(regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-            .cast("long").as("doc_id"), col("body"))
+        .select(fixtureDocId.as("doc_id"), col("body"))
         .orderBy(col("doc_id"))
     }, Some("""
       SELECT doc_id, text || ' page ' || CAST(doc_id AS VARCHAR) AS body
@@ -8030,8 +7983,7 @@ object PipelineQueries {
       val cdx = Warc.cdxIndex(
           Warc.parseWarc(warcs, col("file_id"), col("payload")))
         .localCheckpoint()
-      val did = regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-        .cast("long")
+      val did = fixtureDocId
       val dir = graft.sources.Sinks.tempArtifactDir("cdx_history")
       Warc.writeCdxShards(cdx.filter(did % 2 === 0), dir, numShards = 8)
       Warc.compactCdxShards(dir, cdx.filter(did % 2 === 1))
@@ -8044,10 +7996,6 @@ object PipelineQueries {
           .select(col("file_id"), col("offset"))))
       val total = Warc.readCdxShards(s, dir, cdx.schema).count()
       Warc.coalesceCdxShards(dir, minRows = math.max(2L, total / 10))
-      // layout schema is fixed by the write contract: read it given,
-      // not inferred (skips the per-open driver footer pass)
-      val shards = Warc.readCdxShards(s, dir, cdx.schema)
-      val cluster = Warc.cdxClusterIndex(shards)
       val panel = docs.filter(col("doc_id") % 37 === 0 &&
           (col("doc_id") % 20 < 10 || col("doc_id") % 5 === 0))
         .select(concat(lit("https://www.src"),
@@ -8055,18 +8003,13 @@ object PipelineQueries {
           col("doc_id").cast("string")).as("url"))
         .select(graft.functions.SourceFamily.surtKey(col("url"))
           .as("surt_key"))
-      // lookup-batch-sized; consumed by the prune collect AND the join
-      val assigned = Warc.assignShards(panel, col("surt_key"), cluster)
-        .localCheckpoint(eager = false)
-      val ids = assigned.select(col("shard")).distinct()
-        .collect().map(_.getInt(0)).sorted
-      val hits = shards.filter(col("shard").isin(ids: _*))
-        .join(broadcast(assigned), Seq("shard", "surt_key"))
+      // layout schema is fixed by the write contract: read it given,
+      // not inferred (skips the per-open driver footer pass)
+      val hits = Warc.serveCdx(Warc.readCdxShards(s, dir, cdx.schema), panel)
       Warc.fetchRecords(warcs, col("file_id"), col("payload"),
           hits.select(col("file_id"), col("record_idx"), col("offset"),
             col("record_bytes")))
-        .select(regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-            .cast("long").as("doc_id"), col("body"))
+        .select(fixtureDocId.as("doc_id"), col("body"))
         .orderBy(col("doc_id"))
     }, Some("""
       SELECT doc_id, text || ' hist ' || CAST(doc_id AS VARCHAR) AS body
@@ -8526,6 +8469,13 @@ object PipelineQueries {
       graft.sources.Warc.writeWarc(recs, col("f"), col("i"), col("t"),
         col("u"), col("b"), col("dt"), col("ct"), col("rid"))
   }
+
+  /** The inverse of the fixtures' page URI (`…/p/<doc_id>`, written by
+    * [[warcFixtureFrom]] and [[httpResponseWarcFrom]]): the doc id a
+    * record's `target_uri` names, null for the warcinfo records.
+    */
+  private[graft] def fixtureDocId: Column =
+    regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1).cast("long")
 
   /** p130/p131/p132's HTML page fixture — each doc's text wrapped in a
     * full deterministic page. The head block (title/style/script with
@@ -9562,8 +9512,7 @@ object PipelineQueries {
     */
   private[graft] def directiveFlagsOf(split: DataFrame): DataFrame =
     split.select(
-        regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-          .cast("long").as("doc_id"),
+        fixtureDocId.as("doc_id"),
         graft.graph.LinkGraph.robotsDirectiveFlagsScoped(
           graft.functions.TextFunctions.metaRobots(col("text")),
           element_at(col("http_headers"), "x-robots-tag"),

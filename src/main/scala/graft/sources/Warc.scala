@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -31,6 +32,29 @@ import org.apache.spark.sql.functions._
   * stage; nothing shuffles until the caller aggregates. Headers
   * surface as typed columns (warc_type, target_uri, content_length) —
   * pruned-friendly — with the body as one string column.
+  *
+  * The sorted CDX layout ([[writeCdxShards]]) is maintained by
+  * [[compactCdxShards]], [[splitCdxShard]] and [[coalesceCdxShards]],
+  * and all three publish through ONE protocol whose crash recovery is
+  * the same code as its normal path:
+  *  1. the new shards are written to one staging dir beside the
+  *     layout (`<dir>.publish-tmp`);
+  *  1. a manifest (`<dir>/_coalesce_manifest`, written to a temp file
+  *     and renamed, so it is complete or absent) lists each output
+  *     shard with the source shards it replaces — `new:old,…`, or the
+  *     retire-only `-:old,…` when the group wrote no rows (a fully
+  *     tombstoned shard must not come back);
+  *  1. the repair applies the manifest: every output still staged
+  *     renames into the layout (a same-id source, compaction's, is
+  *     deleted just before), then each line's sources are deleted —
+  *     only when its output is in the layout or the line is
+  *     retire-only — then the manifest and the staging dir go.
+  *
+  * Every maintenance call runs the repair first, so an interrupted
+  * publish of any kind is finished (rolled forward) by the next call
+  * of any kind; a publish that died before its manifest landed left
+  * the layout untouched. A manifest line this code did not write is
+  * refused loudly and nothing moves. Lookups go through [[serveCdx]].
   */
 object Warc {
 
@@ -652,13 +676,10 @@ object Warc {
     * revisit rows, or takedowns; a tombstone aimed at an existing row
     * pulls that row's shard into the rewrite set too. Compaction
     * touches ONLY index rows — payload bytes never enter the plan.
-    *
-    * Publish is a driver-side shard-directory swap (write the merged
-    * shards beside the layout, then move each affected `shard=<id>`
-    * directory into place) — the manifest-swap a table format does,
-    * rendered on the filesystem; Spark refuses a self-overwriting
-    * plan, and rewriting unaffected shards to dodge that would be the
-    * full rebuild again.
+    * Merged shards keep their ids and publish through the layout's one
+    * protocol (see [[Warc]]); Spark refuses a self-overwriting plan,
+    * and rewriting unaffected shards to dodge that would be the full
+    * rebuild again.
     *
     * `segments.schema` must equal the index schema the layout was
     * written with: the layout is read with that schema GIVEN, not
@@ -669,23 +690,7 @@ object Warc {
   def compactCdxShards(dir: String, segments: DataFrame,
                        tombstones: Option[DataFrame] = None): Unit = {
     val spark = segments.sparkSession
-    // the layout's schema is the segment schema + shard by the write
-    // contract — read it GIVEN rather than inferred (no footer pass).
-    // With a given schema the old "no shard column" require can never
-    // fire (the schema always carries it), so the layout guard is an
-    // FS-level one instead: a writeCdxShards dir holds shard=<id>
-    // partition directories, or only its commit marker when empty
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val dirFs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val listing =
-      if (dirFs.exists(dirPath)) dirFs.listStatus(dirPath)
-      else Array.empty[org.apache.hadoop.fs.FileStatus]
-    val hasShards =
-      listing.exists(st => st.isDirectory && st.getPath.getName.startsWith("shard="))
-    require(hasShards || listing.exists(_.getPath.getName == "_SUCCESS"),
-      s"compactCdxShards: $dir is not a writeCdxShards layout " +
-        "(no shard=<id> partition directories and no _SUCCESS commit)")
-    if (!hasShards) {
+    if (!prepareLayout(spark, dir, "compactCdxShards")) {
       val live = tombstones.fold(segments) { t =>
         segments.join(broadcast(t.select(col("file_id"), col("offset")).distinct()),
           Seq("file_id", "offset"), "left_anti")
@@ -693,6 +698,8 @@ object Warc {
       writeCdxShards(live, dir, numShards = 1)
       return
     }
+    // the layout's schema is the segment schema + shard by the write
+    // contract — read it GIVEN rather than inferred (no footer pass)
     val current = readCdxShards(spark, dir, segments.schema)
     val cluster = cdxClusterIndex(current)
     // the routed delta is consumed twice (the affected-shard collect
@@ -723,25 +730,12 @@ object Warc {
     val merged = tombKeys.fold(keep) { t =>
       keep.join(broadcast(t), Seq("file_id", "offset"), "left_anti")
     }
-    val tmp = dir + ".compact-tmp"
-    merged.repartition(affected.length, col("shard"))
-      .sortWithinPartitions(col("shard"), col("surt_key"))
-      .write.mode("overwrite").partitionBy("shard").parquet(tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(conf)
-    affected.foreach { sh =>
-      val src = new org.apache.hadoop.fs.Path(tmp, s"shard=$sh")
-      val dst = new org.apache.hadoop.fs.Path(dir, s"shard=$sh")
-      fs.delete(dst, true)
-      // a fully-tombstoned shard writes no output — its directory
-      // simply leaves the layout and the serve-time cluster index
-      // re-derives without it
-      if (fs.exists(src)) {
-        if (!fs.rename(src, dst)) throw new java.io.IOException(
-          s"compactCdxShards: failed to publish $src -> $dst")
-      }
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+    // a fully-tombstoned shard writes no output — its manifest line
+    // retires it and the serve-time cluster index re-derives without it
+    publishShards(dir,
+      merged.repartition(affected.length, col("shard"))
+        .sortWithinPartitions(col("shard"), col("surt_key")),
+      affected.toSeq.map(sh => sh -> Seq(sh)))
   }
 
   /** The LSM read path between compactions — lookups must see rows
@@ -749,9 +743,9 @@ object Warc {
     * merged yet (q136 lands index rows at ingest; a serve that only
     * consults the shard layout would return stale misses until the
     * next maintenance window). Two bounded probes, one result: the
-    * routed keys hit their pruned shards exactly as the batch serve
-    * does, and the tail — delta-sized BY CONTRACT, it is what has
-    * arrived since the last compaction — probes as a BROADCAST
+    * routed keys hit their pruned shards through [[serveCdx]], and the
+    * tail — delta-sized BY CONTRACT, it is what has arrived since the
+    * last compaction — probes as a BROADCAST
     * semi-join against the keys (never a shuffle of the tail, never a
     * scan of the layout for tail keys). Read amplification is the
     * honest LSM trade: one shard probe + one tail probe per lookup
@@ -766,25 +760,36 @@ object Warc {
     * compaction), so the shard probe degrades to "probe the lowest
     * shard and miss" instead of refusing the lookup.
     */
-  def serveCdxWithTail(shards: DataFrame, clusterIndex: DataFrame,
-                       tail: DataFrame, keys: DataFrame): DataFrame = {
-    // lookup-batch-sized by contract; consumed by the prune collect
-    // AND the shard join — route once
-    val assigned = assignShards(keys, col("surt_key"), clusterIndex,
-      clampFloor = true).localCheckpoint(eager = false)
-    val ids = assigned.select(col("shard")).distinct()
-      .collect().map(_.getInt(0)).sorted
+  def serveCdxWithTail(shards: DataFrame, tail: DataFrame,
+                       keys: DataFrame): DataFrame = {
     val cols = Seq("surt_key", "target_uri", "warc_date", "file_id",
-      "record_idx", "offset", "record_bytes", "digest", "shard")
-    val fromShards = shards.filter(col("shard").isin(ids.map(Int.box): _*))
-      .join(broadcast(assigned), Seq("shard", "surt_key"))
-      .select(cols.map(col): _*)
+      "record_idx", "offset", "record_bytes", "digest", "shard").map(col)
     val fromTail = tail
       .join(broadcast(keys.select(col("surt_key")).distinct()),
         Seq("surt_key"))
       .withColumn("shard", lit(-1))
-      .select(cols.map(col): _*)
-    fromShards.unionByName(fromTail)
+    serveCdx(shards, keys, clampFloor = true).select(cols: _*)
+      .unionByName(fromTail.select(cols: _*))
+  }
+
+  /** THE pruned two-level lookup: `keys` (a surt_key frame) route to
+    * their shards through the cluster index derived from `shards`
+    * ([[assignShards]], `clampFloor` as there), the lookup batch's
+    * shard ids — config-bounded by the lookup contract — collect so
+    * the scan prunes statically to those directories, and the routed
+    * keys broadcast-join their shards on (shard, surt_key). A lookup
+    * reads its shards, never the whole index. The routed keys are
+    * lookup-batch-sized and consumed twice (the prune collect AND the
+    * join), so they are routed once and checkpointed.
+    */
+  def serveCdx(shards: DataFrame, keys: DataFrame,
+               clampFloor: Boolean = false): DataFrame = {
+    val assigned = assignShards(keys, col("surt_key"),
+      cdxClusterIndex(shards), clampFloor).localCheckpoint(eager = false)
+    val ids = assigned.select(col("shard")).distinct()
+      .collect().map(_.getInt(0)).sorted
+    shards.filter(col("shard").isin(ids.map(Int.box): _*))
+      .join(broadcast(assigned), Seq("shard", "surt_key"))
   }
 
   /** Split ONE oversized shard into `n` — the rebalance that keeps the
@@ -796,37 +801,28 @@ object Warc {
     * ids above the current max (ids are names, not positions — the
     * cluster index, re-derived from first keys at serve time, gives
     * the new pieces their place in the total order; nothing else
-    * rewrites, so split cost ∝ the one shard). Publish is the same
-    * driver-side directory swap as compaction.
+    * rewrites, so split cost ∝ the one shard). Publish is the layout's
+    * one protocol (see [[Warc]]).
     */
   def splitCdxShard(dir: String, shard: Int, n: Int): Unit = {
     require(n >= 2, s"splitCdxShard: n must be >= 2, got $n")
     val spark = org.apache.spark.sql.SparkSession.active
-    val current = spark.read.parquet(dir)
-    val shardIds = current.select(col("shard")).distinct()
-      .collect().map(_.getInt(0))
+    // an empty layout holds no shard to split — refused below by name
+    val current =
+      if (prepareLayout(spark, dir, "splitCdxShard")) Some(spark.read.parquet(dir))
+      else None
+    val shardIds = current.fold(Array.empty[Int])(
+      _.select(col("shard")).distinct().collect().map(_.getInt(0)))
     require(shardIds.contains(shard),
       s"splitCdxShard: shard $shard not present in $dir " +
         s"(have ${shardIds.sorted.mkString(", ")})")
     val nextId = shardIds.max + 1
-    val one = current.filter(col("shard") === shard).drop("shard")
-    val tmp = dir + ".split-tmp"
-    one.repartitionByRange(n, col("surt_key"))
-      .withColumn("shard", spark_partition_id() + lit(nextId))
-      .sortWithinPartitions(col("surt_key"))
-      .write.mode("overwrite").partitionBy("shard").parquet(tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(conf)
-    val written = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("shard="))
-    written.foreach { s =>
-      val dst = new org.apache.hadoop.fs.Path(dir, s.getPath.getName)
-      fs.delete(dst, true)
-      if (!fs.rename(s.getPath, dst)) throw new java.io.IOException(
-        s"splitCdxShard: failed to publish ${s.getPath} -> $dst")
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(dir, s"shard=$shard"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+    publishShards(dir,
+      current.get.filter(col("shard") === shard).drop("shard")
+        .repartitionByRange(n, col("surt_key"))
+        .withColumn("shard", spark_partition_id() + lit(nextId))
+        .sortWithinPartitions(col("surt_key")),
+      (nextId until nextId + n).map(_ -> Seq(shard)))
   }
 
   /** Merge runs of UNDERSIZED adjacent shards — the inverse of
@@ -849,23 +845,14 @@ object Warc {
     * shard between two adequate neighbors stays: merging it would
     * rewrite an adequate neighbor, making cost ∝ neighbor size — the
     * caller who wants it gone can split the neighbor first. Publish
-    * is the directory swap compaction/split use, hardened with a
-    * MANIFEST: each group's (merged shard, source shards) is recorded
-    * before the first rename and removed after the last delete, so a
-    * driver death inside the swap window leaves a repairable layout —
-    * the next call finishes the interrupted publish
-    * ([[repairCoalesce]]) instead of serving duplicate key ranges.
+    * is the layout's one protocol (see [[Warc]]); an empty layout is a
+    * no-op.
     */
   def coalesceCdxShards(dir: String, minRows: Long): Unit = {
     require(minRows >= 1, s"coalesceCdxShards: minRows must be >= 1, got $minRows")
     val spark = org.apache.spark.sql.SparkSession.active
-    // a previous publish may have died between renaming a merged
-    // shard in and deleting its sources — finish it before reading
-    // the layout, or the duplicate key ranges would corrupt the stats
-    repairCoalesce(spark, dir)
+    if (!prepareLayout(spark, dir, "coalesceCdxShards")) return
     val current = spark.read.parquet(dir)
-    require(current.columns.contains("shard"),
-      s"coalesceCdxShards: $dir is not a writeCdxShards layout (no shard column)")
     // (shard, first_key, rows) in key order — config-sized collect
     val stats = current.groupBy(col("shard"))
       .agg(min(col("surt_key")).as("first_key"), count(lit(1)).as("n"))
@@ -892,85 +879,114 @@ object Warc {
     val mapExpr = mapping.foldLeft(lit(-1)) { case (acc, (from, to)) =>
       when(col("shard") === from, lit(to)).otherwise(acc)
     }
-    val tmp = dir + ".coalesce-tmp"
-    current.filter(col("shard").isin(mapping.keys.toSeq.map(Int.box): _*))
-      .withColumn("shard", mapExpr)
-      .repartition(groups.length, col("shard"))
-      .sortWithinPartitions(col("shard"), col("surt_key"))
-      .write.mode("overwrite").partitionBy("shard").parquet(tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(conf)
-    // the publish is a sequence of renames+deletes with a crash window
-    // between a merged shard landing and its sources leaving — the
-    // MANIFEST (written first, deleted last) records every group's
-    // (new shard, source shards) so [[repairCoalesce]] can finish an
-    // interrupted publish instead of serving duplicate key ranges
-    val manifest = groups.zipWithIndex.map { case (g, gi) =>
-      s"${nextId + gi}:${g.map(_._1).mkString(",")}"
-    }.mkString("\n")
-    // write-temp-then-rename: a reader (or a crash) must see either a
-    // complete manifest or none — a half-written line would make the
-    // repair path delete sources whose merged shard never landed
-    val mPath = new org.apache.hadoop.fs.Path(dir, ManifestName)
-    val mTmp = new org.apache.hadoop.fs.Path(dir, ManifestName + ".tmp")
-    val out = fs.create(mTmp, true)
-    out.write(manifest.getBytes("UTF-8")); out.close()
-    fs.delete(mPath, false)
-    if (!fs.rename(mTmp, mPath)) throw new java.io.IOException(
-      s"coalesceCdxShards: failed to publish manifest $mTmp -> $mPath")
-    groups.zipWithIndex.foreach { case (g, gi) =>
-      val src = new org.apache.hadoop.fs.Path(tmp, s"shard=${nextId + gi}")
-      val dst = new org.apache.hadoop.fs.Path(dir, s"shard=${nextId + gi}")
-      fs.delete(dst, true)
-      if (!fs.rename(src, dst)) throw new java.io.IOException(
-        s"coalesceCdxShards: failed to publish $src -> $dst")
-      g.foreach { case (sh, _) =>
-        fs.delete(new org.apache.hadoop.fs.Path(dir, s"shard=$sh"), true)
-      }
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    fs.delete(mPath, false)
+    publishShards(dir,
+      current.filter(col("shard").isin(mapping.keys.toSeq.map(Int.box): _*))
+        .withColumn("shard", mapExpr)
+        .repartition(groups.length, col("shard"))
+        .sortWithinPartitions(col("shard"), col("surt_key")),
+      groups.toSeq.zipWithIndex.map { case (g, gi) => (nextId + gi) -> g.map(_._1) })
   }
 
+  // the publish protocol's two names (see [[Warc]]): the manifest sits
+  // inside the layout (underscore-named, so parquet discovery ignores
+  // it), the staging dir beside it
   private val ManifestName = "_coalesce_manifest"
+  private def stagingDir(dir: String) = new Path(dir + ".publish-tmp")
 
-  /** Finish an interrupted [[coalesceCdxShards]] publish: the
-    * manifest (underscore-named, so parquet discovery ignores it)
-    * lists each merged shard with its source shards; for every line,
-    * if the merged shard landed, its remaining sources delete (they
-    * are duplicates); if it never landed, its sources are intact and
-    * the aborted output still sits in the tmp dir — dropped here, the
-    * next coalesce pass redoes the group. Idempotent; no-op without a
-    * manifest.
+  /** Every maintenance call's prelude: finish an interrupted publish,
+    * then the layout guard — a [[writeCdxShards]] dir holds
+    * `shard=<id>` partition directories, or only its `_SUCCESS` commit
+    * marker when empty. A missing or uncommitted dir refuses. Returns
+    * whether the layout holds any shard.
     */
-  private def repairCoalesce(spark: org.apache.spark.sql.SparkSession,
-                             dir: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val mPath = new org.apache.hadoop.fs.Path(dir, ManifestName)
-    val fs = mPath.getFileSystem(conf)
+  private def prepareLayout(spark: org.apache.spark.sql.SparkSession,
+                            dir: String, op: String): Boolean = {
+    val path = new Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    repairPublish(fs, dir)
+    val listing =
+      if (fs.exists(path)) fs.listStatus(path) else Array.empty[FileStatus]
+    val hasShards =
+      listing.exists(st => st.isDirectory && st.getPath.getName.startsWith("shard="))
+    require(hasShards || listing.exists(_.getPath.getName == "_SUCCESS"),
+      s"$op: $dir is not a writeCdxShards layout " +
+        "(no shard=<id> partition directories and no _SUCCESS commit)")
+    hasShards
+  }
+
+  /** The one publish (see [[Warc]]): stage `out` (a frame carrying its
+    * output `shard` ids), write the manifest of `replaces` (output id
+    * -> the source shards it replaces; an output that wrote no rows
+    * becomes a retire-only `-:` line), then apply it with the repair.
+    */
+  private def publishShards(dir: String, out: DataFrame,
+                            replaces: Seq[(Int, Seq[Int])]): Unit = {
+    val tmp = stagingDir(dir)
+    out.write.mode("overwrite").partitionBy("shard").parquet(tmp.toString)
+    val fs = tmp.getFileSystem(out.sparkSession.sparkContext.hadoopConfiguration)
+    val staged = fs.listStatus(tmp).map(_.getPath.getName).toSet
+    val manifest = replaces.map { case (o, srcs) =>
+      val head = if (staged(s"shard=$o")) o.toString else "-"
+      s"$head:${srcs.mkString(",")}"
+    }.mkString("\n")
+    // write-temp-then-rename: a reader (or a crash) sees either a
+    // complete manifest or none — a half-written line would make the
+    // repair delete sources whose replacement never landed
+    val mPath = new Path(dir, ManifestName)
+    val mTmp = new Path(dir, ManifestName + ".tmp")
+    val w = fs.create(mTmp, true)
+    try w.write(manifest.getBytes("UTF-8")) finally w.close()
+    fs.delete(mPath, false)
+    if (!fs.rename(mTmp, mPath)) throw new java.io.IOException(
+      s"publish: failed to write manifest $mTmp -> $mPath")
+    repairPublish(fs, dir)
+  }
+
+  /** The one repair (see [[Warc]]): apply the manifest, rolling the
+    * publish forward. Idempotent; a no-op without a manifest. Every
+    * line is validated before anything moves.
+    */
+  private def repairPublish(fs: FileSystem, dir: String): Unit = {
+    val mPath = new Path(dir, ManifestName)
     if (!fs.exists(mPath)) return
     val buf = new Array[Byte](fs.getFileStatus(mPath).getLen.toInt)
     val in = fs.open(mPath)
     try in.readFully(0, buf) finally in.close()
-    val manifest = new String(buf, "UTF-8")
-    manifest.split("\n").filter(_.nonEmpty).foreach { line =>
-      // validate before acting: a malformed line means the manifest is
-      // not ours (or corrupt) — deleting shards on its say-so would
-      // destroy data, so fail with the offending content instead
+    def isId(s: String) = s.nonEmpty && s.forall(_.isDigit)
+    // validate before acting: a malformed line means the manifest is
+    // not ours (or corrupt) — deleting shards on its say-so would
+    // destroy data, so fail with the offending content instead
+    val lines = new String(buf, "UTF-8").split("\n").filter(_.nonEmpty).map { line =>
       line.split(":", 2) match {
-        case Array(newId, olds)
-            if newId.nonEmpty && newId.forall(_.isDigit) &&
-              olds.split(",").filter(_.nonEmpty).forall(_.forall(_.isDigit)) =>
-          if (fs.exists(new org.apache.hadoop.fs.Path(dir, s"shard=$newId")))
-            olds.split(",").filter(_.nonEmpty).foreach { sh =>
-              fs.delete(new org.apache.hadoop.fs.Path(dir, s"shard=$sh"), true)
-            }
+        case Array(o, srcs) if (o == "-" || isId(o)) &&
+            srcs.split(",").forall(isId) =>
+          (Some(o).filter(_ != "-"), srcs.split(",").toSeq)
         case _ => throw new IllegalStateException(
-          s"repairCoalesce: malformed manifest line '$line' in $mPath — " +
+          s"repairPublish: malformed manifest line '$line' in $mPath — " +
             "refusing to repair from a manifest this code did not write")
       }
     }
-    fs.delete(new org.apache.hadoop.fs.Path(dir + ".coalesce-tmp"), true)
+    def shard(parent: Path, id: String) = new Path(parent, s"shard=$id")
+    val root = new Path(dir)
+    val tmp = stagingDir(dir)
+    // roll forward: every output still staged moves in — a same-id
+    // source (compaction's) leaves just before its replacement lands
+    lines.flatMap(_._1).foreach { o =>
+      val src = shard(tmp, o)
+      if (fs.exists(src)) {
+        val dst = shard(root, o)
+        fs.delete(dst, true)
+        if (!fs.rename(src, dst)) throw new java.io.IOException(
+          s"repairPublish: failed to publish $src -> $dst")
+      }
+    }
+    // then the sources leave: only once their replacement is in the
+    // layout, or when the line says the output is empty
+    lines.foreach { case (o, srcs) =>
+      if (o.forall(id => fs.exists(shard(root, id))))
+        srcs.filterNot(o.contains).foreach(sh => fs.delete(shard(root, sh), true))
+    }
+    fs.delete(tmp, true)
     fs.delete(mPath, false)
   }
 

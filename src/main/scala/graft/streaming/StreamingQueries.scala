@@ -1183,8 +1183,7 @@ object StreamingQueries {
       col("file_id"), col("record_idx"), col("t"), col("target_uri"),
       col("b"), contentType = lit("application/json"))
     graft.sources.Warc.parseWarc(wat, col("file_id"), col("payload"))
-      .select(regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-          .cast("long").as("doc_id"),
+      .select(graft.queries.PipelineQueries.fixtureDocId.as("doc_id"),
         col("warc_type"), col("content_type"), col("body"))
       .orderBy(col("doc_id"))
   }
@@ -1432,7 +1431,7 @@ object StreamingQueries {
       col("file_id"), col("payload")))
     val dir = graft.sources.Sinks.tempArtifactDir("cdx_serve_shards")
     graft.sources.Warc.writeCdxShards(cdx, dir, numShards = 8)
-    val shards = spark.read.parquet(dir)
+    val shards = graft.sources.Warc.readCdxShards(spark, dir, cdx.schema)
     val cluster = graft.sources.Warc.cdxClusterIndex(shards)
     val panelDir = graft.sources.Sinks.tempArtifactDir("cdx_serve_panel")
     docs.filter(col("doc_id") % 97 === 0)
@@ -1489,8 +1488,7 @@ object StreamingQueries {
         col("content_type").startsWith("application/http"))
     runToMemory(
       graft.sources.Warc.splitHttp(recs)
-        .select(regexp_extract(col("target_uri"), "/p/([0-9]+)$", 1)
-            .cast("long").as("doc_id"),
+        .select(graft.queries.PipelineQueries.fixtureDocId.as("doc_id"),
           col("http_status"), col("mime_type"), col("charset"),
           when(col("http_status") === 200 &&
               col("mime_type") === "text/html",

@@ -3,7 +3,9 @@ package graft.tools
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graft.BusBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Dev harness for the core-scaling blind spot: at bench SF every query
   * is 0.2-3 s and per-job scheduling/planning overhead dominates, so
@@ -15,8 +17,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * work (planning, commits, collects) that no core count removes. One
   * JSON line + sidecar (SPARK_GRAFT_JOBTIME_OUT, default
   * jobtime_report.json); the sidecar also lists each query's jobs as
-  * (id, seconds, callsite) — the where-do-the-seconds-go view for
+  * (id, seconds, site) — the where-do-the-seconds-go view for
   * multi-job lifecycle entries whose cost the SQL plan can't attribute.
+  * A job's site is the SQL action it runs for (its execution's
+  * description, e.g. `collect at Warc.scala:…`; AQE query-stage jobs
+  * carry their execution's id too), or its result stage's name for a
+  * job outside any SQL execution.
   * Same env contract as Bench; a dev tool, not a measured surface. Run:
   *   sbt "runMain graft.tools.JobTimes p218_sq8_lifecycle"
   */
@@ -30,12 +36,21 @@ object JobTimes {
     graft.Bench.warm(spark, names)
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String)]()
+    val actions = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => actions.put(x.executionId, x.description)
+        case _ =>
+      }
       override def onJobStart(js: SparkListenerJobStart): Unit = {
-        // the result stage is created last (highest id) and named after
-        // the job's short call site; the "callSite.short" job property
-        // is only set when user code called setCallSite
-        val site = js.stageInfos.sortBy(_.stageId).lastOption.map(_.name).getOrElse("?")
+        // an execution's start is posted before its jobs'; outside SQL
+        // the result stage (created last, highest id) is named after
+        // the job's short call site
+        val action = Option(js.properties)
+          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+          .flatMap(id => Option(actions.get(id.toLong)))
+        val site = action.orElse(js.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
+          .getOrElse("?")
         starts.put(js.jobId, (js.time, site))
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit =
@@ -53,6 +68,7 @@ object JobTimes {
     val rows = names.map { n =>
       BusBridge.drain(spark.sparkContext)
       jobs.clear()
+      actions.clear()
       val t0 = System.nanoTime()
       val ok = try { graft.Bench.materialize(graft.SparkEntry.queries(n)(spark, benchDir)); true }
         catch { case e: Throwable =>

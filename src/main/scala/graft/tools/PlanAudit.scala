@@ -61,7 +61,9 @@ package graft.tools
   *    sized by construction — rides a one-row broadcast cross join,
   *    p45's accepted shape) + SortAggregate (cdxClusterIndex's
   *    min(first_key) string election over shard-count groups, q20's
-  *    bounded shape).
+  *    bounded shape); since p174 serves through Warc.serveCdx, which
+  *    checkpoints its routed keys, both shapes sit upstream of the
+  *    checkpoint and may no longer print.
   *  - p189 SortAggregate: conditionalRequests' latest-stored-record
   *    election is a max(struct) carrying the validator payload —
   *    q20's accepted shape, one row per URL per partition.
@@ -71,10 +73,11 @@ package graft.tools
   *    p206 scores held-out docs against the even-slice model).
   *  - round-10: p183 runs p174's serve shapes (assignShards' one-row
   *    broadcast cross join; cdxClusterIndex's min(first_key)
-  *    SortAggregate) inside compactCdxShards and the serve — accepted
-  *    and documented, though since the fetch paths checkpoint their
-  *    lookup-sized extents the final plan this tool inspects sits
-  *    downstream of them and may not print the flags at all.
+  *    SortAggregate) inside compactCdxShards and Warc.serveCdx —
+  *    accepted and documented, though both checkpoint their routed
+  *    keys (and the fetch paths their lookup-sized extents), so the
+  *    final plan this tool inspects sits downstream of them and may
+  *    not print the flags at all.
   *  - also inheriting the same two accepted shapes (verified per
   *    entry): p81/p83/p93/p94/p95 (one-row corpus/stats/class-totals
   *    scalars riding broadcast cross joins — p45/p49's shape),

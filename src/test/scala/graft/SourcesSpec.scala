@@ -813,6 +813,118 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
+  test("Warc: split and coalesce over an empty committed layout — coalesce is a no-op, split refuses by name, a missing or uncommitted dir still refuses") {
+    import org.apache.spark.sql.functions.{col, lit}
+    import graft.sources.Warc
+    val cdx = Seq(("com,a)/p", 1L, 100L), ("com,b)/p", 2L, 200L))
+      .map { case (k, f, o) => (k, f, o, 50L, s"d$f") }
+      .toDF("surt_key", "file_id", "offset", "record_bytes", "digest")
+      .withColumn("target_uri", col("surt_key"))
+    val zeroRows = java.nio.file.Files.createTempDirectory("graft_empty0").toString
+    val allTombed = java.nio.file.Files.createTempDirectory("graft_empty1").toString
+    val uncommitted = java.nio.file.Files.createTempDirectory("graft_empty2").toString
+    try {
+      // the two ways a committed layout ends up with only _SUCCESS: a
+      // build over zero rows, and a compaction that tombstones every row
+      Warc.writeCdxShards(cdx.filter(lit(false)), zeroRows, numShards = 4)
+      Warc.writeCdxShards(cdx, allTombed, numShards = 2)
+      Warc.compactCdxShards(allTombed, cdx.filter(lit(false)),
+        tombstones = Some(cdx.select(col("file_id"), col("offset"))))
+      // (checksum files are dot-named)
+      def entries(dir: String) =
+        new java.io.File(dir).list().filterNot(_.startsWith(".")).sorted.toSeq
+      for (dir <- Seq(zeroRows, allTombed)) {
+        assert(entries(dir) == Seq("_SUCCESS"), entries(dir))
+        Warc.coalesceCdxShards(dir, minRows = 4)
+        assert(entries(dir) == Seq("_SUCCESS"), entries(dir))
+        val e = intercept[IllegalArgumentException](
+          Warc.splitCdxShard(dir, shard = 0, n = 2))
+        assert(e.getMessage.contains("shard 0 not present"), e.getMessage)
+      }
+      for (dir <- Seq(zeroRows + "-missing", uncommitted)) {
+        val ec = intercept[IllegalArgumentException](
+          Warc.coalesceCdxShards(dir, minRows = 4))
+        assert(ec.getMessage.contains("not a writeCdxShards layout"), ec.getMessage)
+        val es = intercept[IllegalArgumentException](
+          Warc.splitCdxShard(dir, shard = 0, n = 2))
+        assert(es.getMessage.contains("not a writeCdxShards layout"), es.getMessage)
+      }
+    } finally {
+      Seq(zeroRows, allTombed, uncommitted).foreach(d =>
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
+    }
+  }
+
+  test("Warc: an interrupted compaction publish (source deleted, merged copy still staged) is finished by the next coalesce — every row back") {
+    import org.apache.spark.sql.functions.{col, lit}
+    import graft.sources.Warc
+    val cdx = (10 until 50).map(i => (f"com,s$i%02d)/p", i.toLong,
+        i.toLong * 100, 50L, s"d$i"))
+      .toDF("surt_key", "file_id", "offset", "record_bytes", "digest")
+      .withColumn("target_uri", col("surt_key"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_crash_compact").toString
+    val staging = dir + ".publish-tmp"
+    try {
+      Warc.writeCdxShards(cdx, dir, numShards = 4)
+      // the state a compaction leaves when it dies between deleting
+      // shard=1 and renaming its merged copy (old rows + one inserted
+      // row) in: manifest written, source gone, output still staged
+      val one = spark.read.parquet(dir).filter(col("shard") === 1)
+      val inserted = one.limit(1).withColumn("surt_key",
+        org.apache.spark.sql.functions.concat(col("surt_key"), lit("x")))
+      one.unionByName(inserted).write.partitionBy("shard").parquet(staging)
+      val rows1 = one.count() + 1
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir, "shard=1"))
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_coalesce_manifest"),
+        "1:1".getBytes("UTF-8"))
+      // minRows=1: nothing is undersized, so the call is PURE repair
+      Warc.coalesceCdxShards(dir, minRows = 1)
+      val after = spark.read.parquet(dir)
+      assert(after.count() == 41, "the interrupted compaction lost rows")
+      assert(after.filter(col("shard") === 1).count() == rows1)
+      assert(!new java.io.File(dir, "_coalesce_manifest").exists())
+      assert(!new java.io.File(staging).exists())
+    } finally {
+      Seq(dir, staging).foreach(d =>
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
+    }
+  }
+
+  test("Warc: an interrupted split publish (pieces renamed in, source not yet deleted) is finished by the next compaction — no duplicate key range") {
+    import org.apache.spark.sql.functions.{col, lit}
+    import graft.sources.Warc
+    val cdx = (10 until 50).map(i => (f"com,s$i%02d)/p", i.toLong,
+        i.toLong * 100, 50L, s"d$i"))
+      .toDF("surt_key", "file_id", "offset", "record_bytes", "digest")
+      .withColumn("target_uri", col("surt_key"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_crash_split").toString
+    try {
+      Warc.writeCdxShards(cdx, dir, numShards = 4)
+      // the state a split of shard 2 leaves when it dies after renaming
+      // its piece in as shard 4 and before deleting shard 2: both
+      // directories hold the same key range
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(dir, "shard=2"), new java.io.File(dir, "shard=4"))
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_coalesce_manifest"),
+        "4:2".getBytes("UTF-8"))
+      // an empty segment with no tombstones: the call is PURE repair
+      Warc.compactCdxShards(dir, cdx.filter(lit(false)))
+      val after = spark.read.parquet(dir)
+      assert(after.count() == 40, "the interrupted split left duplicate rows")
+      val ids = after.select(col("shard")).distinct().collect().map(_.getInt(0)).toSet
+      assert(ids == Set(0, 1, 3, 4), ids)
+      val ranges = after.groupBy(col("shard"))
+        .agg(org.apache.spark.sql.functions.min(col("surt_key")),
+          org.apache.spark.sql.functions.max(col("surt_key")))
+        .collect().map(r => (r.getString(1), r.getString(2))).sortBy(_._1)
+      assert(ranges.zip(ranges.drop(1)).forall { case ((_, hi), (lo, _)) => hi < lo },
+        ranges.toSeq)
+      assert(!new java.io.File(dir, "_coalesce_manifest").exists())
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
   test("CDX maintenance triple is order-idempotent: three histories, one logical table") {
     import org.apache.spark.sql.functions._
     import graft.sources.Warc
