@@ -210,18 +210,13 @@ object Dedup {
   def minhashCandidates(docs: DataFrame, id: Column, text: Column,
                         shingleN: Int = 3, numBands: Int = 4, rowsPerBand: Int = 2,
                         maxBucket: Option[Int] = None): DataFrame = {
-    val k = numBands * rowsPerBand
     // Map-side MinHash: the native MinHashSignature expression computes
     // all k salted-md5 minima per document inside the scan stage — no
     // shingle explode, no pre-band shuffle. Docs with fewer than shingleN
     // tokens get a NULL signature and drop out (no candidates), mirroring
     // the oracle's len(shingles) >= 1 guard. The only shuffle in this
     // operator is the (band_key, doc_id) LSH join itself.
-    val sig = docs.select(id.as("doc_id"),
-      MinHashSignature(text, shingleN, k).as("sig"))
-      .filter(col("sig").isNotNull)
-    val banded = sig.select(col("doc_id"),
-      explode(array(bandKeyCols(col("sig"), numBands, rowsPerBand): _*)).as("band_key"))
+    val banded = minhashBandRows(docs, id, text, shingleN, numBands, rowsPerBand)
     // Bucket form instead of a self-join: ONE shuffle on band_key, then
     // pairs generated inside each bucket (posexplode + suffix slice). The
     // a.band_key = b.band_key self-join computes the signature scan twice
@@ -287,7 +282,7 @@ object Dedup {
     // index grows.
     graft.sources.Sinks.writeBucketedTable(
       minhashBandRows(docs, id, text, shingleN, numBands, rowsPerBand)
-        .withColumn("segment", lit("base")),
+        .select(col("band_key"), col("doc_id"), lit("base").as("segment")),
       table, nBuckets,
       Seq("band_key"), Seq("band_key"), path = Some(s"$indexDir/bands"),
       partitionCols = Seq("segment"))
@@ -313,8 +308,10 @@ object Dedup {
       .option("path", s"$indexDir/params").saveAsTable(s"${table}__params")
   }
 
-  /** The one banding projection every index path shares (build, append,
-    * probe): (band_key, doc_id) rows from MinHash signatures.
+  /** The one banding projection every batch path shares (candidates,
+    * index build, append, probe): (doc_id, band_key) rows from MinHash
+    * signatures, in the explode's own column order, so no reordering
+    * projection is planned.
     */
   private def minhashBandRows(docs: DataFrame, id: Column, text: Column,
                               shingleN: Int, numBands: Int,
@@ -322,10 +319,9 @@ object Dedup {
     docs.select(id.as("doc_id"),
         MinHashSignature(text, shingleN, numBands * rowsPerBand).as("sig"))
       .filter(col("sig").isNotNull)
-      .select(
+      .select(col("doc_id"),
         explode(array(bandKeyCols(col("sig"), numBands, rowsPerBand): _*))
-          .as("band_key"),
-        col("doc_id"))
+          .as("band_key"))
 
   /** The shared shingle-hash projection: (doc_id, h) distinct md5 rows. */
   private def shingleHashRows(docs: DataFrame, id: Column, text: Column,
@@ -509,12 +505,9 @@ object Dedup {
   def queryMinhashIndex(spark: org.apache.spark.sql.SparkSession, table: String,
                         newDocs: DataFrame, id: Column, text: Column): DataFrame = {
     val p = minhashParams(spark, table)
-    val qbands = newDocs.select(id.as("query_id"),
-        MinHashSignature(text, p.shingleN, p.numBands * p.rowsPerBand).as("sig"))
-      .filter(col("sig").isNotNull)
-      .select(col("query_id"),
-        explode(array(bandKeyCols(col("sig"), p.numBands, p.rowsPerBand): _*))
-          .as("band_key"))
+    val qbands = minhashBandRows(newDocs, id, text, p.shingleN, p.numBands,
+        p.rowsPerBand)
+      .withColumnRenamed("doc_id", "query_id")
     // tombstone mask on the corpus side — a taken-down page must stop
     // being reported as a duplicate source the moment its segment lands
     maskMinhashTombstones(spark.table(table), "doc_id", p.indexDir)

@@ -311,6 +311,22 @@ object StatefulOps {
     BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
   }
 
+  /** The panel member nearest `v` by [[cos6]], as (id, cos). `panel` is
+    * sorted by id ascending, so strict `>` keeps the SMALLEST id on a
+    * 6-dp tie — the batch packed-argmax rule. An empty panel gives
+    * (-1, -Inf).
+    */
+  private[streaming] def nearest(panel: Array[(Long, Array[Double])],
+                                 v: Array[Double]): (Long, Double) = {
+    var best = -1L
+    var bestCos = Double.NegativeInfinity
+    panel.foreach { case (id, pv) =>
+      val c = cos6(pv, v)
+      if (c > bestCos) { best = id; bestCos = c }
+    }
+    (best, bestCos)
+  }
+
   /** Streaming LastElement (`LastElement.scala:22,39`): per key, keep the
     * latest element by `seq`; emits the current last on every batch
     * (update-mode analog of the materialized `Future[Option[A]]`).

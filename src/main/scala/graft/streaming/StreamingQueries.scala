@@ -1,9 +1,9 @@
 package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming executions of engine queries.
@@ -12,6 +12,12 @@ import org.apache.spark.sql.types._
   * `Trigger.AvailableNow`) and return the result as a DataFrame, so the
   * driver's DuckDB oracle verifies the streaming engine too — same
   * result as the batch plan, different execution path.
+  *
+  * Every query here starts, waits and stops through the one private
+  * runner `run`: memory-sink twins reach it through [[runToMemory]],
+  * [[runToMemoryPolling]] and [[runToMemoryUntil]], the segment and
+  * index logs through the one idempotent `foreachBatch` drain. Staged
+  * fixture inputs go through one `staged` file source.
   */
 object StreamingQueries {
 
@@ -71,17 +77,60 @@ object StreamingQueries {
       .option("basePath", sfDir)
       .parquet(s"$sfDir/embeddings.parque[t]")
 
+  /** The one place a twin's query starts: `writer` starts under
+    * `trigger`, `await` blocks until its input is drained, and the
+    * query stops in `finally` whether or not the wait succeeded.
+    */
+  private def run(writer: DataStreamWriter[Row], trigger: Trigger)(
+      await: StreamingQuery => Unit): Unit = {
+    val q = writer.trigger(trigger).start()
+    try await(q) finally q.stop()
+  }
+
+  /** [[run]] into a fresh memory table, returned once `await` returns. */
+  private def toMemory(df: DataFrame, mode: String, trigger: Trigger)(
+      await: (StreamingQuery, String) => Unit): DataFrame = {
+    val name = s"graft_stream_${counter.incrementAndGet()}"
+    run(df.writeStream.format("memory").queryName(name).outputMode(mode),
+      trigger)(await(_, name))
+    df.sparkSession.table(name)
+  }
+
+  /** [[run]] `input` to its end through `write`, exactly once per
+    * micro-batch. Manual writes in foreachBatch are at-least-once;
+    * [[graft.sources.Sinks.idempotentForeachBatch]]'s commit markers in
+    * `<dir>/_commits` skip crash-replayed batch ids, and every `write`
+    * lands its batch under its own `batch_id=`/`segment=` path with
+    * overwrite, so a crash BETWEEN the write and the marker replays
+    * into the same place instead of appending a duplicate beside it.
+    * The crash-replay contract lives here, once, for every log and
+    * index the twins append to. `dir` is a JVM-lifetime temp dir here
+    * (see [[graft.sources.Sinks.tempArtifactDir]]); production passes a
+    * durable path instead.
+    */
+  private def drain(input: DataFrame, dir: String)(
+      write: (DataFrame, Long) => Unit): Unit =
+    run(input.writeStream.foreachBatch(
+        graft.sources.Sinks.idempotentForeachBatch(s"$dir/_commits")(write)),
+      Trigger.AvailableNow())(_.awaitTermination())
+
+  /** `frame` written to a temp dir and streamed back as a file source —
+    * the fixture input of the at-ingest twins. The stream takes the
+    * frame's own schema, so no footer is read back; a `coalesce(1)`
+    * frame stays one file and so one micro-batch.
+    */
+  private def staged(frame: DataFrame, prefix: String): DataFrame = {
+    val dir = graft.sources.Sinks.tempArtifactDir(prefix)
+    frame.write.mode("overwrite").parquet(dir)
+    frame.sparkSession.readStream.schema(frame.schema).parquet(dir)
+  }
+
   /** Run a streaming aggregation to a memory sink and return the final
     * table. AvailableNow processes the whole input then stops — the
     * deterministic replay mode.
     */
-  def runToMemory(agg: DataFrame, mode: String = "complete"): DataFrame = {
-    val name = s"graft_stream_${counter.incrementAndGet()}"
-    val q = agg.writeStream.format("memory").queryName(name)
-      .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally q.stop()
-    agg.sparkSession.table(name)
-  }
+  def runToMemory(agg: DataFrame, mode: String = "complete"): DataFrame =
+    toMemory(agg, mode, Trigger.AvailableNow())((q, _) => q.awaitTermination())
 
   /** Like [[runToMemory]] but drives the query with a short
     * processing-time trigger until `processAllAvailable` reports no
@@ -89,13 +138,8 @@ object StreamingQueries {
     * controlled step per trigger (PagedSource's page walk), where
     * AvailableNow's single offset snapshot would stop after one step.
     */
-  def runToMemoryPolling(df: DataFrame, mode: String = "append"): DataFrame = {
-    val name = s"graft_stream_${counter.incrementAndGet()}"
-    val q = df.writeStream.format("memory").queryName(name)
-      .outputMode(mode).trigger(Trigger.ProcessingTime(10)).start()
-    try q.processAllAvailable() finally q.stop()
-    df.sparkSession.table(name)
-  }
+  def runToMemoryPolling(df: DataFrame, mode: String = "append"): DataFrame =
+    toMemory(df, mode, Trigger.ProcessingTime(10))((q, _) => q.processAllAvailable())
 
   /** Like [[runToMemoryPolling]] but keeps the query alive until the
     * sink holds `expectedRows` — for TIMER-driven operators
@@ -109,12 +153,8 @@ object StreamingQueries {
     * completes is an under-provisioned rate, not an empty result.
     */
   def runToMemoryUntil(df: DataFrame, expectedRows: Long,
-                       timeoutMs: Long = 300000L): DataFrame = {
-    val name = s"graft_stream_${counter.incrementAndGet()}"
-    val q = df.writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.ProcessingTime(10))
-      .start()
-    try {
+                       timeoutMs: Long = 300000L): DataFrame =
+    toMemory(df, "append", Trigger.ProcessingTime(10)) { (q, name) =>
       val deadline = System.currentTimeMillis + timeoutMs
       def n() = df.sparkSession.table(name).count()
       while (n() < expectedRows && System.currentTimeMillis < deadline) {
@@ -124,9 +164,7 @@ object StreamingQueries {
       require(n() >= expectedRows,
         s"runToMemoryUntil: timed out with ${n()} of $expectedRows rows — " +
           "the pacer's backlog never drained")
-    } finally q.stop()
-    df.sparkSession.table(name)
-  }
+    }
 
   /** q21's tumbling-window aggregation, executed via Structured
     * Streaming. Oracle: identical SQL to q21.
@@ -279,15 +317,7 @@ object StreamingQueries {
         vec.cast("array<double>").as("_2"), ts.cast("timestamp").as("_3"))
       .as[(Long, Array[Double], java.sql.Timestamp)]
     val assigned = typed.map { case (i, v, t) =>
-      // cents is sorted by centroid_id, so strict > keeps the SMALLEST
-      // id on a 6-dp tie — the batch packed-argmax rule
-      var best = -1L
-      var bestCos = Double.NegativeInfinity
-      cents.foreach { case (cid, cv) =>
-        val c = StatefulOps.cos6(cv, v)
-        if (c > bestCos) { best = cid; bestCos = c }
-      }
-      StatefulOps.AssignedVec(best, i, v, t)
+      StatefulOps.AssignedVec(StatefulOps.nearest(cents, v)._1, i, v, t)
     }
     StatefulOps.semanticStreamingDedup(assigned, threshold, maxPerCluster)
   }
@@ -622,9 +652,8 @@ object StreamingQueries {
                              threshold: Double = 0.35): DataFrame = {
     import spark.implicits._
     // panel collected once, frozen at query start — small by
-    // construction (the bloomDecontaminate bound); sorted ascending so
-    // strict > keeps the SMALLEST eval id on a 6-dp tie, the batch
-    // packed-argmax rule (semanticStreamingDedup's centroid pattern)
+    // construction (the bloomDecontaminate bound); sorted ascending for
+    // StatefulOps.nearest's smallest-id tie rule
     val panel = graft.Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") % 97 === 0)
       .select(col("vec_id").cast("long"), col("embedding").cast("array<double>"))
@@ -640,12 +669,7 @@ object StreamingQueries {
         col("embedding").cast("array<double>").as("_2"))
       .as[(Long, Array[Double])]
     val scored = typed.map { case (id, v) =>
-      var best = -1L
-      var bestCos = Double.NegativeInfinity
-      panel.foreach { case (eid, ev) =>
-        val c = graft.streaming.StatefulOps.cos6(ev, v)
-        if (c > bestCos) { best = eid; bestCos = c }
-      }
+      val (best, bestCos) = StatefulOps.nearest(panel, v)
       (id, best, bestCos, bestCos >= threshold)
     }.toDF("vec_id", "eval_id", "max_eval_cos", "contaminated")
     runToMemory(scored, mode = "append").orderBy(col("vec_id"))
@@ -990,9 +1014,7 @@ object StreamingQueries {
     val keyed = wl.join(broadcast(famsDf), Seq("dst_family"))
       .select(col("key"), col("pos").as("seq"),
         col("canonical").as("property"), lit(0.0).as("payload"))
-    val dir = graft.sources.Sinks.tempArtifactDir("paced_worklist_in")
-    keyed.coalesce(1).write.mode("overwrite").parquet(dir)
-    val stream = spark.readStream.schema(keyed.schema).parquet(dir)
+    val stream = staged(keyed.coalesce(1), "paced_worklist_in")
       .as[StatefulOps.KeyedElement]
     val released = StatefulOps.paceByKeyRates(stream, rates,
       maxBuffer = 1000, drainIntervalMs = 50)
@@ -1127,14 +1149,10 @@ object StreamingQueries {
     * needs nothing across files, so the stream holds no state at all.
     */
   def warcParseStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = graft.sources.Sinks.tempArtifactDir("warc_stream_in")
-    graft.queries.PipelineQueries
-      .warcFixtureFrom(graft.Tables.documents(spark, sfDir))
-      .write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
     runToMemory(
       graft.sources.Warc.parseWarc(
-        spark.readStream.schema(schema).parquet(dir),
+        staged(graft.queries.PipelineQueries
+          .warcFixtureFrom(graft.Tables.documents(spark, sfDir)), "warc_stream_in"),
         col("file_id"), col("payload")),
       mode = "append")
       .orderBy(col("file_id"), col("record_idx"))
@@ -1161,14 +1179,10 @@ object StreamingQueries {
       lit("HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8" +
         "\r\nContent-Length: "), octet_length(page).cast("string"),
       lit("\r\n\r\n"), page).cast("binary")
-    val dir = graft.sources.Sinks.tempArtifactDir("wat_stream_in")
-    graft.queries.PipelineQueries.httpResponseWarcFrom(
-        docs.select(col("doc_id"), msg.as("msg")))
-      .write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
     val split = graft.sources.Warc.splitHttp(
       graft.sources.Warc.parseWarcBinary(
-        spark.readStream.schema(schema).parquet(dir),
+        staged(graft.queries.PipelineQueries.httpResponseWarcFrom(
+          docs.select(col("doc_id"), msg.as("msg"))), "wat_stream_in"),
         col("file_id"), col("payload")))
     val meta = split.select(col("file_id"), col("record_idx"),
       lit("metadata").as("t"), col("target_uri"),
@@ -1197,16 +1211,12 @@ object StreamingQueries {
     * and flag projection as the batch entry.
     */
   def metaRobotsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = graft.sources.Sinks.tempArtifactDir("meta_robots_in")
-    graft.queries.PipelineQueries.metaRobotsWarcFixture(
-        graft.Tables.documents(spark, sfDir))
-      .write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
+    val input = staged(graft.queries.PipelineQueries.metaRobotsWarcFixture(
+      graft.Tables.documents(spark, sfDir)), "meta_robots_in")
     runToMemory(
       graft.queries.PipelineQueries.directiveFlagsOf(
         graft.sources.Warc.splitHttp(
-          graft.sources.Warc.parseWarcBinary(
-            spark.readStream.schema(schema).parquet(dir),
+          graft.sources.Warc.parseWarcBinary(input,
             col("file_id"), col("payload")))),
       mode = "append")
       .orderBy(col("doc_id"))
@@ -1433,14 +1443,11 @@ object StreamingQueries {
     graft.sources.Warc.writeCdxShards(cdx, dir, numShards = 8)
     val shards = graft.sources.Warc.readCdxShards(spark, dir, cdx.schema)
     val cluster = graft.sources.Warc.cdxClusterIndex(shards)
-    val panelDir = graft.sources.Sinks.tempArtifactDir("cdx_serve_panel")
-    docs.filter(col("doc_id") % 97 === 0)
-      .select(concat(lit("HTTPS://WWW.SRC"),
-        (col("doc_id") % 20).cast("string"), lit(".COM:443/p/"),
-        col("doc_id").cast("string"), lit("?utm_source=x#frag")).as("url"))
-      .write.mode("overwrite").parquet(panelDir)
-    val schema = spark.read.parquet(panelDir).schema
-    val keys = spark.readStream.schema(schema).parquet(panelDir)
+    val keys = staged(docs.filter(col("doc_id") % 97 === 0)
+        .select(concat(lit("HTTPS://WWW.SRC"),
+          (col("doc_id") % 20).cast("string"), lit(".COM:443/p/"),
+          col("doc_id").cast("string"), lit("?utm_source=x#frag")).as("url")),
+        "cdx_serve_panel")
       .select(graft.functions.SourceFamily.surtKey(col("url"))
         .as("surt_key"))
     val assigned = graft.sources.Warc.assignShards(keys, col("surt_key"),
@@ -1476,13 +1483,9 @@ object StreamingQueries {
       lit("\r\nServer: graft/0.1\r\nContent-Type: "), ct,
       lit("\r\nContent-Length: "), octet_length(body).cast("string"),
       lit("\r\n\r\n"), body).cast("binary")
-    val dir = graft.sources.Sinks.tempArtifactDir("http_stream_in")
-    graft.queries.PipelineQueries.httpResponseWarcFrom(
-        docs.select(col("doc_id"), msg.as("msg")))
-      .write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
     val recs = graft.sources.Warc.parseWarcBinary(
-        spark.readStream.schema(schema).parquet(dir),
+        staged(graft.queries.PipelineQueries.httpResponseWarcFrom(
+          docs.select(col("doc_id"), msg.as("msg"))), "http_stream_in"),
         col("file_id"), col("payload"))
       .filter(col("warc_type") === "response" &&
         col("content_type").startsWith("application/http"))
@@ -1514,16 +1517,12 @@ object StreamingQueries {
     val vocab = graft.queries.PipelineQueries.unigramTrapVocab
     val k = (col("doc_id") % 4 + 1).cast("int")
     val m = (col("doc_id") % 3).cast("int")
-    val dir = graft.sources.Sinks.tempArtifactDir("unigram_stream_in")
-    docs.select(col("doc_id"),
-        concat(repeat(lit("ab"), k), repeat(lit("a"), m)).as("w"))
-      .write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
+    val input = staged(docs.select(col("doc_id"),
+      concat(repeat(lit("ab"), k), repeat(lit("a"), m)).as("w")), "unigram_stream_in")
     val scoreMap = map(vocab.flatMap { case (p, s) =>
       Seq(lit(p), lit(s)) }: _*)
     runToMemory(
-      spark.readStream.schema(schema).parquet(dir)
-        .select(col("doc_id"),
+      input.select(col("doc_id"),
           graft.functions.UnigramEncode(col("w"), vocab).as("seg"))
         .select(col("doc_id"), col("seg"),
           fSize(split(col("seg"), "\\|")).cast("long").as("n_pieces"),
@@ -1545,11 +1544,8 @@ object StreamingQueries {
   def wordPieceEncodeStream(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.queries.PipelineQueries.{wordPieceFixtureWords, wordPieceSegCols, wordPieceTrapVocab}
     val docs = graft.Tables.documents(spark, sfDir)
-    val dir = graft.sources.Sinks.tempArtifactDir("wordpiece_stream_in")
-    wordPieceFixtureWords(docs).write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
     runToMemory(
-      wordPieceSegCols(spark.readStream.schema(schema).parquet(dir),
+      wordPieceSegCols(staged(wordPieceFixtureWords(docs), "wordpiece_stream_in"),
         wordPieceTrapVocab),
       mode = "append")
       .orderBy(col("doc_id"))
@@ -1565,14 +1561,10 @@ object StreamingQueries {
     * barrier.
     */
   def cdxIndexStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = graft.sources.Sinks.tempArtifactDir("cdx_stream_in")
-    graft.queries.PipelineQueries
-      .warcFixtureFrom(graft.Tables.documents(spark, sfDir))
-      .write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
     runToMemory(
       graft.sources.Warc.cdxIndex(graft.sources.Warc.parseWarc(
-        spark.readStream.schema(schema).parquet(dir),
+        staged(graft.queries.PipelineQueries
+          .warcFixtureFrom(graft.Tables.documents(spark, sfDir)), "cdx_stream_in"),
         col("file_id"), col("payload"))),
       mode = "append")
       .orderBy(col("surt_key"))
@@ -1588,16 +1580,12 @@ object StreamingQueries {
     * digest — the content-cardinality frame, not the record count.
     */
   def cdxRevisitStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = graft.sources.Sinks.tempArtifactDir("cdx_revisit_in")
     val docs = graft.Tables.documents(spark, sfDir)
-    graft.queries.PipelineQueries.warcFixtureFrom(docs)
+    val input = staged(graft.queries.PipelineQueries.warcFixtureFrom(docs)
       .unionByName(graft.queries.PipelineQueries.warcFixtureFrom(
-        docs.filter(col("doc_id") % 5 === 0), fileBase = 8L))
-      .write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
+        docs.filter(col("doc_id") % 5 === 0), fileBase = 8L)), "cdx_revisit_in")
     val cdx = graft.sources.Warc.cdxIndex(graft.sources.Warc.parseWarc(
-      spark.readStream.schema(schema).parquet(dir),
-      col("file_id"), col("payload")))
+      input, col("file_id"), col("payload")))
     val agg = cdx.groupBy(col("digest"))
       .agg(min(graft.sources.Warc.packedExtent(col("file_id"),
         col("offset"))).as("p"), count(lit(1)).as("n_copies"))
@@ -1617,18 +1605,14 @@ object StreamingQueries {
     */
   def warcImagesStream(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.multimodal.ImageCodec
-    val dir = graft.sources.Sinks.tempArtifactDir("warc_img_stream_in")
     val imgs = ImageCodec.SyntheticImages.pngFixture(
       graft.Tables.documents(spark, sfDir), col("doc_id"))
-    graft.sources.Warc.writeWarcBin(imgs,
+    val recs = graft.sources.Warc.parseWarcBinary(
+      staged(graft.sources.Warc.writeWarcBin(imgs,
         col("media_id") % 8, col("media_id"), lit("resource"),
         concat(lit("https://www.src"), (col("media_id") % 20).cast("string"),
           lit(".com/img/"), col("media_id").cast("string")),
-        col("payload"))
-      .write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
-    val recs = graft.sources.Warc.parseWarcBinary(
-      spark.readStream.schema(schema).parquet(dir),
+        col("payload")), "warc_img_stream_in"),
       col("file_id"), col("payload"))
     runToMemory(
       ImageCodec.decodeMeta(recs,
@@ -1645,13 +1629,10 @@ object StreamingQueries {
     */
   def robotsCrawlDelayStream(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = graft.sources.Sinks.tempArtifactDir("robots_stream_in")
-    graft.queries.PipelineQueries.robotsMetaFixture.toDF("family", "txt")
-      .write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
     runToMemory(
       graft.graph.LinkGraph.robotsCrawlDelay(
-        spark.readStream.schema(schema).parquet(dir),
+        staged(graft.queries.PipelineQueries.robotsMetaFixture.toDF("family", "txt"),
+          "robots_stream_in"),
         col("family"), col("txt")),
       mode = "append")
       .orderBy(col("family"))
@@ -1774,17 +1755,6 @@ object StreamingQueries {
       .orderBy(col("src_family"), col("dst_family"))
   }
 
-  /** p48's HyperLogLog vocabulary cardinality on the streaming engine —
-    * the sketch-state story beside count-min (q50): the stream folds
-    * every token into ONE fixed m-int register buffer per language
-    * ([[graft.functions.Hll.RegisterAgg]]), elementwise-max merge makes
-    * the registers independent of micro-batch slicing and identical to
-    * the declarative batch registers (same md5-derived integer
-    * arithmetic), and the estimate is the SAME shared fold
-    * ([[graft.functions.Hll.estimate]]). The exact-distinct audit
-    * column joins from the batch table (count DISTINCT is not a
-    * streaming aggregate), mirroring q50's exact-count resolution.
-    */
   /** p54's source-drift KL on the streaming engine — the frozen-
     * reference deployment shape (the q56/q60 model-artifact pattern):
     * the corpus vocabulary and its token counts are trained ONCE
@@ -1839,11 +1809,8 @@ object StreamingQueries {
       .where(col("n_st") > 0 && col("i") < lit(vocab.size))
       .join(refDf, "i")
       .join(broadcast(base), col("source") === col("__src"))
-      .select(col("source"),
-        round((col("n_st").cast("double") / col("n_s").cast("double")) *
-          log((col("n_st").cast("double") * lit(nTotal).cast("double")) /
-            (col("n_s").cast("double") * col("n_t").cast("double"))) * 1e6, 0)
-          .cast("long").as("kl_micro"))
+      .select(col("source"), graft.text.CorpusOps.klMicro(col("n_st"),
+        col("n_s"), col("n_t"), lit(nTotal)).as("kl_micro"))
       .groupBy(col("source")).agg(sum(col("kl_micro")).as("s"))
     base.join(terms, col("__src") === col("source"), "left")
       .select(col("__src").as("source"), col("n_s").as("n_tokens"),
@@ -2119,6 +2086,25 @@ object StreamingQueries {
         col("lang").asc_nulls_first)
   }
 
+  /** The segment log q67 and q74 share: each micro-batch builds its
+    * own complete segment and [[drain]] lands it in its own batch_id=
+    * subdirectory, so the compactors' unique-(tok, doc) contract holds
+    * under crash replay. The sealed log reads back with an explicit
+    * schema over the leaf-dir glob (no partition-column discovery on
+    * batch_id=).
+    */
+  private def runSegmentLog(spark: SparkSession, sfDir: String, prefix: String,
+                            segSchema: StructType)
+                           (buildSegment: DataFrame => DataFrame): DataFrame = {
+    val segDir = graft.sources.Sinks.tempArtifactDir(prefix)
+    drain(documentsStream(spark, sfDir), segDir) { (batch, batchId) =>
+      buildSegment(batch)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("overwrite").parquet(s"$segDir/segments/batch_id=$batchId")
+    }
+    spark.read.schema(segSchema).parquet(s"$segDir/segments/batch_id=*")
+  }
+
   /** q65's missing half — the posting-list BODY maintained on the
     * streaming engine, log-structured: each micro-batch builds its own
     * complete index SEGMENT (the batch [[graft.text.CorpusOps.invertedIndex]]
@@ -2136,35 +2122,6 @@ object StreamingQueries {
     * re-tokenizing corpus text. That is the standard LSM index-
     * maintenance design (segments + merge), not a state-store blow-up.
     */
-  /** The exactly-once segment-log recipe q67 and q74 share: each
-    * micro-batch builds its own complete segment and lands it in its
-    * own batch_id= subdirectory with mode("overwrite") INSIDE the
-    * commit-marker wrapper. Manual appends in foreachBatch are
-    * at-least-once; the marker skips crash-replayed batch ids, and the
-    * per-batch overwrite path means a crash BETWEEN the parquet write
-    * and the marker replays into the SAME directory instead of
-    * appending a duplicate segment beside the first — the compactors'
-    * unique-(tok, doc) contract rests on both halves, not on file-sink
-    * magic. The sealed log reads back with an explicit schema over the
-    * leaf-dir glob (no partition-column discovery on batch_id=). The
-    * crash-replay contract lives HERE, once, for every segment shape.
-    */
-  private def runSegmentLog(spark: SparkSession, sfDir: String, prefix: String,
-                            segSchema: StructType)
-                           (buildSegment: DataFrame => DataFrame): DataFrame = {
-    val segDir = tempLogDir(prefix)
-    val q = documentsStream(spark, sfDir).writeStream
-      .foreachBatch(graft.sources.Sinks.idempotentForeachBatch(s"$segDir/_commits") {
-        (batch: DataFrame, batchId: Long) =>
-          buildSegment(batch)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").parquet(s"$segDir/segments/batch_id=$batchId")
-      })
-      .trigger(Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally q.stop()
-    spark.read.schema(segSchema).parquet(s"$segDir/segments/batch_id=*")
-  }
-
   def logStructuredIndex(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.text.CorpusOps
     val segSchema = StructType(Seq(
@@ -2339,7 +2296,7 @@ object StreamingQueries {
   def annIndexAppend(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.similarity.SimilaritySearch
     val e = graft.Tables.embeddings(spark, sfDir)
-    val dir = tempLogDir("graft_ivfpq_stream")
+    val dir = graft.sources.Sinks.tempArtifactDir("graft_ivfpq_stream")
     val cent = e.filter(col("vec_id") % 25 === 0)
       .select(col("vec_id").as("centroid_id"), col("embedding").as("centv"))
     val cb = SimilaritySearch.strideCodebook(e, col("vec_id"), col("embedding"),
@@ -2347,18 +2304,14 @@ object StreamingQueries {
     SimilaritySearch.buildIvfPqIndex(e.filter(col("vec_id") % 5 =!= 4),
       col("vec_id"), col("embedding"), cent, cb,
       dim = 64, numSubspaces = 4, indexDir = dir)
-    val q = embeddingsStream(spark, sfDir).filter(col("vec_id") % 5 === 4)
-      .writeStream
-      .foreachBatch(graft.sources.Sinks.idempotentForeachBatch(s"$dir/_commits") {
-        (batch: DataFrame, batchId: Long) =>
-          // allowReplace: a re-entry here IS a crash replay of the same
-          // micro-batch (the commit marker skips completed batch ids)
-          SimilaritySearch.appendToIvfPqIndex(batch, col("vec_id"), col("embedding"),
-            dim = 64, numSubspaces = 4, indexDir = dir, segment = s"b$batchId",
-            allowReplace = true)
-      })
-      .trigger(Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally q.stop()
+    drain(embeddingsStream(spark, sfDir).filter(col("vec_id") % 5 === 4), dir) {
+      (batch, batchId) =>
+        // allowReplace: a re-entry here IS a crash replay of the same
+        // micro-batch (the commit marker skips completed batch ids)
+        SimilaritySearch.appendToIvfPqIndex(batch, col("vec_id"), col("embedding"),
+          dim = 64, numSubspaces = 4, indexDir = dir, segment = s"b$batchId",
+          allowReplace = true)
+    }
     SimilaritySearch.searchIvfPqIndex(dir, e.filter(col("vec_id") < 20),
         col("vec_id"), col("embedding"), k = 5, dim = 64, numSubspaces = 4,
         nprobe = 2)
@@ -2382,21 +2335,17 @@ object StreamingQueries {
   def minhashIndexAppend(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.dedup.Dedup
     val docs = graft.Tables.documents(spark, sfDir)
-    val dir = tempLogDir("graft_mh_stream")
+    val dir = graft.sources.Sinks.tempArtifactDir("graft_mh_stream")
     val table = "graft_mh_streamidx"
     Dedup.buildMinhashIndex(docs.filter(col("doc_id") % 5 =!= 4),
       col("doc_id"), col("text"), indexDir = dir, table = table, nBuckets = 8)
-    val q = documentsStream(spark, sfDir).filter(col("doc_id") % 5 === 4)
-      .writeStream
-      .foreachBatch(graft.sources.Sinks.idempotentForeachBatch(s"$dir/_commits") {
-        (batch: DataFrame, batchId: Long) =>
-          // allowReplace: a re-entry here IS a crash replay of the same
-          // micro-batch (the commit marker skips completed batch ids)
-          Dedup.appendToMinhashIndex(batch, col("doc_id"), col("text"),
-            table = table, segment = s"b$batchId", allowReplace = true)
-      })
-      .trigger(Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally q.stop()
+    drain(documentsStream(spark, sfDir).filter(col("doc_id") % 5 === 4), dir) {
+      (batch, batchId) =>
+        // allowReplace: a re-entry here IS a crash replay of the same
+        // micro-batch (the commit marker skips completed batch ids)
+        Dedup.appendToMinhashIndex(batch, col("doc_id"), col("text"),
+          table = table, segment = s"b$batchId", allowReplace = true)
+    }
     Dedup.queryMinhashIndexVerified(spark, table,
         docs.filter(col("doc_id") % 10 === 7), col("doc_id"), col("text"),
         threshold = 0.25)
@@ -2421,7 +2370,7 @@ object StreamingQueries {
     import graft.text.CorpusOps
     val queries = CorpusOps.bm25DemoQueries
     val terms = queries.flatMap(_._2).distinct
-    val logDir = tempLogDir("graft_bm25log")
+    val logDir = graft.sources.Sinks.tempArtifactDir("graft_bm25log")
     // commit-marker idempotence (the q67 rule): replaying a crashed
     // batch must not double its postings/stats rows — inflated df or
     // n_docs/sum_dl would silently skew every later epoch's ranking.
@@ -2430,27 +2379,23 @@ object StreamingQueries {
     // the postings append is re-run too, which mode("append") would
     // duplicate — hence the per-batch subdirectory with overwrite: a
     // replay rewrites the same paths instead of appending beside them.
-    val q = documentsStream(spark, sfDir).writeStream
-      .foreachBatch(graft.sources.Sinks.idempotentForeachBatch(s"$logDir/_commits") {
-        (batch: DataFrame, batchId: Long) =>
-          // ONE tokenize per batch: both artifacts derive from this
-          val toks = batch.select(col("doc_id"),
-            graft.functions.TextFunctions.tokens(col("text")).as("toks")).persist()
-          try {
-            CorpusOps.bm25IndexSegmentTokens(toks, terms)
-              .write.mode("overwrite").parquet(s"$logDir/postings/batch_id=$batchId")
-            toks.agg(count(lit(1)).as("n_docs"),
-                coalesce(sum(size(col("toks")).cast("long")), lit(0L)).as("sum_dl"))
-              .write.mode("overwrite").parquet(s"$logDir/stats/batch_id=$batchId")
-            // the (doc_id, dl) doc-length sidecar a production index
-            // keeps anyway — what lets a LATER takedown retract corpus
-            // stats without re-reading the deleted documents' text
-            toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-              .write.mode("overwrite").parquet(s"$logDir/doclens/batch_id=$batchId")
-          } finally toks.unpersist()
-      })
-      .trigger(Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally q.stop()
+    drain(documentsStream(spark, sfDir), logDir) { (batch, batchId) =>
+      // ONE tokenize per batch: both artifacts derive from this
+      val toks = batch.select(col("doc_id"),
+        graft.functions.TextFunctions.tokens(col("text")).as("toks")).persist()
+      try {
+        CorpusOps.bm25IndexSegmentTokens(toks, terms)
+          .write.mode("overwrite").parquet(s"$logDir/postings/batch_id=$batchId")
+        toks.agg(count(lit(1)).as("n_docs"),
+            coalesce(sum(size(col("toks")).cast("long")), lit(0L)).as("sum_dl"))
+          .write.mode("overwrite").parquet(s"$logDir/stats/batch_id=$batchId")
+        // the (doc_id, dl) doc-length sidecar a production index
+        // keeps anyway — what lets a LATER takedown retract corpus
+        // stats without re-reading the deleted documents' text
+        toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
+          .write.mode("overwrite").parquet(s"$logDir/doclens/batch_id=$batchId")
+      } finally toks.unpersist()
+    }
     val postSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("term", StringType),
       StructField("tf", LongType), StructField("dl", LongType)))
@@ -2483,13 +2428,6 @@ object StreamingQueries {
     bm25FreshStats(spark, sfDir, deletes = Some(
       graft.Tables.documents(spark, sfDir)
         .filter(expr("floor(doc_id / 20) % 7 = 3")).select(col("doc_id"))))
-
-  /** q67/q68's segment logs live in a JVM-lifetime temp dir (see
-    * [[graft.sources.Sinks.tempArtifactDir]]); production passes a
-    * durable path instead.
-    */
-  private def tempLogDir(prefix: String): String =
-    graft.sources.Sinks.tempArtifactDir(prefix)
 
   /** p58's BPE tokenizer training on the streaming engine: the ONLY
     * corpus-scale work — the (word, count) vocabulary — is ONE
@@ -2546,6 +2484,17 @@ object StreamingQueries {
       .orderBy(col("doc_id"))
   }
 
+  /** p48's HyperLogLog vocabulary cardinality on the streaming engine —
+    * the sketch-state story beside count-min (q50): the stream folds
+    * every token into ONE fixed m-int register buffer per language
+    * ([[graft.functions.Hll.RegisterAgg]]), elementwise-max merge makes
+    * the registers independent of micro-batch slicing and identical to
+    * the declarative batch registers (same md5-derived integer
+    * arithmetic), and the estimate is the SAME shared fold
+    * ([[graft.functions.Hll.estimate]]). The exact-distinct audit
+    * column joins from the batch table (count DISTINCT is not a
+    * streaming aggregate), mirroring q50's exact-count resolution.
+    */
   def hllDistinct(spark: SparkSession, sfDir: String, p: Int = 6): DataFrame = {
     import graft.functions.{Hll, TextFunctions}
     val ra = udaf(new Hll.RegisterAgg(p))

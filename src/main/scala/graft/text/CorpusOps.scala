@@ -1148,6 +1148,19 @@ object CorpusOps {
         (sumDl.cast("double") / nDocs))) * 1e6, 0)
       .cast("long")
 
+  /** One (source, term)'s micro-unit KL contribution,
+    * p(t|s)·log(p(t|s) / p(t)) from the counts n_st, n_s, n_t and the
+    * corpus total n — the single double op chain, truncated to LONG
+    * once. SHARED by the batch operator and the streaming twin so their
+    * drift scores cannot drift (the [[bm25Micro]] rule).
+    */
+  private[graft] def klMicro(nSt: Column, nS: Column, nT: Column,
+                             n: Column): Column =
+    round((nSt.cast("double") / nS.cast("double")) *
+      log((nSt.cast("double") * n.cast("double")) /
+        (nS.cast("double") * nT.cast("double"))) * 1e6, 0)
+      .cast("long")
+
   /** Per-document bigram-LM negative log-likelihood against the corpus'
     * own language model — the in-engine form of the CCNet/KenLM
     * perplexity quality filter (Wenzek et al. 2020 train a 5-gram model
@@ -2688,10 +2701,7 @@ object CorpusOps {
     val tot = st.agg(sum(col("n_st")).as("n"))
     st.join(ns, Seq("source")).join(ct, Seq("tok")).crossJoin(broadcast(tot))
       .select(col("source"), col("n_s"),
-        round((col("n_st").cast("double") / col("n_s").cast("double")) *
-          log((col("n_st").cast("double") * col("n").cast("double")) /
-            (col("n_s").cast("double") * col("n_t").cast("double"))) * 1e6, 0)
-          .cast("long").as("kl_micro"))
+        klMicro(col("n_st"), col("n_s"), col("n_t"), col("n")).as("kl_micro"))
       .groupBy(col("source"))
       .agg(max(col("n_s")).as("n_tokens"), sum(col("kl_micro")).as("s"))
       .select(col("source"), col("n_tokens"),

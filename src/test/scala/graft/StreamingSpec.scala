@@ -779,6 +779,37 @@ class StreamingSpec extends AnyFunSuite {
     assert(replayed.filter(col("error").isNull).count() == 3)
   }
 
+  test("dead-letter routing lands a replayed batch exactly once") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.streaming.DeadLetter
+    val dir = java.nio.file.Files.createTempDirectory("graft_dlq_replay_").toString
+    val attempt = (df: org.apache.spark.sql.DataFrame) =>
+      df.withColumn("value", when(col("id") % 3 =!= 0, col("id") * 10))
+        .withColumn("error", when(col("id") % 3 === 0, lit("mod3")))
+    // three input files, one per micro-batch
+    Seq(1L to 3L, 4L to 6L, 7L to 9L).foreach(ids =>
+      ids.toDF("id").coalesce(1).write.mode("append").parquet(s"$dir/in"))
+    def runOnce(): Unit = DeadLetter.run(
+      spark.readStream.schema("id LONG").option("maxFilesPerTrigger", 1)
+        .parquet(s"$dir/in"),
+      attempt, s"$dir/out", s"$dir/dlq", s"$dir/ckpt").awaitTermination()
+    runOnce()
+    // a crash after the sink wrote the last batch but before Spark
+    // committed it: the restart replays that batch id
+    val commits = new java.io.File(s"$dir/ckpt/commits")
+    val last = commits.listFiles().map(_.getName).filter(_.forall(_.isDigit))
+      .map(_.toLong).max
+    assert(last == 2L)
+    assert(new java.io.File(commits, last.toString).delete())
+    new java.io.File(commits, s".$last.crc").delete()
+    runOnce()
+    def ids(path: String) =
+      spark.read.parquet(path).select("id").as[Long].collect().sorted.toSeq
+    assert(ids(s"$dir/out") == Seq(1L, 2L, 4L, 5L, 7L, 8L))
+    assert(ids(s"$dir/dlq") == Seq(3L, 6L, 9L))
+  }
+
   test("rowLatencySink records per-row sink latency distributions per batch") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
