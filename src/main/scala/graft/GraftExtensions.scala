@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.IntegerType
 import graft.functions.{CosineSimilarity, MinHashSignature, SimHash, ZOrderCode}
 
 /** Session extensions registering graft's native expressions for SQL.
@@ -14,82 +16,45 @@ import graft.functions.{CosineSimilarity, MinHashSignature, SimHash, ZOrderCode}
   *    (what Verify/Bench use, since the driver owns the builder).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction(GraftExtensions.cosineFunction)
-    e.injectFunction(GraftExtensions.minhashFunction)
-    e.injectFunction(GraftExtensions.simhashFunction)
-    e.injectFunction(GraftExtensions.zorderFunction)
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(e.injectFunction)
 }
 
 object GraftExtensions {
 
-  private val cosineBuilder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2, "cosine_similarity(a, b) takes 2 arguments")
-    CosineSimilarity(exprs.head, exprs(1))
+  private def intLit(name: String, what: String, e: Expression): Int = e match {
+    case Literal(v: Int, IntegerType) => v
+    case other => throw new IllegalArgumentException(
+      s"$name: $what must be an integer literal, got $other")
   }
 
-  val cosineFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("cosine_similarity"),
-    new ExpressionInfo(classOf[CosineSimilarity].getCanonicalName, "cosine_similarity"),
-    cosineBuilder)
+  /** (SQL name, arity, the Column function it calls on the call's
+    * argument expressions).
+    */
+  private val sqlFunctions: Seq[(String, Int, Seq[Expression] => Column)] = {
+    def c(e: Expression): Column = ColumnBridge.column(e)
+    Seq(
+      ("cosine_similarity", 2, a => CosineSimilarity(c(a(0)), c(a(1)))),
+      ("minhash_signature", 3, a => MinHashSignature(c(a(0)),
+        intLit("minhash_signature", "n", a(1)), intLit("minhash_signature", "k", a(2)))),
+      ("simhash", 2, a => SimHash(c(a(0)), intLit("simhash", "bits", a(1)))),
+      ("zorder_code", 3, a => ZOrderCode(c(a(0)), c(a(1)), intLit("zorder_code", "bits", a(2)))))
+  }
 
-  private val minhashBuilder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 3,
-      "minhash_signature(text, n, k) takes 3 arguments (n, k integer literals)")
-    def lit(e: Expression, what: String): Int = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"minhash_signature: $what must be an integer literal, got $other")
+  /** The one registration list both entry points read. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    sqlFunctions.map { case (name, arity, build) =>
+      val builder: Seq[Expression] => Expression = { exprs =>
+        require(exprs.length == arity, s"$name takes $arity arguments")
+        ColumnBridge.sqlExpression(build(exprs))
+      }
+      (FunctionIdentifier(name), new ExpressionInfo(classOf[GraftExtensions].getName, name), builder)
     }
-    MinHashSignature(exprs.head, lit(exprs(1), "n"), lit(exprs(2), "k"))
-  }
-
-  val minhashFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("minhash_signature"),
-    new ExpressionInfo(classOf[MinHashSignature].getCanonicalName, "minhash_signature"),
-    minhashBuilder)
-
-  private val simhashBuilder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2, "simhash(text, bits) takes 2 arguments (bits an integer literal)")
-    val bits = exprs(1) match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"simhash: bits must be an integer literal, got $other")
-    }
-    SimHash(exprs.head, bits)
-  }
-
-  val simhashFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("simhash"),
-    new ExpressionInfo(classOf[SimHash].getCanonicalName, "simhash"),
-    simhashBuilder)
-
-  private val zorderBuilder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 3,
-      "zorder_code(x, y, bits) takes 3 arguments (bits an integer literal)")
-    val bits = exprs(2) match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"zorder_code: bits must be an integer literal, got $other")
-    }
-    ZOrderCode(exprs.head, exprs(1), bits)
-  }
-
-  val zorderFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("zorder_code"),
-    new ExpressionInfo(classOf[ZOrderCode].getCanonicalName, "zorder_code"),
-    zorderBuilder)
 
   /** Runtime registration on an existing session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_similarity", cosineBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_signature", minhashBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash", simhashBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "zorder_code", zorderBuilder, "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (id, _, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        id.funcName, builder, "built-in")
+    }
 }

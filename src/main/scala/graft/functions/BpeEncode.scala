@@ -3,11 +3,8 @@ package graft.functions
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Merge-table BPE ENCODING — tokenizer INFERENCE, the most-executed
@@ -21,52 +18,29 @@ import org.apache.spark.unsafe.types.UTF8String
   * final training state (the round-trip property CorpusOpsSpec pins).
   *
   * Scale shape: the merge table is a bounded model artifact riding the
-  * serialized expression (the broadcast-small-side rule — it reaches
-  * every task once, never shuffles), the encode is pure map-side in
-  * whole-stage codegen via a static JVM kernel (`ctx.addReferenceObj`,
-  * the [[SimHash]] pattern), and a per-task word→encoding memo makes
+  * serialized plan as an object literal (the broadcast-small-side rule
+  * — it reaches every task once, never shuffles), the encode is pure
+  * map-side in whole-stage codegen via a static JVM kernel
+  * ([[org.apache.spark.sql.graft.ColumnBridge.kernel]], the [[SimHash]]
+  * pattern), and a per-task word→encoding memo makes
   * the per-word cost amortize to once per DISTINCT word per task —
   * the standard production-tokenizer cache, which is why O(merges·|w|)
   * sequential application is fine even for large tables: Zipfian
   * corpora re-encode the same head words constantly.
   */
-case class BpeEncode(child: Expression, merges: Seq[(String, String)],
-                     byteLevel: Boolean = false)
-  extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"bpe_encode expects a string column, got ${child.dataType.simpleString}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  @transient private lazy val table = new BpeTable(merges.toArray, byteLevel)
-
-  protected override def nullSafeEval(t: Any): Any =
-    BpeEncodeUtil.encode(t.asInstanceOf[UTF8String], table)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t => {
-      val tbl = ctx.addReferenceObj("bpeTable", table, classOf[BpeTable].getName)
-      s"${ev.value} = graft.functions.BpeEncodeUtil.encode($t, $tbl);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object BpeEncode {
   def apply(text: Column, merges: Seq[(String, String)]): Column =
-    ColumnBridge.column(BpeEncode(ColumnBridge.expression(text), merges))
+    encode(text, new BpeTable(merges.toArray))
 
   /** Byte-level variant: words seed as [[ByteAlphabet]] byte symbols
     * (the GPT-2 `bytes_to_unicode` convention) instead of code points.
     */
   def bytes(text: Column, merges: Seq[(String, String)]): Column =
-    ColumnBridge.column(
-      BpeEncode(ColumnBridge.expression(text), merges, byteLevel = true))
+    encode(text, new BpeTable(merges.toArray, byteLevel = true))
+
+  private def encode(text: Column, table: BpeTable): Column =
+    ColumnBridge.kernel("bpe_encode", BpeEncodeUtil, "encode", StringType,
+      Seq(text -> StringType), Seq(table))
 }
 
 /** The two primitive steps the trainer and the encoder MUST share —
@@ -128,6 +102,13 @@ final class BpeTable(val merges: Array[(String, String)],
                      val byteLevel: Boolean = false) extends Serializable {
   private val maxCacheWords = 1 << 16
   @transient private lazy val cache = new java.util.HashMap[String, String]()
+
+  /** Content equality: two kernel calls over equal tables compare equal. */
+  override def equals(o: Any): Boolean = o match {
+    case t: BpeTable => t.byteLevel == byteLevel && t.merges.sameElements(merges)
+    case _ => false
+  }
+  override def hashCode: Int = merges.toSeq.hashCode
 
   def encodeWord(w: String): String = {
     val hit = cache.get(w)

@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{BinaryType, DataType}
+import org.apache.spark.sql.types.BinaryType
 
 /** deflate a BINARY payload — the sink-side twin of
   * [[GunzipUtil.inflate]], in EITHER wire form: `raw = false` emits
@@ -15,33 +12,10 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   * half's sniff is exercised on both. Deterministic at the default
   * level; scan-stage whole-stage codegen via the static kernel.
   */
-case class DeflateBytes(child: Expression, raw: Boolean)
-  extends UnaryExpression {
-
-  override def dataType: DataType = BinaryType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure(
-        s"deflate_bytes expects a binary column, got " +
-          child.dataType.simpleString)
-    else TypeCheckResult.TypeCheckSuccess
-
-  protected override def nullSafeEval(t: Any): Any =
-    DeflateBytes.deflate(t.asInstanceOf[Array[Byte]], raw)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.DeflateBytes.deflate($t, $raw);")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Expression = copy(child = newChild)
-}
-
 object DeflateBytes {
   def apply(payload: Column, raw: Boolean): Column =
-    ColumnBridge.column(DeflateBytes(ColumnBridge.expression(payload), raw))
+    ColumnBridge.kernel("deflate_bytes", this, "deflate", BinaryType,
+      Seq(payload -> BinaryType), Seq(raw))
 
   /** One deflate stream over the input bytes, zlib-wrapped or raw. */
   def deflate(bytes: Array[Byte], raw: Boolean): Array[Byte] = {

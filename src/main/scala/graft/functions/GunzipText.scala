@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
+import org.apache.spark.sql.types.{BinaryType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** gunzip a BINARY payload to its UTF-8 text — the fetch-side decode
@@ -23,30 +20,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * dies at the one hostile domain; the cap makes that a per-row loud
   * error instead.
   */
-case class GunzipText(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure(
-        s"gunzip_text expects a binary column, got ${child.dataType.simpleString}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  protected override def nullSafeEval(t: Any): Any =
-    GunzipUtil.gunzipUtf8(t.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.GunzipUtil.gunzipUtf8($t);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object GunzipText {
   def apply(payload: Column): Column =
-    ColumnBridge.column(GunzipText(ColumnBridge.expression(payload)))
+    ColumnBridge.kernel("gunzip_text", GunzipUtil, "gunzipUtf8", StringType,
+      Seq(payload -> BinaryType))
 }
 
 object GunzipUtil {

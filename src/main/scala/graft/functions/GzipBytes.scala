@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{BinaryType, DataType}
+import org.apache.spark.sql.types.BinaryType
 
 /** gzip a BINARY payload — the sink-side twin of [[GunzipText]]'s
   * inflate: what an HTTP fixture or sink needs to store a
@@ -16,30 +13,10 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   * at the default level), scan-stage whole-stage codegen via the
   * static kernel.
   */
-case class GzipBytes(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = BinaryType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure(
-        s"gzip_bytes expects a binary column, got ${child.dataType.simpleString}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  protected override def nullSafeEval(t: Any): Any =
-    GzipBytes.gzip(t.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.GzipBytes.gzip($t);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object GzipBytes {
   def apply(payload: Column): Column =
-    ColumnBridge.column(GzipBytes(ColumnBridge.expression(payload)))
+    ColumnBridge.kernel("gzip_bytes", this, "gzip", BinaryType,
+      Seq(payload -> BinaryType))
 
   /** One gzip member over the input bytes. */
   def gzip(bytes: Array[Byte]): Array[Byte] = {

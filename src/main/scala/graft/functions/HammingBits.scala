@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Hamming distance between two equal-length code strings — the verify
@@ -17,36 +14,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * truncated code silently scoring as "near" would admit false
   * duplicates into an election.
   */
-case class HammingBits(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-
-  override def nullable: Boolean = left.nullable || right.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType != StringType || right.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"hamming_bits expects two string columns, got " +
-          s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    HammingBitsUtil.dist(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.HammingBitsUtil.dist($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object HammingBits {
   def apply(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      HammingBits(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    ColumnBridge.kernel("hamming_bits", HammingBitsUtil, "dist", IntegerType,
+      Seq(a -> StringType, b -> StringType))
 }
 
 /** JVM kernel — plain object so generated code calls the static

@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
+import org.apache.spark.sql.types.{BinaryType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Content sniffing by MAGIC BYTES — the routing decision a real
@@ -22,35 +19,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Beyond-reference surface (the LLM-pipeline ingest family): the
   * declared-header routing lives in [[graft.sources.Warc.splitHttp]];
-  * this sniff is the real-archive hardening on top. Native
-  * expression (the [[ShingleHash40]] pattern): a static JVM kernel
-  * rides `doGenCode`, so the sniff stays inside whole-stage codegen
-  * next to the splitHttp projection it guards.
+  * this sniff is the real-archive hardening on top. A static JVM
+  * kernel called through [[org.apache.spark.sql.graft.ColumnBridge.kernel]]
+  * (the [[ShingleHash40]] pattern), so the sniff stays inside
+  * whole-stage codegen next to the splitHttp projection it guards.
   */
-case class MimeSniff(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure(
-        s"mime_sniff expects a binary column, got ${child.dataType.simpleString}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  protected override def nullSafeEval(b: Any): Any =
-    MimeSniffUtil.sniff(b.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b =>
-      s"${ev.value} = graft.functions.MimeSniffUtil.sniff($b);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object MimeSniff {
   def apply(payload: Column): Column =
-    ColumnBridge.column(MimeSniff(ColumnBridge.expression(payload)))
+    ColumnBridge.kernel("mime_sniff", MimeSniffUtil, "sniff", StringType,
+      Seq(payload -> BinaryType))
 }
 
 object MimeSniffUtil {

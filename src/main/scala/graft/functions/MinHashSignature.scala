@@ -5,12 +5,9 @@ import java.security.MessageDigest
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Map-side MinHash signature: the k salted-md5 minima over a document's
@@ -34,43 +31,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * Reference capability: fuzzy-dedup north star (BASELINE.json); shingle
   * semantics per SURVEY.md §7.2 item 5.
   */
-case class MinHashSignature(child: Expression, n: Int, k: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) {
-      if (n >= 1 && k >= 1) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"minhash_signature: n ($n) and k ($k) must be >= 1")
-    } else {
-      TypeCheckResult.TypeCheckFailure(
-        s"minhash_signature expects a string column, got ${child.dataType.simpleString}")
-    }
-
-  protected override def nullSafeEval(t: Any): Any =
-    MinHashUtil.signature(t.asInstanceOf[UTF8String], n, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t => {
-      // Static call into the JVM helper: stays inside whole-stage codegen
-      // (no CodegenFallback / interpreted-projection detour).
-      s"""
-         |${ev.value} = graft.functions.MinHashUtil.signature($t, $n, $k);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object MinHashSignature {
   /** Column form: `minhashSignature($"text", n = 3, k = 8)`. */
-  def apply(text: Column, n: Int, k: Int): Column =
-    ColumnBridge.column(MinHashSignature(ColumnBridge.expression(text), n, k))
+  def apply(text: Column, n: Int, k: Int): Column = {
+    require(n >= 1 && k >= 1, s"minhash_signature: n ($n) and k ($k) must be >= 1")
+    ColumnBridge.kernel("minhash_signature", MinHashUtil, "signature",
+      ArrayType(StringType, containsNull = false), Seq(text -> StringType),
+      Seq(n, k), nullable = true)
+  }
 }
 
 /** JVM kernel for [[MinHashSignature]] — a plain object so scalac emits a

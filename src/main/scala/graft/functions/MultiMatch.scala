@@ -1,12 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Multi-pattern substring counting in ONE text pass — the denylist /
@@ -16,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * this is O(text + matches): the classic Aho–Corasick automaton
   * (Aho & Corasick 1975 — goto/fail links over the phrase trie,
   * dictionary-suffix outputs), built once per task from the phrase
-  * list riding the serialized expression (the [[BpeEncode]]
+  * list riding the serialized plan (the [[BpeEncode]]
   * broadcast-artifact pattern), walked once per row inside
   * whole-stage codegen.
   *
@@ -28,43 +25,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * with replace() arithmetic. Matching is exact code units; callers
   * wanting case-insensitivity lower both sides.
   */
-case class MultiMatchCounts(child: Expression, phrases: Seq[String])
-  extends UnaryExpression {
-
-  require(phrases.nonEmpty, "multi_match: empty phrase list")
-  require(phrases.forall(_.nonEmpty),
-    "multi_match: empty phrase — it would match at every position")
-  require(phrases.distinct.length == phrases.length,
-    "multi_match: duplicate phrases — each output slot must be one phrase")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"multi_match expects a string column, got ${child.dataType.simpleString}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  @transient private lazy val automaton = new AcAutomaton(phrases.toArray)
-
-  protected override def nullSafeEval(t: Any): Any =
-    MultiMatchUtil.counts(t.asInstanceOf[UTF8String], automaton)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t => {
-      val a = ctx.addReferenceObj("acAutomaton", automaton,
-        classOf[AcAutomaton].getName)
-      s"${ev.value} = graft.functions.MultiMatchUtil.counts($t, $a);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object MultiMatchCounts {
-  def apply(text: Column, phrases: Seq[String]): Column =
-    ColumnBridge.column(
-      MultiMatchCounts(ColumnBridge.expression(text), phrases))
+  def apply(text: Column, phrases: Seq[String]): Column = {
+    require(phrases.nonEmpty, "multi_match: empty phrase list")
+    require(phrases.forall(_.nonEmpty),
+      "multi_match: empty phrase — it would match at every position")
+    require(phrases.distinct.length == phrases.length,
+      "multi_match: duplicate phrases — each output slot must be one phrase")
+    ColumnBridge.kernel("multi_match", MultiMatchUtil, "counts",
+      ArrayType(LongType, containsNull = false), Seq(text -> StringType),
+      Seq(new AcAutomaton(phrases.toArray)))
+  }
 }
 
 /** The Aho–Corasick automaton artifact: built lazily on first use in
@@ -79,6 +50,15 @@ object MultiMatchCounts {
 final class AcAutomaton(val phrases: Array[String]) extends Serializable {
 
   @transient lazy val built: AcAutomaton.States = AcAutomaton.build(phrases)
+
+  /** Content equality: two kernel calls over equal phrase lists compare
+    * equal.
+    */
+  override def equals(o: Any): Boolean = o match {
+    case a: AcAutomaton => a.phrases.sameElements(phrases)
+    case _ => false
+  }
+  override def hashCode: Int = phrases.toSeq.hashCode
 }
 
 object AcAutomaton {

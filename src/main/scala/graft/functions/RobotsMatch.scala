@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
+import org.apache.spark.sql.types.{BooleanType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** RFC 9309 (robots.txt) path-pattern matching — the FULL wildcard
@@ -60,39 +57,12 @@ object RobotsMatchUtil {
   }
 }
 
-/** [[RobotsMatchUtil.matches]] as a codegen'd expression: the per-rule
+/** [[RobotsMatchUtil.matches]] per (path, pattern) row: the per-rule
   * gate predicate [[graft.graph.LinkGraph.robotsFilterWildcard]] runs
   * inside its scan-stage rule fold.
   */
-case class RobotsMatch(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def dataType: DataType = BooleanType
-
-  override def nullable: Boolean = left.nullable || right.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType != StringType || right.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"robots_match expects (path string, pattern string), got " +
-          s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    RobotsMatchUtil.matches(a.asInstanceOf[UTF8String],
-      b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.RobotsMatchUtil.matches($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object RobotsMatch {
   def apply(path: Column, pattern: Column): Column =
-    ColumnBridge.column(RobotsMatch(
-      ColumnBridge.expression(path), ColumnBridge.expression(pattern)))
+    ColumnBridge.kernel("robots_match", RobotsMatchUtil, "matches",
+      BooleanType, Seq(path -> StringType, pattern -> StringType))
 }

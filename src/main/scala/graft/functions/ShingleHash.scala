@@ -5,12 +5,9 @@ import java.security.MessageDigest
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Word n-gram shingle hashes as ONE codegen'd pass: tokenize (the
@@ -23,42 +20,24 @@ import org.apache.spark.unsafe.types.UTF8String
   * oracles recompute (FunctionsSpec pins the equivalence against the
   * column-composition form).
   *
-  * Why a native expression: the array-form [[TextFunctions.shingles]]
+  * Why a kernel call: the array-form [[TextFunctions.shingles]]
   * is a higher-order-function lambda — CodegenFallback, interpreted per
   * element, with the token split re-evaluated per reference — measured
   * 3-4× slower than the row form even at sf0.1, and it sits in the
   * map-side hot path of every sketch build. The row form
   * ([[TextFunctions.explodedShinglesPos]]) is codegen'd but pays a
   * corpus-sized window shuffle. This kernel keeps the map-side shape
-  * AND whole-stage codegen: the static JVM method rides `doGenCode`
-  * (the [[SimHash]]/[[BpeEncode]] pattern), one tokenization and one
+  * AND whole-stage codegen: the static JVM method is called through
+  * [[org.apache.spark.sql.graft.ColumnBridge.kernel]] (the
+  * [[SimHash]]/[[BpeEncode]] pattern), one tokenization and one
   * rolling join per document, md5 via a thread-local digest.
   */
-case class ShingleHash40(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, s"shingle width must be >= 1, got $n")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"shingle_hash40 expects a string column, got ${child.dataType.simpleString}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  protected override def nullSafeEval(t: Any): Any =
-    ShingleHash40Util.hashes(t.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.ShingleHash40Util.hashes($t, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object ShingleHash40 {
-  def apply(text: Column, n: Int): Column =
-    ColumnBridge.column(ShingleHash40(ColumnBridge.expression(text), n))
+  def apply(text: Column, n: Int): Column = {
+    require(n >= 1, s"shingle width must be >= 1, got $n")
+    ColumnBridge.kernel("shingle_hash40", ShingleHash40Util, "hashes",
+      ArrayType(LongType, containsNull = false), Seq(text -> StringType), Seq(n))
+  }
 }
 
 /** [[ShingleHash40]]'s sibling for operators that join on full md5 HEX
@@ -66,31 +45,12 @@ object ShingleHash40 {
   * shingle's 32-char lowercase md5 hex — bit-identical to
   * `md5(array_join(slice(tokens, i, n), ' '))`, one codegen'd pass.
   */
-case class ShingleMd5(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, s"shingle width must be >= 1, got $n")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"shingle_md5 expects a string column, got ${child.dataType.simpleString}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  protected override def nullSafeEval(t: Any): Any =
-    ShingleHash40Util.md5Hex(t.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.ShingleHash40Util.md5Hex($t, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object ShingleMd5 {
-  def apply(text: Column, n: Int): Column =
-    ColumnBridge.column(ShingleMd5(ColumnBridge.expression(text), n))
+  def apply(text: Column, n: Int): Column = {
+    require(n >= 1, s"shingle width must be >= 1, got $n")
+    ColumnBridge.kernel("shingle_md5", ShingleHash40Util, "md5Hex",
+      ArrayType(StringType, containsNull = false), Seq(text -> StringType), Seq(n))
+  }
 }
 
 object ShingleHash40Util {

@@ -5,11 +5,8 @@ import java.security.MessageDigest
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Map-side SimHash: the `bits`-bit code of a document computed in one
@@ -26,40 +23,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * collapse; this form emits the finished code from the scan stage, so
   * nothing per-token ever leaves the expression.
   */
-case class SimHash(child: Expression, bits: Int) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"simhash expects a string column, got ${child.dataType.simpleString}")
-    else if (bits < 1 || bits > 63)
-      TypeCheckResult.TypeCheckFailure(s"simhash bits ($bits) must be in 1..63")
-    else TypeCheckResult.TypeCheckSuccess
-
-  protected override def nullSafeEval(t: Any): Any =
-    SimHashUtil.simhash(t.asInstanceOf[UTF8String], bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t => {
-      val boxed = ctx.freshName("code")
-      s"""
-         |java.lang.Long $boxed = graft.functions.SimHashUtil.simhash($t, $bits);
-         |${ev.isNull} = ($boxed == null);
-         |${ev.value} = ${ev.isNull} ? -1L : $boxed.longValue();
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object SimHash {
-  def apply(text: Column, bits: Int): Column =
-    ColumnBridge.column(SimHash(ColumnBridge.expression(text), bits))
+  def apply(text: Column, bits: Int): Column = {
+    require(bits >= 1 && bits <= 63, s"simhash bits ($bits) must be in 1..63")
+    ColumnBridge.kernel("simhash", SimHashUtil, "simhash", LongType,
+      Seq(text -> StringType), Seq(bits), nullable = true)
+  }
 }
 
 /** JVM kernel — plain object so generated code calls the static

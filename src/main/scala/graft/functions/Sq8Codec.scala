@@ -15,8 +15,7 @@ import org.apache.spark.sql.types._
   * DIMENSION, 64 closures + 128 `element_at` probes per vector, and the
   * projection fell out of whole-stage codegen). Each kernel here is one
   * tight primitive loop over the model's (lo, hi) double arrays held as
-  * plain JVM references, riding inside whole-stage codegen like
-  * [[PackU8]].
+  * plain JVM references, riding inside whole-stage codegen.
   *
   * ARITHMETIC IS BIT-IDENTICAL to the transform forms FOR FINITE
   * INPUTS (pinned by SimilaritySpec's reconstruction-equals-direct-
@@ -89,8 +88,8 @@ object Sq8CodecUtil {
   /** raw vector → packed u8 codes (fused quantize + pack): degenerate
     * dims mint code 0; `clamp` bounds out-of-range components to the
     * boundary code (the append convention); a code outside [0, 255]
-    * without clamp is a quantizer bug and refuses loudly (the
-    * [[ByteCodesUtil.pack]] contract).
+    * without clamp is a quantizer bug and refuses loudly, never a
+    * silent byte wrap.
     */
   def encode(vec: ArrayData, et: DataType,
              lo: Array[Double], hi: Array[Double],

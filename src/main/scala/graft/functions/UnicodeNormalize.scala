@@ -3,11 +3,8 @@ package graft.functions
 import java.text.Normalizer
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unicode normalization as a codegen'd scan-stage projection — the
@@ -72,49 +69,19 @@ object UnicodeNormalizeUtil {
   }
 }
 
-/** [[UnicodeNormalizeUtil.normalize]] as a codegen'd unary expression:
-  * the normalization projection stays inside whole-stage codegen with
-  * the key derivations it feeds.
-  */
-case class UnicodeNormalize(child: Expression, formName: String,
-                            casefold: Boolean)
-  extends UnaryExpression {
-
-  require(UnicodeNormalize.Forms.contains(formName),
-    s"unicode_normalize: form must be one of " +
-      s"${UnicodeNormalize.Forms.mkString(", ")}, got $formName")
-
-  override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"unicode_normalize expects a string, got " +
-          child.dataType.simpleString)
-    else TypeCheckResult.TypeCheckSuccess
-
-  private def form: Normalizer.Form = Normalizer.Form.valueOf(formName)
-
-  protected override def nullSafeEval(input: Any): Any =
-    UnicodeNormalizeUtil.normalize(input.asInstanceOf[UTF8String], form,
-      casefold)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.UnicodeNormalizeUtil.normalize($c, " +
-        s"java.text.Normalizer.Form.$formName, $casefold)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Expression = copy(child = newChild)
-}
-
 object UnicodeNormalize {
   val Forms: Set[String] = Set("NFC", "NFD", "NFKC", "NFKD")
 
-  def apply(text: Column, form: String, casefold: Boolean): Column =
-    ColumnBridge.column(UnicodeNormalize(
-      ColumnBridge.expression(text), form, casefold))
+  /** [[UnicodeNormalizeUtil.normalize]] per row, inside whole-stage
+    * codegen with the key derivations it feeds.
+    */
+  def apply(text: Column, form: String, casefold: Boolean): Column = {
+    require(Forms.contains(form), s"unicode_normalize: form must be one of " +
+      s"${Forms.mkString(", ")}, got $form")
+    ColumnBridge.kernel("unicode_normalize", UnicodeNormalizeUtil, "normalize",
+      StringType, Seq(text -> StringType),
+      Seq(Normalizer.Form.valueOf(form), casefold))
+  }
 
   /** Canonical composition — the wire norm every byte-keyed operator
     * should see.

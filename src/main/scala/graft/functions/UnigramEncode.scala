@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unigram-LM tokenization (the SentencePiece family's OTHER
@@ -228,6 +225,14 @@ final class UnigramModel(val pieces: Array[String],
     if (pieces.isEmpty) 1
     else pieces.iterator.map(p => p.codePointCount(0, p.length)).max
 
+  /** Content equality: two kernel calls over equal models compare equal. */
+  override def equals(o: Any): Boolean = o match {
+    case m: UnigramModel => m.unkMicro == unkMicro && m.sep == sep &&
+      m.pieces.sameElements(pieces) && m.scoresMicro.sameElements(scoresMicro)
+    case _ => false
+  }
+  override def hashCode: Int = pieces.toSeq.hashCode
+
   def encodeWord(w: String): String = {
     val hit = cache.get(w)
     if (hit != null) return hit
@@ -268,49 +273,21 @@ object UnigramEncodeUtil {
   }
 }
 
-/** Serve-time unigram segmentation as a codegen'd expression: the
+/** Serve-time unigram segmentation as a codegen'd kernel call: the
   * vocabulary artifact (pieces + integer micro-nat scores) rides the
-  * serialized expression to every task (the [[BpeEncode]] pattern —
+  * serialized plan to every task (the [[BpeEncode]] pattern —
   * broadcast-small-side, never a shuffle), the Viterbi walk is a
   * static JVM kernel inside whole-stage codegen, and the per-task
   * word memo amortizes the per-word cost to once per DISTINCT word
   * per task.
   */
-case class UnigramEncode(child: Expression, pieces: Seq[(String, Long)],
-                         unkMicro: Long = -20000000L, sep: String = "|")
-  extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"unigram_encode expects a string column, got ${child.dataType.simpleString}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  @transient private lazy val model = new UnigramModel(
-    pieces.map(_._1).toArray, pieces.map(_._2).toArray, unkMicro, sep)
-
-  protected override def nullSafeEval(t: Any): Any =
-    UnigramEncodeUtil.encode(t.asInstanceOf[UTF8String], model)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t => {
-      val m = ctx.addReferenceObj("unigramModel", model,
-        classOf[UnigramModel].getName)
-      s"${ev.value} = graft.functions.UnigramEncodeUtil.encode($t, $m);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object UnigramEncode {
   def apply(text: Column, pieces: Seq[(String, Long)]): Column =
-    ColumnBridge.column(UnigramEncode(ColumnBridge.expression(text), pieces))
+    apply(text, pieces, -20000000L, "|")
 
   def apply(text: Column, pieces: Seq[(String, Long)], unkMicro: Long,
             sep: String): Column =
-    ColumnBridge.column(UnigramEncode(ColumnBridge.expression(text), pieces,
-      unkMicro, sep))
+    ColumnBridge.kernel("unigram_encode", UnigramEncodeUtil, "encode",
+      StringType, Seq(text -> StringType), Seq(new UnigramModel(
+        pieces.map(_._1).toArray, pieces.map(_._2).toArray, unkMicro, sep)))
 }

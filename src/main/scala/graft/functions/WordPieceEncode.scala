@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** WordPiece tokenization — the tokenizer family's FOURTH member
@@ -33,7 +30,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - positions are CODE POINT boundaries (never inside a surrogate
   *     pair — [[UnigramKernel.cpBounds]] is the one boundary walk);
   *   - the vocabulary is a bounded model artifact riding the
-  *     serialized expression to every task — broadcast-small-side,
+  *     serialized plan to every task — broadcast-small-side,
   *     never a shuffle;
   *   - a word longer than `maxWordCp` code points is `unk` without a
   *     vocabulary probe (the public algorithm's long-word guard).
@@ -154,6 +151,14 @@ final class WordPieceModel(val pieces: Array[String], val unk: String,
       math.max(1, body.codePointCount(0, body.length))
     }.max
 
+  /** Content equality: two kernel calls over equal models compare equal. */
+  override def equals(o: Any): Boolean = o match {
+    case m: WordPieceModel => m.unk == unk && m.sep == sep &&
+      m.maxWordCp == maxWordCp && m.pieces.sameElements(pieces)
+    case _ => false
+  }
+  override def hashCode: Int = pieces.toSeq.hashCode
+
   def encodeWord(w: String): String = {
     val hit = cache.get(w)
     if (hit != null) return hit
@@ -194,48 +199,19 @@ object WordPieceEncodeUtil {
   }
 }
 
-/** Serve-time WordPiece segmentation as a codegen'd expression: the
-  * vocabulary artifact rides the serialized expression to every task
+/** Serve-time WordPiece segmentation as a codegen'd kernel call: the
+  * vocabulary artifact rides the serialized plan to every task
   * (the [[BpeEncode]] pattern), the greedy walk is a static JVM kernel
   * inside whole-stage codegen, and the per-task word memo amortizes
   * the per-word cost to once per DISTINCT word per task.
   */
-case class WordPieceEncode(child: Expression, pieces: Seq[String],
-                           unk: String = "[UNK]", sep: String = "|",
-                           maxWordCp: Int = 200)
-  extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"wordpiece_encode expects a string column, got ${child.dataType.simpleString}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  @transient private lazy val model =
-    new WordPieceModel(pieces.toArray, unk, sep, maxWordCp)
-
-  protected override def nullSafeEval(t: Any): Any =
-    WordPieceEncodeUtil.encode(t.asInstanceOf[UTF8String], model)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t => {
-      val m = ctx.addReferenceObj("wordPieceModel", model,
-        classOf[WordPieceModel].getName)
-      s"${ev.value} = graft.functions.WordPieceEncodeUtil.encode($t, $m);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object WordPieceEncode {
   def apply(text: Column, pieces: Seq[String]): Column =
-    ColumnBridge.column(WordPieceEncode(ColumnBridge.expression(text), pieces))
+    apply(text, pieces, "[UNK]", "|", 200)
 
   def apply(text: Column, pieces: Seq[String], unk: String, sep: String,
             maxWordCp: Int): Column =
-    ColumnBridge.column(WordPieceEncode(ColumnBridge.expression(text), pieces,
-      unk, sep, maxWordCp))
+    ColumnBridge.kernel("wordpiece_encode", WordPieceEncodeUtil, "encode",
+      StringType, Seq(text -> StringType),
+      Seq(new WordPieceModel(pieces.toArray, unk, sep, maxWordCp)))
 }

@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** Z-order (Morton) code: interleave the low `bits` bits of two long
   * keys — bit `b` of x lands at position 2b, bit `b` of y at 2b+1 — as a
@@ -22,34 +20,6 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * (the expression itself uses only the low `bits` of each key, so
   * higher bits are ignored rather than corrupting the interleave).
   */
-case class ZOrderCode(left: Expression, right: Expression, bits: Int)
-    extends BinaryExpression {
-  require(bits > 0 && bits <= 31, s"bits must be in [1, 31], got $bits")
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = left.nullable || right.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == LongType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"zorder_code expects (bigint, bigint), got " +
-          s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ZOrderCode.interleave(a.asInstanceOf[Long], b.asInstanceOf[Long], bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      s"${ev.value} = graft.functions.ZOrderCode.interleave($x, $y, $bits);"
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object ZOrderCode {
 
   /** Bit interleave shared by interpreted and generated code. */
@@ -65,8 +35,9 @@ object ZOrderCode {
   }
 
   /** Column form: `ZOrderCode(x, y, bits)`; inputs cast to long. */
-  def apply(x: Column, y: Column, bits: Int): Column =
-    ColumnBridge.column(ZOrderCode(
-      ColumnBridge.expression(x.cast("long")),
-      ColumnBridge.expression(y.cast("long")), bits))
+  def apply(x: Column, y: Column, bits: Int): Column = {
+    require(bits > 0 && bits <= 31, s"bits must be in [1, 31], got $bits")
+    ColumnBridge.kernel("zorder_code", this, "interleave", LongType,
+      Seq(x.cast("long") -> LongType, y.cast("long") -> LongType), Seq(bits))
+  }
 }

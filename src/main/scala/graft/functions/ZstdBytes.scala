@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{BinaryType, DataType}
+import org.apache.spark.sql.types.BinaryType
 
 /** zstd-compress a BINARY payload (RFC 8878, one frame at the default
   * level — deterministic for a given zstd-jni version, which Spark
@@ -14,32 +11,10 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   * `Content-Encoding: zstd` body the way a modern crawl archives it.
   * Scan-stage whole-stage codegen via the static kernel.
   */
-case class ZstdBytes(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = BinaryType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure(
-        s"zstd_bytes expects a binary column, got " +
-          child.dataType.simpleString)
-    else TypeCheckResult.TypeCheckSuccess
-
-  protected override def nullSafeEval(t: Any): Any =
-    ZstdBytes.zstd(t.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.ZstdBytes.zstd($t);")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Expression = copy(child = newChild)
-}
-
 object ZstdBytes {
   def apply(payload: Column): Column =
-    ColumnBridge.column(ZstdBytes(ColumnBridge.expression(payload)))
+    ColumnBridge.kernel("zstd_bytes", this, "zstd", BinaryType,
+      Seq(payload -> BinaryType))
 
   /** One zstd frame over the input bytes, default level. */
   def zstd(bytes: Array[Byte]): Array[Byte] =

@@ -73,19 +73,6 @@ object Timed {
   case class LatencyStats(batchId: Long, n: Long, minMs: Long, avgMs: Double,
                           p95Ms: Long, maxMs: Long)
 
-  /** Honest per-ROW latency for streaming — the closest Spark analog of
-    * the reference `LatencyTimer` (`latencyTimer.scala:180`): at the
-    * SINK, each row's `eventTs` is compared against the batch's wall
-    * clock, and the full distribution (min/avg/p95/max) is aggregated
-    * DISTRIBUTED-side per micro-batch, then the tiny stats row is
-    * recorded. Unlike `observe`'s fixed aggregates this captures
-    * percentiles, and unlike a per-row UDF timer it adds one aggregate
-    * over the batch, not a clock call per element. Granularity caveat
-    * unchanged and documented: "now" is sink-side batch time, so
-    * latency = ingest-to-sink per row, not per-operator residency.
-    *
-    * Use: `writeStream.foreachBatch(Timed.rowLatencySink(eventTsCol, sink)(recorder))`.
-    */
   /** Per-OPERATOR profile of an executed plan — the engine's closest
     * native answer to the reference's per-element TimerContext
     * residency (latencyTimer.scala:62: a timer joined at stage exit
@@ -131,6 +118,19 @@ object Timed {
     rows.toSeq.toDF("node_id", "operator", "metric", "value")
   }
 
+  /** Honest per-ROW latency for streaming — the closest Spark analog of
+    * the reference `LatencyTimer` (`latencyTimer.scala:180`): at the
+    * SINK, each row's `eventTs` is compared against the batch's wall
+    * clock, and the full distribution (min/avg/p95/max) is aggregated
+    * DISTRIBUTED-side per micro-batch, then the tiny stats row is
+    * recorded. Unlike `observe`'s fixed aggregates this captures
+    * percentiles, and unlike a per-row UDF timer it adds one aggregate
+    * over the batch, not a clock call per element. Granularity caveat
+    * unchanged and documented: "now" is sink-side batch time, so
+    * latency = ingest-to-sink per row, not per-operator residency.
+    *
+    * Use: `writeStream.foreachBatch(Timed.rowLatencySink(eventTsCol, sink)(recorder))`.
+    */
   def rowLatencySink(eventTs: String, sink: (DataFrame, Long) => Unit)
                     (record: LatencyStats => Unit): (DataFrame, Long) => Unit =
     (batch: DataFrame, id: Long) => {

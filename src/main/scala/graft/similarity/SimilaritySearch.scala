@@ -1045,7 +1045,7 @@ object SimilaritySearch {
 
   /** Build a complete SQ8 store under `dir`: `model/` (the per-dim
     * quantizer) + `codes/` (one u8 code per component, PACKED into a
-    * BinaryType cell — [[graft.functions.ByteCodes.packU8]] — so the
+    * BinaryType cell — [[graft.functions.Sq8Codec.encode]] — so the
     * 4 bytes/dim → 1 byte/dim memory knob is physically real on disk
     * and in the scan, the FAISS SQ8 layout; the spec asserts the
     * bytes). Codes are minted against THIS directory's model — the

@@ -114,6 +114,17 @@ object StreamingQueries {
         graft.sources.Sinks.idempotentForeachBatch(s"$dir/_commits")(write)),
       Trigger.AvailableNow())(_.awaitTermination())
 
+  /** A log [[drain]] sealed as `<dir>/batch_id=<id>` subdirectories, read
+    * back with exactly `schema`'s columns. The parent dir is read (a
+    * `batch_id=*` glob makes Spark stat the literal glob path and log a
+    * FileNotFoundException on every read); the `batch_id` partition
+    * column that discovery adds is kept only where `schema` names it,
+    * and then carries `schema`'s type.
+    */
+  private def sealedLog(spark: SparkSession, schema: StructType,
+                        dir: String): DataFrame =
+    spark.read.schema(schema).parquet(dir).select(schema.fieldNames.toSeq.map(col): _*)
+
   /** `frame` written to a temp dir and streamed back as a file source —
     * the fixture input of the at-ingest twins. The stream takes the
     * frame's own schema, so no footer is read back; a `coalesce(1)`
@@ -2089,9 +2100,8 @@ object StreamingQueries {
   /** The segment log q67 and q74 share: each micro-batch builds its
     * own complete segment and [[drain]] lands it in its own batch_id=
     * subdirectory, so the compactors' unique-(tok, doc) contract holds
-    * under crash replay. The sealed log reads back with an explicit
-    * schema over the leaf-dir glob (no partition-column discovery on
-    * batch_id=).
+    * under crash replay. The sealed log reads back through
+    * [[sealedLog]].
     */
   private def runSegmentLog(spark: SparkSession, sfDir: String, prefix: String,
                             segSchema: StructType)
@@ -2102,7 +2112,7 @@ object StreamingQueries {
         .withColumn("batch_id", lit(batchId))
         .write.mode("overwrite").parquet(s"$segDir/segments/batch_id=$batchId")
     }
-    spark.read.schema(segSchema).parquet(s"$segDir/segments/batch_id=*")
+    sealedLog(spark, segSchema, s"$segDir/segments")
   }
 
   /** q65's missing half — the posting-list BODY maintained on the
@@ -2403,14 +2413,11 @@ object StreamingQueries {
       StructField("n_docs", LongType), StructField("sum_dl", LongType)))
     val dlSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("dl", LongType)))
-    // glob the per-batch leaf dirs directly so the explicit schema is
-    // used as-is (no partition-column discovery on batch_id=)
     CorpusOps.bm25FromIndex(
-        spark.read.schema(postSchema).parquet(s"$logDir/postings/batch_id=*"),
-        spark.read.schema(statSchema).parquet(s"$logDir/stats/batch_id=*"),
+        sealedLog(spark, postSchema, s"$logDir/postings"),
+        sealedLog(spark, statSchema, s"$logDir/stats"),
         queries, k, deletes = deletes,
-        doclens = Some(
-          spark.read.schema(dlSchema).parquet(s"$logDir/doclens/batch_id=*")))
+        doclens = Some(sealedLog(spark, dlSchema, s"$logDir/doclens")))
       .orderBy(col("qid"), col("rank"))
   }
 

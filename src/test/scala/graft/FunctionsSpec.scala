@@ -952,4 +952,77 @@ class FunctionsSpec extends AnyFunSuite {
       .as[(Boolean, Boolean)].collect().head
     assert(flags == ((true, false)))
   }
+
+  test("kernel calls: codegen == NO_CODEGEN with nulls, equal calls compare equal, a mistyped input fails analysis uncast") {
+    import graft.functions._
+    import org.apache.spark.sql.AnalysisException
+    // spark.range, not a local Seq: a LocalRelation input would be
+    // constant-folded on the driver through the interpreted path
+    val words = array(
+      Seq("alpha", "beta", "gamma", "e\u0301t\u00e9", "ﬁle", "Δelta").map(lit): _*)
+    val frame = spark.range(0, 48, 1, 2).select(
+      col("id"),
+      when(col("id") % 7 === 0, lit(null)).otherwise(concat_ws(" ",
+        transform(sequence(lit(0), (col("id") % 6).cast("int")),
+          i => element_at(words, (pmod(col("id") + i, lit(6)) + 1).cast("int"))))).as("text"),
+      when(col("id") % 5 === 0, lit(null))
+        .otherwise(lpad(bin(col("id") % 16), 4, "0")).as("ca"),
+      lpad(bin(col("id") * 7 % 16), 4, "0").as("cb"),
+      when(col("id") % 6 === 0, lit(null))
+        .otherwise(concat(lit("/a/"), col("id").cast("string"))).as("path"),
+      when(col("id") % 3 === 0, lit("/a/*1$")).otherwise(lit("/a/1")).as("pattern"),
+      when(col("id") % 4 === 0, lit(null)).otherwise(col("id") * 3).as("y"))
+      .withColumn("bin", encode(col("text"), "UTF-8"))
+      .withColumn("gz", GzipBytes(col("bin")))
+    val t = col("text")
+    val kernels = Seq[(String, () => Column, Column)](
+      ("BpeEncode", () => BpeEncode(t, Seq(("a", "l"), ("al", "p"))),
+        BpeEncode(col("id"), Nil)),
+      ("DeflateBytes", () => DeflateBytes(col("bin"), raw = true), DeflateBytes(t, raw = false)),
+      ("GunzipText", () => GunzipText(col("gz")), GunzipText(t)),
+      ("GzipBytes", () => GzipBytes(col("bin")), GzipBytes(t)),
+      ("HammingBits", () => HammingBits(col("ca"), col("cb")),
+        HammingBits(col("id"), col("cb"))),
+      ("MimeSniff", () => MimeSniff(col("bin")), MimeSniff(t)),
+      ("MinHashSignature", () => MinHashSignature(t, 2, 4),
+        MinHashSignature(col("id"), 2, 4)),
+      ("MultiMatchCounts", () => MultiMatchCounts(t, Seq("a", "et")),
+        MultiMatchCounts(col("id"), Seq("a"))),
+      ("RobotsMatch", () => RobotsMatch(col("path"), col("pattern")),
+        RobotsMatch(col("id"), col("pattern"))),
+      ("ShingleHash40", () => ShingleHash40(t, 2), ShingleHash40(col("bin"), 2)),
+      ("ShingleMd5", () => ShingleMd5(t, 2), ShingleMd5(col("id"), 2)),
+      ("SimHash", () => SimHash(t, 16), SimHash(col("id"), 16)),
+      ("UnicodeNormalize", () => UnicodeNormalize.nfkcCasefold(t),
+        UnicodeNormalize.nfc(col("bin"))),
+      ("UnigramEncode", () => UnigramEncode(t, Seq(("al", -1000000L), ("pha", -2000000L))),
+        UnigramEncode(col("id"), Seq(("a", -1L)))),
+      ("WordPieceEncode", () => WordPieceEncode(t, Seq("al", "##pha", "beta")),
+        WordPieceEncode(col("id"), Seq("a"))),
+      ("ZOrderCode", () => ZOrderCode(col("id"), col("y"), 8),
+        ZOrderCode(col("bin"), col("y"), 8)),
+      ("ZstdBytes", () => ZstdBytes(col("bin")), ZstdBytes(t)))
+    def rows(k: Column): Seq[Seq[Any]] =
+      frame.select(col("id"), k.as("k")).orderBy("id").collect().toSeq
+        .map(_.toSeq.map { case b: Array[Byte] => b.toSeq; case v => v })
+    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    kernels.foreach { case (name, good, bad) =>
+      val plan = frame.select(good()).queryExecution.executedPlan.toString
+      assert(plan.contains("*(") && plan.contains("static_invoke"), s"$name: $plan")
+      // two calls with the same arguments are one expression to Catalyst
+      val twice = frame.select(good(), good()).queryExecution.analyzed.expressions
+        .map(_.children.head)
+      assert(twice.head.semanticEquals(twice(1)), name)
+      val codegen = rows(good())
+      assert(codegen.exists(_(1) == null) && codegen.exists(_(1) != null), name)
+      val interpreted = try {
+        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        rows(good())
+      } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+      assert(codegen == interpreted, name)
+      val e = intercept[AnalysisException](frame.select(bad))
+      assert(e.getMessage.contains("DATATYPE_MISMATCH"), s"$name: ${e.getMessage}")
+    }
+  }
 }
