@@ -361,7 +361,7 @@ object Dedup {
       segment.forall(c => c.isLetterOrDigit || c == '_' || c == '-'),
       s"append segment label must be a non-'base' path-safe token, got '$segment'")
     val spark = newDocs.sparkSession
-    val p = minhashParams(spark, table)
+    val p = prepareMinhashIndex(spark, table)
     graft.sources.Sinks.requireFreshSegment(spark,
       s"${p.indexDir}/bands/segment=$segment", segment, allowReplace)
     val bandView = s"__graft_mh_append_bands_${obsId.incrementAndGet()}"
@@ -392,7 +392,7 @@ object Dedup {
       segment.forall(c => c.isLetterOrDigit || c == '_' || c == '-'),
       s"tombstone segment label must be a path-safe token, got '$segment'")
     val spark = deletes.sparkSession
-    val p = minhashParams(spark, table)
+    val p = prepareMinhashIndex(spark, table)
     graft.sources.Sinks.requireFreshSegment(spark,
       s"${p.indexDir}/tombstones/segment=$segment", segment, allowReplace)
     deletes.select(deleteId.cast("long").as("doc_id")).distinct()
@@ -400,19 +400,23 @@ object Dedup {
       .parquet(s"${p.indexDir}/tombstones/segment=$segment")
   }
 
-  /** The tombstone mask shared by both probe paths and the compactor —
-    * deleted docs cannot resurface through one path the others forgot.
+  /** The index's naming in the shared publish (see
+    * [[graft.sources.Publish]]): compaction stages `bands` and
+    * `shingles` and retires the `tombstones` log.
     */
-  private def maskMinhashTombstones(df: DataFrame, docIdCol: String,
-                                    indexDir: String): DataFrame = {
-    val spark = df.sparkSession
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) df
-    else df.join(
-      spark.read.parquet(s"$indexDir/tombstones")
-        .select(col("doc_id").as(docIdCol)),
-      Seq(docIdCol), "left_anti")
+  private def minhashLayout(indexDir: String) =
+    graft.sources.Publish.named(indexDir, "bands", "shingles", "tombstones")
+
+  /** Every maintenance call's prelude: finish an interrupted compaction
+    * and, when that moved the tables, rebind the catalog to them (its
+    * partitions still name the replaced layout). Returns the params.
+    */
+  private def prepareMinhashIndex(spark: org.apache.spark.sql.SparkSession,
+                                  table: String): MinhashIndexParams = {
+    val p = minhashParams(spark, table)
+    if (minhashLayout(p.indexDir).repair(spark))
+      attachMinhashIndex(spark, table, p.indexDir)
+    p
   }
 
   /** Re-register an existing minhash index artifact in THIS session's
@@ -443,52 +447,43 @@ object Dedup {
     * rows' scan cost, and the per-append partition listing. Provenance
     * (base vs appended) survives, mirroring the ANN compactor's rule.
     *
-    * Crash protocol: the new layout builds COMPLETELY in `__compact_tmp`
-    * tables beside the live ones, the swap is the shared
-    * [[graft.sources.Sinks.swapViaBackup]] (bands first, then
-    * shingles), and the tombstone log is dropped LAST. A crash at any
-    * point leaves tombstones intact plus either the old or the new
-    * complete layout — re-running converges (the anti-join of an
-    * already-compacted table is a no-op).
+    * Crash safety is the shared publish ([[graft.sources.Publish]]):
+    * the new `bands` and `shingles` stage together beside the index,
+    * the manifest retires `tombstones` once both have landed, and every
+    * maintenance call of the index (append, tombstone, compact)
+    * finishes an interrupted publish first, rebinding the catalog.
     */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
                           table: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = minhashParams(spark, table)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(p.indexDir).getFileSystem(conf)
+    val p = prepareMinhashIndex(spark, table)
+    val layout = minhashLayout(p.indexDir)
     val provenance =
       when(col("segment") === "base", lit("base")).otherwise(lit("merged"))
-    val liveBands = maskMinhashTombstones(spark.table(table), "doc_id", p.indexDir)
+    val liveBands = graft.sources.Sinks.maskTombstones(
+        spark.table(table), "doc_id", p.indexDir)
       .select(col("band_key"), col("doc_id"), provenance.as("segment"))
-    val liveShingles = maskMinhashTombstones(
+    val liveShingles = graft.sources.Sinks.maskTombstones(
         spark.table(s"${table}__shingles"), "doc_id", p.indexDir)
       .select(col("doc_id"), col("h"), provenance.as("segment"))
     if (liveBands.limit(1).count() == 0)
       throw new IllegalStateException(
         "compactMinhashIndex: every posting is tombstoned — compaction " +
           "would leave an unreadable empty index; drop the index explicitly")
-    graft.sources.Sinks.writeBucketedTable(liveBands, s"${table}__compact_tmp",
+    graft.sources.Sinks.writeBucketedTable(liveBands, s"${table}__staged",
       p.nBuckets, Seq("band_key"), Seq("band_key"),
-      path = Some(s"${p.indexDir}/bands__compact_tmp"),
+      path = Some(s"${layout.staging}/bands"),
       partitionCols = Seq("segment"))
     graft.sources.Sinks.writeBucketedTable(liveShingles,
-      s"${table}__shingles_compact_tmp",
+      s"${table}__shingles_staged",
       p.nBuckets, Seq("doc_id"), Seq("doc_id"),
-      path = Some(s"${p.indexDir}/shingles__compact_tmp"),
+      path = Some(s"${layout.staging}/shingles"),
       partitionCols = Seq("segment"))
-    // swap the physical layouts, then rebind the catalog to them (the
-    // tmp catalog entries point at the tmp paths, which just moved)
-    spark.sql(s"DROP TABLE IF EXISTS `${table}__compact_tmp`")
-    spark.sql(s"DROP TABLE IF EXISTS `${table}__shingles_compact_tmp`")
-    graft.sources.Sinks.swapViaBackup(fs,
-      new Path(s"${p.indexDir}/bands__compact_tmp"),
-      new Path(s"${p.indexDir}/bands"))
-    graft.sources.Sinks.swapViaBackup(fs,
-      new Path(s"${p.indexDir}/shingles__compact_tmp"),
-      new Path(s"${p.indexDir}/shingles"))
+    // the staged catalog entries point at paths the publish moves
+    spark.sql(s"DROP TABLE IF EXISTS `${table}__staged`")
+    spark.sql(s"DROP TABLE IF EXISTS `${table}__shingles_staged`")
+    // tombstones is never staged, so its line retires the log
+    layout.publish(spark, Seq("bands", "shingles", "tombstones").map(t => t -> Seq(t)))
     attachMinhashIndex(spark, table, p.indexDir)
-    fs.delete(new Path(s"${p.indexDir}/tombstones"), true)
   }
 
   /** Probe a [[buildMinhashIndex]] artifact with a batch of new
@@ -510,7 +505,7 @@ object Dedup {
       .withColumnRenamed("doc_id", "query_id")
     // tombstone mask on the corpus side — a taken-down page must stop
     // being reported as a duplicate source the moment its segment lands
-    maskMinhashTombstones(spark.table(table), "doc_id", p.indexDir)
+    graft.sources.Sinks.maskTombstones(spark.table(table), "doc_id", p.indexDir)
       .join(qbands, Seq("band_key"))
       .filter(col("doc_id") =!= col("query_id"))
       .select(col("query_id"), col("doc_id").as("candidate_id"))

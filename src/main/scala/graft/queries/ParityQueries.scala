@@ -266,7 +266,7 @@ object ParityQueries {
     // recompute in DuckDB.
     ("q55_zip_read", (s, d) => {
       val dir = zipFixture(s, d)
-      graft.sources.ZipSource.read(s, s"$dir/archive_*.zip", chunkSize = 256)
+      graft.sources.ZipSource.read(s, dir, chunkSize = 256)
         .groupBy(col("archive"), col("entry"), col("nested"))
         .agg(array_sort(collect_list(struct(col("chunkOffset"), col("data")))).as("cs"))
         .select(col("entry").cast("long").as("doc_id"),
@@ -291,7 +291,7 @@ object ParityQueries {
       val created = graft.streaming.StreamingQueries
         .runToMemory(events, mode = "append")
         .select(col("path"), col("change"))
-      val files = s.read.format("binaryFile").load(s"$dir/shard_*.txt")
+      val files = s.read.format("binaryFile").load(dir)
         .select(regexp_replace(col("path"), "^file:", "").as("fpath"),
           md5(col("content")).as("file_md5"))
       created.join(files, col("fpath") === col("path"))

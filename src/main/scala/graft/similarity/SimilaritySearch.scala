@@ -607,8 +607,9 @@ object SimilaritySearch {
       segment.forall(c => c.isLetterOrDigit || c == '_' || c == '-'),
       s"append segment label must be a non-'base' path-safe token, got '$segment'")
     val spark = newVectors.sparkSession
-    requireFreshSegment(spark, s"$indexDir/postings/segment=$segment",
-      segment, allowReplace)
+    ivfPqLayout(indexDir).repair(spark)
+    graft.sources.Sinks.requireFreshSegment(spark,
+      s"$indexDir/postings/segment=$segment", segment, allowReplace)
     val cent = spark.read.parquet(s"$indexDir/centroids")
     val cb = spark.read.parquet(s"$indexDir/codebooks")
     val enc = assignCodes(
@@ -641,19 +642,20 @@ object SimilaritySearch {
     require(segment.nonEmpty &&
       segment.forall(c => c.isLetterOrDigit || c == '_' || c == '-'),
       s"tombstone segment label must be a path-safe token, got '$segment'")
-    requireFreshSegment(deletes.sparkSession,
+    ivfPqLayout(indexDir).repair(deletes.sparkSession)
+    graft.sources.Sinks.requireFreshSegment(deletes.sparkSession,
       s"$indexDir/tombstones/segment=$segment", segment, allowReplace)
     deletes.select(deleteId.cast("long").as("neighbor_id")).distinct()
       .write.mode("overwrite").parquet(s"$indexDir/tombstones/segment=$segment")
   }
 
-  /** The append/tombstone label-collision guard — the shared
-    * [[graft.sources.Sinks.requireFreshSegment]] recipe.
+  /** The index's naming in the shared publish (see
+    * [[graft.sources.Publish]]): compaction stages `postings` and
+    * `list_stats` and retires the `tombstones` log. Every maintenance
+    * call (append, tombstone, compact) runs its repair first.
     */
-  private def requireFreshSegment(spark: org.apache.spark.sql.SparkSession,
-                                  segPath: String, segment: String,
-                                  allowReplace: Boolean): Unit =
-    graft.sources.Sinks.requireFreshSegment(spark, segPath, segment, allowReplace)
+  private def ivfPqLayout(indexDir: String) =
+    graft.sources.Publish.named(indexDir, "postings", "list_stats", "tombstones")
 
   /** Fold the accumulated tombstones into the postings physically:
     * surviving code rows rewrite into exactly TWO segments —
@@ -674,19 +676,13 @@ object SimilaritySearch {
     * is adjusted down by exactly the tombstoned rows that sat in
     * `segment=base`.
     *
-    * Crash protocol (the whole run is re-runnable at ANY crash point):
-    *   1. stage the adjusted stats at `list_stats__next` (computed
-    *      from the still-intact pre-swap postings),
-    *   2. swap the postings ([[graft.sources.Sinks.swapViaBackup]],
-    *      the one shared crash-safe recipe),
-    *   3. install the staged stats over `list_stats` (atomic rename),
-    *   4. drop the tombstone log.
-    * A re-run distinguishes "crashed before 2" (some tombstoned row
-    * still present in postings → recompute everything; the staged file
-    * is overwritten with the identical result) from "crashed after 2"
-    * (no tombstoned row survives → finish the install: steps 3-4 only,
-    * never recomputing an adjustment the merged postings can no longer
-    * express). Stale staged debris with no tombstone log is deleted.
+    * Crash safety is the shared publish ([[graft.sources.Publish]]):
+    * the new `postings` and the adjusted `list_stats` (computed from
+    * the pre-publish postings) stage together, the manifest retires
+    * `tombstones` once both have landed, and every maintenance call of
+    * the index (append, tombstone, compact) finishes an interrupted
+    * publish first.
+    *
     * A compaction that would leave the index EMPTY (every posting
     * tombstoned) refuses before touching anything — an empty postings
     * directory is unreadable, and "drop the index" should be said
@@ -695,41 +691,30 @@ object SimilaritySearch {
   def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
                         indexDir: String): Unit = {
     import org.apache.hadoop.fs.Path
-    val postingsPath = new Path(s"$indexDir/postings")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = postingsPath.getFileSystem(conf)
+    val layout = ivfPqLayout(indexDir)
+    layout.repair(spark)
+    val fs = layout.staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tombPath = new Path(s"$indexDir/tombstones")
-    val staged = new Path(s"$indexDir/list_stats__next")
-    val statsPath = new Path(s"$indexDir/list_stats")
-    // stats are a DIRECTORY, so the install is delete-then-rename (the
-    // atomic FileContext overwrite only replaces files); the brief
-    // stats-missing window is repaired by the recovery branch below,
-    // and installStaged only ever runs AFTER the postings swap
-    def installStaged(): Unit = {
-      if (fs.exists(statsPath)) fs.delete(statsPath, true)
-      if (!fs.rename(staged, statsPath))
-        throw new java.io.IOException(
-          s"compactIvfPqIndex: rename $staged -> $statsPath failed")
-      fs.delete(tombPath, true)
-    }
-    if (fs.exists(staged)) {
-      if (!fs.exists(statsPath)) { installStaged(); return } // crashed mid-install
-      else if (!fs.exists(tombPath)) fs.delete(staged, true) // no-tombstone debris
-      else {
-        // recovery: did the crashed run get past the postings swap?
-        val anyDead = spark.read.parquet(postingsPath.toString)
-          .join(spark.read.parquet(tombPath.toString).select(col("neighbor_id")),
-            Seq("neighbor_id"), "left_semi")
-          .limit(1).count() > 0
-        if (!anyDead) { installStaged(); return }
-        // else: crashed before the swap — fall through and recompute
-      }
-    }
-    val all = spark.read.parquet(postingsPath.toString)
+    val all = spark.read.parquet(s"$indexDir/postings")
       .withColumn("centroid_id", col("centroid_id").cast("long"))
-    // adjusted baseline from the PRE-swap postings: n_base minus
+    // one partitioned write stages both provenance sides; a side with
+    // no rows writes no directory. If NEITHER has rows the index would
+    // be unreadable — refuse before the manifest
+    graft.sources.Sinks.maskTombstones(all, "neighbor_id", indexDir)
+      .select(col("neighbor_id"), col("j"), col("code_id"),
+        when(col("segment") === "base", lit("base")).otherwise(lit("merged"))
+          .as("segment"), col("centroid_id"))
+      .write.mode("overwrite").partitionBy("segment", "centroid_id")
+      .parquet(s"${layout.staging}/postings")
+    if (fs.globStatus(new Path(layout.staging, "postings/segment=*")).isEmpty) {
+      fs.delete(layout.staging, true)
+      throw new IllegalStateException(
+        "compactIvfPqIndex: every posting is tombstoned — compaction would " +
+          "leave an unreadable empty index; drop the index explicitly instead")
+    }
+    // adjusted baseline from the PRE-publish postings: n_base minus
     // tombstoned rows that were base rows
-    val oldStats = spark.read.parquet(statsPath.toString)
+    val oldStats = spark.read.parquet(s"$indexDir/list_stats")
       .select(col("centroid_id").cast("long").as("centroid_id"),
         col("n_base").cast("long").as("n_base"))
     val adjStats = if (fs.exists(tombPath)) {
@@ -741,43 +726,9 @@ object SimilaritySearch {
         .select(col("centroid_id"),
           (col("n_base") - coalesce(col("n_dead"), lit(0L))).as("n_base"))
     } else oldStats
-    adjStats.write.mode("overwrite").parquet(staged.toString)       // step 1
-    val live = maskTombstones(all, indexDir)
-    val tmp = new Path(s"$indexDir/postings__compact_tmp")
-    def writeSide(segment: String, rows: org.apache.spark.sql.DataFrame): Unit =
-      rows.select(col("neighbor_id"), col("j"), col("code_id"), col("centroid_id"))
-        .write.mode("overwrite").partitionBy("centroid_id")
-        .parquet(s"$tmp/segment=$segment")
-    writeSide("base", live.filter(col("segment") === "base"))
-    writeSide("merged", live.filter(col("segment") =!= "base"))
-    // drop a side that came out empty (no files → unreadable dir); if
-    // BOTH are empty the index would be unreadable — refuse pre-swap
-    Seq("base", "merged").foreach { s =>
-      if (fs.globStatus(new Path(tmp, s"segment=$s/centroid_id=*/*")).isEmpty)
-        fs.delete(new Path(tmp, s"segment=$s"), true)
-    }
-    if (fs.globStatus(new Path(tmp, "segment=*/centroid_id=*/*")).isEmpty) {
-      fs.delete(tmp, true); fs.delete(staged, true)
-      throw new IllegalStateException(
-        "compactIvfPqIndex: every posting is tombstoned — compaction would " +
-          "leave an unreadable empty index; drop the index explicitly instead")
-    }
-    graft.sources.Sinks.swapViaBackup(fs, tmp, postingsPath)        // step 2
-    installStaged()                                                 // steps 3-4
-  }
-
-  /** Apply the tombstone log (if any) to a postings scan: the one
-    * anti-join both the serve path and the compactor share — deleted
-    * ids can't resurface through either path diverging.
-    */
-  private def maskTombstones(postings: DataFrame, indexDir: String): DataFrame = {
-    val spark = postings.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/tombstones"))) postings
-    else postings.join(
-      spark.read.parquet(s"$indexDir/tombstones").select(col("neighbor_id")),
-      Seq("neighbor_id"), "left_anti")
+    adjStats.write.mode("overwrite").parquet(s"${layout.staging}/list_stats")
+    // tombstones is never staged, so its line retires the log
+    layout.publish(spark, Seq("postings", "list_stats", "tombstones").map(t => t -> Seq(t)))
   }
 
   /** Recall@k of an approximate ranking against the exact one — the
@@ -921,8 +872,8 @@ object SimilaritySearch {
                           cent: DataFrame, cb: DataFrame,
                           dim: Int, numSubspaces: Int): String = {
     val liveDir = currentIndexDir(spark, baseDir)
-    val liveIds = maskTombstones(
-        spark.read.parquet(s"$liveDir/postings"), liveDir)
+    val liveIds = graft.sources.Sinks.maskTombstones(
+        spark.read.parquet(s"$liveDir/postings"), "neighbor_id", liveDir)
       .select(col("neighbor_id")).distinct()
     val src = vectorSource.select(id.cast("long").as("neighbor_id"),
       vec.as("__retrain_vec"))
@@ -1521,11 +1472,11 @@ object SimilaritySearch {
     val probedIds = probeRows.map(_.getLong(1)).distinct.sorted
     // tombstoned ids are masked on the pruned scan (deletions surface
     // immediately; compaction later makes the mask free)
-    val postings = maskTombstones(
+    val postings = graft.sources.Sinks.maskTombstones(
       spark.read.parquet(s"$indexDir/postings")
         .withColumn("centroid_id", col("centroid_id").cast("long"))
         .filter(col("centroid_id").isin(probedIds: _*)), // partition pruning
-      indexDir)
+      "neighbor_id", indexDir)
     val qt = subvecs(queries, queryId, queryVec, "query_id", numSubspaces,
         dim / numSubspaces)
       .join(broadcast(cb), Seq("j"))

@@ -52,11 +52,10 @@ object Sinks {
     * listing; periodic compaction is standard table maintenance. Output
     * file count = ceil(bytes / target).
     *
-    * Crash safety: the rewrite lands in a temp dir, then swaps via
-    * original→backup rename, tmp→original rename, backup delete — at any
-    * crash point either the original or the complete new copy exists
-    * under a recoverable name (a delete-then-rename swap would have a
-    * window where the table path is simply gone).
+    * Crash safety: the table is the one child of its parent directory
+    * in the shared publish ([[Publish]]) — the rewrite stages beside
+    * the parent, a manifest in the parent names it, and the next call
+    * finishes a publish an earlier one left half done.
     *
     * Hive-partitioned layouts (`key=value` subdirectories) are rejected:
     * a flat read+repartition+write would silently flatten the directory
@@ -65,8 +64,13 @@ object Sinks {
     */
   def compactParquet(df: DataFrame, path: String, targetFileMB: Int = 256): Unit = {
     val spark = df.sparkSession
-    val hadoopPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val raw = new org.apache.hadoop.fs.Path(path)
+    val fs = raw.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // qualified, so a relative path still has a parent to publish into
+    val hadoopPath = fs.makeQualified(raw)
+    val name = hadoopPath.getName
+    val layout = Publish.named(hadoopPath.getParent.toString, name)
+    layout.repair(spark)
     val partitionDirs = fs.listStatus(hadoopPath)
       .filter(st => st.isDirectory && st.getPath.getName.contains("="))
     require(partitionDirs.isEmpty,
@@ -76,32 +80,9 @@ object Sinks {
     val bytes = fs.getContentSummary(hadoopPath).getLength
     val nFiles = math.max(1L, (bytes + targetFileMB.toLong * 1048576 - 1) /
       (targetFileMB.toLong * 1048576)).toInt
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compact_tmp")
     spark.read.parquet(path).repartition(nFiles)
-      .write.mode("overwrite").parquet(tmp.toString)
-    swapViaBackup(fs, tmp, hadoopPath)
-  }
-
-  /** The ONE crash-safe directory swap (original→backup, tmp→original
-    * with rollback, backup delete), shared by [[compactParquet]] and
-    * the ANN index compactor — a hand-maintained second copy of a
-    * crash-safety protocol is a drift surface. At any crash point
-    * either the original or the complete new copy exists under a
-    * recoverable name; a delete-then-rename swap would have a window
-    * where the target path is simply gone.
-    */
-  def swapViaBackup(fs: org.apache.hadoop.fs.FileSystem,
-                    tmp: org.apache.hadoop.fs.Path,
-                    target: org.apache.hadoop.fs.Path): Unit = {
-    val backup = new org.apache.hadoop.fs.Path(target.toString + "__compact_backup")
-    if (fs.exists(backup)) fs.delete(backup, true)
-    if (!fs.rename(target, backup))
-      throw new java.io.IOException(s"swapViaBackup: rename $target -> $backup failed")
-    if (!fs.rename(tmp, target)) {
-      fs.rename(backup, target) // roll back; original untouched
-      throw new java.io.IOException(s"swapViaBackup: rename $tmp -> $target failed")
-    }
-    fs.delete(backup, true)
+      .write.mode("overwrite").parquet(s"${layout.staging}/$name")
+    layout.publish(spark, Seq(name -> Seq(name)))
   }
 
   def writePartitionedParquet(df: DataFrame, path: String,
@@ -212,6 +193,23 @@ object Sinks {
       s"segment '$segment' already exists at $segPath — pass " +
         "allowReplace = true only for a RETRY of the same data; a new " +
         "ingest needs a new label")
+  }
+
+  /** The tombstone mask every segmented index shares (the ANN and
+    * MinHash serve paths, their compactors, the live-membership
+    * retrain): rows of `df` whose `idCol` appears in the
+    * `<indexDir>/tombstones` log (written under the same column name)
+    * drop by anti-join — deleted ids cannot resurface through one path
+    * the others forgot. No log, no mask.
+    */
+  private[graft] def maskTombstones(df: DataFrame, idCol: String,
+                                    indexDir: String): DataFrame = {
+    val spark = df.sparkSession
+    val p = new org.apache.hadoop.fs.Path(s"$indexDir/tombstones")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) df
+    else df.join(spark.read.parquet(p.toString).select(idCol),
+      Seq(idCol), "left_anti")
   }
 
   /** Register an EXISTING bucketed-table artifact directory in this

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -34,27 +34,10 @@ import org.apache.spark.sql.functions._
   * pruned-friendly — with the body as one string column.
   *
   * The sorted CDX layout ([[writeCdxShards]]) is maintained by
-  * [[compactCdxShards]], [[splitCdxShard]] and [[coalesceCdxShards]],
-  * and all three publish through ONE protocol whose crash recovery is
-  * the same code as its normal path:
-  *  1. the new shards are written to one staging dir beside the
-  *     layout (`<dir>.publish-tmp`);
-  *  1. a manifest (`<dir>/_coalesce_manifest`, written to a temp file
-  *     and renamed, so it is complete or absent) lists each output
-  *     shard with the source shards it replaces — `new:old,…`, or the
-  *     retire-only `-:old,…` when the group wrote no rows (a fully
-  *     tombstoned shard must not come back);
-  *  1. the repair applies the manifest: every output still staged
-  *     renames into the layout (a same-id source, compaction's, is
-  *     deleted just before), then each line's sources are deleted —
-  *     only when its output is in the layout or the line is
-  *     retire-only — then the manifest and the staging dir go.
-  *
-  * Every maintenance call runs the repair first, so an interrupted
-  * publish of any kind is finished (rolled forward) by the next call
-  * of any kind; a publish that died before its manifest landed left
-  * the layout untouched. A manifest line this code did not write is
-  * refused loudly and nothing moves. Lookups go through [[serveCdx]].
+  * [[compactCdxShards]], [[splitCdxShard]] and [[coalesceCdxShards]];
+  * all three publish through the one crash-safe protocol of
+  * [[Publish]] (digit shard ids name `shard=<id>` children), and each
+  * runs its repair first. Lookups go through [[serveCdx]].
   */
 object Warc {
 
@@ -677,7 +660,7 @@ object Warc {
     * pulls that row's shard into the rewrite set too. Compaction
     * touches ONLY index rows — payload bytes never enter the plan.
     * Merged shards keep their ids and publish through the layout's one
-    * protocol (see [[Warc]]); Spark refuses a self-overwriting plan,
+    * protocol (see [[Publish]]); Spark refuses a self-overwriting plan,
     * and rewriting unaffected shards to dodge that would be the full
     * rebuild again.
     *
@@ -802,7 +785,7 @@ object Warc {
     * cluster index, re-derived from first keys at serve time, gives
     * the new pieces their place in the total order; nothing else
     * rewrites, so split cost ∝ the one shard). Publish is the layout's
-    * one protocol (see [[Warc]]).
+    * one protocol (see [[Publish]]).
     */
   def splitCdxShard(dir: String, shard: Int, n: Int): Unit = {
     require(n >= 2, s"splitCdxShard: n must be >= 2, got $n")
@@ -845,7 +828,7 @@ object Warc {
     * shard between two adequate neighbors stays: merging it would
     * rewrite an adequate neighbor, making cost ∝ neighbor size — the
     * caller who wants it gone can split the neighbor first. Publish
-    * is the layout's one protocol (see [[Warc]]); an empty layout is a
+    * is the layout's one protocol (see [[Publish]]); an empty layout is a
     * no-op.
     */
   def coalesceCdxShards(dir: String, minRows: Long): Unit = {
@@ -887,11 +870,9 @@ object Warc {
       groups.toSeq.zipWithIndex.map { case (g, gi) => (nextId + gi) -> g.map(_._1) })
   }
 
-  // the publish protocol's two names (see [[Warc]]): the manifest sits
-  // inside the layout (underscore-named, so parquet discovery ignores
-  // it), the staging dir beside it
-  private val ManifestName = "_coalesce_manifest"
-  private def stagingDir(dir: String) = new Path(dir + ".publish-tmp")
+  /** The layout's naming in the shared publish (see [[Publish]]). */
+  private def cdxLayout(dir: String) =
+    Publish(dir, id => s"shard=$id", id => id.nonEmpty && id.forall(_.isDigit))
 
   /** Every maintenance call's prelude: finish an interrupted publish,
     * then the layout guard — a [[writeCdxShards]] dir holds
@@ -903,7 +884,7 @@ object Warc {
                             dir: String, op: String): Boolean = {
     val path = new Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    repairPublish(fs, dir)
+    cdxLayout(dir).repair(spark)
     val listing =
       if (fs.exists(path)) fs.listStatus(path) else Array.empty[FileStatus]
     val hasShards =
@@ -914,80 +895,16 @@ object Warc {
     hasShards
   }
 
-  /** The one publish (see [[Warc]]): stage `out` (a frame carrying its
-    * output `shard` ids), write the manifest of `replaces` (output id
-    * -> the source shards it replaces; an output that wrote no rows
-    * becomes a retire-only `-:` line), then apply it with the repair.
+  /** Stage `out` (a frame carrying its output `shard` ids) and publish
+    * it with the manifest of `replaces` (output id -> the source shards
+    * it replaces; an output that wrote no rows retires its sources).
     */
   private def publishShards(dir: String, out: DataFrame,
                             replaces: Seq[(Int, Seq[Int])]): Unit = {
-    val tmp = stagingDir(dir)
-    out.write.mode("overwrite").partitionBy("shard").parquet(tmp.toString)
-    val fs = tmp.getFileSystem(out.sparkSession.sparkContext.hadoopConfiguration)
-    val staged = fs.listStatus(tmp).map(_.getPath.getName).toSet
-    val manifest = replaces.map { case (o, srcs) =>
-      val head = if (staged(s"shard=$o")) o.toString else "-"
-      s"$head:${srcs.mkString(",")}"
-    }.mkString("\n")
-    // write-temp-then-rename: a reader (or a crash) sees either a
-    // complete manifest or none — a half-written line would make the
-    // repair delete sources whose replacement never landed
-    val mPath = new Path(dir, ManifestName)
-    val mTmp = new Path(dir, ManifestName + ".tmp")
-    val w = fs.create(mTmp, true)
-    try w.write(manifest.getBytes("UTF-8")) finally w.close()
-    fs.delete(mPath, false)
-    if (!fs.rename(mTmp, mPath)) throw new java.io.IOException(
-      s"publish: failed to write manifest $mTmp -> $mPath")
-    repairPublish(fs, dir)
-  }
-
-  /** The one repair (see [[Warc]]): apply the manifest, rolling the
-    * publish forward. Idempotent; a no-op without a manifest. Every
-    * line is validated before anything moves.
-    */
-  private def repairPublish(fs: FileSystem, dir: String): Unit = {
-    val mPath = new Path(dir, ManifestName)
-    if (!fs.exists(mPath)) return
-    val buf = new Array[Byte](fs.getFileStatus(mPath).getLen.toInt)
-    val in = fs.open(mPath)
-    try in.readFully(0, buf) finally in.close()
-    def isId(s: String) = s.nonEmpty && s.forall(_.isDigit)
-    // validate before acting: a malformed line means the manifest is
-    // not ours (or corrupt) — deleting shards on its say-so would
-    // destroy data, so fail with the offending content instead
-    val lines = new String(buf, "UTF-8").split("\n").filter(_.nonEmpty).map { line =>
-      line.split(":", 2) match {
-        case Array(o, srcs) if (o == "-" || isId(o)) &&
-            srcs.split(",").forall(isId) =>
-          (Some(o).filter(_ != "-"), srcs.split(",").toSeq)
-        case _ => throw new IllegalStateException(
-          s"repairPublish: malformed manifest line '$line' in $mPath — " +
-            "refusing to repair from a manifest this code did not write")
-      }
-    }
-    def shard(parent: Path, id: String) = new Path(parent, s"shard=$id")
-    val root = new Path(dir)
-    val tmp = stagingDir(dir)
-    // roll forward: every output still staged moves in — a same-id
-    // source (compaction's) leaves just before its replacement lands
-    lines.flatMap(_._1).foreach { o =>
-      val src = shard(tmp, o)
-      if (fs.exists(src)) {
-        val dst = shard(root, o)
-        fs.delete(dst, true)
-        if (!fs.rename(src, dst)) throw new java.io.IOException(
-          s"repairPublish: failed to publish $src -> $dst")
-      }
-    }
-    // then the sources leave: only once their replacement is in the
-    // layout, or when the line says the output is empty
-    lines.foreach { case (o, srcs) =>
-      if (o.forall(id => fs.exists(shard(root, id))))
-        srcs.filterNot(o.contains).foreach(sh => fs.delete(shard(root, sh), true))
-    }
-    fs.delete(tmp, true)
-    fs.delete(mPath, false)
+    val layout = cdxLayout(dir)
+    out.write.mode("overwrite").partitionBy("shard").parquet(layout.staging.toString)
+    layout.publish(out.sparkSession,
+      replaces.map { case (o, srcs) => o.toString -> srcs.map(_.toString) })
   }
 
   /** Revisit detection — the archive-level exact dedup every public

@@ -24,17 +24,6 @@ object StreamingConfig {
       "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage", "true")
   }
 
-  /** Stateful queries create one state store PER shuffle partition per
-    * stateful operator (a stream-stream join keeps four). The partition
-    * count is fixed into the checkpoint at first start, so set it
-    * deliberately before starting the query: high enough that state
-    * shards across executors at target volume, not so high that store
-    * maintenance dominates (measured here: a small stream-stream join is
-    * ~3x faster at 8 partitions than 32, purely from store overhead).
-    */
-  def streamingShufflePartitions(spark: SparkSession, n: Int): Unit =
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-
   /** Restore the default (in-memory) provider — test hygiene. */
   def defaultState(spark: SparkSession): Unit = {
     spark.conf.unset("spark.sql.streaming.stateStore.providerClass")

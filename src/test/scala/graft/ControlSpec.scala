@@ -235,6 +235,8 @@ class ControlSpec extends AnyFunSuite {
     df.collect()
     val obs = df.queryExecution.observedMetrics("m")
     assert(obs.getAs[Long]("rows") == 3 && obs.getAs[Long]("total") == 6)
+    // listener events arrive asynchronously: drain the bus first
+    org.apache.spark.graft.BusBridge.drain(spark.sparkContext)
     assert(listener.timings.nonEmpty)
   }
 

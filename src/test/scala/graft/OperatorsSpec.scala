@@ -105,6 +105,27 @@ class OperatorsSpec extends AnyFunSuite {
       new java.io.File(out).getParentFile)
   }
 
+  test("compactParquet: an interrupted publish (table deleted, compacted copy still staged) is finished by the next call") {
+    import graft.sources.Sinks
+    val parent = java.nio.file.Files.createTempDirectory("graft_compact_crash").toString
+    val out = parent + "/t"
+    Tables.documents(spark, TestSpark.sf).repartition(4).write.parquet(out)
+    val before = spark.read.parquet(out).orderBy("doc_id").collect().toSeq
+    // the state a compaction leaves when it dies between deleting the
+    // table and renaming its compacted copy in: manifest written in the
+    // parent, the table gone, its copy still staged beside the parent
+    spark.read.parquet(out).coalesce(1).write.parquet(s"$parent.publish-tmp/t")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+    java.nio.file.Files.write(java.nio.file.Paths.get(parent, "_coalesce_manifest"),
+      "t:t".getBytes("UTF-8"))
+    Sinks.compactParquet(spark.emptyDataFrame, out, targetFileMB = 256)
+    assert(spark.read.parquet(out).orderBy("doc_id").collect().toSeq == before)
+    assert(!new java.io.File(parent, "_coalesce_manifest").exists)
+    assert(!new java.io.File(s"$parent.publish-tmp").exists)
+    Seq(parent, s"$parent.publish-tmp").foreach(d =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
+  }
+
   test("the DSL exposes the pipeline vocabulary end-to-end") {
     import graft.operators.Implicits._
     val docs = Tables.documents(spark, TestSpark.sf).limit(100)
@@ -622,22 +643,79 @@ class OperatorsSpec extends AnyFunSuite {
     // simulate a compaction that crashed BEFORE the swap: stale tmp
     // debris on disk (a half-written layout) must be overwritten, not
     // merged or trusted
-    new java.io.File(s"$dir/bands__compact_tmp/garbage").mkdirs()
+    new java.io.File(s"$dir.publish-tmp/bands/garbage").mkdirs()
     java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/bands__compact_tmp/garbage/junk"),
+      java.nio.file.Paths.get(s"$dir.publish-tmp/bands/garbage/junk"),
       "torn".getBytes("UTF-8"))
     Dedup.compactMinhashIndex(spark, "mh_crash")
     def probe() = Dedup.queryMinhashIndex(spark, "mh_crash",
       docs.filter(col("doc_id") === 2L), col("doc_id"), col("text"))
     assert(probe().count() == 0) // 1 tombstoned, 3 shares no band
     assert(spark.table("mh_crash").filter(col("doc_id") === 1L).count() == 0)
-    assert(!new java.io.File(s"$dir/bands__compact_tmp").exists)
+    assert(!new java.io.File(s"$dir.publish-tmp").exists)
     assert(!new java.io.File(s"$dir/tombstones").exists)
     // a RE-RUN with no tombstones is a no-op rewrite: same probes, same
     // live rows (idempotent at any later crash point)
     val before = spark.table("mh_crash").count()
     Dedup.compactMinhashIndex(spark, "mh_crash")
     assert(spark.table("mh_crash").count() == before && probe().count() == 0)
+  }
+
+  test("an interrupted minhash compaction publish (bands moved in, shingles still staged) is finished by the next maintenance call") {
+    import graft.dedup.Dedup
+    import org.apache.commons.io.FileUtils
+    val base = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog today"),
+      (2L, "a slow green turtle walks under the busy bridge at noon"),
+      (3L, "completely different text with nothing shared here at all"))
+      .toDF("doc_id", "text")
+    val day1 = Seq(
+      (4L, "the quick brown fox jumps over the lazy dog today"),
+      (5L, "a slow green turtle walks under the busy bridge at noon"))
+      .toDF("doc_id", "text")
+    // two identical indexes: mh_done compacts uninterrupted, mh_cut is
+    // left where a compaction dies after moving its bands in and before
+    // moving its shingles (manifest landed, tombstones still present)
+    val dirs = Seq("mh_done", "mh_cut").map { t =>
+      val dir = graft.sources.Sinks.tempArtifactDir(t)
+      Dedup.buildMinhashIndex(base, col("doc_id"), col("text"),
+        indexDir = dir, table = t, nBuckets = 4)
+      Dedup.appendToMinhashIndex(day1, col("doc_id"), col("text"),
+        table = t, segment = "day1")
+      Dedup.tombstoneMinhashIndex(base.filter(col("doc_id") === 1L),
+        col("doc_id"), table = t, segment = "t0")
+      t -> dir
+    }.toMap
+    Dedup.compactMinhashIndex(spark, "mh_done")
+    val (done, cut) = (dirs("mh_done"), dirs("mh_cut"))
+    FileUtils.deleteDirectory(new java.io.File(s"$cut/bands"))
+    FileUtils.copyDirectory(new java.io.File(s"$done/bands"),
+      new java.io.File(s"$cut/bands"))
+    FileUtils.copyDirectory(new java.io.File(s"$done/shingles"),
+      new java.io.File(s"$cut.publish-tmp/shingles"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(cut, "_coalesce_manifest"),
+      "bands:bands\nshingles:shingles\n-:tombstones".getBytes("UTF-8"))
+    // the next maintenance call on each index: an append
+    val day2 = Seq((6L, "completely different text with nothing shared here at all"))
+      .toDF("doc_id", "text")
+    Seq("mh_done", "mh_cut").foreach(t => Dedup.appendToMinhashIndex(day2,
+      col("doc_id"), col("text"), table = t, segment = "day2"))
+    val queries = Seq(
+      (10L, "the quick brown fox jumps over the lazy dog today"),
+      (11L, "a slow green turtle walks under the busy bridge at noon"),
+      (12L, "completely different text with nothing shared here at all"))
+      .toDF("doc_id", "text")
+    def probe(t: String) = Dedup.queryMinhashIndexVerified(spark, t, queries,
+      col("doc_id"), col("text"), threshold = 0.5)
+      .select(col("query_id"), col("candidate_id")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(probe("mh_done") == Seq((10L, 4L), (11L, 2L), (11L, 5L), (12L, 3L), (12L, 6L)))
+    assert(probe("mh_cut") == probe("mh_done"))
+    assert(spark.table("mh_cut__shingles").count() ==
+      spark.table("mh_done__shingles").count())
+    assert(!new java.io.File(s"$cut/_coalesce_manifest").exists)
+    assert(!new java.io.File(s"$cut.publish-tmp").exists)
+    assert(!new java.io.File(s"$cut/tombstones").exists)
   }
 
   test("approximate sketches track exact aggregates (the fixed-memory scale path)") {

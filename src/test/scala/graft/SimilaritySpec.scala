@@ -647,11 +647,57 @@ class SimilaritySpec extends AnyFunSuite {
     assert(masked.toSeq == compacted.toSeq,
       "masking and physical drop must serve identically")
     assert(!new java.io.File(s"$dir/tombstones").exists)
-    assert(!new java.io.File(s"$dir/list_stats__next").exists)
+    assert(!new java.io.File(s"$dir.publish-tmp").exists)
     assert(new java.io.File(s"$dir/postings").listFiles
       .filter(_.isDirectory).map(_.getName).toSeq == Seq("segment=base"))
     val drift = SimilaritySearch.ivfPqIndexDrift(spark, dir).collect()
     assert(drift.nonEmpty && drift.forall(r => r.getDouble(3) == 0.0))
+  }
+
+  test("an interrupted IVF-PQ compaction publish (postings moved in, list_stats still staged, tombstones present) is finished by the next maintenance call") {
+    import org.apache.commons.io.FileUtils
+    val cent = embeddings.filter(col("vec_id") % 25 === 0)
+      .select(col("vec_id").as("centroid_id"), col("embedding").as("centv"))
+    val cb = SimilaritySearch.strideCodebook(embeddings,
+      col("vec_id"), col("embedding"), dim = 64, numSubspaces = 4, codeStride = 25)
+    // two identical indexes: `done` compacts uninterrupted, `cut` is
+    // left where a compaction dies after moving its postings in and
+    // before moving its stats (manifest landed, tombstones present)
+    val Seq(done, cut) = Seq("idx_pub_done", "idx_pub_cut").map { name =>
+      val dir = graft.sources.Sinks.tempArtifactDir(name)
+      SimilaritySearch.buildIvfPqIndex(embeddings.filter(col("vec_id") % 5 =!= 4),
+        col("vec_id"), col("embedding"), cent, cb,
+        dim = 64, numSubspaces = 4, indexDir = dir)
+      SimilaritySearch.appendToIvfPqIndex(embeddings.filter(col("vec_id") % 5 === 4),
+        col("vec_id"), col("embedding"), dim = 64, numSubspaces = 4,
+        indexDir = dir, segment = "day1")
+      SimilaritySearch.tombstoneIvfPqIndex(embeddings.filter(col("vec_id") % 7 === 3),
+        col("vec_id"), dir, segment = "t0")
+      dir
+    }
+    SimilaritySearch.compactIvfPqIndex(spark, done)
+    FileUtils.deleteDirectory(new java.io.File(s"$cut/postings"))
+    FileUtils.copyDirectory(new java.io.File(s"$done/postings"),
+      new java.io.File(s"$cut/postings"))
+    FileUtils.copyDirectory(new java.io.File(s"$done/list_stats"),
+      new java.io.File(s"$cut.publish-tmp/list_stats"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(cut, "_coalesce_manifest"),
+      "postings:postings\nlist_stats:list_stats\n-:tombstones".getBytes("UTF-8"))
+    // the next maintenance call on each index: a second takedown
+    Seq(done, cut).foreach(d => SimilaritySearch.tombstoneIvfPqIndex(
+      embeddings.filter(col("vec_id") % 11 === 2), col("vec_id"), d, segment = "t1"))
+    def drift(d: String) = SimilaritySearch.ivfPqIndexDrift(spark, d)
+      .orderBy(col("centroid_id")).collect().toSeq
+    assert(drift(cut) == drift(done))
+    val q = embeddings.filter(col("vec_id") < 5)
+    def serve(d: String) = SimilaritySearch.searchIvfPqIndex(d, q,
+      col("vec_id"), col("embedding"), k = 5, dim = 64, numSubspaces = 4, nprobe = 2)
+      .collect().map(_.toString).sorted.toSeq
+    assert(serve(done).nonEmpty && serve(cut) == serve(done))
+    assert(!new java.io.File(s"$cut/_coalesce_manifest").exists)
+    assert(!new java.io.File(s"$cut.publish-tmp").exists)
+    assert(new java.io.File(s"$cut/tombstones").list()
+      .filterNot(_.startsWith(".")).toSeq == Seq("segment=t1"))
   }
 
   test("ivfPqTopK degenerates to pqTopK when every list is probed") {
