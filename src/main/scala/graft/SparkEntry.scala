@@ -15,9 +15,26 @@ object SparkEntry {
 
   /** Streaming executions of engine queries — same oracle as their batch
     * twins, but run through Structured Streaming (file source → agg →
-    * memory sink, Trigger.AvailableNow).
+    * memory sink, Trigger.AvailableNow). `derived` twins run their batch
+    * entry's own body (see [[graft.streaming.StreamingQueries]]).
     */
-  private def streamingDefs: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
+  private def streamingDefs: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = {
+    val batch = (PipelineQueries.defs ++ PipelineQueries.lateDefs ++ Extended.defs)
+      .map(e => e._1 -> e).toMap
+    // a rename of a referenced batch entry must fail here, not silently
+    // deregister the streaming twin from the correctness gate
+    def batchEntry(name: String) = batch.getOrElse(name,
+      throw new IllegalStateException(s"streaming twin: no batch entry '$name'"))
+    def sharedOracle(name: String): String = batchEntry(name)._3.getOrElse(
+      throw new IllegalStateException(s"shared oracle: no oracle SQL found for '$name'"))
+    def derived(name: String, from: String) = batchEntry(from) match {
+      case (_, graft.queries.Twinned(body), oracle) =>
+        (name, (s: SparkSession, d: String) =>
+          body(s, d, graft.streaming.StreamingQueries.seams), oracle)
+      case _ => throw new IllegalStateException(
+        s"streaming twin: batch entry '$from' is not Twinned")
+    }
+    Seq(
     ("q30_streaming_window",
       (s, d) => graft.streaming.StreamingQueries.tumblingWindow(s, d),
       Some("""
@@ -116,15 +133,11 @@ object SparkEntry {
     ("q70_streaming_bpe_train",
       (s, d) => graft.streaming.StreamingQueries.bpeTrain(s, d),
       Some(sharedOracle("p58_bpe_train"))),
-    ("q71_streaming_rag_chunks",
-      (s, d) => graft.streaming.StreamingQueries.ragChunks(s, d),
-      Some(sharedOracle("p60_rag_chunks"))),
+    derived("q71_streaming_rag_chunks", "p60_rag_chunks"),
     ("q72_streaming_url_dedup",
       (s, d) => graft.streaming.StreamingQueries.urlDedup(s, d),
       Some(sharedOracle("p63_url_dedup"))),
-    ("q73_streaming_bpe_encode",
-      (s, d) => graft.streaming.StreamingQueries.bpeEncodeStream(s, d),
-      Some(sharedOracle("p64_bpe_encode"))),
+    derived("q73_streaming_bpe_encode", "p64_bpe_encode"),
     ("q74_streaming_phrase_fresh",
       (s, d) => graft.streaming.StreamingQueries.phraseServeFresh(s, d),
       Some(sharedOracle("p62_phrase_search"))),
@@ -171,36 +184,24 @@ object SparkEntry {
     ("q88_streaming_hybrid_rrf",
       (s, d) => graft.streaming.StreamingQueries.hybridRrfStream(s, d),
       Some(sharedOracle("p94_hybrid_rrf"))),
-    ("q93_streaming_anomaly",
-      (s, d) => graft.streaming.StreamingQueries.anomalyHoursStream(s, d),
-      Some(sharedOracle("q92_anomaly_hours"))),
-    ("q94_streaming_split",
-      (s, d) => graft.streaming.StreamingQueries.leakageSplitStream(s, d),
-      Some(sharedOracle("p96_leakage_safe_split"))),
+    derived("q93_streaming_anomaly", "q92_anomaly_hours"),
+    derived("q94_streaming_split", "p96_leakage_safe_split"),
     ("q95_streaming_covariance",
       (s, d) => graft.streaming.StreamingQueries.covarianceStream(s, d),
       Some(sharedOracle("p100_embedding_covariance"))),
     ("q98_streaming_active",
       (s, d) => graft.streaming.StreamingQueries.rollingActiveStream(s, d),
       Some(sharedOracle("q97_rolling_active"))),
-    ("q101_streaming_trend",
-      (s, d) => graft.streaming.StreamingQueries.trendSlopesStream(s, d),
-      Some(sharedOracle("q100_trend_slopes"))),
+    derived("q101_streaming_trend", "q100_trend_slopes"),
     ("q102_streaming_prefix",
       (s, d) => graft.streaming.StreamingQueries.prefixIndexStream(s, d),
       Some(sharedOracle("p103_prefix_index"))),
-    ("q103_streaming_quality",
-      (s, d) => graft.streaming.StreamingQueries.dataQualityStream(s, d),
-      Some(sharedOracle("p102_data_quality"))),
+    derived("q103_streaming_quality", "p102_data_quality"),
     ("q106_streaming_sessions",
       (s, d) => graft.streaming.StreamingQueries.sessionExportStream(s, d),
       Some(sharedOracle("q105_session_export"))),
-    ("q107_streaming_ewma",
-      (s, d) => graft.streaming.StreamingQueries.ewmaStream(s, d),
-      Some(sharedOracle("q99_ewma_hours"))),
-    ("q108_streaming_pii",
-      (s, d) => graft.streaming.StreamingQueries.piiRedactStream(s, d),
-      Some(sharedOracle("p109_pii_redact"))),
+    derived("q107_streaming_ewma", "q99_ewma_hours"),
+    derived("q108_streaming_pii", "p109_pii_redact"),
     ("q110_streaming_audio",
       (s, d) => graft.streaming.StreamingQueries.audioStatsStream(s, d),
       Some(sharedOracle("p110_audio_stats"))),
@@ -219,15 +220,9 @@ object SparkEntry {
     ("q115_streaming_semantic_decontam",
       (s, d) => graft.streaming.StreamingQueries.semanticDecontamStream(s, d),
       Some(sharedOracle("p118_semantic_decontam"))),
-    ("q116_streaming_normalize",
-      (s, d) => graft.streaming.StreamingQueries.normalizeStream(s, d),
-      Some(sharedOracle("p120_text_normalize"))),
-    ("q117_streaming_script_mix",
-      (s, d) => graft.streaming.StreamingQueries.scriptMixStream(s, d),
-      Some(sharedOracle("p128_script_mix"))),
-    ("q118_streaming_html_extract",
-      (s, d) => graft.streaming.StreamingQueries.htmlExtractStream(s, d),
-      Some(sharedOracle("p130_html_extract"))),
+    derived("q116_streaming_normalize", "p120_text_normalize"),
+    derived("q117_streaming_script_mix", "p128_script_mix"),
+    derived("q118_streaming_html_extract", "p130_html_extract"),
     ("q119_streaming_outlinks",
       (s, d) => graft.streaming.StreamingQueries.outlinksStream(s, d),
       Some(sharedOracle("p131_outlinks"))),
@@ -237,63 +232,39 @@ object SparkEntry {
     ("q121_streaming_trap",
       (s, d) => graft.streaming.StreamingQueries.trapSignalsStream(s, d),
       Some(sharedOracle("p142_trap_signals"))),
-    ("q122_streaming_anchor_terms",
-      (s, d) => graft.streaming.StreamingQueries.anchorTermsStream(s, d),
-      Some(sharedOracle("p134_anchor_terms"))),
+    derived("q122_streaming_anchor_terms", "p134_anchor_terms"),
     ("q123_streaming_change_rates",
       (s, d) => graft.streaming.StreamingQueries.changeRatesStream(s, d),
       Some(sharedOracle("p141_change_rates"))),
-    ("q124_streaming_jsonl",
-      (s, d) => graft.streaming.StreamingQueries.jsonlQuarantineStream(s, d),
-      Some(sharedOracle("p143_jsonl_quarantine"))),
-    ("q125_streaming_kanon",
-      (s, d) => graft.streaming.StreamingQueries.kanonReleaseStream(s, d),
-      Some(sharedOracle("p144_kanon_release"))),
+    derived("q124_streaming_jsonl", "p143_jsonl_quarantine"),
+    derived("q125_streaming_kanon", "p144_kanon_release"),
     ("q126_streaming_worklist",
       (s, d) => graft.streaming.StreamingQueries.crawlWorklistStream(s, d),
       Some(sharedOracle("p145_crawl_worklist"))),
-    ("q127_streaming_snippets",
-      (s, d) => graft.streaming.StreamingQueries.snippetsStream(s, d),
-      Some(sharedOracle("p146_snippets"))),
+    derived("q127_streaming_snippets", "p146_snippets"),
     ("q128_streaming_vocab_coverage",
       (s, d) => graft.streaming.StreamingQueries.vocabCoverageStream(s, d),
       Some(sharedOracle("p151_vocab_coverage"))),
-    ("q129_streaming_cdc",
-      (s, d) => graft.streaming.StreamingQueries.cdcChunksStream(s, d),
-      Some(sharedOracle("p152_cdc_chunks"))),
+    derived("q129_streaming_cdc", "p152_cdc_chunks"),
     ("q130_streaming_recrawl",
       (s, d) => graft.streaming.StreamingQueries.recrawlScheduleStream(s, d),
       Some(sharedOracle("p147_recrawl_schedule"))),
     ("q131_streaming_byte_bpe_train",
       (s, d) => graft.streaming.StreamingQueries.byteBpeTrain(s, d),
       Some(sharedOracle("p158_bpe_bytes_train"))),
-    ("q132_streaming_byte_bpe_encode",
-      (s, d) => graft.streaming.StreamingQueries.byteBpeEncodeStream(s, d),
-      Some(sharedOracle("p159_bpe_bytes_encode"))),
+    derived("q132_streaming_byte_bpe_encode", "p159_bpe_bytes_encode"),
     ("q133_streaming_per_host_worklist",
       (s, d) => graft.streaming.StreamingQueries.perHostWorklistStream(s, d),
       Some(sharedOracle("p164_worklist_per_host"))),
-    ("q134_streaming_warc",
-      (s, d) => graft.streaming.StreamingQueries.warcParseStream(s, d),
-      Some(sharedOracle("p167_warc_parse"))),
-    ("q135_streaming_crawl_delay",
-      (s, d) => graft.streaming.StreamingQueries.robotsCrawlDelayStream(s, d),
-      Some(sharedOracle("p161_robots_crawl_delay"))),
-    ("q136_streaming_cdx",
-      (s, d) => graft.streaming.StreamingQueries.cdxIndexStream(s, d),
-      Some(sharedOracle("p170_cdx_index"))),
-    ("q138_streaming_warc_images",
-      (s, d) => graft.streaming.StreamingQueries.warcImagesStream(s, d),
-      Some(sharedOracle("p178_warc_images"))),
-    ("q140_streaming_http",
-      (s, d) => graft.streaming.StreamingQueries.httpSplitStream(s, d),
-      Some(sharedOracle("p179_http_split"))),
+    derived("q134_streaming_warc", "p167_warc_parse"),
+    derived("q135_streaming_crawl_delay", "p161_robots_crawl_delay"),
+    derived("q136_streaming_cdx", "p170_cdx_index"),
+    derived("q138_streaming_warc_images", "p178_warc_images"),
+    derived("q140_streaming_http", "p179_http_split"),
     ("q141_streaming_unigram",
       (s, d) => graft.streaming.StreamingQueries.unigramEncodeStream(s, d),
       Some(sharedOracle("p191_unigram_viterbi"))),
-    ("q142_streaming_wordpiece",
-      (s, d) => graft.streaming.StreamingQueries.wordPieceEncodeStream(s, d),
-      Some(sharedOracle("p196_wordpiece_encode"))),
+    derived("q142_streaming_wordpiece", "p196_wordpiece_encode"),
     ("q143_streaming_kn",
       (s, d) => graft.streaming.StreamingQueries.kneserNeyScoring(s, d),
       Some(sharedOracle("p201_kn_perplexity"))),
@@ -314,48 +285,28 @@ object SparkEntry {
     ("q148_streaming_paced_worklist",
       (s, d) => graft.streaming.StreamingQueries.pacedWorklistStream(s, d),
       Some(PipelineQueries.pacedWorklistOracle)),
-    ("q149_streaming_nfc_dedup",
-      (s, d) => graft.streaming.StreamingQueries.nfcDedupStream(s, d),
-      Some(sharedOracle("p208_unicode_nfc"))),
+    derived("q149_streaming_nfc_dedup", "p208_unicode_nfc"),
     ("q150_streaming_unigram_train",
       (s, d) => graft.streaming.StreamingQueries.unigramTrainStream(s, d),
       Some(sharedOracle("p193_unigram_train"))),
-    ("q151_streaming_wat",
-      (s, d) => graft.streaming.StreamingQueries.watMetadataStream(s, d),
-      Some(sharedOracle("p186_wat_metadata"))),
-    ("q152_streaming_meta_robots",
-      (s, d) => graft.streaming.StreamingQueries.metaRobotsStream(s, d),
-      Some(sharedOracle("p211_meta_robots"))),
-    ("q153_streaming_follow_harvest",
-      (s, d) => graft.streaming.StreamingQueries.followHarvestStream(s, d),
-      Some(sharedOracle("p212_follow_harvest"))),
-    ("q154_streaming_entropy",
-      (s, d) => graft.streaming.StreamingQueries.tokenEntropyStream(s, d),
-      Some(sharedOracle("p213_token_entropy"))),
-    ("q155_streaming_rel_canonical",
-      (s, d) => graft.streaming.StreamingQueries.relCanonicalStream(s, d),
-      Some(sharedOracle("p215_rel_canonical"))),
-    ("q156_streaming_meta_refresh",
-      (s, d) => graft.streaming.StreamingQueries.metaRefreshStream(s, d),
-      Some(sharedOracle("p216_meta_refresh"))),
+    derived("q151_streaming_wat", "p186_wat_metadata"),
+    derived("q152_streaming_meta_robots", "p211_meta_robots"),
+    derived("q153_streaming_follow_harvest", "p212_follow_harvest"),
+    derived("q154_streaming_entropy", "p213_token_entropy"),
+    derived("q155_streaming_rel_canonical", "p215_rel_canonical"),
+    derived("q156_streaming_meta_refresh", "p216_meta_refresh"),
     ("q157_streaming_alias_chains",
       (s, d) => graft.streaming.StreamingQueries.aliasChainsStream(s, d),
       Some(sharedOracle("p217_canonical_chains"))),
-    ("q158_streaming_gif_frames",
-      (s, d) => graft.streaming.StreamingQueries.gifFramesStream(s, d),
-      Some(sharedOracle("p221_gif_frames"))),
+    derived("q158_streaming_gif_frames", "p221_gif_frames"),
     ("q159_streaming_sq8_serve",
       (s, d) => graft.streaming.StreamingQueries.sq8ServeStream(s, d),
       Some(sharedOracle("p218_sq8_lifecycle"))),
     ("q160_streaming_ivf_sq8",
       (s, d) => graft.streaming.StreamingQueries.ivfSq8ServeStream(s, d),
       Some(sharedOracle("p225_ivf_sq8"))),
-    ("q161_streaming_sentence_chunks",
-      (s, d) => graft.streaming.StreamingQueries.sentenceChunksStream(s, d),
-      Some(sharedOracle("p227_sentence_chunks"))),
-    ("q162_streaming_langid_script",
-      (s, d) => graft.streaming.StreamingQueries.langIdScriptStream(s, d),
-      Some(sharedOracle("p224_langid_script"))),
+    derived("q161_streaming_sentence_chunks", "p227_sentence_chunks"),
+    derived("q162_streaming_langid_script", "p224_langid_script"),
     ("q139_streaming_cdx_serve",
       (s, d) => graft.streaming.StreamingQueries.cdxServeStream(s, d),
       Some(PipelineQueries.warcFixtureOracleSqlFrom(
@@ -382,16 +333,7 @@ object SparkEntry {
                  % 1000000000000 AS BIGINT) AS orig_offset,
                count(*) AS n_copies
         FROM cdx GROUP BY digest ORDER BY digest"""))))
-
-  /** Oracle shared with a batch query, resolved loudly: a rename of the
-    * referenced entry must fail here, not silently deregister the
-    * streaming twin from the correctness gate.
-    */
-  private def sharedOracle(name: String): String =
-    (PipelineQueries.defs ++ PipelineQueries.lateDefs ++ Extended.defs)
-      .find(_._1 == name).flatMap(_._3)
-      .getOrElse(throw new IllegalStateException(
-        s"shared oracle: no oracle SQL found for '$name'"))
+  }
 
   private lazy val all: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] =
     Relational.defs ++ ParityQueries.defs ++ PipelineQueries.defs ++

@@ -454,10 +454,10 @@ object Extended {
     // would. Scale shape: the raw log collapses to the (hour, type)
     // grid in one map-combined aggregation; the window then runs over
     // the tiny grid, partitioned by type.
-    ("q92_anomaly_hours", (s, d) => {
+    ("q92_anomaly_hours", Twinned { (s, d, t) =>
       import graft.operators.TimeWindow
       TimeWindow.trailingAnomaly(
-          TimeWindow.hourlyCounts(Tables.events(s, d), col("ts"), col("event_type")))
+          t.cut(TimeWindow.hourlyCounts(t.in(Tables.events(s, d)), col("ts"), col("event_type"))))
         .select(col("hour_idx"), col("key").as("event_type"), col("n"),
           col("base_sum"), col("base_hours"))
         .orderBy(col("event_type"), col("hour_idx"))
@@ -560,10 +560,10 @@ object Extended {
     // reproduces it bit-for-bit (the oracle replays it as a recursive
     // CTE). Per-key series are time-bounded, so the in-partition fold
     // over each key's collected series is config-sized by construction.
-    ("q99_ewma_hours", (s, d) => {
+    ("q99_ewma_hours", Twinned { (s, d, t) =>
       import graft.operators.TimeWindow
       TimeWindow.ewma(
-          TimeWindow.hourlyCounts(Tables.events(s, d), col("ts"), col("event_type")))
+          t.cut(TimeWindow.hourlyCounts(t.in(Tables.events(s, d)), col("ts"), col("event_type"))))
         .select(col("hour_idx"), col("key").as("event_type"), col("n"),
           col("ewma_micro"))
         .orderBy(col("event_type"), col("hour_idx"))
@@ -592,10 +592,10 @@ object Extended {
     // truncates, DuckDB // floors). x re-bases per key to its first
     // hour — slope-invariant and overflow-safe. Both aggregations ride
     // the grid's key exchange.
-    ("q100_trend_slopes", (s, d) => {
+    ("q100_trend_slopes", Twinned { (s, d, t) =>
       import graft.operators.TimeWindow
       TimeWindow.trendSlopes(
-          TimeWindow.hourlyCounts(Tables.events(s, d), col("ts"), col("event_type")))
+          t.cut(TimeWindow.hourlyCounts(t.in(Tables.events(s, d)), col("ts"), col("event_type"))))
         .select(col("key").as("event_type"), col("n_hours"),
           col("slope_num"), col("slope_den"))
         .orderBy(col("event_type"))

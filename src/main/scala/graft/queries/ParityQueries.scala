@@ -341,15 +341,12 @@ object ParityQueries {
 
   /** q57's fixture dir: documents sharded into 64 files
     * (`shard_<n>.txt`, n = doc_id % 64), each a sorted run of
-    * `doc_id,md5(text)\n` lines. Cleaned and rewritten per call so the
+    * `doc_id,md5(text)\n` lines. A fresh temp dir per call, so the
     * directory diff sees exactly these files.
     */
   private def dirFixture(s: SparkSession, d: String): String = {
-    val dir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_watch_${Integer.toHexString(d.hashCode)}")
-    java.nio.file.Files.createDirectories(dir)
-    val old = java.nio.file.Files.list(dir)
-    try old.forEach(p => java.nio.file.Files.delete(p)) finally old.close()
+    val dir = java.nio.file.Paths.get(
+      graft.sources.Sinks.tempArtifactDir("dirwatch_fixture"))
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), md5(col("text")).as("h"))
       .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getString(1)))
@@ -369,9 +366,8 @@ object ParityQueries {
     */
   private def zipFixture(s: SparkSession, d: String): String = {
     import java.util.zip.{ZipEntry, ZipOutputStream}
-    val dir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_zip_${Integer.toHexString(d.hashCode)}")
-    java.nio.file.Files.createDirectories(dir)
+    val dir = java.nio.file.Paths.get(
+      graft.sources.Sinks.tempArtifactDir("zip_fixture"))
     val docs = Tables.documents(s, d).select("doc_id", "text")
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getString(1)))

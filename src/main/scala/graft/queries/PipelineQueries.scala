@@ -1795,11 +1795,11 @@ object PipelineQueries {
     // table — it reads each word's encoding off the final unrolled
     // TRAINING state and reassembles documents positionally, so
     // agreement proves merge application == training evolution.
-    ("p64_bpe_encode", (s, d) => {
+    ("p64_bpe_encode", Twinned { (s, d, t) =>
       val docs = Tables.documents(s, d)
       val merges = graft.text.CorpusOps.bpeMergeTable(
         graft.text.CorpusOps.bpeTrainMerges(docs, col("text"), numMerges = 8))
-      graft.text.CorpusOps.bpeEncode(docs, col("doc_id"), col("text"), merges)
+      t.cut(graft.text.CorpusOps.bpeEncode(t.in(docs), col("doc_id"), col("text"), merges))
         .orderBy(col("doc_id"))
     }, Some(bpeEncodeOracle(8))),
 
@@ -1891,9 +1891,9 @@ object PipelineQueries {
     // Sliding-window RAG chunking: token windows of 32 advancing by 24
     // (overlap 8), last window short, no redundant tails — pure
     // map-side HOFs, chunk boundaries token-exact in both engines.
-    ("p60_rag_chunks", (s, d) => {
-      graft.text.CorpusOps.chunkForRag(Tables.documents(s, d),
-          col("doc_id"), col("text"), window = 32, stride = 24)
+    ("p60_rag_chunks", Twinned { (s, d, t) =>
+      t.cut(graft.text.CorpusOps.chunkForRag(t.in(Tables.documents(s, d)),
+          col("doc_id"), col("text"), window = 32, stride = 24))
         .orderBy(col("doc_id"), col("chunk_idx"))
     }, Some(s"""
       WITH t AS (SELECT doc_id, ${sqlToks("text")} AS toks FROM documents),
@@ -2878,10 +2878,10 @@ object PipelineQueries {
     // never straddle train and val (a doc_id split trains on one crawl
     // copy and validates on the other — val loss silently measures
     // memorization). Pure scan-stage column program: zero shuffles.
-    ("p96_leakage_safe_split", (s, d) => {
-      graft.curation.Curation.leakageSafeSplit(
-          Tables.documents(s, d), col("text"))
-        .select(col("doc_id"), col("fingerprint"), col("split"))
+    ("p96_leakage_safe_split", Twinned { (s, d, t) =>
+      t.cut(graft.curation.Curation.leakageSafeSplit(
+          t.in(Tables.documents(s, d)), col("text"))
+        .select(col("doc_id"), col("fingerprint"), col("split")))
         .orderBy(col("doc_id"))
     }, Some(s"""
       WITH f AS (SELECT doc_id,
@@ -3012,17 +3012,17 @@ object PipelineQueries {
     // is one map-combined agg; referential rules are single anti-joins.
     // Clean rules report 0, not absence — the report's shape never
     // depends on the data.
-    ("p102_data_quality", (s, d) => {
+    ("p102_data_quality", Twinned { (s, d, t) =>
       import graft.operators.DataQuality._
       val li = Tables.lineitem(s, d); val o = Tables.orders(s, d)
       report(
         rowRules(li, Seq(
           "lineitem_discount_above_policy" -> (col("l_discount") > 0.06),
           "lineitem_nonpos_quantity" -> (col("l_quantity") <= 0))),
-        rowRules(Tables.events(s, d), Seq(
-          "events_value_out_of_range" -> (col("value") < 0 || col("value") > 20))),
-        rowRules(Tables.documents(s, d), Seq(
-          "documents_nchars_mismatch" -> (col("n_chars") =!= length(col("text"))))),
+        t.cut(rowRules(t.in(Tables.events(s, d)), Seq(
+          "events_value_out_of_range" -> (col("value") < 0 || col("value") > 20)))),
+        t.cut(rowRules(t.in(Tables.documents(s, d)), Seq(
+          "documents_nchars_mismatch" -> (col("n_chars") =!= length(col("text")))))),
         uniqueKeyRule("orders_pk_unique", o, col("o_orderkey")),
         orphanRule("lineitem_orphan_order", li, col("l_orderkey"),
           o, col("o_orderkey")),
@@ -3313,11 +3313,11 @@ object PipelineQueries {
     // cascade with the same regex literals (a Java-regex/RE2-common
     // subset by construction: classes, bounded quantifiers, ASCII \b —
     // no lookaround).
-    ("p109_pii_redact", (s, d) => {
-      graft.text.CorpusOps.scrub(
-          Tables.documents(s, d).select(col("doc_id"),
+    ("p109_pii_redact", Twinned { (s, d, t) =>
+      t.cut(graft.text.CorpusOps.scrub(
+          t.in(Tables.documents(s, d)).select(col("doc_id"),
             piiFixtureText.as("text")),
-          col("doc_id"), col("text"))
+          col("doc_id"), col("text")))
         .orderBy(col("doc_id"))
     }, Some(piiOracle)),
 
@@ -3673,16 +3673,16 @@ object PipelineQueries {
     // normalizes via java.text.Normalizer, the oracle via
     // nfc_normalize/strip_accents (utf8proc) — agreement pins that the
     // canonical form is engine-portable, not an implementation quirk.
-    ("p120_text_normalize", (s, d) => {
-      val docs = Tables.documents(s, d)
+    ("p120_text_normalize", Twinned { (s, d, t) =>
+      val docs = t.in(Tables.documents(s, d))
         .select(col("doc_id"),
           when(col("doc_id") % 4 === 0,
             concat(col("text"), lit(" " + decomposedFixture)))
             .otherwise(col("text")).as("text"))
-      docs.select(col("doc_id"),
+      t.cut(docs.select(col("doc_id"),
           TextFunctions.nfcNormalize(col("text")).as("norm"),
           TextFunctions.stripAccents(col("text")).as("folded"),
-          (TextFunctions.nfcNormalize(col("text")) =!= col("text")).as("changed"))
+          (TextFunctions.nfcNormalize(col("text")) =!= col("text")).as("changed")))
         .orderBy(col("doc_id"))
     }, Some(s"""
       WITH fx AS (SELECT doc_id, CASE WHEN doc_id % 4 = 0
@@ -3910,10 +3910,10 @@ object PipelineQueries {
     // IS Russian — appending would leave everything latin-dominant);
     // Java regex \\p{IsX} vs RE2 \\p{X} pinned equal — both count
     // code points.
-    ("p128_script_mix", (s, d) => {
-      val docs = Tables.documents(s, d)
+    ("p128_script_mix", Twinned { (s, d, t) =>
+      val docs = t.in(Tables.documents(s, d))
         .select(col("doc_id"), scriptFixtureText.as("text"))
-      docs.select((col("doc_id") +: TextFunctions.scriptMix(col("text"))): _*)
+      t.cut(docs.select((col("doc_id") +: TextFunctions.scriptMix(col("text"))): _*))
         .orderBy(col("doc_id"))
     }, Some(s"""
       WITH fx AS (SELECT doc_id, CASE
@@ -4048,13 +4048,13 @@ object PipelineQueries {
     // writes down the clean text the template contains, so the whole
     // regex chain — zone removal, tag strip, entity decode, collapse
     // — is gated against authored intent, not a shared formula.
-    ("p130_html_extract", (s, d) => {
-      val pages = htmlPages(s, d)
-      pages.select(col("doc_id"),
+    ("p130_html_extract", Twinned { (s, d, t) =>
+      val pages = t.in(htmlPages(s, d))
+      t.cut(pages.select(col("doc_id"),
           TextFunctions.htmlTitle(col("html")).as("title"),
           TextFunctions.htmlExtract(col("html")).as("text"),
           size(TextFunctions.extractHrefs(col("html"))).cast("long")
-            .as("n_links"))
+            .as("n_links")))
         .localCheckpoint(eager = false) // one-shot: the sort samples then re-runs its child
         .orderBy(col("doc_id"))
     }, Some("""
@@ -4159,8 +4159,8 @@ object PipelineQueries {
     // counts, the inner markup cleaned through the same htmlExtract
     // kernel (the fixture's footer anchor carries an entity and a
     // <b> to prove it). Oracle generative, like the rest of the arc.
-    ("p134_anchor_terms", (s, d) => {
-      graft.graph.LinkGraph.anchorTerms(htmlPages(s, d), col("html"))
+    ("p134_anchor_terms", Twinned { (s, d, t) =>
+      t.cut(graft.graph.LinkGraph.anchorTerms(t.in(htmlPages(s, d)), col("html")))
         .orderBy(col("dst_family"), col("term"))
     }, Some("""
       WITH an AS (
@@ -4446,10 +4446,10 @@ object PipelineQueries {
     // coverage pair-join touches hit rows only, and the emitted
     // snippet is the literal token slice — both engines rejoin the
     // same tokens, so the text itself is oracle-checked.
-    ("p146_snippets", (s, d) => {
-      graft.text.CorpusOps.snippets(Tables.documents(s, d),
+    ("p146_snippets", Twinned { (s, d, t) =>
+      t.cut(graft.text.CorpusOps.snippets(t.in(Tables.documents(s, d)),
           col("doc_id"), col("text"),
-          queries = graft.text.CorpusOps.bm25DemoQueries, window = 8)
+          queries = graft.text.CorpusOps.bm25DemoQueries, window = 8))
         .localCheckpoint(eager = false) // one-shot: the sort samples then re-runs its child
         .orderBy(col("qid"), col("doc_id"))
     }, Some(s"""
@@ -4611,17 +4611,17 @@ object PipelineQueries {
     // arithmetic — the parse is checked against intent. All
     // scan-stage (codegen'd Jackson parse + null probes): no shuffle,
     // no state.
-    ("p143_jsonl_quarantine", (s, d) => {
+    ("p143_jsonl_quarantine", Twinned { (s, d, t) =>
       import org.apache.spark.sql.types._
       val schema = StructType(Seq(StructField("id", LongType),
         StructField("lang", StringType), StructField("nc", LongType)))
-      graft.sources.JsonlIngest.parseWithQuarantine(
-          jsonlFixtureFrom(Tables.documents(s, d)).select(col("doc_id"),
+      t.cut(graft.sources.JsonlIngest.parseWithQuarantine(
+          jsonlFixtureFrom(t.in(Tables.documents(s, d))).select(col("doc_id"),
             col("payload")),
           col("payload"), schema, required = Seq("id", "lang"))
         .select(col("doc_id"), col("ingest_status"),
           coalesce(col("lang"), lit("")).as("lang"),
-          coalesce(col("nc"), lit(0L)).as("nc"))
+          coalesce(col("nc"), lit(0L)).as("nc")))
         .orderBy(col("doc_id"))
     }, Some("""
       SELECT doc_id,
@@ -4641,11 +4641,11 @@ object PipelineQueries {
     // exact, small groups stay invisible, zeros when clean). At
     // sf0.01 the ~12-doc average makes both branches bind; the oracle
     // recomputes the same floor from the same counts at any SF.
-    ("p144_kanon_release", (s, d) => {
-      val stats = Tables.documents(s, d)
+    ("p144_kanon_release", Twinned { (s, d, t) =>
+      val stats = t.in(Tables.documents(s, d))
         .groupBy(col("lang"), (col("doc_id") % 7).cast("string").as("bucket"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars"))
-      graft.curation.Curation.suppressSmallGroups(stats,
+      graft.curation.Curation.suppressSmallGroups(t.cut(stats),
           keyCols = Seq("lang", "bucket"), nCol = "n_docs", k = 10L)
         .orderBy(col("lang"), col("bucket"))
     }, Some("""
@@ -4882,9 +4882,9 @@ object PipelineQueries {
     // cannot have; spec-pinned). Shuffle-free: gram hashing, boundary
     // election, and slicing are per-row array functions (the p146
     // rule). The chunk TEXT itself is oracle-checked.
-    ("p152_cdc_chunks", (s, d) => {
-      graft.dedup.Dedup.cdcChunks(Tables.documents(s, d),
-          col("doc_id"), col("text"))
+    ("p152_cdc_chunks", Twinned { (s, d, t) =>
+      t.cut(graft.dedup.Dedup.cdcChunks(t.in(Tables.documents(s, d)),
+          col("doc_id"), col("text")))
         .orderBy(col("doc_id"), col("chunk_idx"))
     }, Some(s"""
       WITH t AS (SELECT doc_id, ${sqlToks("text")} AS toks FROM documents),
@@ -5145,13 +5145,13 @@ object PipelineQueries {
     // application == byte-level training evolution, and the emitted
     // symbol streams (e.g. 'Ã ©' for 'é' pre-merge) pin the seeding
     // byte-for-byte. Map-side codegen kernel, zero shuffle.
-    ("p159_bpe_bytes_encode", (s, d) => {
+    ("p159_bpe_bytes_encode", Twinned { (s, d, t) =>
       val docs = Tables.documents(s, d)
       val merges = graft.text.CorpusOps.bpeMergeTable(
         graft.text.CorpusOps.bpeTrainMerges(docs, byteTextFixture,
           numMerges = 8, byteLevel = true))
-      graft.text.CorpusOps.bpeEncodeAt(docs, col("doc_id"), byteTextFixture,
-          merges, byteLevel = true)
+      t.cut(graft.text.CorpusOps.bpeEncodeAt(t.in(docs), col("doc_id"), byteTextFixture,
+          merges, byteLevel = true))
         .orderBy(col("doc_id"))
     }, Some(byteBpeEncodeOracle(8))),
 
@@ -5177,11 +5177,11 @@ object PipelineQueries {
     // groupless delay is ignored, fractional seconds land as integer
     // ms, and several applicable delays keep the MAX. Generative
     // oracle over the authored fixture (the p154/p156 pattern).
-    ("p161_robots_crawl_delay", (s, d) => {
+    ("p161_robots_crawl_delay", Twinned { (s, d, t) =>
       import s.implicits._
-      graft.graph.LinkGraph.robotsCrawlDelay(
-          robotsMetaFixture.toDF("family", "txt"),
-          col("family"), col("txt"))
+      t.cut(graft.graph.LinkGraph.robotsCrawlDelay(
+          t.in(robotsMetaFixture.toDF("family", "txt")),
+          col("family"), col("txt")))
         .orderBy(col("family"))
     }, Some("""
       SELECT * FROM (VALUES
@@ -5398,10 +5398,10 @@ object PipelineQueries {
     // arithmetic the fixture assembled them with (the htmlExtract
     // generative-oracle rule), so agreement proves the parser walks
     // the container faithfully.
-    ("p167_warc_parse", (s, d) => {
-      graft.sources.Warc.parseWarc(
-          warcFixtureFrom(Tables.documents(s, d)),
-          col("file_id"), col("payload"))
+    ("p167_warc_parse", Twinned { (s, d, t) =>
+      t.cut(graft.sources.Warc.parseWarc(
+          t.in(warcFixtureFrom(Tables.documents(s, d))),
+          col("file_id"), col("payload")))
         .orderBy(col("file_id"), col("record_idx"))
     }, Some(warcFixtureOracleSql("""
       SELECT file_id, record_idx, warc_type, target_uri, content_length,
@@ -5502,11 +5502,11 @@ object PipelineQueries {
     // writeWarc's rendered-framing formula (prefix sum over record
     // sizes), digests from DuckDB's own sha256 — one gate over the
     // parser's offsets, the SURT transform, and the digest at once.
-    ("p170_cdx_index", (s, d) => {
+    ("p170_cdx_index", Twinned { (s, d, t) =>
       val recs = graft.sources.Warc.parseWarc(
-        warcFixtureFrom(Tables.documents(s, d)),
+        t.in(warcFixtureFrom(Tables.documents(s, d))),
         col("file_id"), col("payload"))
-      graft.sources.Warc.cdxIndex(recs)
+      t.cut(graft.sources.Warc.cdxIndex(recs))
         .orderBy(col("surt_key"))
     }, Some(warcFixtureOracleSql("""
       SELECT 'com,src' || CAST(doc_id % 20 AS VARCHAR) || ')/p/'
@@ -5758,7 +5758,7 @@ object PipelineQueries {
     // trip would corrupt every non-UTF-8 byte sequence in the PNG
     // stream — exactly the corruption this oracle would catch.
     // Provenance recovered from the URI, never row order.
-    ("p178_warc_images", (s, d) => {
+    ("p178_warc_images", Twinned { (s, d, t) =>
       import graft.multimodal.ImageCodec
       val imgs = ImageCodec.SyntheticImages.pngFixture(
         Tables.documents(s, d), col("doc_id"))
@@ -5767,12 +5767,12 @@ object PipelineQueries {
         concat(lit("https://www.src"), (col("media_id") % 20).cast("string"),
           lit(".com/img/"), col("media_id").cast("string")),
         col("payload"))
-      val recs = graft.sources.Warc.parseWarcBinary(warcs,
+      val recs = graft.sources.Warc.parseWarcBinary(t.in(warcs),
         col("file_id"), col("payload"))
-      ImageCodec.decodeMeta(recs,
+      t.cut(ImageCodec.decodeMeta(recs,
           regexp_extract(col("target_uri"), "/img/([0-9]+)$", 1)
             .cast("long"),
-          col("body"))
+          col("body")))
         .orderBy(col("media_id"))
     }, Some(s"""
       WITH ${graft.multimodal.ImageCodec.SyntheticImages.oracleDims}
@@ -5794,7 +5794,7 @@ object PipelineQueries {
     // p168's generative extract expectation, PROVING no header bytes
     // leak into any document, plus the status/mime/charset columns
     // from the same doc_id arithmetic.
-    ("p179_http_split", (s, d) => {
+    ("p179_http_split", Twinned { (s, d, t) =>
       val docs = Tables.documents(s, d)
       val isMiss = col("doc_id") % 31 === 0
       val body = when(isMiss,
@@ -5810,17 +5810,17 @@ object PipelineQueries {
         lit("\r\n\r\n"), body))
       val warcs = httpResponseWarcFrom(docs.select(col("doc_id"),
         msg.as("msg")))
-      val recs = graft.sources.Warc.parseWarcBinary(warcs,
+      val recs = graft.sources.Warc.parseWarcBinary(t.in(warcs),
           col("file_id"), col("payload"))
         .filter(col("warc_type") === "response" &&
           col("content_type").startsWith("application/http"))
-      graft.sources.Warc.splitHttp(recs)
+      t.cut(graft.sources.Warc.splitHttp(recs)
         .select(fixtureDocId.as("doc_id"),
           col("http_status"), col("mime_type"), col("charset"),
           when(col("http_status") === 200 &&
               col("mime_type") === "text/html",
             TextFunctions.htmlExtract(col("text")))
-            .otherwise(col("text")).as("text_out"))
+            .otherwise(col("text")).as("text_out")))
         .orderBy(col("doc_id"))
     }, Some("""
       SELECT doc_id,
@@ -6167,7 +6167,7 @@ object PipelineQueries {
     // WAT files and the oracle reconstructs the exact JSON strings
     // from doc_id arithmetic — field order, quoting, and the
     // unquoted integers all pinned.
-    ("p186_wat_metadata", (s, d) => {
+    ("p186_wat_metadata", Twinned { (s, d, t) =>
       val docs = Tables.documents(s, d)
       val page = htmlFixtureText
       val msg = cast_bin(concat(
@@ -6177,17 +6177,17 @@ object PipelineQueries {
       val warcs = httpResponseWarcFrom(docs.select(col("doc_id"),
         msg.as("msg")))
       val split = graft.sources.Warc.splitHttp(
-        graft.sources.Warc.parseWarcBinary(warcs, col("file_id"),
+        graft.sources.Warc.parseWarcBinary(t.in(warcs), col("file_id"),
           col("payload")))
       val wat = graft.sources.Warc.writeWarc(
-        split.select(col("file_id"), col("record_idx"),
+        t.cut(split.select(col("file_id"), col("record_idx"),
           lit("metadata").as("t"), col("target_uri"),
           to_json(struct(col("target_uri").as("url"),
             col("http_status").as("status"),
             col("mime_type").as("mime"),
             TextFunctions.htmlTitle(col("text")).as("title"),
             size(TextFunctions.extractHrefs(col("text"))).as("n_links")))
-            .as("b")),
+            .as("b"))),
         col("file_id"), col("record_idx"), col("t"), col("target_uri"),
         col("b"), contentType = lit("application/json"))
       graft.sources.Warc.parseWarc(wat, col("file_id"), col("payload"))
@@ -6571,9 +6571,11 @@ object PipelineQueries {
     // derives from the segmentation itself; the oracle reconstructs
     // everything from k/m arithmetic. Vocabulary constants shared
     // verbatim with the oracle (the ByteAlphabet rule).
-    ("p196_wordpiece_encode",
-      (s, d) => wordPieceEncodeBody(s, d, wordPieceTrapVocab),
-      Some(wordPieceEncodeOracle)),
+    ("p196_wordpiece_encode", Twinned { (s, d, t) =>
+      t.cut(wordPieceSegCols(
+          t.in(wordPieceFixtureWords(Tables.documents(s, d))), wordPieceTrapVocab))
+        .orderBy(col("doc_id"))
+    }, Some(wordPieceEncodeOracle)),
 
     // WordPiece TRAINING's merge criterion, oracle-gated in closed
     // form: the first-iteration score table over the seed state —
@@ -6649,8 +6651,9 @@ object PipelineQueries {
     ("p199_wordpiece_model_serve", (s, d) => {
       val dir = graft.sources.Sinks.tempArtifactDir("wordpiece_model")
       graft.text.WordPiece.saveWordPieceModel(s, wordPieceTrapVocab, dir)
-      wordPieceEncodeBody(s, d,
-        graft.text.WordPiece.loadWordPieceModel(s, dir))
+      wordPieceSegCols(wordPieceFixtureWords(Tables.documents(s, d)),
+          graft.text.WordPiece.loadWordPieceModel(s, dir))
+        .orderBy(col("doc_id"))
     }, Some(wordPieceEncodeOracle)),
 
     // Interpolated Kneser–Ney bigram model rendered AS DATA — the
@@ -6924,14 +6927,14 @@ object PipelineQueries {
     // normalized STRING itself and its whitespace tokenization (the
     // tokens downstream seeding consumes). Pure scan-stage
     // projection; the dedup election is the p01 hash-groupBy.
-    ("p208_unicode_nfc", (s, d) => {
+    ("p208_unicode_nfc", Twinned { (s, d, t) =>
       import graft.functions.UnicodeNormalize
-      Tables.documents(s, d)
+      t.cut(t.in(Tables.documents(s, d))
         .select(col("doc_id"), nfcFixtureText.as("raw"))
         .select(col("doc_id"), UnicodeNormalize.nfc(col("raw")).as("norm"))
         .groupBy(col("norm"))
         .agg(min(col("doc_id")).as("keeper_doc"),
-          count(lit(1)).as("n_docs"))
+          count(lit(1)).as("n_docs")))
         .select(col("keeper_doc"), col("n_docs"), col("norm"),
           array_join(graft.functions.TextFunctions.tokens(col("norm")),
             "|").as("toks"))
@@ -7097,11 +7100,11 @@ object PipelineQueries {
     // noindex on the %7 stripe so the union is visible where the meta
     // said nothing. Runs through the real HTTP path (header map from
     // splitHttp), flags are one codegen'd regex/HOF chain per row.
-    ("p211_meta_robots", (s, d) => {
-      directiveFlagsOf(graft.sources.Warc.splitHttp(
+    ("p211_meta_robots", Twinned { (s, d, t) =>
+      t.cut(directiveFlagsOf(graft.sources.Warc.splitHttp(
           graft.sources.Warc.parseWarcBinary(
-            metaRobotsWarcFixture(Tables.documents(s, d)),
-            col("file_id"), col("payload"))))
+            t.in(metaRobotsWarcFixture(Tables.documents(s, d))),
+            col("file_id"), col("payload")))))
         .orderBy(col("doc_id"))
     }, Some("""
       SELECT doc_id,
@@ -7122,13 +7125,13 @@ object PipelineQueries {
     // canonicalization chain as the full harvest — the oracle writes
     // the surviving canonical edges down from the fixture arithmetic
     // and aggregates.
-    ("p212_follow_harvest", (s, d) => {
-      val pages = Tables.documents(s, d).select(col("doc_id"),
+    ("p212_follow_harvest", Twinned { (s, d, t) =>
+      val pages = t.in(Tables.documents(s, d)).select(col("doc_id"),
         messyUrlFixture.as("page_url"), nofollowHtmlFixture.as("html"))
-      graft.graph.LinkGraph.linkRowsFollow(pages, col("page_url"),
+      t.cut(graft.graph.LinkGraph.linkRowsFollow(pages, col("page_url"),
           col("html"))
         .groupBy(col("src_family"), col("dst_family"))
-        .agg(count(lit(1)).as("n_links"))
+        .agg(count(lit(1)).as("n_links")))
         .orderBy(col("src_family"), col("dst_family"))
     }, Some("""
       WITH base AS (SELECT doc_id, source || '.com' AS sf FROM documents
@@ -7160,12 +7163,12 @@ object PipelineQueries {
     // column is engine-portable and oracle-gated. Two aggregations on
     // the SAME doc_id key (Catalyst reuses the exchange); tokenless
     // docs report zeros, never nulls.
-    ("p213_token_entropy", (s, d) => {
+    ("p213_token_entropy", Twinned { (s, d, t) =>
       val docs = Tables.documents(s, d)
-      val cnt = docs.select(col("doc_id"),
+      val cnt = t.in(docs).select(col("doc_id"),
           explode(TextFunctions.tokens(col("text"))).as("t"))
         .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("c"))
-      tokenEntropyFromCounts(docs.select(col("doc_id")), cnt)
+      tokenEntropyFromCounts(docs.select(col("doc_id")), t.cut(cnt))
         .orderBy(col("doc_id"))
     }, Some(s"""
       WITH toks AS (SELECT doc_id, unnest(${sqlToks("text")}) AS t
@@ -7247,12 +7250,12 @@ object PipelineQueries {
     // SECOND canonical whose target must lose (first wins — the
     // browser/search-engine convention). The election is the p01
     // hash-groupBy on the declared target.
-    ("p215_rel_canonical", (s, d) => {
-      graft.graph.LinkGraph.relCanonical(
-          relCanonicalPages(Tables.documents(s, d)),
+    ("p215_rel_canonical", Twinned { (s, d, t) =>
+      t.cut(graft.graph.LinkGraph.relCanonical(
+          relCanonicalPages(t.in(Tables.documents(s, d))),
           col("page_url"), col("html"), col("doc_id"))
         .groupBy(col("canonical_target"))
-        .agg(count(lit(1)).as("n_pages"), min(col("doc_id")).as("keeper_doc"))
+        .agg(count(lit(1)).as("n_pages"), min(col("doc_id")).as("keeper_doc")))
         .orderBy(col("canonical_target"))
     }, Some("""
       WITH t AS (SELECT doc_id,
@@ -7292,11 +7295,11 @@ object PipelineQueries {
     // and pages with no meta at all. The oracle recomputes
     // extraction, thresholding, target RESOLUTION, and every hop
     // count.
-    ("p216_meta_refresh", (s, d) => {
+    ("p216_meta_refresh", Twinned { (s, d, t) =>
       graft.graph.CrawlOps.resolveRedirects(
-          graft.graph.CrawlOps.metaRefreshEdges(
-            metaRefreshPages(Tables.documents(s, d)), col("page_url"),
-            col("html"), maxDelaySeconds = 10L),
+          t.cut(graft.graph.CrawlOps.metaRefreshEdges(
+            metaRefreshPages(t.in(Tables.documents(s, d))), col("page_url"),
+            col("html"), maxDelaySeconds = 10L)),
           maxDepth = 4)
         .orderBy(col("url"))
     }, Some("""
@@ -7634,15 +7637,15 @@ object PipelineQueries {
     // Cyrillic stripe survives. Oracle: langs from the stripe
     // arithmetic, quality recomputed via the p04 dual over the same
     // fixture text.
-    ("p224_langid_script", (s, d) => {
-      val docs = Tables.documents(s, d)
+    ("p224_langid_script", Twinned { (s, d, t) =>
+      val docs = t.in(Tables.documents(s, d))
         .select(col("doc_id"), langScriptFixtureText.as("text"))
-      docs.select(col("doc_id"),
+      t.cut(docs.select(col("doc_id"),
           TextFunctions.langIdScript(col("text")).as("lang"),
           TextFunctions.qualityScore(col("text")).as("quality"))
         .withColumn("gate_keep",
           !col("lang").isin("en", "fr", "es", "de", "und") ||
-            col("quality") >= 0.3)
+            col("quality") >= 0.3))
         .orderBy(col("doc_id"))
     }, Some {
       val en = TextFunctions.langStopwords("en")
@@ -7779,12 +7782,12 @@ object PipelineQueries {
     // remain FakeCodec-stubbed behind requireRealDecode — no JDK
     // codec exists; GIF moves the honest line one real format
     // forward.
-    ("p221_gif_frames", (s, d) => {
+    ("p221_gif_frames", Twinned { (s, d, t) =>
       import graft.multimodal.ImageCodec
-      ImageCodec.sampleGifFrames(
-          ImageCodec.SyntheticVideos.gifFixture(Tables.documents(s, d),
+      t.cut(ImageCodec.sampleGifFrames(
+          ImageCodec.SyntheticVideos.gifFixture(t.in(Tables.documents(s, d)),
             col("doc_id")),
-          col("media_id"), col("payload"), maxFrames = 3)
+          col("media_id"), col("payload"), maxFrames = 3))
         .orderBy(col("media_id"), col("frame_idx"))
     }, Some(s"""
       WITH ${graft.multimodal.ImageCodec.SyntheticImages.oracleDims},
@@ -7915,11 +7918,11 @@ object PipelineQueries {
     // arithmetic (all of a doc's sentences share one token count, so
     // chunks are fixed-size groups); the hazard stripe's expected
     // rows are written down by hand from the splitter's stated rules.
-    ("p227_sentence_chunks", (s, d) => {
-      graft.text.CorpusOps.chunkBySentence(
-          Tables.documents(s, d)
+    ("p227_sentence_chunks", Twinned { (s, d, t) =>
+      t.cut(graft.text.CorpusOps.chunkBySentence(
+          t.in(Tables.documents(s, d))
             .select(col("doc_id"), sentenceFixtureText.as("text")),
-          col("doc_id"), col("text"), maxTokens = 10)
+          col("doc_id"), col("text"), maxTokens = 10))
         .localCheckpoint(eager = false) // one-shot: the sort samples then re-runs its child
         .orderBy(col("doc_id"), col("chunk_idx"))
     }, Some("""
@@ -8310,12 +8313,6 @@ object PipelineQueries {
       .select(col("doc_id"), col("seg"),
         size(split(col("seg"), "\\|")).cast("long").as("n_pieces"),
         col("seg2"))
-
-  /** The greedy serving body p196 and p199 share. */
-  private[graft] def wordPieceEncodeBody(s: SparkSession, d: String,
-                                         vocab: Seq[String]): DataFrame =
-    wordPieceSegCols(wordPieceFixtureWords(Tables.documents(s, d)), vocab)
-      .orderBy(col("doc_id"))
 
   private[graft] val wordPieceEncodeOracle: String = """
       SELECT doc_id,

@@ -18,6 +18,29 @@ import org.apache.spark.sql.types._
   * [[runToMemoryPolling]] and [[runToMemoryUntil]], the segment and
   * index logs through the one idempotent `foreachBatch` drain. Staged
   * fixture inputs go through one `staged` file source.
+  *
+  * Derived twins. A streaming execution is the batch computation
+  * run over each micro-batch (D-Streams), so where a twin would only
+  * swap the input and insert the sink, it is not written here at all:
+  * its batch entry is a [[graft.queries.Twinned]] body written once
+  * against two [[graft.queries.Seams]], and `SparkEntry` derives the
+  * twin by name, with the batch entry's oracle. The twin runs that body
+  * on [[seams]]: the frame the body passes to `in` streams back through
+  * `staged`, and the frame it passes to `cut` runs to a memory sink
+  * through [[runToMemory]], in complete mode when the cut aggregates
+  * the stream and append mode otherwise. Whatever follows the cut (the
+  * ordering, a batch-side finalize) runs on the sink's table.
+  *
+  * The twins written here differ from their batch plan on purpose: a
+  * map-side form where the batch entry joins or aggregates
+  * (`decontaminate`, `spanScrubStream`, `unigramEncodeStream`,
+  * `semanticDecontamStream`), a finer-grained streaming fold with a
+  * shared batch-side finalize (the `…FromDistinct`/`…FromTf`/
+  * `…FromVocab` splits), a frozen model or published artifact served
+  * to a stream, more than one sink (`aliasChainsStream`), fixtures that
+  * are themselves the source under test (`tailReadDocuments`), the
+  * index and log twins behind the drain, and every function a spec
+  * calls by name.
   */
 object StreamingQueries {
 
@@ -135,6 +158,19 @@ object StreamingQueries {
     frame.write.mode("overwrite").parquet(dir)
     frame.sparkSession.readStream.schema(frame.schema).parquet(dir)
   }
+
+  /** The seams a derived twin runs its batch body on (see the object
+    * doc): input through [[staged]], the cut through [[runToMemory]].
+    */
+  val seams: graft.queries.Seams = graft.queries.Seams(
+    in = staged(_, "twin_in"),
+    cut = df => runToMemory(df, if (aggregatesStream(df)) "complete" else "append"))
+
+  private def aggregatesStream(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.exists {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a.isStreaming
+      case _ => false
+    }
 
   /** Run a streaming aggregation to a memory sink and return the final
     * table. AvailableNow processes the whole input then stops — the
@@ -516,8 +552,7 @@ object StreamingQueries {
     val sb = new StringBuilder(recs.length * recWidth)
     recs.foreach { r => sb.append(f"${r.getLong(0)}%12d,${r.getString(1)}%s\n") }
     val file = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_tail_${Integer.toHexString(sfDir.hashCode)}.txt")
+      graft.sources.Sinks.tempArtifactDir("tail_fixture"), "records.txt")
     java.nio.file.Files.write(file, sb.toString.getBytes("UTF-8"))
 
     val chunks = spark.readStream.format("graft.sources.FileTailSource")
@@ -686,64 +721,6 @@ object StreamingQueries {
     runToMemory(scored, mode = "append").orderBy(col("vec_id"))
   }
 
-  /** p120's Unicode normalization AT INGEST — where canonicalization
-    * belongs (every downstream fingerprint/shingle/URL key hashes the
-    * bytes this step fixes): the same planted decomposed-fixture
-    * synthesis, the same [[graft.functions.TextFunctions.nfcNormalize]]
-    * / [[graft.functions.TextFunctions.stripAccents]] map-side kernels,
-    * zero streaming state, append mode.
-    */
-  def normalizeStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.functions.TextFunctions
-    val fixed = documentsStream(spark, sfDir)
-      .select(col("doc_id"),
-        when(col("doc_id") % 4 === 0,
-          concat(col("text"),
-            lit(" " + graft.queries.PipelineQueries.decomposedFixture)))
-          .otherwise(col("text")).as("text"))
-    val out = fixed.select(col("doc_id"),
-      TextFunctions.nfcNormalize(col("text")).as("norm"),
-      TextFunctions.stripAccents(col("text")).as("folded"),
-      (TextFunctions.nfcNormalize(col("text")) =!= col("text")).as("changed"))
-    runToMemory(out, mode = "append").orderBy(col("doc_id"))
-  }
-
-  /** p128's script-mix detection AT INGEST — where a multilingual
-    * pipeline actually routes (the script decides which lang-id
-    * vocabulary, tokenizer, and quality model a document even sees):
-    * the same fixture synthesis and [[graft.functions.TextFunctions.scriptMix]]
-    * column program, pure scan stage, zero state, append mode.
-    */
-  def scriptMixStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.functions.TextFunctions
-    val fixed = documentsStream(spark, sfDir)
-      .select(col("doc_id"),
-        graft.queries.PipelineQueries.scriptFixtureText.as("text"))
-    val out = fixed.select(
-      (col("doc_id") +: TextFunctions.scriptMix(col("text"))): _*)
-    runToMemory(out, mode = "append").orderBy(col("doc_id"))
-  }
-
-  /** p130's HTML boilerplate extraction AT INGEST — where the WET step
-    * actually runs (everything downstream fingerprints the bytes this
-    * step emits, so extracting later means re-hashing the corpus):
-    * the same fixture synthesis and
-    * [[graft.functions.TextFunctions.htmlExtract]] regexp chain, pure
-    * scan stage, zero state, append mode.
-    */
-  def htmlExtractStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.functions.TextFunctions
-    val pages = documentsStream(spark, sfDir)
-      .select(col("doc_id"),
-        graft.queries.PipelineQueries.htmlFixtureText.as("html"))
-    val out = pages.select(col("doc_id"),
-      TextFunctions.htmlTitle(col("html")).as("title"),
-      TextFunctions.htmlExtract(col("html")).as("text"),
-      size(TextFunctions.extractHrefs(col("html"))).cast("long")
-        .as("n_links"))
-    runToMemory(out, mode = "append").orderBy(col("doc_id"))
-  }
-
   /** p138's robots gate over the LIVE frontier — where a fetcher
     * actually consults robots (a URL is gated when DISCOVERED, not in
     * a batch job after the crawl): the same
@@ -826,38 +803,6 @@ object StreamingQueries {
       .orderBy(col("family"))
   }
 
-  /** p144's privacy floor at the EPOCH boundary — where a release
-    * gate actually runs (the q84 manifest rule): the stream folds the
-    * (lang, bucket) doc/char rollup with group-cardinality state
-    * (sums are associative; state never sees documents), and the
-    * suppression finalize — the k floor, the exact-remainder
-    * `__SUPPRESSED` row — runs batch-side through the SAME
-    * [[graft.curation.Curation.suppressSmallGroups]] as the batch
-    * entry, so the two gates cannot drift.
-    */
-  def kanonReleaseStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val stats = documentsStream(spark, sfDir)
-      .groupBy(col("lang"),
-        (col("doc_id") % 7).cast("string").as("bucket"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars"))
-    graft.curation.Curation.suppressSmallGroups(runToMemory(stats),
-        keyCols = Seq("lang", "bucket"), nCol = "n_docs", k = 10L)
-      .orderBy(col("lang"), col("bucket"))
-  }
-
-  /** p152's content-defined chunking AT ingest — the same shuffle-free
-    * per-row program ([[graft.dedup.Dedup.cdcChunks]]) unchanged as a
-    * stateless append-mode stream: chunk fingerprints materialize the
-    * moment a document arrives, ready for an incremental dedup probe
-    * (the p121 serve pattern) without any batch rebuild.
-    */
-  def cdcChunksStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = graft.dedup.Dedup.cdcChunks(
-      documentsStream(spark, sfDir), col("doc_id"), col("text"))
-    runToMemory(out, mode = "append")
-      .orderBy(col("doc_id"), col("chunk_idx"))
-  }
-
   /** p151's vocab-coverage curve maintained WHILE the corpus streams:
     * the cross-batch state is the (token, tf) frequency table itself —
     * vocabulary-bounded regardless of corpus size (the q119
@@ -874,21 +819,6 @@ object StreamingQueries {
     graft.text.CorpusOps.vocabCoverageFromTf(runToMemory(tf),
         Seq(10L, 100L, 1000L))
       .orderBy(col("k"))
-  }
-
-  /** p146's snippet extraction AT ingest — the proof of its scan-stage
-    * claim: the SAME shuffle-free higher-order-function program
-    * ([[graft.text.CorpusOps.snippets]]) runs unchanged as a stateless
-    * append-mode stream (no state, no watermark — every computation is
-    * local to one (doc, query) row, so a serving feature materializes
-    * the moment a document arrives).
-    */
-  def snippetsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = graft.text.CorpusOps.snippets(
-      documentsStream(spark, sfDir), col("doc_id"), col("text"),
-      graft.text.CorpusOps.bm25DemoQueries, window = 8)
-    runToMemory(out, mode = "append")
-      .orderBy(col("qid"), col("doc_id"))
   }
 
   /** p145's worklist with the frontier built WHILE discovery streams —
@@ -1037,32 +967,6 @@ object StreamingQueries {
       .orderBy(col("dst_family"), col("pos"))
   }
 
-  /** p208's NFC-normalized exact dedup AT ingest — where the
-    * normalization projection actually belongs (every byte keyed
-    * downstream hashes what THIS step emits): the codegen'd
-    * [[graft.functions.UnicodeNormalize]] runs map-side (stateless,
-    * identity-returning on already-normalized text — the ASCII
-    * firehose pays only the quick check), and the dedup election is
-    * the ONE streaming aggregation; composed/decomposed twins landing
-    * in different micro-batches still collapse, because the state key
-    * is the normalized form.
-    */
-  def nfcDedupStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val agg = documentsStream(spark, sfDir)
-      .select(col("doc_id"),
-        graft.queries.PipelineQueries.nfcFixtureText.as("raw"))
-      .select(col("doc_id"),
-        graft.functions.UnicodeNormalize.nfc(col("raw")).as("norm"))
-      .groupBy(col("norm"))
-      .agg(min(col("doc_id")).as("keeper_doc"),
-        count(lit(1)).as("n_docs"))
-    runToMemory(agg)
-      .select(col("keeper_doc"), col("n_docs"), col("norm"),
-        array_join(graft.functions.TextFunctions.tokens(col("norm")),
-          "|").as("toks"))
-      .orderBy(col("keeper_doc"))
-  }
-
   /** p158's byte-level BPE training with the vocabulary folded from
     * the stream — q70's split at byte level: the (word, count) table
     * is the ONE streaming aggregation, the byte-seeded merge rounds
@@ -1133,182 +1037,6 @@ object StreamingQueries {
       .orderBy(col("doc_id"))
   }
 
-  /** p159's byte-level encoding on the streaming engine — q73's
-    * frozen-model deploy shape with byte seeding: the byte-level
-    * merge table is trained batch-side, rides the plan as expression
-    * state, and every arriving document encodes map-side with ZERO
-    * streaming state.
-    */
-  def byteBpeEncodeStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.text.CorpusOps
-    val fixture = graft.queries.PipelineQueries.byteTextFixture
-    val merges = CorpusOps.bpeMergeTable(
-      CorpusOps.bpeTrainMerges(graft.Tables.documents(spark, sfDir),
-        fixture, numMerges = 8, byteLevel = true))
-    runToMemory(
-      CorpusOps.bpeEncodeAt(documentsStream(spark, sfDir), col("doc_id"),
-        fixture, merges, byteLevel = true),
-      mode = "append")
-      .orderBy(col("doc_id"))
-  }
-
-  /** p167's WARC ingest with the archive directory STREAMED — exactly
-    * how a fetch pipeline lands: WARC files appear in a directory as
-    * fetches complete, the ingest job `readStream`s the directory,
-    * and each file parses STATELESSLY in the scan stage (append mode,
-    * the q103/q108 at-ingest rule) — the per-partition byte walk
-    * needs nothing across files, so the stream holds no state at all.
-    */
-  def warcParseStream(spark: SparkSession, sfDir: String): DataFrame = {
-    runToMemory(
-      graft.sources.Warc.parseWarc(
-        staged(graft.queries.PipelineQueries
-          .warcFixtureFrom(graft.Tables.documents(spark, sfDir)), "warc_stream_in"),
-        col("file_id"), col("payload")),
-      mode = "append")
-      .orderBy(col("file_id"), col("record_idx"))
-  }
-
-  /** p186's WAT derivation with the response ARCHIVE streamed — the
-    * metadata sibling completing the WARC (q134) / WET-path HTTP
-    * split (q140) / WAT triple on the streaming engine: response
-    * files land in a directory as fetches complete, each file parses
-    * and HTTP-splits STATELESSLY in the scan stage, and the per-record
-    * metadata JSON (url, status, mime, title, outlink count) is a
-    * pure projection — so the metadata rows materialize at ingest
-    * with ZERO state (append mode). The WAT FILE assembly (per-file
-    * record fold) and the gate's full re-parse run batch-side at the
-    * epoch boundary through the SAME
-    * [[graft.sources.Warc.writeWarc]]/parseWarc as p186 — shared
-    * definition, shared oracle.
-    */
-  def watMetadataStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.functions.TextFunctions
-    val docs = graft.Tables.documents(spark, sfDir)
-    val page = graft.queries.PipelineQueries.htmlFixtureText
-    val msg = concat(
-      lit("HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8" +
-        "\r\nContent-Length: "), octet_length(page).cast("string"),
-      lit("\r\n\r\n"), page).cast("binary")
-    val split = graft.sources.Warc.splitHttp(
-      graft.sources.Warc.parseWarcBinary(
-        staged(graft.queries.PipelineQueries.httpResponseWarcFrom(
-          docs.select(col("doc_id"), msg.as("msg"))), "wat_stream_in"),
-        col("file_id"), col("payload")))
-    val meta = split.select(col("file_id"), col("record_idx"),
-      lit("metadata").as("t"), col("target_uri"),
-      to_json(struct(col("target_uri").as("url"),
-        col("http_status").as("status"),
-        col("mime_type").as("mime"),
-        TextFunctions.htmlTitle(col("text")).as("title"),
-        size(TextFunctions.extractHrefs(col("text"))).as("n_links")))
-        .as("b"))
-    val rows = runToMemory(meta, mode = "append")
-    val wat = graft.sources.Warc.writeWarc(rows,
-      col("file_id"), col("record_idx"), col("t"), col("target_uri"),
-      col("b"), contentType = lit("application/json"))
-    graft.sources.Warc.parseWarc(wat, col("file_id"), col("payload"))
-      .select(graft.queries.PipelineQueries.fixtureDocId.as("doc_id"),
-        col("warc_type"), col("content_type"), col("body"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** p211's indexing-directive gate AT ingest — where a crawl
-    * actually decides what a fetched page may feed: the directive-
-    * bearing response archive streams as files, each record parses,
-    * HTTP-splits, and projects its meta + X-Robots-Tag flags
-    * STATELESSLY in the scan stage (one codegen'd regex/HOF chain per
-    * row — append mode, zero state), through the SAME shared fixture
-    * and flag projection as the batch entry.
-    */
-  def metaRobotsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val input = staged(graft.queries.PipelineQueries.metaRobotsWarcFixture(
-      graft.Tables.documents(spark, sfDir)), "meta_robots_in")
-    runToMemory(
-      graft.queries.PipelineQueries.directiveFlagsOf(
-        graft.sources.Warc.splitHttp(
-          graft.sources.Warc.parseWarcBinary(input,
-            col("file_id"), col("payload")))),
-      mode = "append")
-      .orderBy(col("doc_id"))
-  }
-
-  /** p212's FOLLOW harvest AT ingest — both directive gates are pure
-    * per-row projections on the page (the meta scan and the rel
-    * filter run inside [[graft.graph.LinkGraph.linkRowsFollow]]'s
-    * scan stage), so discovered edges materialize the moment a page
-    * lands; the (src_family, dst_family) count is the ONE streaming
-    * aggregation.
-    */
-  def followHarvestStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val pages = documentsStream(spark, sfDir)
-      .select(col("doc_id"),
-        graft.queries.PipelineQueries.messyUrlFixture.as("page_url"),
-        graft.queries.PipelineQueries.nofollowHtmlFixture.as("html"))
-    val agg = graft.graph.LinkGraph.linkRowsFollow(pages, col("page_url"),
-        col("html"))
-      .groupBy(col("src_family"), col("dst_family"))
-      .agg(count(lit(1)).as("n_links"))
-    runToMemory(agg).orderBy(col("src_family"), col("dst_family"))
-  }
-
-  /** p213's entropy triple with the count table folded from the
-    * stream — the q119 finest-grain-fold rule at document grain: the
-    * cross-batch state is the (doc_id, token, c) table itself (what
-    * the metric is DEFINED over — no coarser state computes an exact
-    * entropy), and the micro-nat finalize runs batch-side at the
-    * epoch boundary through the SAME
-    * [[graft.queries.PipelineQueries.tokenEntropyFromCounts]] as the
-    * batch entry.
-    */
-  def tokenEntropyStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.functions.TextFunctions
-    val cnt = documentsStream(spark, sfDir)
-      .select(col("doc_id"),
-        explode(TextFunctions.tokens(col("text"))).as("t"))
-      .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("c"))
-    graft.queries.PipelineQueries.tokenEntropyFromCounts(
-        graft.Tables.documents(spark, sfDir).select(col("doc_id")),
-        runToMemory(cnt))
-      .orderBy(col("doc_id"))
-  }
-
-  /** p215's rel=canonical resolution AT ingest — the declared-target
-    * projection is a pure per-row regex/HOF chain, so each page's
-    * canonical mapping exists the moment the page lands; the dedup
-    * election on the target is the ONE streaming aggregation.
-    */
-  def relCanonicalStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val agg = graft.graph.LinkGraph.relCanonical(
-        graft.queries.PipelineQueries.relCanonicalPages(
-          documentsStream(spark, sfDir)),
-        col("page_url"), col("html"), col("doc_id"))
-      .groupBy(col("canonical_target"))
-      .agg(count(lit(1)).as("n_pages"), min(col("doc_id")).as("keeper_doc"))
-    runToMemory(agg).orderBy(col("canonical_target"))
-  }
-
-  /** p216's meta-refresh resolution with EXTRACTION at ingest — the
-    * q151 split: the refresh-edge projection
-    * ([[graft.graph.CrawlOps.metaRefreshEdges]] — first-refresh
-    * parse, delay threshold, canonicalized src/dst) is a stateless
-    * per-row program, so each page's redirect edge exists the moment
-    * the page lands (append mode, zero state rows); the pointer-
-    * doubling CHAIN resolution — inherently a corpus-wide iterated
-    * self-join — runs batch-side at the epoch boundary through the
-    * SAME [[graft.graph.CrawlOps.resolveRedirects]] as p216, so the
-    * twins cannot drift.
-    */
-  def metaRefreshStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val edges = graft.graph.CrawlOps.metaRefreshEdges(
-      graft.queries.PipelineQueries.metaRefreshPages(
-        documentsStream(spark, sfDir)),
-      col("page_url"), col("html"), maxDelaySeconds = 10L)
-    graft.graph.CrawlOps.resolveRedirects(
-        runToMemory(edges, mode = "append"), maxDepth = 4)
-      .orderBy(col("url"))
-  }
-
   /** p217's alias-chain resolution with the UNIONED edge extraction
     * at ingest — one step past q156: BOTH declaration kinds
     * (rel=canonical and meta-refresh) project statelessly per row,
@@ -1333,41 +1061,6 @@ object StreamingQueries {
     val unioned = r.unionByName(
       c.join(r.select(col("src")), Seq("src"), "left_anti"))
     CrawlOps.resolveRedirects(unioned, maxDepth = 4).orderBy(col("url"))
-  }
-
-  /** p224's script-routed language ID AT ingest — classification,
-    * quality scoring, and the routed gate are pure per-row column
-    * programs, so every arriving page is routed the moment it lands:
-    * append mode, zero state rows.
-    */
-  def langIdScriptStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.functions.TextFunctions
-    val docs = documentsStream(spark, sfDir)
-      .select(col("doc_id"),
-        graft.queries.PipelineQueries.langScriptFixtureText.as("text"))
-    val routed = docs.select(col("doc_id"),
-        TextFunctions.langIdScript(col("text")).as("lang"),
-        TextFunctions.qualityScore(col("text")).as("quality"))
-      .withColumn("gate_keep",
-        !col("lang").isin("en", "fr", "es", "de", "und") ||
-          col("quality") >= 0.3)
-    runToMemory(routed, mode = "append").orderBy(col("doc_id"))
-  }
-
-  /** p227's sentence chunking AT ingest — the splitter and the greedy
-    * per-document pack are one per-row HOF program (the fold is
-    * sequential WITHIN a document, and a document arrives whole), so
-    * chunks exist the moment a page lands: append mode, zero state
-    * rows — the q138 stateless-at-ingest rule.
-    */
-  def sentenceChunksStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val chunks = graft.text.CorpusOps.chunkBySentence(
-      documentsStream(spark, sfDir)
-        .select(col("doc_id"),
-          graft.queries.PipelineQueries.sentenceFixtureText.as("text")),
-      col("doc_id"), col("text"), maxTokens = 10)
-    runToMemory(chunks, mode = "append")
-      .orderBy(col("doc_id"), col("chunk_idx"))
   }
 
   /** p218's SQ8 serving tier AT stream time — the q60 frozen-artifact
@@ -1471,47 +1164,6 @@ object StreamingQueries {
       .orderBy(col("surt_key"))
   }
 
-  /** p179's HTTP split AT ingest — the q134 rule one layer up: a
-    * response record's status/mime/charset/text exist the moment its
-    * WARC file lands, because head parse, encoding undo, charset
-    * resolution, and the text projection are all per-record kernel
-    * work (scan-stage mapPartitions, zero state, append mode). This
-    * is the stage order a real ingest wants: header bytes never reach
-    * the extract chain, at stream time or batch time.
-    */
-  def httpSplitStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.functions.{octet_length, regexp_extract, size => fsize}
-    val docs = graft.Tables.documents(spark, sfDir)
-    val isMiss = col("doc_id") % 31 === 0
-    val body = when(isMiss,
-      concat(lit("missing /p/"), col("doc_id").cast("string")))
-      .otherwise(graft.queries.PipelineQueries.htmlFixtureText)
-    val ct = when(isMiss, lit("text/plain; charset=utf-8"))
-      .otherwise(lit("text/html; charset=utf-8"))
-    val status = when(isMiss, lit("404 Not Found")).otherwise(lit("200 OK"))
-    val msg = concat(
-      lit("HTTP/1.1 "), status,
-      lit("\r\nServer: graft/0.1\r\nContent-Type: "), ct,
-      lit("\r\nContent-Length: "), octet_length(body).cast("string"),
-      lit("\r\n\r\n"), body).cast("binary")
-    val recs = graft.sources.Warc.parseWarcBinary(
-        staged(graft.queries.PipelineQueries.httpResponseWarcFrom(
-          docs.select(col("doc_id"), msg.as("msg"))), "http_stream_in"),
-        col("file_id"), col("payload"))
-      .filter(col("warc_type") === "response" &&
-        col("content_type").startsWith("application/http"))
-    runToMemory(
-      graft.sources.Warc.splitHttp(recs)
-        .select(graft.queries.PipelineQueries.fixtureDocId.as("doc_id"),
-          col("http_status"), col("mime_type"), col("charset"),
-          when(col("http_status") === 200 &&
-              col("mime_type") === "text/html",
-            graft.functions.TextFunctions.htmlExtract(col("text")))
-            .otherwise(col("text")).as("text_out")),
-      mode = "append")
-      .orderBy(col("doc_id"))
-  }
-
   /** p191's unigram-LM serving AT ingest — tokenizer inference is
     * per-row kernel work (the vocabulary rides the expression, the
     * Viterbi walk is scan-stage), so a document's segmentation exists
@@ -1543,44 +1195,6 @@ object StreamingQueries {
       .orderBy(col("doc_id"))
   }
 
-  /** p196's WordPiece serving AT ingest — greedy longest-match is
-    * per-row kernel work (the vocabulary rides the expression), so a
-    * document's segmentation exists the moment its file lands: zero
-    * state, append mode, the q134 rule. n_pieces derives from the
-    * segmentation scan-stage (split + size — no aggregation, the
-    * stream stays stateless); the dead-end word's [UNK] rides the
-    * same row, so a streaming-side greedy divergence desyncs the
-    * shared oracle.
-    */
-  def wordPieceEncodeStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.queries.PipelineQueries.{wordPieceFixtureWords, wordPieceSegCols, wordPieceTrapVocab}
-    val docs = graft.Tables.documents(spark, sfDir)
-    runToMemory(
-      wordPieceSegCols(staged(wordPieceFixtureWords(docs), "wordpiece_stream_in"),
-        wordPieceTrapVocab),
-      mode = "append")
-      .orderBy(col("doc_id"))
-  }
-
-  /** p170's CDX build AT ingest — a WARC file's index rows exist the
-    * moment the file lands (surt key, digest, and byte extents derive
-    * from the file alone, so the build is STATELESS: scan-stage parse
-    * + projection, append mode, the q134 rule), which is how an
-    * archive keeps lookups fresh without batch re-indexing: the CDX
-    * is an append-only log in file-arrival order whose SORT is a
-    * serve-time concern (p103's prefix-index pattern), not an ingest
-    * barrier.
-    */
-  def cdxIndexStream(spark: SparkSession, sfDir: String): DataFrame = {
-    runToMemory(
-      graft.sources.Warc.cdxIndex(graft.sources.Warc.parseWarc(
-        staged(graft.queries.PipelineQueries
-          .warcFixtureFrom(graft.Tables.documents(spark, sfDir)), "cdx_stream_in"),
-        col("file_id"), col("payload"))),
-      mode = "append")
-      .orderBy(col("surt_key"))
-  }
-
   /** p173's revisit LEDGER maintained live — the state a real archive
     * ingest carries: as WARC files land (two fetch batches in the
     * fixture), each digest's row tracks its first-stored extent (the
@@ -1605,88 +1219,6 @@ object StreamingQueries {
         (col("p") % lit(graft.sources.Warc.ExtentPack)).as("orig_offset"),
         col("n_copies"))
     runToMemory(agg).orderBy(col("digest"))
-  }
-
-  /** p178's binary ingest AT stream time — image-bearing WARC files
-    * land in a directory and every record's payload decodes the
-    * moment its file arrives (binary walk + decode are both
-    * scan-stage, zero state, append mode — the q134 rule applied to
-    * the BINARY layer): the multimodal pipeline's first stage runs at
-    * ingest, not as a batch job over a landed archive.
-    */
-  def warcImagesStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.multimodal.ImageCodec
-    val imgs = ImageCodec.SyntheticImages.pngFixture(
-      graft.Tables.documents(spark, sfDir), col("doc_id"))
-    val recs = graft.sources.Warc.parseWarcBinary(
-      staged(graft.sources.Warc.writeWarcBin(imgs,
-        col("media_id") % 8, col("media_id"), lit("resource"),
-        concat(lit("https://www.src"), (col("media_id") % 20).cast("string"),
-          lit(".com/img/"), col("media_id").cast("string")),
-        col("payload")), "warc_img_stream_in"),
-      col("file_id"), col("payload"))
-    runToMemory(
-      ImageCodec.decodeMeta(recs,
-        regexp_extract(col("target_uri"), "/img/([0-9]+)$", 1).cast("long"),
-        col("body")),
-      mode = "append")
-      .orderBy(col("media_id"))
-  }
-
-  /** p161's Crawl-delay parse AT ingest — robots.txt fetches parse the
-    * moment they land (the directive table must be fresh before the
-    * next scheduling round, not after a batch job): the group fold is
-    * a scan-stage higher-order expression, zero state, append mode.
-    */
-  def robotsCrawlDelayStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    runToMemory(
-      graft.graph.LinkGraph.robotsCrawlDelay(
-        staged(graft.queries.PipelineQueries.robotsMetaFixture.toDF("family", "txt"),
-          "robots_stream_in"),
-        col("family"), col("txt")),
-      mode = "append")
-      .orderBy(col("family"))
-  }
-
-  /** p143's quarantine parse AT ingest — the stateless governance
-    * gate (the q103/q108 rule: a malformed payload is tagged when it
-    * ARRIVES, not in a post-hoc audit): the SAME
-    * [[graft.sources.JsonlIngest.parseWithQuarantine]] scan-stage
-    * program, append mode, no state at all.
-    */
-  def jsonlQuarantineStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("lang", StringType), StructField("nc", LongType)))
-    runToMemory(graft.sources.JsonlIngest.parseWithQuarantine(
-        graft.queries.PipelineQueries
-          .jsonlFixtureFrom(documentsStream(spark, sfDir))
-          .select(col("doc_id"), col("payload")),
-        col("payload"), schema, required = Seq("id", "lang"))
-      .select(col("doc_id"), col("ingest_status"),
-        coalesce(col("lang"), lit("")).as("lang"),
-        coalesce(col("nc"), lit(0L)).as("nc")),
-      mode = "append")
-      .orderBy(col("doc_id"))
-  }
-
-  /** p134's anchor-text harvest maintained AT ingest — index fields
-    * update while the crawl fetches, the way web search folds anchor
-    * evidence into serving without a batch rebuild: the SAME
-    * [[graft.graph.LinkGraph.anchorTerms]] program (shared
-    * definition — element harvest, htmlExtract cleaning, and
-    * tokenization all stateless in the scan stage), with cross-batch
-    * state = the (dst_family, term) count table itself — the harvest
-    * output's natural grain, vocabulary×domain-bounded regardless of
-    * corpus size.
-    */
-  def anchorTermsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val pages = documentsStream(spark, sfDir)
-      .select(col("doc_id"),
-        graft.queries.PipelineQueries.htmlFixtureText.as("html"))
-    runToMemory(graft.graph.LinkGraph.anchorTerms(pages, col("html")))
-      .orderBy(col("dst_family"), col("term"))
   }
 
   /** p141's change-rate estimation with the crawl ledger accumulating
@@ -2457,40 +1989,6 @@ object StreamingQueries {
       .orderBy(col("rank"))
   }
 
-  /** p60's RAG chunking on the streaming engine — ZERO-state append
-    * mode (the q63 decontamination shape): the window arithmetic and
-    * chunk text are pure map-side HOFs on each arriving document, so
-    * the stream holds no state at all and results are trivially
-    * slice-independent.
-    */
-  def ragChunks(spark: SparkSession, sfDir: String): DataFrame =
-    runToMemory(
-      graft.text.CorpusOps.chunkForRag(documentsStream(spark, sfDir),
-        col("doc_id"), col("text"), window = 32, stride = 24),
-      mode = "append")
-      .orderBy(col("doc_id"), col("chunk_idx"))
-
-  /** p64's merge-table ENCODING on the streaming engine — the deploy
-    * shape of a trained tokenizer: the merge table is a FROZEN bounded
-    * artifact learned ahead of the stream (here trained batch-side, as
-    * p64 trains it), riding the plan as expression state; each arriving
-    * document then encodes map-side in the scan stage with ZERO
-    * streaming state — no aggregation, no state store, trivially
-    * slice-independent (the q71 shape). This is how tokenizer inference
-    * actually deploys: train rarely, encode forever.
-    */
-  def bpeEncodeStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.text.CorpusOps
-    val merges = CorpusOps.bpeMergeTable(
-      CorpusOps.bpeTrainMerges(graft.Tables.documents(spark, sfDir),
-        col("text"), numMerges = 8))
-    runToMemory(
-      CorpusOps.bpeEncode(documentsStream(spark, sfDir),
-        col("doc_id"), col("text"), merges),
-      mode = "append")
-      .orderBy(col("doc_id"))
-  }
-
   /** p48's HyperLogLog vocabulary cardinality on the streaming engine —
     * the sketch-state story beside count-min (q50): the stream folds
     * every token into ONE fixed m-int register buffer per language
@@ -2759,26 +2257,6 @@ object StreamingQueries {
     runToMemory(agg).orderBy(col("fingerprint"))
   }
 
-  /** q92's trailing-baseline anomaly detection on the streaming engine:
-    * the hourly (hour, type) count grid is the associative half (counts
-    * sum), so the stream folds it with state bounded by distinct
-    * (hour, type) pairs — never by events — through the SAME
-    * [[graft.operators.TimeWindow.hourlyCounts]] projection the batch
-    * entry uses; the trailing-RANGE-frame flag pass
-    * ([[graft.operators.TimeWindow.trailingAnomaly]], also shared) runs
-    * batch-side at the epoch boundary over the tiny grid.
-    * Slice-independent because count merges; shares q92's oracle.
-    */
-  def anomalyHoursStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.operators.TimeWindow
-    val grid = runToMemory(TimeWindow.hourlyCounts(
-      eventsStream(spark, sfDir), col("ts"), col("event_type")))
-    TimeWindow.trailingAnomaly(grid)
-      .select(col("hour_idx"), col("key").as("event_type"), col("n"),
-        col("base_sum"), col("base_hours"))
-      .orderBy(col("event_type"), col("hour_idx"))
-  }
-
   /** p100's exact covariance on the streaming engine: the moment fold
     * is associative (integer sums merge in any order), so the stream
     * folds the SAME [[graft.similarity.EmbeddingStats.CovMoments]]
@@ -2808,38 +2286,6 @@ object StreamingQueries {
       .orderBy(col("i"), col("j"))
   }
 
-  /** p102's data-quality gate at INGEST: the row-local rule blocks are
-    * single conditional aggregations (sums — associative), so the
-    * streamed tables' rules fold in complete mode with ONE-ROW state
-    * per block; the cross-table rules (uniqueness, referential) and
-    * the static tables' rules run batch-side, and the assembled report
-    * is the same shape either way. This is where a quality gate
-    * actually sits in production — on the stream, before the batch
-    * ever lands. Shares p102's oracle.
-    */
-  def dataQualityStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.operators.DataQuality._
-    val evRules = runToMemory(rowRules(eventsStream(spark, sfDir), Seq(
-      "events_value_out_of_range" -> (col("value") < 0 || col("value") > 20))))
-    val docRules = runToMemory(rowRules(documentsStream(spark, sfDir), Seq(
-      "documents_nchars_mismatch" -> (col("n_chars") =!= length(col("text"))))))
-    val li = graft.Tables.lineitem(spark, sfDir)
-    val o = graft.Tables.orders(spark, sfDir)
-    report(
-      rowRules(li, Seq(
-        "lineitem_discount_above_policy" -> (col("l_discount") > 0.06),
-        "lineitem_nonpos_quantity" -> (col("l_quantity") <= 0))),
-      evRules, docRules,
-      uniqueKeyRule("orders_pk_unique", o, col("o_orderkey")),
-      orphanRule("lineitem_orphan_order", li, col("l_orderkey"),
-        o, col("o_orderkey")),
-      orphanRule("orders_childless", o, col("o_orderkey"),
-        li, col("l_orderkey")),
-      orphanRule("customer_without_orders", graft.Tables.customer(spark, sfDir),
-        col("c_custkey"), o, col("o_custkey")))
-      .orderBy(col("rule"))
-  }
-
   /** p103's autocomplete index on the streaming engine: the vocabulary
     * token count is the associative half (counts sum), folded with
     * state bounded by the VOCABULARY — never documents — in the scan
@@ -2856,42 +2302,6 @@ object StreamingQueries {
         .groupBy(col("tok")).agg(count(lit(1)).as("cnt")))
     graft.text.CorpusOps.prefixIndexFromVocab(vocab, maxLen = 4, k = 3)
       .orderBy(col("prefix"), col("rank"))
-  }
-
-  /** q100's trend slopes on the streaming engine: the hourly count grid
-    * is the associative half (counts sum — same grid as q93's anomaly
-    * twin), folded with state bounded by distinct (hour, type) pairs
-    * through the shared [[graft.operators.TimeWindow.hourlyCounts]]
-    * projection; the exact-integer least-squares finalize
-    * ([[graft.operators.TimeWindow.trendSlopes]], shared) runs
-    * batch-side at the epoch boundary. Shares q100's oracle.
-    */
-  def trendSlopesStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.operators.TimeWindow
-    val grid = runToMemory(TimeWindow.hourlyCounts(
-      eventsStream(spark, sfDir), col("ts"), col("event_type")))
-    TimeWindow.trendSlopes(grid)
-      .select(col("key").as("event_type"), col("n_hours"),
-        col("slope_num"), col("slope_den"))
-      .orderBy(col("event_type"))
-  }
-
-  /** q99's integer EWMA on the streaming engine: the hourly grid is the
-    * associative half (the same grid as the anomaly and trend twins,
-    * state = distinct (hour, type) pairs); the ORDER-DEPENDENT
-    * recurrence runs batch-side at the epoch boundary through the
-    * shared [[graft.operators.TimeWindow.ewma]] — which is exactly why
-    * the recurrence half must never fold in the stream: micro-batch
-    * arrival order is not hour order. Shares q99's oracle.
-    */
-  def ewmaStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.operators.TimeWindow
-    val grid = runToMemory(TimeWindow.hourlyCounts(
-      eventsStream(spark, sfDir), col("ts"), col("event_type")))
-    TimeWindow.ewma(grid)
-      .select(col("hour_idx"), col("key").as("event_type"), col("n"),
-        col("ewma_micro"))
-      .orderBy(col("event_type"), col("hour_idx"))
   }
 
   /** q97's rolling-active report on the streaming engine: the distinct
@@ -2914,23 +2324,6 @@ object StreamingQueries {
     TimeWindow.rollingActive(grid).orderBy(col("day"))
   }
 
-  /** p96's leakage-safe split on the streaming engine — the degenerate
-    * (and therefore load-bearing) case: the split is a pure function of
-    * the document's content fingerprint, so the WHOLE assignment rides
-    * the scan stage of an append-mode stream with ZERO streaming state.
-    * A split that needed state would mean split decisions depend on
-    * arrival order — exactly what a reproducible split must never do.
-    * Shares p96's oracle.
-    */
-  def leakageSplitStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = runToMemory(
-      graft.curation.Curation.leakageSafeSplit(
-          documentsStream(spark, sfDir), col("text"))
-        .select(col("doc_id"), col("fingerprint"), col("split")),
-      mode = "append")
-    out.orderBy(col("doc_id"))
-  }
-
   /** p110's audio statistics on the streaming engine: the encode /
     * decode pair is map-side (dataset maps, no state), and the per-clip
     * statistics fold is ONE media-keyed aggregation — state is a single
@@ -2949,39 +2342,5 @@ object StreamingQueries {
           documentsStream(spark, sfDir), col("doc_id")),
         col("media_id"), col("payload")))
       .orderBy(col("media_id"))
-  }
-
-  /** p221's GIF frame sampling AT ingest — the q138 rule applied to a
-    * real COMPRESSED container: structure scan + sampled-frame LZW
-    * decode are both per-row scan-stage programs, zero state, append
-    * mode; a landed animation's sampled frames exist the moment its
-    * row arrives. Shares p221's formula oracle.
-    */
-  def gifFramesStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.multimodal.ImageCodec
-    runToMemory(
-      ImageCodec.sampleGifFrames(
-        ImageCodec.SyntheticVideos.gifFixture(
-          documentsStream(spark, sfDir), col("doc_id")),
-        col("media_id"), col("payload"), maxFrames = 3),
-      mode = "append")
-      .orderBy(col("media_id"), col("frame_idx"))
-  }
-
-  /** p109's PII redaction at INGEST — the scrub is a pure scan-stage
-    * column cascade (zero state by construction), so the stream
-    * applies it map-side in append mode; slice-independent trivially,
-    * and this is where a governance gate actually sits in production:
-    * PII never lands in the lake at all. Shares p109's oracle (same
-    * fixture synthesis, same stock pattern literals).
-    */
-  def piiRedactStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = runToMemory(
-      graft.text.CorpusOps.scrub(
-        documentsStream(spark, sfDir).select(col("doc_id"),
-          graft.queries.PipelineQueries.piiFixtureText.as("text")),
-        col("doc_id"), col("text")),
-      mode = "append")
-    out.orderBy(col("doc_id"))
   }
 }

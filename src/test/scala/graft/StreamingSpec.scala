@@ -259,7 +259,13 @@ class StreamingSpec extends AnyFunSuite {
   test("stateful ops run unchanged on the RocksDB state store (scale path)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    graft.streaming.StreamingConfig.scaleState(spark)
+    // the RocksDB provider with changelog checkpointing and bounded memory
+    val rocksConfs = Seq(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+      "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage" -> "true")
+    rocksConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       val input = MemoryStream[KeyedElement]
       val out = StatefulOps.accumulateWhileUnchanged(input.toDS())
@@ -296,7 +302,7 @@ class StreamingSpec extends AnyFunSuite {
         assert(spark.table("band_rocks").as[BandMatch].collect().toSet ==
           Set(BandMatch("r1", 1, 2)))
       } finally TestSpark.quietStop(bq)
-    } finally graft.streaming.StreamingConfig.defaultState(spark)
+    } finally rocksConfs.foreach { case (k, _) => spark.conf.unset(k) }
   }
 
   test("streaming accumulateWhileUnchanged caps runs at maxElements") {
@@ -454,6 +460,58 @@ class StreamingSpec extends AnyFunSuite {
     val s = viaStream.collect().map(_.toString).sorted
     val b = viaBatch.collect().map(_.toString).sorted
     assert(s.toSeq == b.toSeq)
+  }
+
+  // the twins whose body is their batch entry's, run on the streaming
+  // seams: each must return its batch entry's rows under its oracle
+  private val derivedTwins = Seq(
+    "q71_streaming_rag_chunks" -> "p60_rag_chunks",
+    "q73_streaming_bpe_encode" -> "p64_bpe_encode",
+    "q93_streaming_anomaly" -> "q92_anomaly_hours",
+    "q94_streaming_split" -> "p96_leakage_safe_split",
+    "q101_streaming_trend" -> "q100_trend_slopes",
+    "q103_streaming_quality" -> "p102_data_quality",
+    "q107_streaming_ewma" -> "q99_ewma_hours",
+    "q108_streaming_pii" -> "p109_pii_redact",
+    "q116_streaming_normalize" -> "p120_text_normalize",
+    "q117_streaming_script_mix" -> "p128_script_mix",
+    "q118_streaming_html_extract" -> "p130_html_extract",
+    "q122_streaming_anchor_terms" -> "p134_anchor_terms",
+    "q124_streaming_jsonl" -> "p143_jsonl_quarantine",
+    "q125_streaming_kanon" -> "p144_kanon_release",
+    "q127_streaming_snippets" -> "p146_snippets",
+    "q129_streaming_cdc" -> "p152_cdc_chunks",
+    "q132_streaming_byte_bpe_encode" -> "p159_bpe_bytes_encode",
+    "q134_streaming_warc" -> "p167_warc_parse",
+    "q135_streaming_crawl_delay" -> "p161_robots_crawl_delay",
+    "q136_streaming_cdx" -> "p170_cdx_index",
+    "q138_streaming_warc_images" -> "p178_warc_images",
+    "q140_streaming_http" -> "p179_http_split",
+    "q142_streaming_wordpiece" -> "p196_wordpiece_encode",
+    "q149_streaming_nfc_dedup" -> "p208_unicode_nfc",
+    "q151_streaming_wat" -> "p186_wat_metadata",
+    "q152_streaming_meta_robots" -> "p211_meta_robots",
+    "q153_streaming_follow_harvest" -> "p212_follow_harvest",
+    "q154_streaming_entropy" -> "p213_token_entropy",
+    "q155_streaming_rel_canonical" -> "p215_rel_canonical",
+    "q156_streaming_meta_refresh" -> "p216_meta_refresh",
+    "q158_streaming_gif_frames" -> "p221_gif_frames",
+    "q161_streaming_sentence_chunks" -> "p227_sentence_chunks",
+    "q162_streaming_langid_script" -> "p224_langid_script")
+
+  test("derived streaming twins return their batch entries' rows") {
+    def rows(name: String): Seq[String] =
+      SparkEntry.queries(name)(spark, TestSpark.sf).collect().toSeq
+        .map(_.toSeq.map {
+          case b: Array[Byte] => b.toSeq.toString
+          case v => String.valueOf(v)
+        }.mkString("|"))
+        .sorted
+    val differing = derivedTwins.filterNot { case (twin, batch) =>
+      SparkEntry.oracleSql(twin) == SparkEntry.oracleSql(batch) &&
+        rows(twin) == rows(batch)
+    }
+    assert(differing.isEmpty, s"twins differing from their batch entries: $differing")
   }
 
   // q37/q44 read-path parity pins, mirroring q21's: the streaming result
