@@ -54,6 +54,7 @@ object Bench {
       .config("spark.sql.files.openCostInBytes", (64L << 10).toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.sources.LocalFs.install(spark)
     spark
   }
 

@@ -353,9 +353,18 @@ object SparkEntry {
       .orderBy(col("revenue").desc)
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each puts
+    * the engine's local filesystem under its session first
+    * ([[graft.sources.LocalFs.install]]), so a session the engine did
+    * not build runs on it too.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map { case (n, f, _) => n -> f }.toMap
+    all.map { case (n, f, _) =>
+      n -> { (spark: SparkSession, dir: String) =>
+        graft.sources.LocalFs.install(spark)
+        f(spark, dir)
+      }
+    }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.

@@ -89,8 +89,14 @@ object Tables {
         s"input contract violation: ${errs.mkString("; ")}")
     }
 
+  /** Open one table. Its schema comes from one footer read on the
+    * driver ([[org.apache.spark.sql.graft.ParquetFooter]]) and is given
+    * to the read, so an open runs no schema-inference Spark job.
+    */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val df = org.apache.spark.sql.graft.ParquetFooter.schema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
     checkContract(name, df.schema)
     df
   }

@@ -6980,8 +6980,7 @@ object PipelineQueries {
       Warc.compactCdxShards(dir, cdx.filter(lit(false)),
         tombstones = Some(cdx.filter(did % 20 >= 10 && did % 5 =!= 0)
           .select(col("file_id"), col("offset"))))
-      val total = Warc.readCdxShards(s, dir, cdx.schema).count()
-      Warc.coalesceCdxShards(dir, minRows = math.max(2L, total / 12))
+      Warc.coalesceCdxShards(dir, cdx.schema, minRows = live => math.max(2L, live / 12))
       val panel = docs
         .filter(col("doc_id") % 43 === 0 && col("doc_id") % 20 < 10)
         .select(concat(lit("https://www.src"),
@@ -7993,12 +7992,11 @@ object PipelineQueries {
       val hottest = Warc.readCdxShards(s, dir, cdx.schema).groupBy(col("shard"))
         .agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("shard")).collect().head.getInt(0)
-      Warc.splitCdxShard(dir, hottest, n = 3)
+      Warc.splitCdxShard(dir, cdx.schema, hottest, n = 3)
       Warc.compactCdxShards(dir, cdx.filter(lit(false)),
         tombstones = Some(cdx.filter(did % 20 >= 10 && did % 5 =!= 0)
           .select(col("file_id"), col("offset"))))
-      val total = Warc.readCdxShards(s, dir, cdx.schema).count()
-      Warc.coalesceCdxShards(dir, minRows = math.max(2L, total / 10))
+      Warc.coalesceCdxShards(dir, cdx.schema, minRows = live => math.max(2L, live / 10))
       val panel = docs.filter(col("doc_id") % 37 === 0 &&
           (col("doc_id") % 20 < 10 || col("doc_id") % 5 === 0))
         .select(concat(lit("https://www.src"),

@@ -785,14 +785,17 @@ object Warc {
     * cluster index, re-derived from first keys at serve time, gives
     * the new pieces their place in the total order; nothing else
     * rewrites, so split cost ∝ the one shard). Publish is the layout's
-    * one protocol (see [[Publish]]).
+    * one protocol (see [[Publish]]). The layout is read with
+    * `indexSchema` given, as [[readCdxShards]] does.
     */
-  def splitCdxShard(dir: String, shard: Int, n: Int): Unit = {
+  def splitCdxShard(dir: String, indexSchema: org.apache.spark.sql.types.StructType,
+                    shard: Int, n: Int): Unit = {
     require(n >= 2, s"splitCdxShard: n must be >= 2, got $n")
     val spark = org.apache.spark.sql.SparkSession.active
     // an empty layout holds no shard to split — refused below by name
     val current =
-      if (prepareLayout(spark, dir, "splitCdxShard")) Some(spark.read.parquet(dir))
+      if (prepareLayout(spark, dir, "splitCdxShard"))
+        Some(readCdxShards(spark, dir, indexSchema))
       else None
     val shardIds = current.fold(Array.empty[Int])(
       _.select(col("shard")).distinct().collect().map(_.getInt(0)))
@@ -830,26 +833,33 @@ object Warc {
     * caller who wants it gone can split the neighbor first. Publish
     * is the layout's one protocol (see [[Publish]]); an empty layout is a
     * no-op.
+    *
+    * `minRows` maps the layout's live row count, which the stats pass
+    * sums anyway, to the undersized bound, so a caller sizing it to the
+    * layout reads nothing more. The layout is read with `indexSchema`
+    * given, as [[readCdxShards]] does.
     */
-  def coalesceCdxShards(dir: String, minRows: Long): Unit = {
-    require(minRows >= 1, s"coalesceCdxShards: minRows must be >= 1, got $minRows")
+  def coalesceCdxShards(dir: String, indexSchema: org.apache.spark.sql.types.StructType,
+                        minRows: Long => Long): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
     if (!prepareLayout(spark, dir, "coalesceCdxShards")) return
-    val current = spark.read.parquet(dir)
+    val current = readCdxShards(spark, dir, indexSchema)
     // (shard, first_key, rows) in key order — config-sized collect
     val stats = current.groupBy(col("shard"))
       .agg(min(col("surt_key")).as("first_key"), count(lit(1)).as("n"))
       .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
       .sortBy(_._2)
+    val floor = minRows(stats.map(_._3).sum)
+    require(floor >= 1, s"coalesceCdxShards: minRows must be >= 1, got $floor")
     val groups = scala.collection.mutable.ArrayBuffer
       .empty[Vector[(Int, Long)]]
     var cur = Vector.empty[(Int, Long)]
     def close(): Unit = { if (cur.size >= 2) groups += cur; cur = Vector.empty }
     stats.foreach { case (sh, _, n) =>
-      if (n >= minRows) close() // adequate: never joins a group
+      if (n >= floor) close() // adequate: never joins a group
       else {
         cur = cur :+ ((sh, n))
-        if (cur.map(_._2).sum >= minRows) close()
+        if (cur.map(_._2).sum >= floor) close()
       }
     }
     close()

@@ -17,7 +17,9 @@ import org.apache.spark.sql.types._
   * runner `run`: memory-sink twins reach it through [[runToMemory]],
   * [[runToMemoryPolling]] and [[runToMemoryUntil]], the segment and
   * index logs through the one idempotent `foreachBatch` drain. Staged
-  * fixture inputs go through one `staged` file source.
+  * fixture inputs go through one `staged` file source. Every stream
+  * reader here installs [[graft.sources.LocalFs]] on its session first,
+  * so the query's checkpoint and state files start no process.
   *
   * Derived twins. A streaming execution is the batch computation
   * run over each micro-batch (D-Streams), so where a twin would only
@@ -74,10 +76,9 @@ object StreamingQueries {
     * so the two read paths cannot drift.
     */
   def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
+    graft.sources.LocalFs.install(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val batch = spark.read.parquet(s"$sfDir/events.parquet")
-    graft.Tables.checkContract("events", batch.schema)
-    val tsType = batch.schema("ts").dataType
+    val tsType = graft.Tables.table(spark, sfDir, "events").schema("ts").dataType
     val schema = StructType(rawEventsSchema.map {
       case f if f.name == "ts" => f.copy(dataType = tsType)
       case f => f
@@ -90,15 +91,19 @@ object StreamingQueries {
     graft.Tables.normalizeEventTime(raw)
   }
 
-  def documentsStream(spark: SparkSession, sfDir: String): DataFrame =
+  def documentsStream(spark: SparkSession, sfDir: String): DataFrame = {
+    graft.sources.LocalFs.install(spark)
     spark.readStream.schema(rawDocumentsSchema)
       .option("basePath", sfDir)
       .parquet(s"$sfDir/documents.parque[t]")
+  }
 
-  def embeddingsStream(spark: SparkSession, sfDir: String): DataFrame =
+  def embeddingsStream(spark: SparkSession, sfDir: String): DataFrame = {
+    graft.sources.LocalFs.install(spark)
     spark.readStream.schema(rawEmbeddingsSchema)
       .option("basePath", sfDir)
       .parquet(s"$sfDir/embeddings.parque[t]")
+  }
 
   /** The one place a twin's query starts: `writer` starts under
     * `trigger`, `await` blocks until its input is drained, and the
@@ -154,6 +159,7 @@ object StreamingQueries {
     * frame stays one file and so one micro-batch.
     */
   private def staged(frame: DataFrame, prefix: String): DataFrame = {
+    graft.sources.LocalFs.install(frame.sparkSession)
     val dir = graft.sources.Sinks.tempArtifactDir(prefix)
     frame.write.mode("overwrite").parquet(dir)
     frame.sparkSession.readStream.schema(frame.schema).parquet(dir)

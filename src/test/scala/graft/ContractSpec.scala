@@ -26,6 +26,43 @@ class ContractSpec extends AnyFunSuite {
     assert(e.getMessage.contains("accepted"))
   }
 
+  test("Tables.table opens each table with the schema spark.read.parquet infers, for all 10 tables and a Spark-written copy, without a Spark job") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf[A](body: => A): (A, Int) = {
+      org.apache.spark.graft.BusBridge.drain(spark.sparkContext)
+      jobs.set(0)
+      val a = body
+      org.apache.spark.graft.BusBridge.drain(spark.sparkContext)
+      (a, jobs.get)
+    }
+    val copy = java.nio.file.Files.createTempDirectory("graft_footer_").toString
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Tables.names.foreach { t =>
+        val path = s"${TestSpark.sf}/$t.parquet"
+        val (inferred, inferJobs) = jobsOf(spark.read.parquet(path).schema)
+        assert(inferJobs == 1, s"$t: inference ran $inferJobs jobs")
+        val (opened, openJobs) = jobsOf(Tables.table(spark, TestSpark.sf, t).schema)
+        assert(openJobs == 0, s"$t: Tables.table ran $openJobs jobs")
+        assert(opened == inferred, t)
+      }
+      // a Spark-written copy, in several files: its footers carry Spark's
+      // row-metadata schema, which inference prefers over the parquet one
+      spark.read.parquet(s"${TestSpark.sf}/documents.parquet").repartition(3)
+        .write.parquet(s"$copy/documents.parquet")
+      val inferred = spark.read.parquet(s"$copy/documents.parquet").schema
+      val (opened, openJobs) = jobsOf(Tables.table(spark, copy, "documents").schema)
+      assert(openJobs == 0 && opened == inferred)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(copy))
+    }
+  }
+
   test("a missing contract column is named, with the found columns listed") {
     val e = intercept[IllegalArgumentException](
       Tables.checkContract("documents", StructType(Seq(

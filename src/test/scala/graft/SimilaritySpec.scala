@@ -928,11 +928,19 @@ class SimilaritySpec extends AnyFunSuite {
   test("Sq8Codec: a NaN or ±Inf model refuses at build time; an unclamped NaN refuses at a degenerate dim too") {
     import graft.functions.Sq8Codec
     val ok = Array(0.0, 2.0)
+    // every refusal runs quietly, and the one a failed query makes waits
+    // for the listener bus inside the quiet window: Spark's observation
+    // listener logs the failed query's trace asynchronously
+    def refused[E <: AnyRef](body: => Any)(implicit ct: scala.reflect.ClassTag[E]): E =
+      TestSpark.quietly {
+        try intercept[E](body)
+        finally org.apache.spark.graft.BusBridge.drain(spark.sparkContext)
+      }
     Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity).foreach { bad =>
-      val e1 = intercept[IllegalArgumentException](
+      val e1 = refused[IllegalArgumentException](
         Sq8Codec.roundTrip(col("v"), Array(0.0, bad), Array(10.0, 2.0)))
       assert(e1.getMessage.contains("model lo has"), e1.getMessage)
-      val e2 = intercept[IllegalArgumentException](
+      val e2 = refused[IllegalArgumentException](
         Sq8Codec.encode(col("v"), ok, Array(bad, 2.0), clamp = false))
       assert(e2.getMessage.contains("model hi has"), e2.getMessage)
     }
@@ -944,7 +952,7 @@ class SimilaritySpec extends AnyFunSuite {
         .select(Sq8Codec.encode(col("v"), ok, hi, clamp = false))
         .as[Array[Byte]].head()
     assert(codes(Array(10f, 2f)).toSeq == Seq(255.toByte, 0.toByte))
-    val e3 = intercept[Exception](TestSpark.quietly(codes(Array(10f, Float.NaN))))
+    val e3 = refused[Exception](codes(Array(10f, Float.NaN)))
     assert(Iterator.iterate[Throwable](e3)(_.getCause).takeWhile(_ != null)
       .exists(t => Option(t.getMessage).exists(_.contains("NaN component at dim 1"))),
       e3.toString)

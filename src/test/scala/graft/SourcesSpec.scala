@@ -639,7 +639,7 @@ class SourcesSpec extends AnyFunSuite {
       val victimKeys = spark.read.parquet(dir)
         .filter(col("shard") === 2).select(col("surt_key"))
         .collect().map(_.getString(0)).toSet
-      Warc.splitCdxShard(dir, shard = 2, n = 2)
+      Warc.splitCdxShard(dir, cdx.schema, shard = 2, n = 2)
       val after = spark.read.parquet(dir)
       // same rows, shard 2 gone, its keys in the two fresh ids 4 and 5
       assert(after.count() == 40)
@@ -677,7 +677,7 @@ class SourcesSpec extends AnyFunSuite {
       }
       // a split of a missing shard is loud
       val e = intercept[IllegalArgumentException](
-        Warc.splitCdxShard(dir, shard = 2, n = 2))
+        Warc.splitCdxShard(dir, cdx.schema, shard = 2, n = 2))
       assert(e.getMessage.contains("not present"), e.getMessage)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
@@ -702,7 +702,7 @@ class SourcesSpec extends AnyFunSuite {
       Warc.writeCdxShards(cdx, dir, numShards = 8) // 5 rows per shard
       val before = (0 until 8).map(listing)
       // every shard adequate: a full no-op — nothing moves at all
-      Warc.coalesceCdxShards(dir, minRows = 4)
+      Warc.coalesceCdxShards(dir, cdx.schema, minRows = _ => 4)
       assert((0 until 8).map(listing) == before, "adequate layout rewrote")
       // tombstone the MIDDLE shards (2..5) down to one row each: a
       // four-shard undersized run between adequate neighbors
@@ -716,7 +716,7 @@ class SourcesSpec extends AnyFunSuite {
       Warc.compactCdxShards(dir, cdx.filter(lit(false)),
         tombstones = Some(tomb))
       val beforeCoal = (0 until 8).map(listing)
-      Warc.coalesceCdxShards(dir, minRows = 4)
+      Warc.coalesceCdxShards(dir, cdx.schema, minRows = _ => 4)
       val after = spark.read.parquet(dir)
       // the run merged into ONE fresh shard (4 x 1 row reaches minRows)
       val ids = after.select(col("shard")).distinct()
@@ -751,14 +751,14 @@ class SourcesSpec extends AnyFunSuite {
       val beforeLone = spark.read.parquet(dir)
         .select(col("shard"), col("surt_key")).collect()
         .map(r => (r.getInt(0), r.getString(1))).sorted.toSeq
-      Warc.coalesceCdxShards(dir, minRows = 4)
+      Warc.coalesceCdxShards(dir, cdx.schema, minRows = _ => 4)
       val afterLone = spark.read.parquet(dir)
         .select(col("shard"), col("surt_key")).collect()
         .map(r => (r.getInt(0), r.getString(1))).sorted.toSeq
       assert(afterLone == beforeLone, "lone undersized shard must stay")
       // loud guards
       intercept[IllegalArgumentException](
-        Warc.coalesceCdxShards(dir, minRows = 0))
+        Warc.coalesceCdxShards(dir, cdx.schema, minRows = _ => 0))
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
@@ -783,7 +783,7 @@ class SourcesSpec extends AnyFunSuite {
       val s3 = spark.read.parquet(dir).filter(col("shard") === 3).count()
       assert(s3 > 0)
       // minRows=1: nothing is undersized, so the call is PURE repair
-      Warc.coalesceCdxShards(dir, minRows = 1)
+      Warc.coalesceCdxShards(dir, cdx.schema, minRows = _ => 1)
       val after = spark.read.parquet(dir)
       assert(after.filter(col("shard") === 3).isEmpty,
         "the interrupted publish's source shard must leave the layout")
@@ -791,7 +791,7 @@ class SourcesSpec extends AnyFunSuite {
       assert(!new java.io.File(dir, "_coalesce_manifest").exists(),
         "the manifest must clear once the publish is finished")
       // and a clean layout repairs to a no-op
-      Warc.coalesceCdxShards(dir, minRows = 1)
+      Warc.coalesceCdxShards(dir, cdx.schema, minRows = _ => 1)
       assert(spark.read.parquet(dir).count() == after.count())
       // a MALFORMED manifest line (no colon / non-numeric ids) must
       // refuse loudly with the offending content — deleting shards on
@@ -801,7 +801,7 @@ class SourcesSpec extends AnyFunSuite {
           java.nio.file.Paths.get(dir, "_coalesce_manifest"),
           bad.getBytes("UTF-8"))
         val e = intercept[IllegalStateException](
-          Warc.coalesceCdxShards(dir, minRows = 1))
+          Warc.coalesceCdxShards(dir, cdx.schema, minRows = _ => 1))
         assert(e.getMessage.contains(bad))
         val cnt = spark.read.parquet(dir).count()
         assert(cnt == after.count(), "refusal must not touch the layout")
@@ -835,18 +835,18 @@ class SourcesSpec extends AnyFunSuite {
         new java.io.File(dir).list().filterNot(_.startsWith(".")).sorted.toSeq
       for (dir <- Seq(zeroRows, allTombed)) {
         assert(entries(dir) == Seq("_SUCCESS"), entries(dir))
-        Warc.coalesceCdxShards(dir, minRows = 4)
+        Warc.coalesceCdxShards(dir, cdx.schema, minRows = _ => 4)
         assert(entries(dir) == Seq("_SUCCESS"), entries(dir))
         val e = intercept[IllegalArgumentException](
-          Warc.splitCdxShard(dir, shard = 0, n = 2))
+          Warc.splitCdxShard(dir, cdx.schema, shard = 0, n = 2))
         assert(e.getMessage.contains("shard 0 not present"), e.getMessage)
       }
       for (dir <- Seq(zeroRows + "-missing", uncommitted)) {
         val ec = intercept[IllegalArgumentException](
-          Warc.coalesceCdxShards(dir, minRows = 4))
+          Warc.coalesceCdxShards(dir, cdx.schema, minRows = _ => 4))
         assert(ec.getMessage.contains("not a writeCdxShards layout"), ec.getMessage)
         val es = intercept[IllegalArgumentException](
-          Warc.splitCdxShard(dir, shard = 0, n = 2))
+          Warc.splitCdxShard(dir, cdx.schema, shard = 0, n = 2))
         assert(es.getMessage.contains("not a writeCdxShards layout"), es.getMessage)
       }
     } finally {
@@ -878,7 +878,7 @@ class SourcesSpec extends AnyFunSuite {
       java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_coalesce_manifest"),
         "1:1".getBytes("UTF-8"))
       // minRows=1: nothing is undersized, so the call is PURE repair
-      Warc.coalesceCdxShards(dir, minRows = 1)
+      Warc.coalesceCdxShards(dir, cdx.schema, minRows = _ => 1)
       val after = spark.read.parquet(dir)
       assert(after.count() == 41, "the interrupted compaction lost rows")
       assert(after.filter(col("shard") === 1).count() == rows1)
@@ -954,8 +954,8 @@ class SourcesSpec extends AnyFunSuite {
             val hot = spark.read.parquet(dir).groupBy(col("shard"))
               .agg(count(lit(1)).as("n"))
               .orderBy(col("n").desc, col("shard")).collect().head.getInt(0)
-            Warc.splitCdxShard(dir, hot, n = 2)
-          case "coalesce" => Warc.coalesceCdxShards(dir, minRows = 8)
+            Warc.splitCdxShard(dir, cdx.schema, hot, n = 2)
+          case "coalesce" => Warc.coalesceCdxShards(dir, cdx.schema, minRows = _ => 8)
         }
         val after = spark.read.parquet(dir)
         val content = after.select(col("surt_key"), col("file_id"))

@@ -16,6 +16,7 @@ object TestSpark {
         java.nio.file.Files.createTempDirectory("graft_warehouse_").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    graft.sources.LocalFs.install(s)
     s
   }
   val sf: String = "/root/testdata/sf0.001"
