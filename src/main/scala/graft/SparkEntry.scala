@@ -41,9 +41,7 @@ object SparkEntry {
       SELECT date_trunc('hour', ts) AS window_start, event_type,
              count(*) AS n, round(sum("value"), 2) AS sum_value
       FROM events GROUP BY 1, 2 ORDER BY 1, 2""")),
-    ("q31_streaming_dedup",
-      (s, d) => graft.streaming.StreamingQueries.exactDedup(s, d),
-      Some(sharedOracle("p01_dedup_exact"))),
+    derived("q31_streaming_dedup", "p01_dedup_exact"),
     ("q37_stream_stream_join",
       (s, d) => graft.streaming.StreamingQueries.clickToPurchase(s, d),
       Some("""
@@ -72,24 +70,14 @@ object SparkEntry {
              CAST(p % 1048576 AS BIGINT) AS keeper_idx,
              CAST(n AS BIGINT) AS n_instances
       FROM g ORDER BY fingerprint""")),
-    ("q50_streaming_heavy_hitters",
-      (s, d) => graft.streaming.StreamingQueries.heavyHitters(s, d,
-        Seq("table", "value", "the", "a", "row", "scan")),
-      Some(PipelineQueries.heavyHittersOracle)),
-    ("q51_streaming_ann",
-      (s, d) => graft.streaming.StreamingQueries.embeddingTopK(s, d),
-      Some(sharedOracle("p08_embedding_topk"))),
-    ("q52_streaming_sample",
-      (s, d) => graft.streaming.StreamingQueries.stratifiedSample(s, d,
-        Map("en" -> 0.5, "de" -> 0.2), defaultRate = 0.1),
-      Some(sharedOracle("p19_stratified_sample"))),
+    derived("q50_streaming_heavy_hitters", "p38_heavy_hitters"),
+    derived("q51_streaming_ann", "p08_embedding_topk"),
+    derived("q52_streaming_sample", "p19_stratified_sample"),
     ("q53_tail_read",
       (s, d) => graft.streaming.StreamingQueries.tailReadDocuments(s, d),
       Some("""
       SELECT doc_id, md5(text) AS text_md5 FROM documents ORDER BY doc_id""")),
-    ("q56_streaming_perplexity",
-      (s, d) => graft.streaming.StreamingQueries.perplexityScoring(s, d),
-      Some(sharedOracle("p45_perplexity"))),
+    derived("q56_streaming_perplexity", "p45_perplexity"),
     ("q59_streaming_hll",
       (s, d) => graft.streaming.StreamingQueries.hllDistinct(s, d),
       Some(sharedOracle("p48_hll_distinct"))),
@@ -99,18 +87,14 @@ object SparkEntry {
     ("q61_streaming_quantiles",
       (s, d) => graft.streaming.StreamingQueries.histQuantiles(s, d),
       Some(sharedOracle("p50_hist_quantiles"))),
-    ("q62_streaming_weighted_sample",
-      (s, d) => graft.streaming.StreamingQueries.weightedSample(s, d),
-      Some(sharedOracle("p51_weighted_sample"))),
+    derived("q62_streaming_weighted_sample", "p51_weighted_sample"),
     ("q63_streaming_decontam",
       (s, d) => graft.streaming.StreamingQueries.decontaminate(s, d),
       Some(sharedOracle("p23_decontam"))),
     ("q64_streaming_source_kl",
       (s, d) => graft.streaming.StreamingQueries.sourceKl(s, d),
       Some(sharedOracle("p54_source_kl"))),
-    ("q66_streaming_phash_dedup",
-      (s, d) => graft.streaming.StreamingQueries.phashDedup(s, d),
-      Some(sharedOracle("p56_phash_dedup"))),
+    derived("q66_streaming_phash_dedup", "p56_phash_dedup"),
     ("q65_streaming_index_stats",
       (s, d) => graft.streaming.StreamingQueries.indexStats(s, d),
       Some("""
@@ -130,13 +114,9 @@ object SparkEntry {
     ("q68_streaming_bm25_fresh",
       (s, d) => graft.streaming.StreamingQueries.bm25FreshStats(s, d),
       Some(sharedOracle("p49_bm25_topk"))),
-    ("q70_streaming_bpe_train",
-      (s, d) => graft.streaming.StreamingQueries.bpeTrain(s, d),
-      Some(sharedOracle("p58_bpe_train"))),
+    derived("q70_streaming_bpe_train", "p58_bpe_train"),
     derived("q71_streaming_rag_chunks", "p60_rag_chunks"),
-    ("q72_streaming_url_dedup",
-      (s, d) => graft.streaming.StreamingQueries.urlDedup(s, d),
-      Some(sharedOracle("p63_url_dedup"))),
+    derived("q72_streaming_url_dedup", "p63_url_dedup"),
     derived("q73_streaming_bpe_encode", "p64_bpe_encode"),
     ("q74_streaming_phrase_fresh",
       (s, d) => graft.streaming.StreamingQueries.phraseServeFresh(s, d),
@@ -160,24 +140,16 @@ object SparkEntry {
     ("q80_streaming_minhash_append",
       (s, d) => graft.streaming.StreamingQueries.minhashIndexAppend(s, d),
       Some(sharedOracle("p78_minhash_index_verify"))),
-    ("q81_streaming_log_odds",
-      (s, d) => graft.streaming.StreamingQueries.logOddsScoring(s, d),
-      Some(sharedOracle("p81_log_odds_quality"))),
-    ("q82_streaming_phash_near",
-      (s, d) => graft.streaming.StreamingQueries.phashNearDedupStream(s, d),
-      Some(sharedOracle("p80_phash_near_dedup"))),
-    ("q83_streaming_sketch_overlap",
-      (s, d) => graft.streaming.StreamingQueries.sketchOverlapStream(s, d),
-      Some(sharedOracle("p84_sketch_overlap"))),
+    derived("q81_streaming_log_odds", "p81_log_odds_quality"),
+    derived("q82_streaming_phash_near", "p80_phash_near_dedup"),
+    derived("q83_streaming_sketch_overlap", "p84_sketch_overlap"),
     ("q84_streaming_release_manifest",
       (s, d) => graft.streaming.StreamingQueries.releaseManifestStream(s, d),
       Some(sharedOracle("p88_release_manifest"))),
     ("q85_streaming_span_scrub",
       (s, d) => graft.streaming.StreamingQueries.spanScrubStream(s, d),
       Some(sharedOracle("p87_span_scrub"))),
-    ("q86_streaming_calibration",
-      (s, d) => graft.streaming.StreamingQueries.calibrationStream(s, d),
-      Some(sharedOracle("p90_quality_calibration"))),
+    derived("q86_streaming_calibration", "p90_quality_calibration"),
     ("q87_streaming_corpus_release",
       (s, d) => graft.streaming.StreamingQueries.corpusReleaseStream(s, d),
       Some(sharedOracle("p91_corpus_release"))),
@@ -189,13 +161,9 @@ object SparkEntry {
     ("q95_streaming_covariance",
       (s, d) => graft.streaming.StreamingQueries.covarianceStream(s, d),
       Some(sharedOracle("p100_embedding_covariance"))),
-    ("q98_streaming_active",
-      (s, d) => graft.streaming.StreamingQueries.rollingActiveStream(s, d),
-      Some(sharedOracle("q97_rolling_active"))),
+    derived("q98_streaming_active", "q97_rolling_active"),
     derived("q101_streaming_trend", "q100_trend_slopes"),
-    ("q102_streaming_prefix",
-      (s, d) => graft.streaming.StreamingQueries.prefixIndexStream(s, d),
-      Some(sharedOracle("p103_prefix_index"))),
+    derived("q102_streaming_prefix", "p103_prefix_index"),
     derived("q103_streaming_quality", "p102_data_quality"),
     ("q106_streaming_sessions",
       (s, d) => graft.streaming.StreamingQueries.sessionExportStream(s, d),
@@ -211,9 +179,7 @@ object SparkEntry {
     ("q112_streaming_funnel",
       (s, d) => graft.streaming.StreamingQueries.filterFunnelStream(s, d),
       Some(sharedOracle("p117_filter_funnel"))),
-    ("q113_streaming_dsir",
-      (s, d) => graft.streaming.StreamingQueries.dsirScoring(s, d),
-      Some(sharedOracle("p115_dsir_weights"))),
+    derived("q113_streaming_dsir", "p115_dsir_weights"),
     ("q114_streaming_span_log",
       (s, d) => graft.streaming.StreamingQueries.spanIndexLog(s, d),
       Some(sharedOracle("p122_span_index_lifecycle"))),
@@ -229,9 +195,7 @@ object SparkEntry {
     ("q120_streaming_robots",
       (s, d) => graft.streaming.StreamingQueries.robotsStream(s, d),
       Some(sharedOracle("p138_robots_filter"))),
-    ("q121_streaming_trap",
-      (s, d) => graft.streaming.StreamingQueries.trapSignalsStream(s, d),
-      Some(sharedOracle("p142_trap_signals"))),
+    derived("q121_streaming_trap", "p142_trap_signals"),
     derived("q122_streaming_anchor_terms", "p134_anchor_terms"),
     ("q123_streaming_change_rates",
       (s, d) => graft.streaming.StreamingQueries.changeRatesStream(s, d),
@@ -242,16 +206,12 @@ object SparkEntry {
       (s, d) => graft.streaming.StreamingQueries.crawlWorklistStream(s, d),
       Some(sharedOracle("p145_crawl_worklist"))),
     derived("q127_streaming_snippets", "p146_snippets"),
-    ("q128_streaming_vocab_coverage",
-      (s, d) => graft.streaming.StreamingQueries.vocabCoverageStream(s, d),
-      Some(sharedOracle("p151_vocab_coverage"))),
+    derived("q128_streaming_vocab_coverage", "p151_vocab_coverage"),
     derived("q129_streaming_cdc", "p152_cdc_chunks"),
     ("q130_streaming_recrawl",
       (s, d) => graft.streaming.StreamingQueries.recrawlScheduleStream(s, d),
       Some(sharedOracle("p147_recrawl_schedule"))),
-    ("q131_streaming_byte_bpe_train",
-      (s, d) => graft.streaming.StreamingQueries.byteBpeTrain(s, d),
-      Some(sharedOracle("p158_bpe_bytes_train"))),
+    derived("q131_streaming_byte_bpe_train", "p158_bpe_bytes_train"),
     derived("q132_streaming_byte_bpe_encode", "p159_bpe_bytes_encode"),
     ("q133_streaming_per_host_worklist",
       (s, d) => graft.streaming.StreamingQueries.perHostWorklistStream(s, d),
@@ -265,9 +225,7 @@ object SparkEntry {
       (s, d) => graft.streaming.StreamingQueries.unigramEncodeStream(s, d),
       Some(sharedOracle("p191_unigram_viterbi"))),
     derived("q142_streaming_wordpiece", "p196_wordpiece_encode"),
-    ("q143_streaming_kn",
-      (s, d) => graft.streaming.StreamingQueries.kneserNeyScoring(s, d),
-      Some(sharedOracle("p201_kn_perplexity"))),
+    derived("q143_streaming_kn", "p201_kn_perplexity"),
     ("q144_streaming_quality_lr",
       (s, d) => graft.streaming.StreamingQueries.qualityLrScoring(s, d),
       // p203's chain restricted to tokenful docs — the twin's actual
@@ -276,9 +234,7 @@ object SparkEntry {
     ("q145_streaming_robots_wild",
       (s, d) => graft.streaming.StreamingQueries.robotsWildcardStream(s, d),
       Some(sharedOracle("p204_robots_wildcards"))),
-    ("q146_streaming_kn3",
-      (s, d) => graft.streaming.StreamingQueries.kneserNey3Scoring(s, d),
-      Some(sharedOracle("p205_kn_trigram_ppl"))),
+    derived("q146_streaming_kn3", "p205_kn_trigram_ppl"),
     ("q147_streaming_wordpiece_train",
       (s, d) => graft.streaming.StreamingQueries.wordPieceTrainStream(s, d),
       Some(sharedOracle("p198_wordpiece_train"))),

@@ -132,12 +132,21 @@ object Curation {
     */
   def calibrateKeepRate(df: DataFrame, id: Column, group: Column, score: Column,
                         rateMicro: Long, keepLowest: Boolean = true): DataFrame = {
-    val rows = df.select(id.as("doc_id"), group.as("group"),
-      score.cast("long").as("score"))
-    val hist = rows.groupBy(col("group"), col("score"))
-      .agg(count(lit(1)).as("__c"))
-    calibrateFromHist(hist, rows, rateMicro, keepLowest)
+    val rows = scoreRows(df, id, group, score)
+    calibrateFromHist(scoreHist(rows), rows, rateMicro, keepLowest)
   }
+
+  /** The (doc_id, group, score) rows [[calibrateKeepRate]] flags. */
+  private[graft] def scoreRows(df: DataFrame, id: Column, group: Column,
+                               score: Column): DataFrame =
+    df.select(id.as("doc_id"), group.as("group"), score.cast("long").as("score"))
+
+  /** The per-(group, score) histogram of [[scoreRows]] — the
+    * associative half of [[calibrateKeepRate]] (counts sum, so a stream
+    * folds it with state bounded by distinct (group, score) pairs).
+    */
+  private[graft] def scoreHist(rows: DataFrame): DataFrame =
+    rows.groupBy(col("group"), col("score")).agg(count(lit(1)).as("__c"))
 
   /** [[calibrateKeepRate]]'s cutoff + flag pass over a precomputed
     * per-(group, score) histogram — the half the streaming twin reuses:
@@ -697,7 +706,7 @@ object Curation {
     import spark.implicits._
     val t = df.groupBy(group.as("group")).agg(sum(tokens).as("n_tokens"))
     val w = weightsPermille.toDF("group", "target_permille")
-    val g = t.join(broadcast(w), Seq("group"), "full_outer")
+    val g = t.join(w, Seq("group"), "full_outer")
       .withColumn("n_tokens", when(col("n_tokens").isNotNull, col("n_tokens"))
         .otherwise(raise_error(concat(
           lit("mixturePlan: weight names absent group '"), col("group"),

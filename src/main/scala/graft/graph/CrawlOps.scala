@@ -305,16 +305,15 @@ object CrawlOps {
     * divides by zero.
     */
   def trapSignals(fetches: DataFrame, minUrls: Long = 100L,
-                  thresholdMicro: Long = 10000000L): DataFrame = {
-    require(minUrls >= 1,
-      s"trapSignals: minUrls must be >= 1, got $minUrls")
-    require(thresholdMicro > 0,
-      s"trapSignals: thresholdMicro must be positive, got $thresholdMicro")
-    trapSignalsFromDistinct(
-      fetches.select(col("family"), col("canonical"), col("fingerprint"))
-        .distinct(),
-      minUrls, thresholdMicro)
-  }
+                  thresholdMicro: Long = 10000000L): DataFrame =
+    trapSignalsFromDistinct(trapTriples(fetches), minUrls, thresholdMicro)
+
+  /** The dedup half of [[trapSignals]]: the fetch log's distinct
+    * (family, canonical, fingerprint) triples.
+    */
+  private[graft] def trapTriples(fetches: DataFrame): DataFrame =
+    fetches.select(col("family"), col("canonical"), col("fingerprint"))
+      .distinct()
 
   /** The fetch WORKLIST — the crawl arc's last materialization: turn
     * the schedule's per-domain request counts into the actual URL
@@ -518,7 +517,11 @@ object CrawlOps {
     * `Dedup.chunkRows` rule: batch-identical by shared definition).
     */
   def trapSignalsFromDistinct(triples: DataFrame, minUrls: Long,
-                              thresholdMicro: Long): DataFrame =
+                              thresholdMicro: Long): DataFrame = {
+    require(minUrls >= 1,
+      s"trapSignals: minUrls must be >= 1, got $minUrls")
+    require(thresholdMicro > 0,
+      s"trapSignals: thresholdMicro must be positive, got $thresholdMicro")
     triples.groupBy(col("family"))
       .agg(count_distinct(col("canonical")).as("n_urls"),
         count_distinct(col("fingerprint")).as("n_fp"))
@@ -526,4 +529,5 @@ object CrawlOps {
         expr("n_urls * 1000000 div n_fp").as("ratio_micro"))
       .withColumn("trapped",
         col("n_urls") >= minUrls && col("ratio_micro") > thresholdMicro)
+  }
 }

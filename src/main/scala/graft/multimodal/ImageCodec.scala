@@ -913,16 +913,20 @@ object ImageCodec {
   def phashNearDedup(df: DataFrame, id: Column, payload: Column,
                      maxDist: Int = 7, bands: Int = 8): DataFrame = {
     val codes = aHashCodes(df, id, payload)
-    val groups = codes.groupBy(col("phash"))
-      .agg(min(col("media_id")).as("keeper_id"), count(lit(1)).as("group_size"))
-    nearElection(codes, groups, maxDist, bands)
+    nearElection(codes, codeGroups(codes), maxDist, bands)
   }
 
-  /** The code-level half of [[phashNearDedup]], shared with the
-    * streaming twin (which streams the election aggregate and applies
-    * this batch-side — the q66 epoch shape): banded candidates over the
-    * DISTINCT-code `groups`, Hamming verify, pair-local domination,
-    * and the per-media projection.
+  /** The election fold of [[perceptualHashGroups]] and
+    * [[phashNearDedup]]: one (keeper_id, group_size) row per DISTINCT
+    * code — min/count, so a stream folds it slice-independently.
+    */
+  private[graft] def codeGroups(codes: DataFrame): DataFrame =
+    codes.groupBy(col("phash"))
+      .agg(min(col("media_id")).as("keeper_id"), count(lit(1)).as("group_size"))
+
+  /** The code-level half of [[phashNearDedup]] over folded
+    * [[codeGroups]]: banded candidates over the DISTINCT codes, Hamming
+    * verify, pair-local domination, and the per-media projection.
     */
   private[graft] def nearElection(codes: DataFrame, groups: DataFrame,
                                   maxDist: Int, bands: Int): DataFrame = {
@@ -972,10 +976,14 @@ object ImageCodec {
     */
   def perceptualHashGroups(df: DataFrame, id: Column, payload: Column): DataFrame = {
     val h = aHashCodes(df, id, payload)
-    val groups = h.groupBy(col("phash"))
-      .agg(min(col("media_id")).as("keeper_id"), count(lit(1)).as("group_size"))
-    h.join(groups, Seq("phash"))
+    exactElection(h, codeGroups(h))
+  }
+
+  /** The per-media half of [[perceptualHashGroups]] over folded
+    * [[codeGroups]].
+    */
+  private[graft] def exactElection(codes: DataFrame, groups: DataFrame): DataFrame =
+    codes.join(groups, Seq("phash"))
       .select(col("media_id"), col("phash"), col("keeper_id"),
         (col("media_id") === col("keeper_id")).as("kept"), col("group_size"))
-  }
 }

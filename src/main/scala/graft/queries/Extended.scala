@@ -535,10 +535,10 @@ object Extended {
     // the 7 report days it is active within (bounded ×7 explode — no
     // range self-join), restricted to observed days; one distinct-count
     // exchange per report day.
-    ("q97_rolling_active", (s, d) => {
+    ("q97_rolling_active", Twinned { (s, d, t) =>
       import graft.operators.TimeWindow
-      TimeWindow.rollingActive(
-          TimeWindow.dailyUsers(Tables.events(s, d), col("ts"), col("user_id")))
+      TimeWindow.rollingActive(t.cut(
+          TimeWindow.dailyUsers(t.in(Tables.events(s, d)), col("ts"), col("user_id"))))
         .orderBy(col("day"))
     }, Some("""
       WITH du AS (SELECT DISTINCT

@@ -111,8 +111,8 @@ object PipelineQueries {
 
   def defs: Seq[(String, Q, Option[String])] = Seq(
 
-    ("p01_dedup_exact", (s, d) => {
-      Dedup.exactGroups(Tables.documents(s, d), col("doc_id"), col("text"))
+    ("p01_dedup_exact", Twinned { (s, d, t) =>
+      t.cut(Dedup.exactGroups(t.in(Tables.documents(s, d)), col("doc_id"), col("text")))
         .orderBy(col("fingerprint"))
     }, Some(s"""
       SELECT md5(array_to_string(${sqlToks("lower(text)")}, ' ')) AS fingerprint,
@@ -254,10 +254,10 @@ object PipelineQueries {
                  JOIN sizes nb ON nb.doc_id = id_b
       ORDER BY id_a, id_b""")),
 
-    ("p08_embedding_topk", (s, d) => {
+    ("p08_embedding_topk", Twinned { (s, d, t) =>
       val e = Tables.embeddings(s, d)
-      SimilaritySearch.bruteForceTopK(e, col("vec_id"), col("embedding"),
-          e.filter(col("vec_id") < 20), col("vec_id"), col("embedding"), k = 5)
+      t.cut(SimilaritySearch.bruteForceTopK(t.in(e), col("vec_id"), col("embedding"),
+          e.filter(col("vec_id") < 20), col("vec_id"), col("embedding"), k = 5))
         .orderBy(col("query_id"), col("rank"))
     }, Some(bruteTopkOracle)),
 
@@ -717,12 +717,11 @@ object PipelineQueries {
     // pure function of doc_id, so both engines agree row by row — no
     // rand(), reproducible across reruns (what a training-set sample
     // needs). The oracle parses the same 6 md5 nibbles positionally.
-    ("p19_stratified_sample", (s, d) => {
-      val docs = Tables.documents(s, d)
-      graft.curation.Curation.stratifiedSample(docs, col("lang"), col("doc_id"),
-          Map("en" -> 0.5, "de" -> 0.2), defaultRate = 0.1)
+    ("p19_stratified_sample", Twinned { (s, d, t) =>
+      t.cut(graft.curation.Curation.stratifiedSample(t.in(Tables.documents(s, d)),
+          col("lang"), col("doc_id"), Map("en" -> 0.5, "de" -> 0.2), defaultRate = 0.1)
         .select(col("doc_id"), col("lang"),
-          graft.curation.Curation.hashBucket(col("doc_id")).as("bucket"))
+          graft.curation.Curation.hashBucket(col("doc_id")).as("bucket")))
         .orderBy(col("doc_id"))
     }, Some(s"""
       WITH h AS (SELECT doc_id, lang, md5(CAST(doc_id AS VARCHAR)) AS m FROM documents),
@@ -1199,17 +1198,17 @@ object PipelineQueries {
     // sketch is pure md5 arithmetic, so the oracle rebuilds the exact
     // cells and the never-under-count guarantee is visible in the
     // (est, exact) pairs.
-    ("p38_heavy_hitters", (s, d) => {
+    ("p38_heavy_hitters", Twinned { (s, d, t) =>
       import graft.functions.Aggregators
       val width = 64
       val depth = 4
       val cm = udaf(new Aggregators.CountMin(width, depth))
-      val toks = Tables.documents(s, d)
+      val toks = t.in(Tables.documents(s, d))
         .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
-      val sk = toks.agg(cm(col("tok")).as("sk")).select(col("sk.cells").as("sk"))
+      val sk = t.cut(toks.agg(cm(col("tok")).as("sk"))).select(col("sk.cells").as("sk"))
       val probes = Seq("table", "value", "the", "a", "row", "scan")
-      val exact = toks.filter(col("tok").isin(probes: _*))
-        .groupBy(col("tok")).agg(count(lit(1)).as("__exact"))
+      val exact = t.cut(toks.filter(col("tok").isin(probes: _*))
+        .groupBy(col("tok")).agg(count(lit(1)).as("__exact")))
       Aggregators.CountMin.probeReport(sk, exact, probes, width, depth)
     }, Some(heavyHittersOracle)),
 
@@ -1386,9 +1385,12 @@ object PipelineQueries {
     // smoothed 2-gram model; per-bigram -ln P truncated ONCE to integer
     // micro-units so the per-doc sum is order-independent (integer-exact
     // rule). Oracle recomputes the identical integer arithmetic.
-    ("p45_perplexity", (s, d) => {
-      graft.text.CorpusOps.bigramPerplexity(
-          Tables.documents(s, d), col("doc_id"), col("text"))
+    ("p45_perplexity", Twinned { (s, d, t) =>
+      import graft.text.CorpusOps
+      val docs = Tables.documents(s, d)
+      t.cut(CorpusOps.scoreBigrams(
+          CorpusOps.bigramRows(t.in(docs), col("doc_id"), col("text")),
+          CorpusOps.bigramLm(docs, col("doc_id"), col("text"))))
         .orderBy(col("doc_id"))
     }, Some(s"""
       WITH t AS (SELECT doc_id, ${sqlToks("text")} AS toks FROM documents),
@@ -1417,10 +1419,12 @@ object PipelineQueries {
     // per token so the sum is order-independent. Oracle recomputes the
     // identical arithmetic; the CASE branches mirror Spark's
     // `otherwise` (null predicate counts as non-reference).
-    ("p81_log_odds_quality", (s, d) => {
-      graft.text.CorpusOps.logOddsQuality(
-          Tables.documents(s, d), col("doc_id"), col("text"),
-          col("lang") === "en")
+    ("p81_log_odds_quality", Twinned { (s, d, t) =>
+      import graft.text.CorpusOps
+      val docs = Tables.documents(s, d)
+      t.cut(CorpusOps.scoreLogOdds(
+          CorpusOps.tokenRows(t.in(docs), col("doc_id"), col("text")),
+          CorpusOps.logOddsModel(docs, col("text"), col("lang") === "en")))
         .orderBy(col("doc_id"))
     }, Some(logOddsOracle)),
 
@@ -1607,10 +1611,10 @@ object PipelineQueries {
     // proportional-ish to weight (n_chars here), deterministic via the
     // md5 roll. The oracle rebuilds the 52-bit roll nibble-by-nibble
     // (the p48 trick) and ranks by the identical log-space key.
-    ("p51_weighted_sample", (s, d) => {
-      graft.curation.Curation.sampleWeightedPerGroup(
-          Tables.documents(s, d), col("lang"), col("doc_id"),
-          col("n_chars"), k = 25)
+    ("p51_weighted_sample", Twinned { (s, d, t) =>
+      t.cut(graft.curation.Curation.sampleWeightedPerGroup(
+          t.in(Tables.documents(s, d)), col("lang"), col("doc_id"),
+          col("n_chars"), k = 25))
         .orderBy(col("group"), col("rank"))
     }, Some("""
       WITH r AS (SELECT lang, doc_id, n_chars,
@@ -1727,11 +1731,11 @@ object PipelineQueries {
     // the 64-cell sum, pure integers); min-id keeper election on the
     // 64-bit code. Ids sharing a fixture seed carry byte-identical
     // PNGs, so the election has true duplicate structure.
-    ("p56_phash_dedup", (s, d) => {
+    ("p56_phash_dedup", Twinned { (s, d, t) =>
       import graft.multimodal.ImageCodec
-      ImageCodec.perceptualHashGroups(
-          ImageCodec.SyntheticImages.pngFixture(Tables.documents(s, d), col("doc_id")),
-          col("media_id"), col("payload"))
+      val docs = Tables.documents(s, d)
+      ImageCodec.exactElection(phashFixtureCodes(docs),
+          t.cut(ImageCodec.codeGroups(phashFixtureCodes(t.in(docs)))))
         .orderBy(col("media_id"))
     }, Some(phashOracle)),
 
@@ -1782,9 +1786,10 @@ object PipelineQueries {
     // simultaneous left-to-right merge is one leftmost-nonoverlapping
     // regexp_replace per round in both engines; tie-break is
     // (count DESC, left, right) — engine-identical on ASCII.
-    ("p58_bpe_train", (s, d) => {
-      graft.text.CorpusOps.bpeTrainMerges(Tables.documents(s, d), col("text"),
-          numMerges = 8)
+    ("p58_bpe_train", Twinned { (s, d, t) =>
+      import graft.text.CorpusOps
+      CorpusOps.bpeMergesFromVocabDf(t.cut(CorpusOps.tokenCounts(
+          t.in(Tables.documents(s, d)), col("text"), "w", "cnt")), numMerges = 8)
         .orderBy(col("rank"))
     }, Some(bpeOracle(8))),
 
@@ -1838,14 +1843,15 @@ object PipelineQueries {
     // the canonical form from the generative formula directly (an
     // independent recompute of intent, not the canonicalizer run
     // twice), then elects the min-id keeper per key.
-    ("p63_url_dedup", (s, d) => {
-      val canon = Tables.documents(s, d)
+    ("p63_url_dedup", Twinned { (s, d, t) =>
+      def canon(docs: DataFrame): DataFrame = docs
         .select(col("doc_id"),
           graft.functions.SourceFamily.canonicalizeUrl(messyUrlFixture)
             .as("canonical_url"))
-      val groups = canon.groupBy(col("canonical_url"))
-        .agg(min(col("doc_id")).as("keeper_id"), count(lit(1)).as("group_size"))
-      canon.join(groups, Seq("canonical_url"))
+      val docs = Tables.documents(s, d)
+      val groups = t.cut(canon(t.in(docs)).groupBy(col("canonical_url"))
+        .agg(min(col("doc_id")).as("keeper_id"), count(lit(1)).as("group_size")))
+      canon(docs).join(groups, Seq("canonical_url"))
         .select(col("doc_id"), col("canonical_url"), col("keeper_id"),
           (col("doc_id") === col("keeper_id")).as("kept"), col("group_size"))
         .orderBy(col("doc_id"))
@@ -2333,11 +2339,12 @@ object PipelineQueries {
     // dominated (pair-local, the fuzzyDedup rule). The oracle
     // recomputes codes from the pixel formula and does the ALL-PAIRS
     // Hamming over distinct codes — banding must lose nothing.
-    ("p80_phash_near_dedup", (s, d) => {
+    ("p80_phash_near_dedup", Twinned { (s, d, t) =>
       import graft.multimodal.ImageCodec
-      ImageCodec.phashNearDedup(
-          ImageCodec.SyntheticImages.pngFixture(Tables.documents(s, d), col("doc_id")),
-          col("media_id"), col("payload"), maxDist = 7, bands = 8)
+      val docs = Tables.documents(s, d)
+      ImageCodec.nearElection(phashFixtureCodes(docs),
+          t.cut(ImageCodec.codeGroups(phashFixtureCodes(t.in(docs)))),
+          maxDist = 7, bands = 8)
         .orderBy(col("media_id"))
     }, Some(s"""
       WITH $phashCodedCtes,
@@ -2551,9 +2558,9 @@ object PipelineQueries {
     // ≤ partitions×sources×k rows instead of every distinct shingle
     // hash, integer-deterministic so the oracle reproduces the
     // estimates bit-for-bit (no tolerance band).
-    ("p84_sketch_overlap", (s, d) => {
-      graft.dedup.Dedup.sketchOverlap(Tables.documents(s, d),
-          col("source"), col("text"), shingleN = 3, k = 256)
+    ("p84_sketch_overlap", Twinned { (s, d, t) =>
+      Dedup.sketchOverlapFromSketch(t.cut(Dedup.sourceSketch(t.in(Tables.documents(s, d)),
+          col("source"), col("text"), shingleN = 3, k = 256)))
         .orderBy(col("source_a"), col("source_b"))
     }, Some(sketchOverlapOracle)),
 
@@ -2721,11 +2728,13 @@ object PipelineQueries {
     // values), cumulative window over the histogram, broadcast cutoffs,
     // map-side flags. Any integer micro-unit score plugs in (p45
     // perplexity, p81 log-odds); the entry calibrates on token count.
-    ("p90_quality_calibration", (s, d) => {
-      graft.curation.Curation.calibrateKeepRate(
-          Tables.documents(s, d), col("doc_id"), col("lang"),
-          TextFunctions.tokenCount(col("text")), rateMicro = 400000L,
-          keepLowest = true)
+    ("p90_quality_calibration", Twinned { (s, d, t) =>
+      import graft.curation.Curation
+      def rows(docs: DataFrame): DataFrame = Curation.scoreRows(docs, col("doc_id"),
+        col("lang"), TextFunctions.tokenCount(col("text")))
+      val docs = Tables.documents(s, d)
+      Curation.calibrateFromHist(t.cut(Curation.scoreHist(rows(t.in(docs)))), rows(docs),
+          rateMicro = 400000L, keepLowest = true)
         .orderBy(col("doc_id"))
     }, Some(s"""
       WITH sc AS (SELECT doc_id, lang,
@@ -3058,9 +3067,10 @@ object PipelineQueries {
     // query auto-completion index: top-3 completions by corpus
     // frequency for every 1..4-char prefix — ONE corpus-sized token
     // count, then everything (prefix explode, rank) is vocabulary-sized.
-    ("p103_prefix_index", (s, d) => {
-      graft.text.CorpusOps.prefixIndex(
-          Tables.documents(s, d), col("text"), maxLen = 4, k = 3)
+    ("p103_prefix_index", Twinned { (s, d, t) =>
+      import graft.text.CorpusOps
+      CorpusOps.prefixIndexFromVocab(t.cut(CorpusOps.tokenCounts(
+          t.in(Tables.documents(s, d)), lower(col("text")), "tok", "cnt")), maxLen = 4, k = 3)
         .orderBy(col("prefix"), col("rank"))
     }, Some(s"""
       WITH v AS (SELECT tok, count(*) AS cnt
@@ -3484,15 +3494,15 @@ object PipelineQueries {
     // ratio in integer micro-units (p81's truncate-once rule). The
     // model is ≤ 4096 rows at ANY corpus size — training is one
     // tiny-key count aggregate per side, scoring a broadcast join.
-    ("p115_dsir_weights", (s, d) => {
+    ("p115_dsir_weights", Twinned { (s, d, t) =>
       val docs = Tables.documents(s, d)
       val model = graft.text.CorpusOps.dsirModel(
         docs.filter(col("doc_id") % 101 =!= 0), col("doc_id"), col("text"),
         docs.filter(col("doc_id") % 101 === 0), col("doc_id"), col("text"),
         buckets = 4096)
-      graft.text.CorpusOps.dsirLogWeights(
-          docs.filter(col("doc_id") % 101 =!= 0), col("doc_id"), col("text"),
-          model)
+      t.cut(graft.text.CorpusOps.dsirLogWeights(
+          t.in(docs).filter(col("doc_id") % 101 =!= 0), col("doc_id"), col("text"),
+          model))
         .orderBy(col("doc_id"))
     }, Some(dsirOracle)),
 
@@ -4571,9 +4581,10 @@ object PipelineQueries {
     // domain under the minUrls floor at sf0.01 (the floor binds —
     // and at sf0.1 its 100 URLs cross it, which the oracle computes
     // consistently from the same counts).
-    ("p142_trap_signals", (s, d) => {
-      graft.graph.CrawlOps.trapSignals(
-          fetchLogFixtureFrom(Tables.documents(s, d)),
+    ("p142_trap_signals", Twinned { (s, d, t) =>
+      import graft.graph.CrawlOps
+      CrawlOps.trapSignalsFromDistinct(t.cut(CrawlOps.trapTriples(
+          fetchLogFixtureFrom(t.in(Tables.documents(s, d))))),
           minUrls = 20L, thresholdMicro = 2000000L)
         .orderBy(col("family"))
     }, Some("""
@@ -4850,9 +4861,10 @@ object PipelineQueries {
     // sort or window — rank via the distributed zipWithIndex);
     // checkpoints are config literals range-joined against the
     // ≤1000-row artifact.
-    ("p151_vocab_coverage", (s, d) => {
-      graft.text.CorpusOps.vocabCoverage(Tables.documents(s, d),
-          col("doc_id"), col("text"), Seq(10L, 100L, 1000L))
+    ("p151_vocab_coverage", Twinned { (s, d, t) =>
+      import graft.text.CorpusOps
+      CorpusOps.vocabCoverageFromTf(t.cut(CorpusOps.tokenCounts(
+          t.in(Tables.documents(s, d)), col("text"), "token", "tf")), Seq(10L, 100L, 1000L))
         .orderBy(col("k"))
     }, Some(s"""
       WITH toks AS (SELECT doc_id, unnest(${sqlToks("text")}) AS token
@@ -5133,9 +5145,11 @@ object PipelineQueries {
     // through the 256-entry alphabet literal) gates the byte path.
     // Same bounded-artifact scale shape as p58: one (word, count)
     // shuffle, then driver rounds on the vocabulary.
-    ("p158_bpe_bytes_train", (s, d) => {
-      graft.text.CorpusOps.bpeTrainMerges(Tables.documents(s, d),
-          byteTextFixture, numMerges = 8, byteLevel = true)
+    ("p158_bpe_bytes_train", Twinned { (s, d, t) =>
+      import graft.text.CorpusOps
+      CorpusOps.bpeMergesFromVocabDf(t.cut(CorpusOps.tokenCounts(
+          t.in(Tables.documents(s, d)), byteTextFixture, "w", "cnt")),
+          numMerges = 8, byteLevel = true)
         .orderBy(col("rank"))
     }, Some(byteBpeOracle(8))),
 
@@ -6697,9 +6711,12 @@ object PipelineQueries {
     // against the frozen tables. The oracle recomputes the entire
     // model AND the scoring chain; a discount slip, a token-counted
     // continuation, or a float summed before truncation is a red row.
-    ("p201_kn_perplexity", (s, d) => {
-      graft.text.CorpusOps.kneserNeyPerplexity(
-          Tables.documents(s, d), col("doc_id"), col("text"))
+    ("p201_kn_perplexity", Twinned { (s, d, t) =>
+      import graft.text.CorpusOps
+      val docs = Tables.documents(s, d)
+      t.cut(CorpusOps.scoreKneserNey(
+          CorpusOps.bigramRows(t.in(docs), col("doc_id"), col("text")),
+          CorpusOps.kneserNeyLm(docs, col("doc_id"), col("text"))))
         .orderBy(col("doc_id"))
     }, Some(knPerplexityOracle)),
 
@@ -6803,9 +6820,12 @@ object PipelineQueries {
     // recomputes the whole recursion and the micro-nat scoring chain.
     // CorpusOpsSpec pins hand-computed probabilities, per-context
     // mass closing to 1, and the three-deep degradation chain.
-    ("p205_kn_trigram_ppl", (s, d) => {
-      graft.text.CorpusOps.kneserNey3Perplexity(
-          Tables.documents(s, d), col("doc_id"), col("text"))
+    ("p205_kn_trigram_ppl", Twinned { (s, d, t) =>
+      import graft.text.CorpusOps
+      val docs = Tables.documents(s, d)
+      t.cut(CorpusOps.scoreKneserNey3(
+          CorpusOps.trigramRows(t.in(docs), col("doc_id"), col("text")),
+          CorpusOps.kneserNey3Lm(docs, col("doc_id"), col("text"))))
         .orderBy(col("doc_id"))
     }, Some(kn3PerplexityOracle)),
 
@@ -8972,6 +8992,14 @@ object PipelineQueries {
       when(col("doc_id") % 17 === 0,
         base.substr(lit(1), length(base) - 1)).otherwise(base))
   }
+
+  /** aHash codes of the synthetic PNG fixture over any (doc_id) frame:
+    * p56's and p80's media.
+    */
+  private def phashFixtureCodes(docs: DataFrame): DataFrame =
+    graft.multimodal.ImageCodec.aHashCodes(
+      graft.multimodal.ImageCodec.SyntheticImages.pngFixture(docs, col("doc_id")),
+      col("media_id"), col("payload"))
 
   /** p142's fetch-log fixture over any (doc_id) frame: healthy 1:1
     * families (every URL its own content), a trap domain serving 3

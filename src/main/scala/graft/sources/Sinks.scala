@@ -30,6 +30,19 @@ object Sinks {
     dir.toString
   }
 
+  /** Remove `dir` recursively now, and again at JVM exit in case a
+    * writer that was still running brings part of it back.
+    */
+  private[graft] def removeDir(dir: java.io.File): Unit = {
+    rm(dir)
+    tempDirs.add(dir)
+  }
+
+  private def rm(f: java.io.File): Unit = {
+    Option(f.listFiles).foreach(_.foreach(rm))
+    f.delete(); ()
+  }
+
   // ONE shutdown hook draining a shared queue, not one hook thread per
   // tempArtifactDir call: bench/correctness drivers invoke artifact
   // queries (p59/q67/q68/...) in a loop, and a per-call hook would
@@ -37,10 +50,6 @@ object Sinks {
   private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
       var f = tempDirs.poll()
       while (f != null) { rm(f); f = tempDirs.poll() }
     }))

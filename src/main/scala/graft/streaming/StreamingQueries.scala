@@ -31,18 +31,36 @@ import org.apache.spark.sql.types._
   * `staged`, and the frame it passes to `cut` runs to a memory sink
   * through [[runToMemory]], in complete mode when the cut aggregates
   * the stream and append mode otherwise. Whatever follows the cut (the
-  * ordering, a batch-side finalize) runs on the sink's table.
+  * ordering, a batch-side finalize) runs on the sink's table. A body
+  * that folds and then finalizes cuts between the two halves; a frozen
+  * model trains on the batch table outside both seams, and only the
+  * frame it scores is cut; a group-then-join cuts the grouped side and
+  * joins the batch rows to it.
   *
-  * The twins written here differ from their batch plan on purpose: a
-  * map-side form where the batch entry joins or aggregates
-  * (`decontaminate`, `spanScrubStream`, `unigramEncodeStream`,
-  * `semanticDecontamStream`), a finer-grained streaming fold with a
-  * shared batch-side finalize (the `…FromDistinct`/`…FromTf`/
-  * `…FromVocab` splits), a frozen model or published artifact served
-  * to a stream, more than one sink (`aliasChainsStream`), fixtures that
-  * are themselves the source under test (`tailReadDocuments`), the
-  * index and log twins behind the drain, and every function a spec
-  * calls by name.
+  * The twins written here differ from their batch plan on purpose:
+  *  - a fold the batch plan does not make: a UDAF buffer where the
+  *    batch entry folds SQL registers or bins (`hllDistinct`,
+  *    `histQuantiles`), a distinct-grain fold where the batch entry
+  *    counts distinct or diffs the raw ledger (`outlinksStream`,
+  *    `changeRatesStream`, `recrawlScheduleStream`), a word table where
+  *    the batch entry trains in one call (`unigramTrainStream`,
+  *    `wordPieceTrainStream`);
+  *  - a map-side form where the batch entry joins or aggregates
+  *    (`decontaminate`, `spanScrubStream`, `unigramEncodeStream`,
+  *    `semanticDecontamStream`, `selfDedupStream`, `filterFunnelStream`);
+  *  - a frozen model or published artifact served to a stream where the
+  *    batch entry scores another domain or broadcasts the panel
+  *    (`qualityLrScoring`, `sq8ServeStream`, `ivfSq8ServeStream`);
+  *  - more than one sink (`aliasChainsStream`), or a timer-driven
+  *    operator with its own runner (`pacedWorklistStream`);
+  *  - fixtures that are themselves the source under test
+  *    (`tailReadDocuments`);
+  *  - the index and log twins behind the drain (`logStructuredIndex`,
+  *    `spanIndexLog`, `indexTombstones`, `annIndexAppend`,
+  *    `minhashIndexAppend`);
+  *  - every function a spec calls by name (`tumblingWindow`,
+  *    `clickToPurchase`, `sessionWindow`, `lshCandidatePairs`,
+  *    `bm25TopK`, `minhashStreamingCandidates`).
   */
 object StreamingQueries {
 
@@ -112,8 +130,33 @@ object StreamingQueries {
   private def run(writer: DataStreamWriter[Row], trigger: Trigger)(
       await: StreamingQuery => Unit): Unit = {
     val q = writer.trigger(trigger).start()
-    try await(q) finally q.stop()
+    try await(q) finally stop(q)
   }
+
+  /** Stop `q`, then remove what is left of its checkpoint root when
+    * Spark made that root as a temporary dir (no checkpointLocation
+    * given). Spark deletes such a root itself when the query did not
+    * fail, but a task still writing state while that delete runs can
+    * leave part of it behind (`FileUtil: Failed to delete … it still
+    * exists`). A failed query's root stays, as Spark keeps it.
+    */
+  private[graft] def stop(q: StreamingQuery): Unit = {
+    q.stop()
+    if (q.exception.isEmpty) q match {
+      case w: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper =>
+        val root = new java.net.URI(w.streamingQuery.resolvedCheckpointRoot)
+        if (root.getScheme == "file") {
+          val dir = new java.io.File(root)
+          val tmp = new java.io.File(System.getProperty("java.io.tmpdir")).getCanonicalFile
+          if (dir.getParentFile == tmp && tempCheckpointName.matches(dir.getName) && dir.exists)
+            graft.sources.Sinks.removeDir(dir)
+        }
+      case _ =>
+    }
+  }
+
+  // the name Spark gives a checkpoint root it makes in java.io.tmpdir
+  private val tempCheckpointName = "temporary-[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}".r
 
   /** [[run]] into a fresh memory table, returned once `await` returns. */
   private def toMemory(df: DataFrame, mode: String, trigger: Trigger)(
@@ -352,7 +395,7 @@ object StreamingQueries {
     * first-wins election is [[StatefulOps.semanticStreamingDedup]]'s
     * bounded state. `centroids`: (centroid_id, centv) — kmeans output
     * or a fixed seed set, frozen at query start (the model-artifact
-    * deployment shape, like [[perplexityScoring]]).
+    * deployment shape, like q56's perplexity scoring).
     */
   def semanticStreamingDedup(vectors: DataFrame, id: org.apache.spark.sql.Column,
                              vec: org.apache.spark.sql.Column,
@@ -373,15 +416,6 @@ object StreamingQueries {
       StatefulOps.AssignedVec(StatefulOps.nearest(cents, v)._1, i, v, t)
     }
     StatefulOps.semanticStreamingDedup(assigned, threshold, maxPerCluster)
-  }
-
-  /** p01's exact-dedup grouping, executed via Structured Streaming. */
-  def exactDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.functions.TextFunctions
-    val agg = documentsStream(spark, sfDir)
-      .groupBy(TextFunctions.fingerprint(col("text")).as("fingerprint"))
-      .agg(min(col("doc_id")).as("keeper_id"), count(lit(1)).as("group_size"))
-    runToMemory(agg).orderBy(col("fingerprint"))
   }
 
   /** p35's first-occurrence chunk election executed on the streaming
@@ -461,73 +495,6 @@ object StreamingQueries {
     CorpusOps.funnelReport(one).orderBy(col("stage"))
   }
 
-  /** p08's brute-force similarity search on the streaming engine: the
-    * corpus STREAMS past a broadcast query set, each micro-batch scores
-    * its vectors map-side, and the per-query top-k is the same
-    * [[graft.functions.Aggregators.TopK]] bounded buffer running as
-    * streaming state — ≤ k rows per query held across batches, the
-    * live-index-refresh shape (vectors can keep arriving; the top-k is
-    * always current). Order-independent merge ⇒ batch-identical results
-    * under any micro-batch slicing.
-    */
-  def embeddingTopK(spark: SparkSession, sfDir: String, k: Int = 5): DataFrame = {
-    import graft.functions.VectorFunctions
-    val corpus = embeddingsStream(spark, sfDir)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
-    val queries = graft.Tables.embeddings(spark, sfDir)
-      .filter(col("vec_id") < 20)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val scored = corpus.join(broadcast(queries),
-        col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", round(VectorFunctions.cosine(col("cv"), col("qv")), 6))
-      .select(col("query_id"), col("neighbor_id"), col("cos"))
-    runToMemory(graft.similarity.SimilaritySearch.rankTopK(scored, k))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** p19's deterministic stratified sample on the streaming engine — the
-    * STATELESS end of the spectrum (vs the aggregates above): the
-    * md5-bucket dice roll is a pure map-side filter in the scan stage,
-    * so the streaming query holds zero state, admits rows identically to
-    * the batch plan no matter how ingest is sliced, and runs in append
-    * mode. This is how a 100 TB live ingest keeps a reproducible
-    * per-stratum sample without ever reconciling against batch.
-    */
-  def stratifiedSample(spark: SparkSession, sfDir: String,
-                       rates: Map[String, Double],
-                       defaultRate: Double): DataFrame = {
-    val sampled = graft.curation.Curation.stratifiedSample(
-        documentsStream(spark, sfDir), col("lang"), col("doc_id"),
-        rates, defaultRate)
-      .select(col("doc_id"), col("lang"),
-        graft.curation.Curation.hashBucket(col("doc_id")).as("bucket"))
-    runToMemory(sampled, mode = "append").orderBy(col("doc_id"))
-  }
-
-  /** p38's count-min heavy hitters on the streaming engine — the state
-    * story the sketch exists for: the stream folds every token into a
-    * FIXED depth×width cell matrix (one buffer row of streaming state,
-    * ~2 KB, vs one state row per distinct token for an exact groupBy),
-    * and the elementwise-add merge makes the result independent of
-    * micro-batch slicing. Probe estimates and exact counts are resolved
-    * batch-side from the finished sketch (the exact counts run as a
-    * second tiny-state streaming aggregate over the 6 probe tokens).
-    */
-  def heavyHitters(spark: SparkSession, sfDir: String,
-                   probes: Seq[String], width: Int = 64,
-                   depth: Int = 4): DataFrame = {
-    import graft.functions.{Aggregators, TextFunctions}
-    val cm = udaf(new Aggregators.CountMin(width, depth))
-    val toks = documentsStream(spark, sfDir)
-      .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
-    val sk = runToMemory(toks.agg(cm(col("tok")).as("sk")))
-      .select(col("sk.cells").as("sk"))
-    val exact = runToMemory(toks.filter(col("tok").isin(probes: _*))
-      .groupBy(col("tok")).agg(count(lit(1)).as("__exact")))
-    // scoring comes from the SAME probeReport definition as p38
-    Aggregators.CountMin.probeReport(sk, exact, probes, width, depth)
-  }
-
   /** q53: the [[graft.sources.FileTailSource]] read path under the
     * correctness gate — the one DSv2 source whose output is
     * SQL-expressible enough to oracle (VERDICT r3 §What's-missing #3).
@@ -572,44 +539,6 @@ object StreamingQueries {
     runToMemory(parsed, mode = "append").orderBy(col("doc_id"))
   }
 
-  /** p45's perplexity scoring on the streaming engine — the model-
-    * artifact deployment shape: the bigram LM is trained BATCH-side on
-    * the corpus snapshot ([[graft.text.CorpusOps.bigramLm]], three
-    * static count DataFrames), and the document stream scores against
-    * it via stream-static joins. Bigram formation is the same shared
-    * [[graft.text.CorpusOps.bigramRows]] projection (map-side, in the
-    * scan stage), so streaming scores are batch-identical by
-    * construction; streaming state is the per-doc (count, integer
-    * micro-unit sum) pair — order-independent, slice-independent.
-    */
-  def perplexityScoring(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.text.CorpusOps
-    val lm = CorpusOps.bigramLm(
-      graft.Tables.documents(spark, sfDir), col("doc_id"), col("text"))
-    val bg = CorpusOps.bigramRows(
-      documentsStream(spark, sfDir), col("doc_id"), col("text"))
-    runToMemory(CorpusOps.scoreBigrams(bg, lm)).orderBy(col("doc_id"))
-  }
-
-  /** p201's Kneser–Ney perplexity on the streaming engine — the same
-    * model-artifact deployment shape as [[perplexityScoring]]: the KN
-    * count tables train BATCH-side on the corpus snapshot
-    * ([[graft.text.CorpusOps.kneserNeyLm]]) and the document stream
-    * scores against the frozen tables via stream-static joins. Bigram
-    * expansion is the shared [[graft.text.CorpusOps.bigramRows]]
-    * projection and the scorer truncates −ln P to integer micro-nats
-    * per bigram, so streaming scores are batch-identical by
-    * construction — order- and slice-independent state.
-    */
-  def kneserNeyScoring(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.text.CorpusOps
-    val lm = CorpusOps.kneserNeyLm(
-      graft.Tables.documents(spark, sfDir), col("doc_id"), col("text"))
-    val bg = CorpusOps.bigramRows(
-      documentsStream(spark, sfDir), col("doc_id"), col("text"))
-    runToMemory(CorpusOps.scoreKneserNey(bg, lm)).orderBy(col("doc_id"))
-  }
-
   /** p203's logistic-regression quality scoring on the streaming
     * engine — weights train BATCH-side on the corpus snapshot
     * ([[graft.text.QualityLr.trainLr]]) and the document stream
@@ -630,66 +559,6 @@ object StreamingQueries {
     val toks = QualityLr.tokenBucketRows(documentsStream(spark, sfDir),
       col("doc_id"), col("text"), dim = 16)
     runToMemory(QualityLr.scoreTokens(toks, w)).orderBy(col("doc_id"))
-  }
-
-  /** p205's trigram-KN perplexity on the streaming engine — the
-    * [[kneserNeyScoring]] deployment shape one order higher: six
-    * frozen count tables train batch-side
-    * ([[graft.text.CorpusOps.kneserNey3Lm]]), the stream expands to
-    * trigrams through the shared [[graft.text.CorpusOps.trigramRows]]
-    * projection, and the scorer's per-trigram micro-nat truncation
-    * keeps the per-doc aggregate slice-independent.
-    */
-  def kneserNey3Scoring(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.text.CorpusOps
-    val lm = CorpusOps.kneserNey3Lm(
-      graft.Tables.documents(spark, sfDir), col("doc_id"), col("text"))
-    val tg = CorpusOps.trigramRows(
-      documentsStream(spark, sfDir), col("doc_id"), col("text"))
-    runToMemory(CorpusOps.scoreKneserNey3(tg, lm)).orderBy(col("doc_id"))
-  }
-
-  /** p81's discriminative quality scoring on the streaming engine —
-    * the same model-artifact deployment shape as [[perplexityScoring]]:
-    * the log-odds weights train BATCH-side on the corpus snapshot
-    * ([[graft.text.CorpusOps.logOddsModel]]), and the document stream
-    * scores against them via a stream-static join. Token expansion is
-    * the shared [[graft.text.CorpusOps.tokenRows]] projection, so
-    * streaming scores are batch-identical by construction; streaming
-    * state is the per-doc (count, integer micro-unit sum) pair —
-    * order- and slice-independent.
-    */
-  def logOddsScoring(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.text.CorpusOps
-    val docs = graft.Tables.documents(spark, sfDir)
-    val model = CorpusOps.logOddsModel(docs, col("text"), col("lang") === "en")
-    val toks = CorpusOps.tokenRows(
-      documentsStream(spark, sfDir), col("doc_id"), col("text"))
-    runToMemory(CorpusOps.scoreLogOdds(toks, model)).orderBy(col("doc_id"))
-  }
-
-  /** p115's DSIR importance scoring on the streaming engine — the
-    * model-artifact deployment shape ([[perplexityScoring]]'s rule):
-    * the ≤ buckets-row importance table trains BATCH-side on the
-    * corpus snapshot ([[graft.text.CorpusOps.dsirModel]]), and the
-    * document stream scores against it through the SAME
-    * [[graft.text.CorpusOps.dsirLogWeights]] definition (stream-static
-    * broadcast join over the shared hashed-feature expansion —
-    * batch-identical by construction). Streaming state is the per-doc
-    * (count, integer micro-unit sum) pair, order- and
-    * slice-independent.
-    */
-  def dsirScoring(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.text.CorpusOps
-    val docs = graft.Tables.documents(spark, sfDir)
-    val model = CorpusOps.dsirModel(
-      docs.filter(col("doc_id") % 101 =!= 0), col("doc_id"), col("text"),
-      docs.filter(col("doc_id") % 101 === 0), col("doc_id"), col("text"),
-      buckets = 4096)
-    val scored = CorpusOps.dsirLogWeights(
-      documentsStream(spark, sfDir).filter(col("doc_id") % 101 =!= 0),
-      col("doc_id"), col("text"), model)
-    runToMemory(scored).orderBy(col("doc_id"))
   }
 
   /** p118's semantic decontamination AT INGEST — the stateless end of
@@ -784,47 +653,6 @@ object StreamingQueries {
         .select(col("canonical"), col("allowed"), col("rule_pattern")),
       mode = "append")
       .orderBy(col("canonical"))
-  }
-
-  /** p142's crawler-trap detection on the streaming engine — the
-    * frontier guard runs WHILE the crawl fetches, not in a post-hoc
-    * batch audit: the fetch log folds cross-batch to its DISTINCT
-    * (family, canonical, fingerprint) triples (the q119 rule — state
-    * is the finest-grain fold, never the raw fetch log; re-fetches of
-    * an unchanged page update a count, not the state's size), and the
-    * ratio/threshold finalize runs batch-side at the epoch boundary
-    * through the SAME
-    * [[graft.graph.CrawlOps.trapSignalsFromDistinct]] half as the
-    * batch operator — shared definition, so the twins cannot drift.
-    */
-  def trapSignalsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val triples = graft.queries.PipelineQueries
-      .fetchLogFixtureFrom(documentsStream(spark, sfDir))
-      .groupBy(col("family"), col("canonical"), col("fingerprint"))
-      .agg(count(lit(1)).as("__n"))
-    graft.graph.CrawlOps.trapSignalsFromDistinct(
-        runToMemory(triples)
-          .select(col("family"), col("canonical"), col("fingerprint")),
-        minUrls = 20L, thresholdMicro = 2000000L)
-      .orderBy(col("family"))
-  }
-
-  /** p151's vocab-coverage curve maintained WHILE the corpus streams:
-    * the cross-batch state is the (token, tf) frequency table itself —
-    * vocabulary-bounded regardless of corpus size (the q119
-    * finest-grain-fold rule) — and the rank/checkpoint finalize runs
-    * batch-side at the epoch boundary through the SAME
-    * [[graft.text.CorpusOps.vocabCoverageFromTf]] half as the batch
-    * entry.
-    */
-  def vocabCoverageStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val tf = documentsStream(spark, sfDir)
-      .select(explode(
-        graft.functions.TextFunctions.tokens(col("text"))).as("token"))
-      .groupBy(col("token")).agg(count(lit(1)).as("tf"))
-    graft.text.CorpusOps.vocabCoverageFromTf(runToMemory(tf),
-        Seq(10L, 100L, 1000L))
-      .orderBy(col("k"))
   }
 
   /** p145's worklist with the frontier built WHILE discovery streams —
@@ -971,27 +799,6 @@ object StreamingQueries {
       .join(wl, Seq("dst_family", "pos"))
       .select(col("canonical"), col("dst_family"), col("pos"), col("round"))
       .orderBy(col("dst_family"), col("pos"))
-  }
-
-  /** p158's byte-level BPE training with the vocabulary folded from
-    * the stream — q70's split at byte level: the (word, count) table
-    * is the ONE streaming aggregation, the byte-seeded merge rounds
-    * run driver-side on the bounded artifact through the SAME
-    * [[graft.text.CorpusOps.bpeMergesFromVocabDf]] (single maxVocab
-    * site, single seeding code path — batch-identical by shared
-    * definition).
-    */
-  def byteBpeTrain(spark: SparkSession, sfDir: String,
-                   numMerges: Int = 8): DataFrame = {
-    import graft.functions.TextFunctions
-    val vocabDf = runToMemory(
-      documentsStream(spark, sfDir)
-        .select(explode(TextFunctions.tokens(
-          graft.queries.PipelineQueries.byteTextFixture)).as("w"))
-        .groupBy(col("w")).agg(count(lit(1)).as("cnt")))
-    graft.text.CorpusOps.bpeMergesFromVocabDf(vocabDf, numMerges,
-        byteLevel = true)
-      .orderBy(col("rank"))
   }
 
   /** p198's WordPiece training with the vocabulary folded from the
@@ -1403,108 +1210,6 @@ object StreamingQueries {
       .orderBy(col("tok"))
   }
 
-  /** p63's URL dedup on the streaming engine: arriving documents
-    * canonicalize their URL entirely MAP-SIDE (the shared
-    * [[graft.functions.SourceFamily.canonicalizeUrl]] — batch and
-    * stream cannot drift), and the election is ONE streaming
-    * aggregation whose state is a single (keeper_id, count) row per
-    * DISTINCT CANONICAL URL (the q66 election shape — bounded by the
-    * URL universe, which is what any crawl frontier stores anyway);
-    * min/count are order-independent, so results are micro-batch-
-    * slice-independent. Shares p63's oracle.
-    */
-  def urlDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    def canon(docs: DataFrame): DataFrame =
-      docs.select(col("doc_id"),
-        graft.functions.SourceFamily.canonicalizeUrl(
-          graft.queries.PipelineQueries.messyUrlFixture).as("canonical_url"))
-    val groups = runToMemory(canon(documentsStream(spark, sfDir))
-      .groupBy(col("canonical_url"))
-      .agg(min(col("doc_id")).as("keeper_id"), count(lit(1)).as("group_size")))
-    canon(graft.Tables.documents(spark, sfDir))
-      .join(groups, Seq("canonical_url"))
-      .select(col("doc_id"), col("canonical_url"), col("keeper_id"),
-        (col("doc_id") === col("keeper_id")).as("kept"), col("group_size"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** p56's perceptual-hash election on the streaming engine, now over
-    * REAL decoded pixels: arriving media encode/decode and fold to
-    * their textbook 8×8 aHash code entirely MAP-SIDE (the shared
-    * [[graft.multimodal.ImageCodec.aHashCodes]] — batch and stream
-    * cannot drift; PNG decode is stateless, so it streams), and the
-    * election is ONE streaming aggregation whose state is a single
-    * (keeper_id, count) row per DISTINCT CODE — bounded by the number
-    * of distinct aHash codes no matter how much media arrives. min/
-    * count are order-independent, so results are micro-batch-slice-
-    * independent; the per-media rows join the final group table against
-    * the deterministic batch-side codes (the hllDistinct resolution
-    * shape).
-    */
-  def phashDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.multimodal.ImageCodec
-    val codes = ImageCodec.aHashCodes(
-      ImageCodec.SyntheticImages.pngFixture(
-        documentsStream(spark, sfDir), col("doc_id")),
-      col("media_id"), col("payload"))
-    val groups = runToMemory(codes.groupBy(col("phash"))
-      .agg(min(col("media_id")).as("keeper_id"), count(lit(1)).as("group_size")))
-    ImageCodec.aHashCodes(
-        ImageCodec.SyntheticImages.pngFixture(
-          graft.Tables.documents(spark, sfDir), col("doc_id")),
-        col("media_id"), col("payload"))
-      .join(groups, Seq("phash"))
-      .select(col("media_id"), col("phash"), col("keeper_id"),
-        (col("media_id") === col("keeper_id")).as("kept"), col("group_size"))
-      .orderBy(col("media_id"))
-  }
-
-  /** p80's Hamming-tolerant near-dup election on the streaming engine —
-    * the q66 epoch shape one level up: the media stream folds into the
-    * DISTINCT-code election aggregate (phash → min keeper, count; the
-    * only state, bounded by distinct codes), and at the epoch boundary
-    * the code-level banded pairing + Hamming domination run batch-side
-    * over that tiny result via the SHARED
-    * [[graft.multimodal.ImageCodec.nearElection]] — slice-independent
-    * because min/count merge associatively. Shares p80's all-pairs
-    * oracle.
-    */
-  def phashNearDedupStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.multimodal.ImageCodec
-    val streamCodes = ImageCodec.aHashCodes(
-      ImageCodec.SyntheticImages.pngFixture(
-        documentsStream(spark, sfDir), col("doc_id")),
-      col("media_id"), col("payload"))
-    val groups = runToMemory(streamCodes.groupBy(col("phash"))
-      .agg(min(col("media_id")).as("keeper_id"), count(lit(1)).as("group_size")))
-    val codes = ImageCodec.aHashCodes(
-      ImageCodec.SyntheticImages.pngFixture(
-        graft.Tables.documents(spark, sfDir), col("doc_id")),
-      col("media_id"), col("payload"))
-    ImageCodec.nearElection(codes, groups, maxDist = 7, bands = 8)
-      .orderBy(col("media_id"))
-  }
-
-  /** p84's sketch-based cross-source overlap on the streaming engine.
-    * The streaming side folds [[graft.dedup.Dedup.sourceSketch]] — the
-    * SAME DataFrame program as the batch build, applied to the document
-    * stream, so the two paths cannot drift — and its only state is the
-    * (source, bucket) → min-hash aggregate, bounded by sources × k
-    * regardless of how much text streams through. The pair algebra
-    * ([[graft.dedup.Dedup.sketchOverlapFromSketch]]) runs batch-side on
-    * the final sketch at the epoch boundary. Slice-independent because
-    * bucket-min merges associatively and commutatively (pinned by the
-    * OperatorsSpec merge test); shares p84's oracle.
-    */
-  def sketchOverlapStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.dedup.Dedup
-    val sk = runToMemory(
-      Dedup.sourceSketch(documentsStream(spark, sfDir),
-        col("source"), col("text")))
-    Dedup.sketchOverlapFromSketch(sk)
-      .orderBy(col("source_a"), col("source_b"))
-  }
-
   /** p87's surgical scrubbing applied DURING ingest: the eval set is a
     * broadcast exact hash set (static side, built once from the batch
     * table), and every streaming document scrubs itself in the scan
@@ -1525,31 +1230,6 @@ object StreamingQueries {
         col("doc_id"), col("text"), evalHashes, n = 3),
       mode = "append")
     out.orderBy(col("doc_id"))
-  }
-
-  /** p90's keep-rate calibration on the streaming engine: the
-    * per-(group, score) HISTOGRAM is the associative half (counts sum),
-    * so the stream folds it with state bounded by distinct (lang,
-    * score) pairs — never by documents — and the cutoff + flag pass
-    * ([[graft.curation.Curation.calibrateFromHist]], shared with the
-    * batch entry) runs batch-side at the epoch boundary against the
-    * static table. Slice-independent because count merges; shares
-    * p90's oracle.
-    */
-  def calibrationStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.curation.Curation
-    import graft.functions.TextFunctions
-    val hist = runToMemory(
-      documentsStream(spark, sfDir)
-        .select(col("lang").as("group"),
-          TextFunctions.tokenCount(col("text")).as("score"))
-        .groupBy(col("group"), col("score")).agg(count(lit(1)).as("__c")))
-    val rows = graft.Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("lang").as("group"),
-        TextFunctions.tokenCount(col("text")).as("score"))
-    Curation.calibrateFromHist(hist, rows, rateMicro = 400000L,
-        keepLowest = true)
-      .orderBy(col("doc_id"))
   }
 
   /** p91's WHOLE release pipeline on the streaming engine — dedup →
@@ -1974,27 +1654,6 @@ object StreamingQueries {
       graft.Tables.documents(spark, sfDir)
         .filter(expr("floor(doc_id / 20) % 7 = 3")).select(col("doc_id"))))
 
-  /** p58's BPE tokenizer training on the streaming engine: the ONLY
-    * corpus-scale work — the (word, count) vocabulary — is ONE
-    * streaming aggregation whose state is a single count per distinct
-    * word (bounded by the vocabulary, the q65 df/cf state shape, and
-    * plain count is order/slice-independent); the merge rounds then run
-    * on the collected vocabulary artifact via the SHARED
-    * [[graft.text.CorpusOps.bpeMergesFromVocab]], so the learned merge
-    * table is batch-identical by construction.
-    */
-  def bpeTrain(spark: SparkSession, sfDir: String, numMerges: Int = 8): DataFrame = {
-    import graft.functions.TextFunctions
-    val vocabDf = runToMemory(
-      documentsStream(spark, sfDir)
-        .select(explode(TextFunctions.tokens(col("text"))).as("w"))
-        .groupBy(col("w")).agg(count(lit(1)).as("cnt")))
-    // guard + collect + merge rounds shared with the batch form (single
-    // maxVocab default site)
-    graft.text.CorpusOps.bpeMergesFromVocabDf(vocabDf, numMerges)
-      .orderBy(col("rank"))
-  }
-
   /** p48's HyperLogLog vocabulary cardinality on the streaming engine —
     * the sketch-state story beside count-min (q50): the stream folds
     * every token into ONE fixed m-int register buffer per language
@@ -2134,24 +1793,6 @@ object StreamingQueries {
       .orderBy(col("group"), col("quantile"))
   }
 
-  /** p51's weighted reservoir on the streaming engine — the A-ES key
-    * is a map-side projection of each arriving document (md5 roll →
-    * ln(u)/weight, shared semantics with the batch form), and the
-    * exactly-k reservoir per group is the bounded TopK buffer as
-    * streaming state (≤ k rows per group — a true streaming reservoir:
-    * any prefix of the stream holds that prefix's exact-k sample).
-    */
-  def weightedSample(spark: SparkSession, sfDir: String, k: Int = 25): DataFrame = {
-    val stream = documentsStream(spark, sfDir)
-    val scored = stream.select(col("lang").as("query_id"),
-      col("doc_id").as("neighbor_id"),
-      graft.curation.Curation.aesKey(col("doc_id"), col("n_chars")).as("cos"))
-    runToMemory(graft.similarity.SimilaritySearch.rankTopK(scored, k))
-      .select(col("query_id").as("group"), col("neighbor_id").as("key"),
-        col("rank"))
-      .orderBy(col("group"), col("rank"))
-  }
-
   /** p23's eval-set decontamination gate on the streaming engine —
     * ZERO-STATE: the eval split's distinct shingle hashes are reduced
     * batch-side to ONE broadcast array row (eval sets are small by
@@ -2240,7 +1881,7 @@ object StreamingQueries {
     * dedup (min-id per fingerprint, the only stateful step). Everything
     * upstream of the aggregate stays in the scan stage, so the
     * streaming state is one row per distinct fingerprint — identical
-    * state shape to [[exactDedup]] regardless of how many gates are
+    * state shape to q31's exact dedup regardless of how many gates are
     * composed in front.
     */
   def curationPipeline(spark: SparkSession, sfDir: String,
@@ -2290,44 +1931,6 @@ object StreamingQueries {
       .getOrElse(new EmbeddingStats.CovMoments(dim).zero)
     EmbeddingStats.numeratorRows(spark, buf, dim)
       .orderBy(col("i"), col("j"))
-  }
-
-  /** p103's autocomplete index on the streaming engine: the vocabulary
-    * token count is the associative half (counts sum), folded with
-    * state bounded by the VOCABULARY — never documents — in the scan
-    * stage's explode; the prefix explode + rank pass runs batch-side
-    * at the epoch boundary through the shared
-    * [[graft.text.CorpusOps.prefixIndexFromVocab]]. Shares p103's
-    * oracle.
-    */
-  def prefixIndexStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.functions.TextFunctions
-    val vocab = runToMemory(
-      documentsStream(spark, sfDir)
-        .select(explode(TextFunctions.tokens(lower(col("text")))).as("tok"))
-        .groupBy(col("tok")).agg(count(lit(1)).as("cnt")))
-    graft.text.CorpusOps.prefixIndexFromVocab(vocab, maxLen = 4, k = 3)
-      .orderBy(col("prefix"), col("rank"))
-  }
-
-  /** q97's rolling-active report on the streaming engine: the distinct
-    * (day, user) grid is the associative half (distinct-ness merges),
-    * so the stream folds it with state bounded by user-days — never
-    * events — through the SAME [[graft.operators.TimeWindow.dailyUsers]]
-    * projection shape the batch entry uses; the ×7 contribution
-    * explode, distinct counts, and stickiness ratio run batch-side at
-    * the epoch boundary via the shared
-    * [[graft.operators.TimeWindow.rollingActive]]. Shares q97's oracle.
-    */
-  def rollingActiveStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.operators.TimeWindow
-    val grid = runToMemory(
-      eventsStream(spark, sfDir)
-        .select((unix_timestamp(date_trunc("day", col("ts"))) / 86400)
-          .cast("long").as("day"), col("user_id"))
-        .groupBy(col("day"), col("user_id")).agg(count(lit(1)).as("__c")))
-      .select(col("day"), col("user_id"))
-    TimeWindow.rollingActive(grid).orderBy(col("day"))
   }
 
   /** p110's audio statistics on the streaming engine: the encode /

@@ -776,9 +776,17 @@ object CorpusOps {
     */
   def vocabCoverage(docs: DataFrame, id: Column, text: Column,
                     ks: Seq[Long]): DataFrame =
-    vocabCoverageFromTf(
-      docs.select(explode(TextFunctions.tokens(text)).as("token"))
-        .groupBy(col("token")).agg(count(lit(1)).as("tf")), ks)
+    vocabCoverageFromTf(tokenCounts(docs, text, "token", "tf"), ks)
+
+  /** The vocabulary fold: one (`tok`, `cnt`) row per distinct token of
+    * `text`. Counts sum, so a stream folds it with state bounded by the
+    * vocabulary; [[vocabCoverage]], [[bpeTrainMerges]] and
+    * [[prefixIndex]] finalize it.
+    */
+  private[graft] def tokenCounts(docs: DataFrame, text: Column,
+                                 tok: String, cnt: String): DataFrame =
+    docs.select(explode(TextFunctions.tokens(text)).as(tok))
+      .groupBy(col(tok)).agg(count(lit(1)).as(cnt))
 
   /** The finalize half of [[vocabCoverage]] over an ALREADY-folded
     * (token, tf) frequency table — shared with the streaming twin,
@@ -2498,15 +2506,9 @@ object CorpusOps {
     */
   def bpeTrainMerges(docs: DataFrame, text: Column, numMerges: Int,
                      maxVocab: Int = 1000000,
-                     byteLevel: Boolean = false): DataFrame = {
-    require(numMerges > 0, s"numMerges must be positive, got $numMerges")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    bpeMergesFromVocabDf(docs
-      .select(explode(TextFunctions.tokens(text)).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("cnt")),
-      numMerges, maxVocab, byteLevel)
-  }
+                     byteLevel: Boolean = false): DataFrame =
+    bpeMergesFromVocabDf(tokenCounts(docs, text, "w", "cnt"), numMerges,
+      maxVocab, byteLevel)
 
   /** [[bpeTrainMerges]] from an already-counted (w, cnt) vocabulary
     * frame — SHARED with the streaming twin (which maintains the table
@@ -2520,6 +2522,7 @@ object CorpusOps {
   private[graft] def bpeMergesFromVocabDf(vocabDf: DataFrame, numMerges: Int,
                                           maxVocab: Int = 1000000,
                                           byteLevel: Boolean = false): DataFrame = {
+    require(numMerges > 0, s"numMerges must be positive, got $numMerges")
     val n = vocabDf.count()
     require(n <= maxVocab,
       s"bpeTrainMerges: vocabulary $n exceeds maxVocab $maxVocab — " +
@@ -2721,10 +2724,7 @@ object CorpusOps {
     */
   def prefixIndex(docs: DataFrame, text: Column, maxLen: Int = 4,
                   k: Int = 3): DataFrame =
-    prefixIndexFromVocab(
-      docs.select(explode(TextFunctions.tokens(lower(text))).as("tok"))
-        .groupBy(col("tok")).agg(count(lit(1)).as("cnt")),
-      maxLen, k)
+    prefixIndexFromVocab(tokenCounts(docs, lower(text), "tok", "cnt"), maxLen, k)
 
   /** The vocabulary-scale half of [[prefixIndex]] — SHARED with the
     * streaming twin (token counts are the associative half; the stream
@@ -2772,9 +2772,7 @@ object CorpusOps {
       array(col("__t")),
       expr("transform(sequence(1, length(__t)), " +
         "i -> concat(substring(__t, 1, i - 1), substring(__t, i + 1)))")))
-    val vocab = docs
-      .select(explode(TextFunctions.tokens(lower(text))).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
+    val vocab = tokenCounts(docs, lower(text), "tok", "cnt")
     val vocabVars = vocab.withColumn("__t", col("tok"))
       .select(col("tok"), col("cnt"), deletions.as("variant"))
     val probeVars = probes.toDF("probe").withColumn("__t", col("probe"))

@@ -497,7 +497,32 @@ class StreamingSpec extends AnyFunSuite {
     "q156_streaming_meta_refresh" -> "p216_meta_refresh",
     "q158_streaming_gif_frames" -> "p221_gif_frames",
     "q161_streaming_sentence_chunks" -> "p227_sentence_chunks",
-    "q162_streaming_langid_script" -> "p224_langid_script")
+    "q162_streaming_langid_script" -> "p224_langid_script",
+    // the whole body runs on the stream
+    "q31_streaming_dedup" -> "p01_dedup_exact",
+    "q51_streaming_ann" -> "p08_embedding_topk",
+    "q52_streaming_sample" -> "p19_stratified_sample",
+    "q62_streaming_weighted_sample" -> "p51_weighted_sample",
+    // frozen-model scorers: the model trains on the batch table
+    "q56_streaming_perplexity" -> "p45_perplexity",
+    "q81_streaming_log_odds" -> "p81_log_odds_quality",
+    "q113_streaming_dsir" -> "p115_dsir_weights",
+    "q143_streaming_kn" -> "p201_kn_perplexity",
+    "q146_streaming_kn3" -> "p205_kn_trigram_ppl",
+    // fold on the stream, finalize on the cut
+    "q50_streaming_heavy_hitters" -> "p38_heavy_hitters",
+    "q70_streaming_bpe_train" -> "p58_bpe_train",
+    "q83_streaming_sketch_overlap" -> "p84_sketch_overlap",
+    "q86_streaming_calibration" -> "p90_quality_calibration",
+    "q98_streaming_active" -> "q97_rolling_active",
+    "q102_streaming_prefix" -> "p103_prefix_index",
+    "q121_streaming_trap" -> "p142_trap_signals",
+    "q128_streaming_vocab_coverage" -> "p151_vocab_coverage",
+    "q131_streaming_byte_bpe_train" -> "p158_bpe_bytes_train",
+    // group on the stream, join the batch rows to the cut
+    "q66_streaming_phash_dedup" -> "p56_phash_dedup",
+    "q72_streaming_url_dedup" -> "p63_url_dedup",
+    "q82_streaming_phash_near" -> "p80_phash_near_dedup")
 
   test("derived streaming twins return their batch entries' rows") {
     def rows(name: String): Seq[String] =
@@ -507,11 +532,13 @@ class StreamingSpec extends AnyFunSuite {
           case v => String.valueOf(v)
         }.mkString("|"))
         .sorted
+    // an empty twin and an empty batch entry would compare equal
     val differing = derivedTwins.filterNot { case (twin, batch) =>
+      val r = rows(twin)
       SparkEntry.oracleSql(twin) == SparkEntry.oracleSql(batch) &&
-        rows(twin) == rows(batch)
+        r.nonEmpty && r == rows(batch)
     }
-    assert(differing.isEmpty, s"twins differing from their batch entries: $differing")
+    assert(differing.isEmpty, s"twins empty or differing from their batch entries: $differing")
   }
 
   // q37/q44 read-path parity pins, mirroring q21's: the streaming result
@@ -776,14 +803,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(s.nonEmpty && s.toSeq == b.toSeq)
   }
 
-  test("streaming weighted reservoir equals the batch sampler (q62 vs p51)") {
-    val viaStream = graft.streaming.StreamingQueries.weightedSample(spark, TestSpark.sf)
-    val viaBatch = SparkEntry.queries("p51_weighted_sample")(spark, TestSpark.sf)
-    val s = viaStream.collect().map(_.toString).sorted
-    val b = viaBatch.collect().map(_.toString).sorted
-    assert(s.nonEmpty && s.toSeq == b.toSeq)
-  }
-
   test("streaming zero-state decontamination equals the batch gate (q63 vs p23)") {
     val viaStream = graft.streaming.StreamingQueries.decontaminate(spark, TestSpark.sf)
     val viaBatch = SparkEntry.queries("p23_decontam")(spark, TestSpark.sf)
@@ -792,12 +811,38 @@ class StreamingSpec extends AnyFunSuite {
     assert(s.nonEmpty && s.toSeq == b.toSeq)
   }
 
-  test("streaming perplexity scoring equals the batch plan (q56 vs p45)") {
-    val viaStream = graft.streaming.StreamingQueries.perplexityScoring(spark, TestSpark.sf)
-    val viaBatch = SparkEntry.queries("p45_perplexity")(spark, TestSpark.sf)
-    val s = viaStream.collect().map(_.toString).sorted
-    val b = viaBatch.collect().map(_.toString).sorted
-    assert(s.nonEmpty && s.toSeq == b.toSeq)
+  test("stop removes what is left of a temporary checkpoint and keeps a given one") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    def counts(input: MemoryStream[Long]) =
+      input.toDF().groupBy(col("value") % 3).count().writeStream.format("memory")
+        .outputMode(OutputMode.Complete)
+    def root(q: org.apache.spark.sql.streaming.StreamingQuery) = new java.io.File(
+      new java.net.URI(q.asInstanceOf[StreamingQueryWrapper].streamingQuery.resolvedCheckpointRoot))
+    val input = MemoryStream[Long]
+    val q = counts(input).queryName("ckpt_temp").start()
+    input.addData(0L until 10L)
+    q.processAllAvailable()
+    val temp = root(q)
+    assert(temp.getName.startsWith("temporary-") && temp.isDirectory)
+    TestSpark.quietStop(q)
+    assert(!temp.exists)
+    // a state write that lands after Spark's own delete
+    val late = new java.io.File(temp, "state/0/2/1.delta")
+    late.getParentFile.mkdirs()
+    java.nio.file.Files.write(late.toPath, Array[Byte](1))
+    graft.streaming.StreamingQueries.stop(q)
+    assert(!temp.exists)
+    // a checkpointLocation the caller gave is the caller's to keep
+    val given = graft.sources.Sinks.tempArtifactDir("ckpt_given")
+    val input2 = MemoryStream[Long]
+    val q2 = counts(input2).queryName("ckpt_given")
+      .option("checkpointLocation", given).start()
+    input2.addData(0L until 10L)
+    q2.processAllAvailable()
+    TestSpark.quietStop(q2)
+    assert(new java.io.File(given, "offsets").isDirectory)
   }
 
   test("tail-read of the documents fixture round-trips every byte (q53)") {

@@ -44,8 +44,10 @@ object TestSpark {
     * the test asserts is already materialized when this runs. The OFF
     * window holds briefly PAST the stop: an interrupted in-flight task
     * logs its abort asynchronously on an executor thread, after
-    * `stop()` has already returned.
+    * `stop()` has already returned. What that task leaves of a
+    * temporary checkpoint goes with the query, as in the engine's own
+    * runner.
     */
   def quietStop(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    quietly { q.stop(); Thread.sleep(300) }
+    quietly { graft.streaming.StreamingQueries.stop(q); Thread.sleep(300) }
 }
