@@ -16,7 +16,9 @@ object SparkEntry {
   /** Streaming executions of engine queries — same oracle as their batch
     * twins, but run through Structured Streaming (file source → agg →
     * memory sink, Trigger.AvailableNow). `derived` twins run their batch
-    * entry's own body (see [[graft.streaming.StreamingQueries]]).
+    * entry's own body (see [[graft.streaming.StreamingQueries]]). With
+    * the query files' own `streamingDefs` this is every entry that
+    * starts a stream when called.
     */
   private def streamingDefs: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = {
     val batch = (PipelineQueries.defs ++ PipelineQueries.lateDefs ++ Extended.defs)
@@ -34,7 +36,7 @@ object SparkEntry {
       case _ => throw new IllegalStateException(
         s"streaming twin: batch entry '$from' is not Twinned")
     }
-    Seq(
+    Seq[(String, (SparkSession, String) => DataFrame, Option[String])](
     ("q30_streaming_window",
       (s, d) => graft.streaming.StreamingQueries.tumblingWindow(s, d),
       Some("""
@@ -288,8 +290,16 @@ object SparkEntry {
                CAST(min(file_id * 1000000000000 + "offset")
                  % 1000000000000 AS BIGINT) AS orig_offset,
                count(*) AS n_copies
-        FROM cdx GROUP BY digest ORDER BY digest"""))))
+        FROM cdx GROUP BY digest ORDER BY digest""")))) ++
+      ParityQueries.streamingDefs ++ PipelineQueries.streamingDefs ++
+      Extended.streamingDefs
   }
+
+  /** The names of every entry that starts a Structured Streaming query
+    * when called — the registry [[streamingDefs]] builds.
+    */
+  private[graft] lazy val streamingNames: Set[String] =
+    streamingDefs.map(_._1).toSet
 
   private lazy val all: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] =
     Relational.defs ++ ParityQueries.defs ++ PipelineQueries.defs ++

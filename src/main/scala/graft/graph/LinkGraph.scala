@@ -515,9 +515,12 @@ object LinkGraph {
       s"hits: iters must be in [0, 50], got $iters")
     val e = edges.select(col("src"), col("dst")).distinct()
       .localCheckpoint(eager = false)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(eager = false)
+    // one scan of `e` for both endpoints, and eager: round one reads
+    // the node table twice in concurrent stages (the init scores and
+    // the score join), which raced for its lazy checkpoint's partitions
+    val nodes = e.select(explode(array(col("src"), col("dst"))).as("node"))
+      .distinct()
+      .localCheckpoint()
     // one half-round: fold `scores` along the edge key (src for the
     // auth half, dst for the hub half), re-scale max → 10⁶
     def half(scores: DataFrame, value: String, from: Column, to: Column,
@@ -532,7 +535,10 @@ object LinkGraph {
       nodes.join(raw, Seq("node"), "left").join(broadcast(m))
         .select(col("node"),
           expr("coalesce(s, CAST(0 AS BIGINT)) * 1000000 div m").as(out))
-        .localCheckpoint(eager = false)
+        // eager: the next half-round (and the result) reads it in two
+        // concurrent stages, which raced for a lazy checkpoint's
+        // partitions
+        .localCheckpoint()
     }
     var hubs = nodes.select(col("node"), lit(1000000L).as("h"))
     var auths = nodes.select(col("node"), lit(0L).as("a"))
@@ -940,47 +946,10 @@ object LinkGraph {
       .agg(max(col("lastmod")).as("lastmod"))
   }
 
-  /** [[robotsFilter]] reformulated for the SCAN stage — the shape a
-    * streaming frontier needs: the rule table (static, config-sized)
-    * pre-folds to ONE row per family holding its rule array, the
-    * stream broadcast-joins it, and the RFC 9309 longest-match runs
-    * per row inside a higher-order `aggregate` — no per-URL
-    * aggregation, no state, so it stacks under a downstream stateful
-    * fold (Spark allows one streaming aggregation per query). Tie and
-    * no-match semantics are IDENTICAL to [[robotsFilter]] (max over
-    * (prefix length, allow, prefix); fail-open (0, true, '') when no
-    * rule matches — spec-pinned equal on distinct input). Unlike
-    * [[robotsFilter]] this does NOT dedup: one output row per input
-    * row (a deduping consumer — the frontier's bounded buffer —
-    * handles repeats itself).
-    */
-  def robotsFilterScan(urls: DataFrame, rules: DataFrame): DataFrame = {
-    val r = rules.groupBy(col("family"))
-      .agg(collect_list(struct(col("prefix"), col("allow"))).as("__rules"))
-    urls.select(col("canonical"), col("dst_family"))
-      .withColumn("path",
-        regexp_replace(col("canonical"), "^[a-z][a-z0-9+.-]*://[^/]*", ""))
-      .join(broadcast(r), col("dst_family") === col("family"), "left")
-      .withColumn("__m", expr("""
-        aggregate(
-          filter(coalesce(__rules, array()),
-            r -> startswith(path, r.prefix)),
-          cast(null as struct<l:int, allow:boolean, prefix:string>),
-          (acc, r) -> if(acc is null
-              or named_struct('l', length(r.prefix), 'allow', r.allow,
-                              'prefix', r.prefix) > acc,
-            named_struct('l', length(r.prefix), 'allow', r.allow,
-                         'prefix', r.prefix),
-            acc))"""))
-      .select(col("canonical"), col("dst_family"),
-        coalesce(col("__m.allow"), lit(true)).as("allowed"),
-        coalesce(col("__m.prefix"), lit("")).as("rule_prefix"))
-  }
-
   /** The robots gate under the FULL RFC 9309 pattern grammar — what
-    * the prefix tiers ([[robotsFilter]]/[[robotsFilterScan]]) loudly
-    * refuse: `*` anywhere, trailing `$` anchors, matched by the
-    * codegen'd [[graft.functions.RobotsMatch]] kernel. Precedence is
+    * the prefix tier ([[robotsFilter]]) loudly refuses: `*` anywhere,
+    * trailing `$` anchors, matched by the codegen'd
+    * [[graft.functions.RobotsMatch]] kernel. Precedence is
     * §2.2.2's most-specific-match: the matching rule with the LONGEST
     * pattern wins (OCTET length of the raw pattern string, wildcards
     * and anchor included — RFC 9309 matches octets and the reference
@@ -991,16 +960,18 @@ object LinkGraph {
     * order, shared with the oracle, so a full tie cannot desync the
     * reported rule).
     *
-    * Scale shape — [[robotsFilterScan]]'s: rules collapse to a
-    * per-family broadcast array and the election is a per-row
-    * scan-stage fold (stateless, so the streaming twin runs it at
-    * ingest with ZERO state rows), never a urls×rules shuffle. The
-    * broadcast hint is sized to the operating contract: the rule
-    * table is a per-crawl-round snapshot (the domains the ROUND
-    * touches — politeness metadata, not corpus), exactly like the
-    * prefix tier's. A caller holding a full 10⁸-domain rule ARCHIVE
-    * should pre-filter it to the frontier's families (one semi-join)
-    * before gating — the filter is the same family key the join uses.
+    * Scale shape: rules collapse to a per-family broadcast array and
+    * the election is a per-row scan-stage fold — no per-URL
+    * aggregation and no dedup (one output row per input row), so the
+    * streaming twin runs it at ingest with ZERO state rows and the
+    * streaming crawl frontier stacks its one stateful fold under it;
+    * never a urls×rules shuffle. The broadcast hint is sized to the
+    * operating contract: the rule table is a per-crawl-round snapshot
+    * (the domains the ROUND touches — politeness metadata, not
+    * corpus), exactly like the prefix tier's. A caller holding a full
+    * 10⁸-domain rule ARCHIVE should pre-filter it to the frontier's
+    * families (one semi-join) before gating — the filter is the same
+    * family key the join uses.
     */
   def robotsFilterWildcard(urls: DataFrame, rules: DataFrame): DataFrame = {
     val r = rules.groupBy(col("family"))
@@ -1126,15 +1097,19 @@ object LinkGraph {
   private def prSetup(edges: DataFrame, seeds: Option[DataFrame]): PrGraph = {
     val e = edges.select(col("src"), col("dst")).distinct()
       .localCheckpoint(eager = false)
-    val nodes0 = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
+    // both endpoints from ONE scan of `e`: a union of two scans reads
+    // each partition of the lazy checkpoint twice in one stage
+    val nodes0 = e.select(explode(array(col("src"), col("dst"))).as("node"))
+      .distinct()
     // (node, is_seed) — the static teleport side; global PageRank is
-    // the every-node-is-a-seed special case
+    // the every-node-is-a-seed special case. Eager: round one reads it
+    // twice in concurrent stages (the init scores and the teleport
+    // join), which raced for a lazy checkpoint's partitions
     val nodes = seeds.fold(nodes0.withColumn("is_seed", lit(true))) { sd =>
       nodes0.join(broadcast(sd.withColumn("is_seed", lit(true))),
           Seq("node"), "left")
         .select(col("node"), coalesce(col("is_seed"), lit(false)).as("is_seed"))
-    }.localCheckpoint(eager = false)
+    }.localCheckpoint()
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     // the static side of every round's join: (src, dst, deg)
     PrGraph(nodes, e.join(outdeg, "src").localCheckpoint(eager = false))
@@ -1157,8 +1132,8 @@ object LinkGraph {
         .localCheckpoint(eager = false)
     }
 
-  private def prRound(g: PrGraph, ranks: DataFrame,
-                      dampPermille: Int): DataFrame = {
+  private def prRound(g: PrGraph, ranks: DataFrame, dampPermille: Int,
+                      eager: Boolean = false): DataFrame = {
     val base = (1000L - dampPermille) * 1000L
     val contrib = g.ew
       .join(ranks, g.ew("src") === ranks("node"))
@@ -1174,8 +1149,11 @@ object LinkGraph {
     // (r14) measured SLOWER on the driver's conditions (+29%) and the
     // r15 A/B confirmed every-round is the faster cadence (min-of-6
     // 1.89 s vs 2.03-2.06 s) — 4-deep un-truncated plans re-plan per
-    // AQE round and cost more than the cache round-trip they save
-    next.localCheckpoint(eager = false)
+    // AQE round and cost more than the cache round-trip they save.
+    // The LAST round is eager: its caller may read the ranks in
+    // concurrent stages (crawlBudgetWithCaps' totals and rows), which
+    // raced for a lazy checkpoint's partitions
+    next.localCheckpoint(eager)
   }
 
   private def pageRankImpl(edges: DataFrame, iters: Int,
@@ -1188,8 +1166,8 @@ object LinkGraph {
       s"pageRank: dampPermille must be in [0, 1000], got $dampPermille")
     val g = prSetup(edges, seeds)
     var ranks = prInit(g, init)
-    for (_ <- 1 to iters)
-      ranks = prRound(g, ranks, dampPermille)
+    for (i <- 1 to iters)
+      ranks = prRound(g, ranks, dampPermille, eager = i == iters)
     ranks
   }
 }

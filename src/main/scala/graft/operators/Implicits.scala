@@ -144,11 +144,11 @@ object Implicits {
 
     def kneserNeyPerplexity(id: Column, text: Column,
                             discount: Double = 0.75): DataFrame =
-      graft.text.CorpusOps.kneserNeyPerplexity(df, id, text, discount)
+      graft.text.CorpusOps.kneserNeyPerplexity(df, id, text, 2, discount)
 
     def kneserNey3Perplexity(id: Column, text: Column,
                              discount: Double = 0.75): DataFrame =
-      graft.text.CorpusOps.kneserNey3Perplexity(df, id, text, discount)
+      graft.text.CorpusOps.kneserNeyPerplexity(df, id, text, 3, discount)
 
     def qualityLrScore(id: Column, text: Column, weights: DataFrame,
                        dim: Int): DataFrame =

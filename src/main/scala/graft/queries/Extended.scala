@@ -225,23 +225,6 @@ object Extended {
              round(sum(value), 2) AS sum_value
       FROM w GROUP BY 1, 2 ORDER BY 1, 2""")),
 
-    // q22's sessions on the REAL streaming engine (session_window state
-    // merging) against the same batch gaps-and-islands oracle
-    ("q44_streaming_session", (s, d) =>
-      graft.streaming.StreamingQueries.sessionWindow(s, d),
-      Some("""
-      WITH x AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-      y AS (SELECT *, CASE WHEN lag(us) OVER w IS NULL
-                             OR us - lag(us) OVER w >= 1800000000 THEN 1 ELSE 0 END AS new_s
-            FROM x WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-      z AS (SELECT *, CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-            FROM y)
-      SELECT make_timestamp(min(us)) AS session_start, user_id,
-             count(*) AS n_events,
-             min(event_id) AS min_event_id, max(event_id) AS max_event_id
-      FROM z GROUP BY user_id, session_id ORDER BY user_id, session_start""")),
-
     // LATERAL correlated derived table (per-row top-n subquery) — the
     // ANSI form of top-n-per-group, planned by Spark as a rewritten
     // window/join, by DuckDB natively
@@ -744,5 +727,26 @@ object Extended {
       SELECT event_id, user_id, round("value", 2) AS "value", last_touch_id,
              ft.i AS first_touch_id, n_window_clicks
       FROM w WHERE event_type = 'purchase' ORDER BY event_id"""))
+  )
+
+  /** Entries that start a Structured Streaming query when called —
+    * registered in [[graft.SparkEntry.streamingNames]]. */
+  def streamingDefs: Seq[(String, Q, Option[String])] = Seq(
+    // q22's sessions on the REAL streaming engine (session_window state
+    // merging) against the same batch gaps-and-islands oracle
+    ("q44_streaming_session", (s, d) =>
+      graft.streaming.StreamingQueries.sessionWindow(s, d),
+      Some("""
+      WITH x AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
+      y AS (SELECT *, CASE WHEN lag(us) OVER w IS NULL
+                             OR us - lag(us) OVER w >= 1800000000 THEN 1 ELSE 0 END AS new_s
+            FROM x WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
+      z AS (SELECT *, CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
+              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+            FROM y)
+      SELECT make_timestamp(min(us)) AS session_start, user_id,
+             count(*) AS n_events,
+             min(event_id) AS min_event_id, max(event_id) AS max_event_id
+      FROM z GROUP BY user_id, session_id ORDER BY user_id, session_start"""))
   )
 }

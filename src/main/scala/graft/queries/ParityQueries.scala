@@ -276,8 +276,12 @@ object ParityQueries {
         .orderBy(col("doc_id"))
     }, Some("""
       SELECT doc_id, md5(text) AS text_md5, (doc_id % 4 = 3) AS nested
-      FROM documents ORDER BY doc_id""")),
+      FROM documents ORDER BY doc_id"""))
+  )
 
+  /** Entries that start a Structured Streaming query when called —
+    * registered in [[graft.SparkEntry.streamingNames]]. */
+  def streamingDefs: Seq[(String, Q, Option[String])] = Seq(
     // DirectoryChanges — DirectoryChanges.java:60: the directory-diff
     // source under the oracle gate. The snapshot diff must report each
     // fixture shard exactly once as a Creation; the event's path then

@@ -841,53 +841,6 @@ object PipelineQueries {
                AS n_entity
       FROM documents ORDER BY doc_id""")),
 
-    // end-to-end STREAMING curation: scrub -> token/quality gates ->
-    // exact dedup, run on the Structured Streaming engine (file source,
-    // AvailableNow) and checked against the batch oracle below — the
-    // parity proof that gate composition doesn't change results between
-    // live ingest and backfill.
-    ("p26_streaming_curation", (s, d) => {
-      graft.streaming.StreamingQueries.curationPipeline(s, d,
-        Seq("engine" -> "\\b(spark|flink)\\b", "entity" -> "\\bcustomer\\b"),
-        minTokens = 20L, maxTokens = 200L, minQuality = 0.5)
-    }, Some {
-      val en = TextFunctions.langStopwords("en")
-        .map(w => s"CAST(len(list_filter(ltoks, t -> t = '$w')) AS BIGINT)")
-        .mkString(" + ")
-      s"""
-      WITH sc AS (
-        SELECT doc_id,
-               regexp_replace(regexp_replace(text,
-                 '\\b(spark|flink)\\b', '[ENGINE]', 'g'),
-                 '\\bcustomer\\b', '[ENTITY]', 'g') AS ct
-        FROM documents),
-      base AS (
-        SELECT doc_id, ct,
-               CAST(len(${sqlToks("ct")}) AS DOUBLE) AS n_tok,
-               CAST(length(ct) AS DOUBLE) AS n_char,
-               CAST(length(regexp_replace(ct, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE) AS alnum,
-               ${sqlToks("lower(ct)")} AS ltoks
-        FROM sc),
-      m AS (
-        SELECT doc_id, ct, n_tok,
-               CASE WHEN n_tok > 0 THEN n_char / n_tok ELSE 0.0 END AS mean_tok_len,
-               CASE WHEN n_tok > 0 THEN CAST($en AS DOUBLE) / n_tok ELSE 0.0 END AS stop_ratio,
-               CASE WHEN n_char > 0 THEN (n_char - alnum) / n_char ELSE 0.0 END AS punct_ratio
-        FROM base),
-      q AS (
-        SELECT doc_id, ct, n_tok,
-               round(least(greatest(
-                 least(n_tok / 100.0, 1.0) * 0.4 +
-                 (CASE WHEN mean_tok_len >= 3 AND mean_tok_len <= 10 THEN 1.0 ELSE 0.5 END) * 0.2 +
-                 stop_ratio * 0.2 + (1.0 - punct_ratio) * 0.2,
-                 0.0), 1.0), 4) AS quality
-        FROM m),
-      kept AS (SELECT * FROM q WHERE n_tok BETWEEN 20 AND 200 AND quality >= 0.5)
-      SELECT md5(array_to_string(${sqlToks("lower(ct)")}, ' ')) AS fingerprint,
-             min(doc_id) AS keeper_id, count(*) AS group_size
-      FROM kept GROUP BY 1 ORDER BY 1"""
-    }),
-
     // Johnson-Lindenstrauss projection 64 -> 16 (md5-derived Achlioptas
     // signs, native codegen expression); flattened to rows for the
     // engine-portable compare.
@@ -1389,7 +1342,7 @@ object PipelineQueries {
       import graft.text.CorpusOps
       val docs = Tables.documents(s, d)
       t.cut(CorpusOps.scoreBigrams(
-          CorpusOps.bigramRows(t.in(docs), col("doc_id"), col("text")),
+          CorpusOps.ngramRows(t.in(docs), col("doc_id"), col("text"), 2),
           CorpusOps.bigramLm(docs, col("doc_id"), col("text"))))
         .orderBy(col("doc_id"))
     }, Some(s"""
@@ -3097,6 +3050,57 @@ object PipelineQueries {
           maxDistance = 1, k = 3)
         .orderBy(col("probe"), col("rank"))
     }, Some(symspellOracle))
+  )
+
+  /** Entries that start a Structured Streaming query when called —
+    * registered in [[graft.SparkEntry.streamingNames]]. */
+  def streamingDefs: Seq[(String, Q, Option[String])] = Seq(
+    // end-to-end STREAMING curation: scrub -> token/quality gates ->
+    // exact dedup, run on the Structured Streaming engine (file source,
+    // AvailableNow) and checked against the batch oracle below — the
+    // parity proof that gate composition doesn't change results between
+    // live ingest and backfill.
+    ("p26_streaming_curation", (s, d) => {
+      graft.streaming.StreamingQueries.curationPipeline(s, d,
+        Seq("engine" -> "\\b(spark|flink)\\b", "entity" -> "\\bcustomer\\b"),
+        minTokens = 20L, maxTokens = 200L, minQuality = 0.5)
+    }, Some {
+      val en = TextFunctions.langStopwords("en")
+        .map(w => s"CAST(len(list_filter(ltoks, t -> t = '$w')) AS BIGINT)")
+        .mkString(" + ")
+      s"""
+      WITH sc AS (
+        SELECT doc_id,
+               regexp_replace(regexp_replace(text,
+                 '\\b(spark|flink)\\b', '[ENGINE]', 'g'),
+                 '\\bcustomer\\b', '[ENTITY]', 'g') AS ct
+        FROM documents),
+      base AS (
+        SELECT doc_id, ct,
+               CAST(len(${sqlToks("ct")}) AS DOUBLE) AS n_tok,
+               CAST(length(ct) AS DOUBLE) AS n_char,
+               CAST(length(regexp_replace(ct, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE) AS alnum,
+               ${sqlToks("lower(ct)")} AS ltoks
+        FROM sc),
+      m AS (
+        SELECT doc_id, ct, n_tok,
+               CASE WHEN n_tok > 0 THEN n_char / n_tok ELSE 0.0 END AS mean_tok_len,
+               CASE WHEN n_tok > 0 THEN CAST($en AS DOUBLE) / n_tok ELSE 0.0 END AS stop_ratio,
+               CASE WHEN n_char > 0 THEN (n_char - alnum) / n_char ELSE 0.0 END AS punct_ratio
+        FROM base),
+      q AS (
+        SELECT doc_id, ct, n_tok,
+               round(least(greatest(
+                 least(n_tok / 100.0, 1.0) * 0.4 +
+                 (CASE WHEN mean_tok_len >= 3 AND mean_tok_len <= 10 THEN 1.0 ELSE 0.5 END) * 0.2 +
+                 stop_ratio * 0.2 + (1.0 - punct_ratio) * 0.2,
+                 0.0), 1.0), 4) AS quality
+        FROM m),
+      kept AS (SELECT * FROM q WHERE n_tok BETWEEN 20 AND 200 AND quality >= 0.5)
+      SELECT md5(array_to_string(${sqlToks("lower(ct)")}, ' ')) AS fingerprint,
+             min(doc_id) AS keeper_id, count(*) AS group_size
+      FROM kept GROUP BY 1 ORDER BY 1"""
+    })
   )
 
   /** DuckDB dual of the deletion-1 neighborhood {s} ∪ del1(s). */
@@ -6683,7 +6687,7 @@ object PipelineQueries {
     // that per-context probabilities sum to 1 over the vocabulary.
     ("p200_kn_bigram_probs", (s, d) => {
       graft.text.CorpusOps.knBigramProbs(graft.text.CorpusOps.kneserNeyLm(
-          Tables.documents(s, d), col("doc_id"), col("text")))
+          Tables.documents(s, d), col("doc_id"), col("text"), 2))
         .orderBy(col("w1"), col("w2"))
     }, Some(s"""
       WITH t AS (SELECT doc_id, ${sqlToks("text")} AS toks FROM documents),
@@ -6715,8 +6719,8 @@ object PipelineQueries {
       import graft.text.CorpusOps
       val docs = Tables.documents(s, d)
       t.cut(CorpusOps.scoreKneserNey(
-          CorpusOps.bigramRows(t.in(docs), col("doc_id"), col("text")),
-          CorpusOps.kneserNeyLm(docs, col("doc_id"), col("text"))))
+          CorpusOps.ngramRows(t.in(docs), col("doc_id"), col("text"), 2),
+          CorpusOps.kneserNeyLm(docs, col("doc_id"), col("text"), 2)))
         .orderBy(col("doc_id"))
     }, Some(knPerplexityOracle)),
 
@@ -6823,9 +6827,9 @@ object PipelineQueries {
     ("p205_kn_trigram_ppl", Twinned { (s, d, t) =>
       import graft.text.CorpusOps
       val docs = Tables.documents(s, d)
-      t.cut(CorpusOps.scoreKneserNey3(
-          CorpusOps.trigramRows(t.in(docs), col("doc_id"), col("text")),
-          CorpusOps.kneserNey3Lm(docs, col("doc_id"), col("text"))))
+      t.cut(CorpusOps.scoreKneserNey(
+          CorpusOps.ngramRows(t.in(docs), col("doc_id"), col("text"), 3),
+          CorpusOps.kneserNeyLm(docs, col("doc_id"), col("text"), 3)))
         .orderBy(col("doc_id"))
     }, Some(kn3PerplexityOracle)),
 
@@ -6842,10 +6846,10 @@ object PipelineQueries {
       import graft.text.CorpusOps
       val docs = Tables.documents(s, d)
       val lm = CorpusOps.kneserNeyLm(docs.filter(col("doc_id") % 2 === 0),
-        col("doc_id"), col("text"))
+        col("doc_id"), col("text"), 2)
       CorpusOps.scoreKneserNey(
-          CorpusOps.bigramRows(docs.filter(col("doc_id") % 2 === 1),
-            col("doc_id"), col("text")), lm)
+          CorpusOps.ngramRows(docs.filter(col("doc_id") % 2 === 1),
+            col("doc_id"), col("text"), 2), lm)
         .orderBy(col("doc_id"))
     }, Some(s"""
       WITH tr AS (SELECT doc_id, ${sqlToks("text")} AS toks FROM documents

@@ -1180,11 +1180,8 @@ object CorpusOps {
     *   nll(doc)   = mean over the doc's bigrams of -ln P(w2 | w1)
     *
     * Determinism: each bigram's -ln P is a function of three INTEGERS
-    * (c12, c1, V); it is scaled to micro-units and truncated to a LONG
-    * once, and the per-doc aggregate is an integer sum — order-
-    * independent, so the result is bit-identical across partitionings,
-    * retries, and engines (the repo's integer-exact-stats rule). The
-    * final nll/ppl are derived from that integer sum.
+    * (c12, c1, V), and [[perDocNll]] sums it in integer micro-units —
+    * bit-identical across partitionings, retries, and engines.
     *
     * Scale shape: bigrams are formed MAP-SIDE from the token array (a
     * `transform` over indices — no per-token explode before counting);
@@ -1198,7 +1195,7 @@ object CorpusOps {
     * ppl = round(exp(nll), 3).
     */
   def bigramPerplexity(docs: DataFrame, id: Column, text: Column): DataFrame =
-    scoreBigrams(bigramRows(docs, id, text), bigramLm(docs, id, text))
+    scoreBigrams(ngramRows(docs, id, text, 2), bigramLm(docs, id, text))
 
   /** The trained model artifact: bigram counts, unigram counts, and the
     * vocabulary size, each a DataFrame so the scorer can join them
@@ -1207,19 +1204,21 @@ object CorpusOps {
     */
   final case class BigramLm(c12: DataFrame, c1: DataFrame, vocab: DataFrame)
 
-  /** Map-side bigram formation: (doc_id, w1, w2) rows from the token
-    * array — a `transform` over indices, no pre-count explode state.
-    * SHARED by the batch scorer and the streaming twin, so their bigram
+  /** Map-side n-gram formation: (doc_id, w1, …, wn) rows from the token
+    * array of every document with at least `n` tokens — a `transform`
+    * over indices, no pre-count explode state. SHARED by every LM's
+    * trainer, its batch scorer and its streaming twin, so their n-gram
     * semantics cannot drift (the chunkRows rule).
     */
-  private[graft] def bigramRows(docs: DataFrame, id: Column, text: Column): DataFrame =
+  private[graft] def ngramRows(docs: DataFrame, id: Column, text: Column,
+                               n: Int): DataFrame =
     docs.select(id.as("doc_id"), TextFunctions.tokens(text).as("toks"))
-      .filter(size(col("toks")) >= 2)
+      .filter(size(col("toks")) >= n)
       .select(col("doc_id"),
-        explode(transform(sequence(lit(1), size(col("toks")) - 1),
-          i => struct(element_at(col("toks"), i).as("w1"),
-            element_at(col("toks"), i + 1).as("w2")))).as("bg"))
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+        explode(transform(sequence(lit(1), size(col("toks")) - (n - 1)),
+          i => struct((0 until n).map(j => element_at(col("toks"),
+            if (j == 0) i else i + j).as(s"w${j + 1}")): _*))).as("g"))
+      .select(col("doc_id") +: (1 to n).map(j => col(s"g.w$j").as(s"w$j")): _*)
 
   /** Train the add-one bigram LM: two vocabulary-bounded count
     * aggregates plus the vocab size (kept as a one-row DataFrame — no
@@ -1231,7 +1230,7 @@ object CorpusOps {
       .select(explode(col("toks")).as("w"))
     val c1 = unigrams.groupBy(col("w").as("w1")).agg(count(lit(1)).as("c1"))
     BigramLm(
-      c12 = bigramRows(docs, id, text)
+      c12 = ngramRows(docs, id, text, 2)
         .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")),
       c1 = c1,
       // |vocab| = number of distinct unigrams = c1's row count — a tiny
@@ -1240,149 +1239,180 @@ object CorpusOps {
   }
 
   /** Score bigram rows against a trained [[BigramLm]] and aggregate per
-    * document. -ln P is computed in integer micro-units (one double op
-    * chain per row, truncated once) so the per-doc sum is an exact,
-    * order-independent integer aggregate — see [[bigramPerplexity]].
-    *
-    * The count joins are LEFT joins with 0-coalesce: a bigram (or a w1
-    * context) the frozen LM never saw scores at its add-one-smoothed
-    * probability (c12=0 → P = 1/(c1+V); w1 also unseen → P = 1/V) —
-    * unseen text scores HIGH perplexity, which is what the filter
-    * exists to catch. When scoring the training corpus itself every
-    * count is present, so the self-corpus oracles are unaffected.
+    * document through [[perDocNll]]. The count joins are LEFT joins
+    * with 0-coalesce: a bigram (or a w1 context) the frozen LM never
+    * saw scores at its add-one-smoothed probability (c12=0 → P =
+    * 1/(c1+V); w1 also unseen → P = 1/V) — unseen text scores HIGH
+    * perplexity, which is what the filter exists to catch. When scoring
+    * the training corpus itself every count is present, so the
+    * self-corpus oracles are unaffected.
     */
   private[graft] def scoreBigrams(bigrams: DataFrame, lm: BigramLm): DataFrame =
-    bigrams
-      .join(lm.c12, Seq("w1", "w2"), "left")
-      .join(lm.c1, Seq("w1"), "left")
-      .crossJoin(broadcast(lm.vocab))
-      .select(col("doc_id"),
-        round(-log((coalesce(col("c12"), lit(0L)) + 1).cast("double") /
-          (coalesce(col("c1"), lit(0L)) + col("vocab")).cast("double")) * 1e6, 0)
-          .cast("long").as("nll_micro"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("nll_micro")).as("s"))
-      .select(col("doc_id"), col("n_bigrams"),
-        round(col("s") / col("n_bigrams") / 1e6, 6).as("nll"),
-        round(exp(col("s") / col("n_bigrams") / lit(1e6)), 3).as("ppl"))
+    perDocNll(bigrams
+        .join(lm.c12, Seq("w1", "w2"), "left")
+        .join(lm.c1, Seq("w1"), "left")
+        .crossJoin(broadcast(lm.vocab)),
+      (coalesce(col("c12"), lit(0L)) + 1).cast("double") /
+        (coalesce(col("c1"), lit(0L)) + col("vocab")).cast("double"),
+      "n_bigrams")
 
-  /** The interpolated Kneser–Ney bigram model artifact (Kneser & Ney
-    * 1995; Chen & Goodman 1999's interpolated formulation — the
-    * smoothing a CCNet-style perplexity filter actually ships, where
-    * [[BigramLm]]'s add-one is the didactic baseline):
-    *
-    *   P(w2|w1) = max(c(w1,w2) − D, 0)/c(w1·)
-    *            + D·N1+(w1·)/c(w1·) · Pcont(w2)
-    *   Pcont(w2) = N1+(·w2) / N1+(··)
-    *
-    * with absolute discount D and continuation counts N1+ (distinct
-    * bigram TYPES, the novel-continuation insight that distinguishes
-    * KN from every count-ratio smoother). Four frames: bigram counts,
-    * per-context totals + distinct-continuation counts, per-word
-    * continuation counts, and the one-row type total — all
-    * vocabulary-bounded aggregates, scorable batch-side or
-    * stream-static against the frozen snapshot (the [[BigramLm]]
-    * deployment shape). Every term is a count ratio, so the whole
-    * model is SQL-expressible — p200/p201 recompute it independently
-    * in DuckDB, formula duality for the smoother itself.
+  /** The per-document tail every LM scorer shares: −ln `p` of each
+    * n-gram row truncates ONCE to integer micro-nats, the per-doc sum is
+    * an exact, order-independent integer aggregate, and nll/ppl derive
+    * from it — (doc_id, `n`, nll, ppl), `n` the doc's n-gram count.
     */
-  final case class KneserNeyLm(c12: DataFrame, ctx: DataFrame,
+  private def perDocNll(rows: DataFrame, p: Column, n: String): DataFrame =
+    rows
+      .select(col("doc_id"),
+        round(-log(p) * 1e6, 0).cast("long").as("nll_micro"))
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as(n), sum(col("nll_micro")).as("s"))
+      .select(col("doc_id"), col(n),
+        round(col("s") / col(n) / 1e6, 6).as("nll"),
+        round(exp(col("s") / col(n) / lit(1e6)), 3).as("ppl"))
+
+  /** The interpolated Kneser–Ney model of order n (Kneser & Ney 1995;
+    * Chen & Goodman 1999's recursive formulation — the smoothing a
+    * CCNet-style perplexity filter ships, where [[BigramLm]]'s add-one
+    * is the didactic baseline). Level k (n ≥ k ≥ 2) scores wn after the
+    * k−1 words g before it, interpolating with level k−1:
+    *
+    *   Pₖ(wn|g) = max(cₖ(g wn) − D, 0)/Σ_w cₖ(g w)
+    *            + D·N1+(g·)/Σ_w cₖ(g w) · Pₖ₋₁(wn|g minus its first word)
+    *   P₁(wn)   = Pcont(wn) = N1+(·wn)/N1+(··)
+    *
+    * with absolute discount D. The TOP level's cₙ is the raw count; every
+    * LOWER level's cₖ is the CONTINUATION count N1+(·g wn), the distinct
+    * words preceding the k-gram (the novel-continuation insight that
+    * distinguishes KN from every count-ratio smoother, and the level a
+    * raw-count backoff gets wrong); the bottom is Pcont over bigram
+    * TYPES. `levels` holds one [[KnLevel]] per k, top first; `cont`
+    * (wn, n1p_right) and the one-row `types` (n_types) come off the
+    * bigram type table. Every frame is a vocabulary-bounded aggregate,
+    * scorable batch-side or stream-static against the frozen snapshot
+    * (the [[BigramLm]] deployment shape), and every term is a count
+    * ratio — p200/p201/p205 recompute the recursion in DuckDB.
+    */
+  final case class KneserNeyLm(order: Int, levels: Seq[KnLevel],
                                cont: DataFrame, types: DataFrame,
                                discount: Double)
 
-  /** Train the KN bigram model: one pass to bigram counts, then three
-    * bounded aggregates OFF the count table (never a second corpus
-    * scan). D must sit in (0, 1) — the standard absolute-discount
-    * range; 0.75 is the textbook default.
+  /** Level k of an order-n [[KneserNeyLm]], keyed on the last k words
+    * w(n−k+1)…wn: `counts` holds cₖ as `c_k`; `ctx` holds, per context
+    * (the first k−1 of those words), its sum `total_k` and its row count
+    * `n1p_k`.
     */
-  def kneserNeyLm(docs: DataFrame, id: Column, text: Column,
+  final case class KnLevel(counts: DataFrame, ctx: DataFrame)
+
+  /** The word columns level `k` of an order-`order` model keys on. */
+  private def knWords(order: Int, k: Int): Seq[String] =
+    (order - k + 1 to order).map(j => s"w$j")
+
+  /** Train the order-`order` KN model: one pass to the top n-gram
+    * counts, every lower level an aggregate OFF the level above, and the
+    * bigram types off the top table (order 2) or one bigram count pass.
+    * D must sit in (0, 1); 0.75 is the textbook default.
+    */
+  def kneserNeyLm(docs: DataFrame, id: Column, text: Column, order: Int,
                   discount: Double = 0.75): KneserNeyLm = {
+    require(order >= 2, s"kneserNeyLm: order must be >= 2, got $order")
     require(discount > 0.0 && discount < 1.0,
       s"kneserNeyLm: discount must be in (0, 1), got $discount")
-    val c12 = bigramRows(docs, id, text)
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-    KneserNeyLm(
-      c12 = c12,
-      // context totals AND distinct continuations in one aggregate:
-      // both are per-w1 reductions of the count table
-      ctx = c12.groupBy(col("w1"))
-        .agg(sum(col("c12")).as("ctx_total"),
-          count(lit(1)).as("n1p_left")),
-      cont = c12.groupBy(col("w2")).agg(count(lit(1)).as("n1p_right")),
-      types = c12.agg(count(lit(1)).as("n_types")),
+    val top = ngramRows(docs, id, text, order)
+      .groupBy(knWords(order, order).map(col): _*)
+      .agg(count(lit(1)).as(s"c_$order"))
+    // level k's continuation count: the level-(k+1) rows that end in
+    // its k-gram, i.e. the distinct words preceding it
+    val counts = (order - 1 to 2 by -1).scanLeft(top) { (above, k) =>
+      above.groupBy(knWords(order, k).map(col): _*)
+        .agg(count(lit(1)).as(s"c_$k"))
+    }
+    val levels = counts.zip(order to 2 by -1).map { case (c, k) =>
+      // context totals AND distinct continuations in one aggregate
+      KnLevel(c, c.groupBy(knWords(order, k).init.map(col): _*)
+        .agg(sum(col(s"c_$k")).as(s"total_$k"),
+          count(lit(1)).as(s"n1p_$k")))
+    }
+    val bigrams = if (order == 2) top
+      else ngramRows(docs, id, text, 2)
+        .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
+    KneserNeyLm(order, levels,
+      cont = bigrams.groupBy(col("w2")).agg(count(lit(1)).as("n1p_right"))
+        .withColumnRenamed("w2", s"w$order"),
+      types = bigrams.agg(count(lit(1)).as("n_types")),
       discount = discount)
   }
 
-  /** The per-bigram KN probability table — the model rendered as data
-    * (w1, w2, the four counts, and the 9-decimal probability), the
-    * artifact a serving job would broadcast-join against and the
-    * frame p200 oracle-gates term by term. Per-context probabilities
-    * sum to 1 over the vocabulary (CorpusOpsSpec measures it).
+  /** An order-2 model's per-bigram probability table — the model as
+    * data (w1, w2, the four counts, the 9-decimal probability), the
+    * artifact a serving job would broadcast-join against and the frame
+    * p200 oracle-gates term by term.
     */
   def knBigramProbs(lm: KneserNeyLm): DataFrame = {
+    require(lm.order == 2,
+      s"knBigramProbs: needs an order-2 model, got order ${lm.order}")
     val d = lm.discount
-    lm.c12
-      .join(lm.ctx, Seq("w1"))
+    val l = lm.levels.head
+    l.counts
+      .join(l.ctx, Seq("w1"))
       .join(lm.cont, Seq("w2"))
       .crossJoin(broadcast(lm.types))
-      .select(col("w1"), col("w2"), col("c12"), col("ctx_total"),
-        col("n1p_left"), col("n1p_right"),
-        round((greatest(col("c12") - lit(d), lit(0.0)) / col("ctx_total") +
-          lit(d) * col("n1p_left") / col("ctx_total") *
+      .select(col("w1"), col("w2"), col("c_2").as("c12"),
+        col("total_2").as("ctx_total"), col("n1p_2").as("n1p_left"),
+        col("n1p_right"),
+        round((greatest(col("c_2") - lit(d), lit(0.0)) / col("total_2") +
+          lit(d) * col("n1p_2") / col("total_2") *
             (col("n1p_right").cast("double") / col("n_types"))), 9)
           .as("p_r9"))
   }
 
-  /** Score bigram rows against a frozen [[KneserNeyLm]] and aggregate
-    * per document — the [[scoreBigrams]] discipline: −ln P truncates
-    * ONCE to integer micro-nats so the per-doc sum is an exact,
-    * order-independent integer aggregate (batch and streaming twins
-    * agree bit-for-bit).
-    *
-    * Unseen events degrade in KN's own terms: an unseen (w1,w2) under
-    * a seen w1 scores the backoff mass λ(w1)·Pcont(w2); an unseen w1
-    * scores Pcont(w2) alone; only the FULL-OOV case (w2 never a
-    * continuation, so every KN term is exactly 0) floors at
-    * 1/(N1+(··)+1) — strictly positive, loud in perplexity, never a
-    * log(0), and never clamping a legitimately tiny seen probability
-    * (the floor fires on p = 0 exactly, not on p < floor).
+  /** Score [[ngramRows]] at the model's order against a frozen
+    * [[KneserNeyLm]] through the shared micro-nat tail — (doc_id,
+    * n_bigrams or n_trigrams, nll, ppl), bit-identical batch or
+    * streaming. Unseen events degrade level by level in KN's own
+    * terms: an unseen n-gram under a seen context scores the backoff
+    * mass of the level below, an unseen context the level below alone,
+    * down to bare Pcont(wn); only the FULL-OOV exact zero (wn never a
+    * continuation) floors at 1/(N1+(··)+1) — never a log(0), never a
+    * clamp on a tiny seen probability.
     */
-  def scoreKneserNey(bigrams: DataFrame, lm: KneserNeyLm): DataFrame = {
+  def scoreKneserNey(ngrams: DataFrame, lm: KneserNeyLm): DataFrame = {
     val d = lm.discount
+    val ks = lm.order to 2 by -1
     val pCont = coalesce(col("n1p_right").cast("double"), lit(0.0)) /
       knTypesGuard
+    val p = ks.foldRight(pCont) { (k, lower) =>
+      when(col(s"total_$k").isNotNull,
+          greatest(coalesce(col(s"c_$k"), lit(0L)) - lit(d), lit(0.0)) /
+            col(s"total_$k") +
+            lit(d) * col(s"n1p_$k") / col(s"total_$k") * lower)
+        .otherwise(lower)
+    }
     val floor = lit(1.0) / (knTypesGuard + 1)
-    val p = when(col("ctx_total").isNotNull,
-        greatest(coalesce(col("c12"), lit(0L)) - lit(d), lit(0.0)) /
-          col("ctx_total") +
-          lit(d) * col("n1p_left") / col("ctx_total") * pCont)
-      .otherwise(pCont)
-    bigrams
-      .join(lm.c12, Seq("w1", "w2"), "left")
-      .join(lm.ctx, Seq("w1"), "left")
-      .join(lm.cont, Seq("w2"), "left")
-      .crossJoin(broadcast(lm.types))
-      .select(col("doc_id"),
-        round(-log(when(p > lit(0.0), p).otherwise(floor)) * 1e6, 0)
-          .cast("long").as("nll_micro"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("nll_micro")).as("s"))
-      .select(col("doc_id"), col("n_bigrams"),
-        round(col("s") / col("n_bigrams") / 1e6, 6).as("nll"),
-        round(exp(col("s") / col("n_bigrams") / lit(1e6)), 3).as("ppl"))
+    val joined = lm.levels.zip(ks).foldLeft(ngrams) { case (df, (l, k)) =>
+      val w = knWords(lm.order, k)
+      df.join(l.counts, w, "left").join(l.ctx, w.init, "left")
+    }
+    perDocNll(joined
+        .join(lm.cont, Seq(s"w${lm.order}"), "left")
+        .crossJoin(broadcast(lm.types)),
+      when(p > lit(0.0), p).otherwise(floor),
+      lm.order match {
+        case 2 => "n_bigrams"
+        case 3 => "n_trigrams"
+        case n => s"n_${n}grams"
+      })
   }
 
-  /** The empty-model guard both KN scorers share, wrapping every
+  /** The empty-model guard of [[scoreKneserNey]], wrapping every
     * n_types consumption: with ZERO bigram types the Pcont division
     * is x/0 — under ANSI (Spark 4's default) that raises an OPAQUE
     * DIVIDE_BY_ZERO mid-plan, and under non-ANSI it is null, every
     * row routes to an unguarded floor 1/(0+1) = 1.0, and the whole
     * stream silently scores at perplexity 1 (a quality filter fed
     * that model passes everything). Either way the right failure is
-    * the CONTRACT one: scan-stage, no extra job, CaseWhen
-    * short-circuits so healthy models never evaluate the error
-    * branch — the unigramTrain "an empty corpus cannot train a
-    * tokenizer" rule.
+    * the CONTRACT one: scan-stage, no extra job, and CaseWhen
+    * short-circuits so healthy models never evaluate the error branch.
     */
   private def knTypesGuard: Column =
     when(col("n_types") > 0, col("n_types"))
@@ -1391,127 +1421,14 @@ object CorpusOps {
         "floor would silently score everything at perplexity 1"))
         .cast("long"))
 
-  /** [[bigramPerplexity]]'s KN twin: train on the corpus, score the
-    * corpus — the self-corpus entry p201 gates against the full SQL
-    * recomputation.
+  /** [[bigramPerplexity]]'s KN twin at any order: train on the corpus,
+    * score the corpus — the self-corpus entry p201 (order 2) and p205
+    * (order 3) gate against the full SQL recomputation.
     */
   def kneserNeyPerplexity(docs: DataFrame, id: Column, text: Column,
-                          discount: Double = 0.75): DataFrame =
-    scoreKneserNey(bigramRows(docs, id, text),
-      kneserNeyLm(docs, id, text, discount))
-
-  /** The TRIGRAM interpolated KN model (Chen & Goodman 1999's
-    * recursive formulation — the recursion [[KneserNeyLm]] bottoms
-    * out): the HIGHEST level discounts raw counts, every LOWER level
-    * discounts CONTINUATION counts —
-    *
-    *   P(w3|w1w2) = max(c(w1w2w3)−D,0)/c(w1w2·)
-    *              + D·N1+(w1w2·)/c(w1w2·) · P₂(w3|w2)
-    *   P₂(w3|w2)  = max(N1+(·w2w3)−D,0)/N1+(·w2·)
-    *              + D·N1+(w2·)ᵗ/N1+(·w2·) · Pcont(w3)
-    *   Pcont(w3)  = N1+(·w3)/N1+(··)
-    *
-    * where N1+(·w2w3) counts distinct PRECEDING words of the bigram
-    * (trigram types), N1+(·w2·) sums them over w3, N1+(w2·)ᵗ counts
-    * distinct continuations in the middle distribution, and the
-    * bottom level is [[KneserNeyLm]]'s bigram-type Pcont. Six count
-    * frames, all aggregates of the trigram/bigram type tables — the
-    * whole recursion stays SQL-expressible (p205 recomputes every
-    * level).
-    */
-  final case class KneserNey3Lm(c123: DataFrame, ctx12: DataFrame,
-                                midCont: DataFrame, midCtx: DataFrame,
-                                cont: DataFrame, types: DataFrame,
-                                discount: Double)
-
-  /** Map-side trigram formation — [[bigramRows]]' 3-gram sibling,
-    * SHARED by the batch scorer and the streaming twin.
-    */
-  private[graft] def trigramRows(docs: DataFrame, id: Column, text: Column): DataFrame =
-    docs.select(id.as("doc_id"), TextFunctions.tokens(text).as("toks"))
-      .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"),
-        explode(transform(sequence(lit(1), size(col("toks")) - 2),
-          i => struct(element_at(col("toks"), i).as("w1"),
-            element_at(col("toks"), i + 1).as("w2"),
-            element_at(col("toks"), i + 2).as("w3")))).as("tg"))
-      .select(col("doc_id"), col("tg.w1").as("w1"), col("tg.w2").as("w2"),
-        col("tg.w3").as("w3"))
-
-  /** Train the trigram KN model: one pass to trigram counts, one to
-    * bigram counts, then bounded aggregates off the two type tables.
-    */
-  def kneserNey3Lm(docs: DataFrame, id: Column, text: Column,
-                   discount: Double = 0.75): KneserNey3Lm = {
-    require(discount > 0.0 && discount < 1.0,
-      s"kneserNey3Lm: discount must be in (0, 1), got $discount")
-    val c123 = trigramRows(docs, id, text)
-      .groupBy(col("w1"), col("w2"), col("w3"))
-      .agg(count(lit(1)).as("c123"))
-    val midCont = c123.groupBy(col("w2"), col("w3"))
-      .agg(count(lit(1)).as("n1p_mid"))
-    val c12 = bigramRows(docs, id, text)
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-    KneserNey3Lm(
-      c123 = c123,
-      ctx12 = c123.groupBy(col("w1"), col("w2"))
-        .agg(sum(col("c123")).as("ctx_total"),
-          count(lit(1)).as("n1p_ctx")),
-      midCont = midCont,
-      midCtx = midCont.groupBy(col("w2"))
-        .agg(sum(col("n1p_mid")).as("mid_total"),
-          count(lit(1)).as("n1p_w2")),
-      cont = c12.groupBy(col("w2")).agg(count(lit(1)).as("n1p_right"))
-        .withColumnRenamed("w2", "w3"),
-      types = c12.agg(count(lit(1)).as("n_types")),
-      discount = discount)
-  }
-
-  /** Score trigram rows against a frozen [[KneserNey3Lm]] — the
-    * [[scoreKneserNey]] discipline (one micro-nat truncation per
-    * trigram, exact integer per-doc sums) with the degradation chain
-    * one level deeper: an unseen trigram under a seen context backs
-    * off to the middle distribution, an unseen (w1,w2) context to
-    * P₂(w3|w2), an unseen w2 to Pcont(w3), and only the full-OOV
-    * exact zero floors at 1/(N1+(··)+1).
-    */
-  def scoreKneserNey3(trigrams: DataFrame, lm: KneserNey3Lm): DataFrame = {
-    val d = lm.discount
-    val pCont = coalesce(col("n1p_right").cast("double"), lit(0.0)) /
-      knTypesGuard
-    val p2 = when(col("mid_total").isNotNull,
-        greatest(coalesce(col("n1p_mid"), lit(0L)) - lit(d), lit(0.0)) /
-          col("mid_total") +
-          lit(d) * col("n1p_w2") / col("mid_total") * pCont)
-      .otherwise(pCont)
-    val p = when(col("ctx_total").isNotNull,
-        greatest(coalesce(col("c123"), lit(0L)) - lit(d), lit(0.0)) /
-          col("ctx_total") +
-          lit(d) * col("n1p_ctx") / col("ctx_total") * p2)
-      .otherwise(p2)
-    val floor = lit(1.0) / (knTypesGuard + 1)
-    trigrams
-      .join(lm.c123, Seq("w1", "w2", "w3"), "left")
-      .join(lm.ctx12, Seq("w1", "w2"), "left")
-      .join(lm.midCont, Seq("w2", "w3"), "left")
-      .join(lm.midCtx, Seq("w2"), "left")
-      .join(lm.cont, Seq("w3"), "left")
-      .crossJoin(broadcast(lm.types))
-      .select(col("doc_id"),
-        round(-log(when(p > lit(0.0), p).otherwise(floor)) * 1e6, 0)
-          .cast("long").as("nll_micro"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_trigrams"), sum(col("nll_micro")).as("s"))
-      .select(col("doc_id"), col("n_trigrams"),
-        round(col("s") / col("n_trigrams") / 1e6, 6).as("nll"),
-        round(exp(col("s") / col("n_trigrams") / lit(1e6)), 3).as("ppl"))
-  }
-
-  /** [[kneserNeyPerplexity]]'s trigram sibling — p205's entry body. */
-  def kneserNey3Perplexity(docs: DataFrame, id: Column, text: Column,
-                           discount: Double = 0.75): DataFrame =
-    scoreKneserNey3(trigramRows(docs, id, text),
-      kneserNey3Lm(docs, id, text, discount))
+                          order: Int, discount: Double = 0.75): DataFrame =
+    scoreKneserNey(ngramRows(docs, id, text, order),
+      kneserNeyLm(docs, id, text, order, discount))
 
   /** The trained discriminative quality model: per-token integer
     * micro-unit log-odds weights as a DataFrame artifact (train once on
@@ -1547,13 +1464,20 @@ object CorpusOps {
     val tot = c.agg(sum(col("cg")).as("ng"), sum(col("cb")).as("nb"),
       count(lit(1)).as("v"))
     LogOddsModel(c.crossJoin(broadcast(tot))
-      .select(col("tok"),
-        round((log((col("cg") + 1).cast("double") /
-            (col("ng") + col("v")).cast("double")) -
-          log((col("cb") + 1).cast("double") /
-            (col("nb") + col("v")).cast("double"))) * 1e6, 0)
-          .cast("long").as("w_micro")))
+      .select(col("tok"), addOneLogRatioMicro(col("cg"), col("ng"),
+        col("cb"), col("nb"), col("v")).as("w_micro")))
   }
+
+  /** One feature's add-one log ratio between two categoricals over a
+    * `v`-sized support, ln((a+1)/(nA+v)) − ln((b+1)/(nB+v)), truncated
+    * ONCE to integer micro-units — the weight both [[logOddsModel]]
+    * (reference vs rest) and [[dsirModel]] (target vs raw) learn.
+    */
+  private def addOneLogRatioMicro(a: Column, nA: Column, b: Column,
+                                  nB: Column, v: Column): Column =
+    round((log((a + 1).cast("double") / (nA + v).cast("double")) -
+      log((b + 1).cast("double") / (nB + v).cast("double"))) * 1e6, 0)
+      .cast("long")
 
   /** Score token rows against a trained [[LogOddsModel]] and aggregate
     * per document: mean per-token log-odds, positive = reference-like.
@@ -1603,7 +1527,7 @@ object CorpusOps {
     */
   private[graft] def dsirFeatureRows(docs: DataFrame, id: Column,
                                      text: Column, buckets: Int): DataFrame =
-    bigramRows(docs, id, text)
+    ngramRows(docs, id, text, 2)
       .select(col("doc_id"),
         (graft.dedup.Dedup.sketchHash40(concat_ws(" ", col("w1"), col("w2")))
           % buckets).as("bucket"))
@@ -1641,12 +1565,8 @@ object CorpusOps {
       .join(cr.select(col("bucket"), col("c").as("c_r")), Seq("bucket"), "full_outer")
       .na.fill(0L, Seq("c_t", "c_r"))
       .crossJoin(broadcast(nt)).crossJoin(broadcast(nr))
-      .select(col("bucket"),
-        round((log((col("c_t") + 1).cast("double") /
-            (col("n_t") + buckets).cast("double")) -
-          log((col("c_r") + 1).cast("double") /
-            (col("n_r") + buckets).cast("double"))) * 1e6, 0)
-          .cast("long").as("m_micro"))
+      .select(col("bucket"), addOneLogRatioMicro(col("c_t"), col("n_t"),
+        col("c_r"), col("n_r"), lit(buckets)).as("m_micro"))
     DsirModel(w, buckets)
   }
 

@@ -1,9 +1,12 @@
 package graft.tools
 
+import org.apache.spark.sql.streaming.StreamingQueryListener
+
 /** Dev utility: sweep every declared query's physical plan for scale
   * anti-patterns — unpartitioned (global) windows, SortAggregates,
   * cartesian products, nested-loop joins — and print one line per
-  * offender. Streaming queries (which must actually run) are skipped.
+  * offender. Streaming queries (which start a stream when called) are
+  * skipped: the skip set is [[graft.SparkEntry.streamingNames]].
   *
   * Accepted findings (each deliberate, documented at the operator):
   *  - p08/p12/p28/q12 NestedLoop: broadcast all-pairs scoring /
@@ -116,14 +119,19 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val spark = graft.Bench.session(graft.Bench.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    val skip = Set("q30_streaming_window", "q31_streaming_dedup",
-      "q37_stream_stream_join", "q22_session_window", "p26_streaming_curation",
-      "q44_streaming_session", "q48_streaming_chunk_election",
-      "q50_streaming_heavy_hitters", "q51_streaming_ann",
-      "q52_streaming_sample", "q53_tail_read", "q56_streaming_perplexity",
-      "q57_dirwatch_read", "q58_paged_read", "q59_streaming_hll",
-      "q60_streaming_bm25", "q61_streaming_quantiles",
-      "q62_streaming_weighted_sample", "q63_streaming_decontam")
+    val skip = graft.SparkEntry.streamingNames
+    // onQueryStarted runs synchronously inside start(), so the count is
+    // exact by the time the sweep ends: a nonzero count names a stream
+    // the registry is missing
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    spark.streams.addListener(new StreamingQueryListener {
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = {
+        started.incrementAndGet()
+        println(s"[audit] streaming query started: ${e.name}")
+      }
+      def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    })
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (!skip.contains(name)) {
         try {
@@ -142,7 +150,7 @@ object PlanAudit {
         } catch { case e: Throwable => println(s"[audit] $name ERROR ${e.getMessage}") }
       }
     }
-    println("[audit] done")
+    println(s"[audit] done; streaming queries started: ${started.get}")
     spark.stop()
   }
 }

@@ -697,7 +697,7 @@ class CorpusOpsSpec extends AnyFunSuite {
     //           (z,q) unseen context -> P = 1/(0+4)
     val fresh = Seq((10L, "a q"), (11L, "z q")).toDF("id", "text")
     val out = CorpusOps.scoreBigrams(
-        CorpusOps.bigramRows(fresh, col("id"), col("text")), lm)
+        CorpusOps.ngramRows(fresh, col("id"), col("text"), 2), lm)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     assert(out(10L) == ((1L, 1.609438))) // -ln(1/5), micro-truncated
     assert(out(11L) == ((1L, 1.386294))) // -ln(1/4)
@@ -973,7 +973,7 @@ class CorpusOpsSpec extends AnyFunSuite {
     // ctx b: total 2, 2 continuations; cont: a=1, b=1, c=1; types=3
     val docs = Seq((1L, "a b a b"), (2L, "a b"), (3L, "b c"))
       .toDF("id", "text")
-    val lm = CorpusOps.kneserNeyLm(docs, col("id"), col("text"))
+    val lm = CorpusOps.kneserNeyLm(docs, col("id"), col("text"), 2)
     val probs = CorpusOps.knBigramProbs(lm).collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
@@ -985,7 +985,7 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(probs(("b", "c")) == ((1L, 2L, 2L, 1L, 0.375)))
     // the scorer agrees with the table through the micro-nat chain:
     // doc 2 = one bigram at p=5/6 → −ln = 0.182322; doc 3 at 3/8
-    val out = CorpusOps.kneserNeyPerplexity(docs, col("id"), col("text"))
+    val out = CorpusOps.kneserNeyPerplexity(docs, col("id"), col("text"), 2)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
     assert(out(2L) == ((1L, 0.182322, 1.2)))
@@ -997,7 +997,7 @@ class CorpusOpsSpec extends AnyFunSuite {
     import graft.text.CorpusOps
     val train = Seq((1L, "a b a b"), (2L, "a b"), (3L, "b c"))
       .toDF("id", "text")
-    val lm = CorpusOps.kneserNeyLm(train, col("id"), col("text"))
+    val lm = CorpusOps.kneserNeyLm(train, col("id"), col("text"), 2)
     // score every (context, vocab-word) pair as its own one-bigram doc
     // and recover p = exp(−nll): the interpolated mass must close to 1
     val pairs = for ((w1, i) <- Seq("a", "b").zipWithIndex;
@@ -1005,7 +1005,7 @@ class CorpusOpsSpec extends AnyFunSuite {
       yield ((i * 3 + j).toLong, s"$w1 $w2", w1)
     val df = pairs.map { case (id, t, _) => (id, t) }.toDF("id", "text")
     val scored = CorpusOps.scoreKneserNey(
-        CorpusOps.bigramRows(df, col("id"), col("text")), lm)
+        CorpusOps.ngramRows(df, col("id"), col("text"), 2), lm)
       .collect().map(r => r.getLong(0) -> math.exp(-r.getDouble(2))).toMap
     for (w1Idx <- 0 to 1) {
       val sum = (0 to 2).map(j => scored((w1Idx * 3 + j).toLong)).sum
@@ -1018,20 +1018,20 @@ class CorpusOpsSpec extends AnyFunSuite {
     import graft.text.CorpusOps
     val train = Seq((1L, "a b a b"), (2L, "a b"), (3L, "b c"))
       .toDF("id", "text")
-    val lm = CorpusOps.kneserNeyLm(train, col("id"), col("text"))
+    val lm = CorpusOps.kneserNeyLm(train, col("id"), col("text"), 2)
     // (a,c): unseen pair, seen context → λ(a)·Pcont(c) = .75·(1/3)·(1/3)
     // (z,b): unseen context → Pcont(b) = 1/3
     // (z,z): full OOV → floor 1/(3+1)
     val fresh = Seq((10L, "a c"), (11L, "z b"), (12L, "z z"))
       .toDF("id", "text")
     val out = CorpusOps.scoreKneserNey(
-        CorpusOps.bigramRows(fresh, col("id"), col("text")), lm)
+        CorpusOps.ngramRows(fresh, col("id"), col("text"), 2), lm)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(out(10L) == 2.484907) // −ln(1/12)
     assert(out(11L) == 1.098612) // −ln(1/3)
     assert(out(12L) == 1.386294) // −ln(1/4)
     intercept[IllegalArgumentException] {
-      CorpusOps.kneserNeyLm(train, col("id"), col("text"), discount = 1.0)
+      CorpusOps.kneserNeyLm(train, col("id"), col("text"), 2, discount = 1.0)
     }
   }
 
@@ -1041,14 +1041,40 @@ class CorpusOpsSpec extends AnyFunSuite {
     // every probability is null, every row hits the floor 1/(0+1) = 1,
     // and the scorer would silently report perfect perplexity
     val empty = Seq((1L, "solo"), (2L, "")).toDF("id", "text")
-    val lm = CorpusOps.kneserNeyLm(empty, col("id"), col("text"))
+    val lm = CorpusOps.kneserNeyLm(empty, col("id"), col("text"), 2)
     val fresh = Seq((10L, "a b")).toDF("id", "text")
     val e = intercept[Exception] {
       CorpusOps.scoreKneserNey(
-        CorpusOps.bigramRows(fresh, col("id"), col("text")), lm).collect()
+        CorpusOps.ngramRows(fresh, col("id"), col("text"), 2), lm).collect()
     }
     assert(e.getMessage.contains("zero bigram types") ||
       Option(e.getCause).exists(_.getMessage.contains("zero bigram types")))
+  }
+
+  test("order-3 KN refuses like order 2: an empty model raises, a discount outside (0, 1) is rejected") {
+    import graft.text.CorpusOps
+    // < 2 tokens everywhere → zero bigram types at the bottom of the
+    // recursion; every level above is null, so every row reaches Pcont
+    val empty = Seq((1L, "solo"), (2L, "")).toDF("id", "text")
+    val lm = CorpusOps.kneserNeyLm(empty, col("id"), col("text"), 3)
+    val fresh = Seq((10L, "a b c")).toDF("id", "text")
+    val e = intercept[Exception] {
+      CorpusOps.scoreKneserNey(
+        CorpusOps.ngramRows(fresh, col("id"), col("text"), 3), lm).collect()
+    }
+    assert(e.getMessage.contains("zero bigram types") ||
+      Option(e.getCause).exists(_.getMessage.contains("zero bigram types")))
+    for (d <- Seq(0.0, 1.0)) intercept[IllegalArgumentException] {
+      CorpusOps.kneserNeyLm(kn3Train, col("id"), col("text"), 3, discount = d)
+    }
+    // no order below 2, and the bigram probability table is order-2 only
+    intercept[IllegalArgumentException] {
+      CorpusOps.kneserNeyLm(kn3Train, col("id"), col("text"), 1)
+    }
+    intercept[IllegalArgumentException] {
+      CorpusOps.knBigramProbs(
+        CorpusOps.kneserNeyLm(kn3Train, col("id"), col("text"), 3))
+    }
   }
 
   // trigram-KN fixture: c123 (a,b,c)=2 (a,b,d)=1; ctx (a,b): 3 total,
@@ -1072,7 +1098,7 @@ class CorpusOpsSpec extends AnyFunSuite {
 
   test("kneserNey3: the full recursion matches a scalar recomputation") {
     import graft.text.CorpusOps
-    val out = CorpusOps.kneserNey3Perplexity(kn3Train, col("id"), col("text"))
+    val out = CorpusOps.kneserNeyPerplexity(kn3Train, col("id"), col("text"), 3)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2)))
       .toMap
     val pC = kn3P(2, 3, 2, 1, 2, 2, 1, 3) // P(c|a,b)
@@ -1084,29 +1110,29 @@ class CorpusOpsSpec extends AnyFunSuite {
 
   test("trigram-KN mass closes to 1 per context over the continuation vocabulary") {
     import graft.text.CorpusOps
-    val lm = CorpusOps.kneserNey3Lm(kn3Train, col("id"), col("text"))
+    val lm = CorpusOps.kneserNeyLm(kn3Train, col("id"), col("text"), 3)
     // the KN event space is words-that-continue: {b, c, d} ('a' never
     // follows anything, so Pcont(a) = 0 — outside the support)
     val probes = Seq("b", "c", "d").zipWithIndex
       .map { case (w3, i) => (i.toLong, s"a b $w3") }
       .toDF("id", "text")
-    val scored = CorpusOps.scoreKneserNey3(
-        CorpusOps.trigramRows(probes, col("id"), col("text")), lm)
+    val scored = CorpusOps.scoreKneserNey(
+        CorpusOps.ngramRows(probes, col("id"), col("text"), 3), lm)
       .collect().map(r => math.exp(-r.getDouble(2))).sum
     assert(math.abs(scored - 1.0) < 1e-4, s"context (a,b) mass $scored")
   }
 
   test("frozen trigram-KN degrades level by level: mid backoff, context backoff, Pcont, floor") {
     import graft.text.CorpusOps
-    val lm = CorpusOps.kneserNey3Lm(kn3Train, col("id"), col("text"))
+    val lm = CorpusOps.kneserNeyLm(kn3Train, col("id"), col("text"), 3)
     val fresh = Seq(
       (10L, "a b b"),  // seen ctx, unseen mid: λ·λ₂·Pcont(b) = 1/8
       (11L, "q b c"),  // unseen ctx, seen mid: P₂(c|b) = 0.375
       (12L, "x y c"),  // unseen w2: Pcont(c) = 1/3
       (13L, "x y zz")) // full OOV: floor 1/(3+1)
       .toDF("id", "text")
-    val out = CorpusOps.scoreKneserNey3(
-        CorpusOps.trigramRows(fresh, col("id"), col("text")), lm)
+    val out = CorpusOps.scoreKneserNey(
+        CorpusOps.ngramRows(fresh, col("id"), col("text"), 3), lm)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(out(10L) == 2.079442) // −ln(1/8)
     assert(out(11L) == 0.980829) // −ln(0.375)

@@ -135,31 +135,6 @@ class GraphSpec extends AnyFunSuite {
       ("android-app://a.com.pkg/private/z", "a.com", false, "/private")))
   }
 
-  test("robotsFilterScan: equals robotsFilter on distinct input; per-row, no dedup") {
-    val urls = Seq(
-      ("https://a.com/private/page", "a.com"),
-      ("https://a.com/private/ok/page", "a.com"),
-      ("https://a.com/open", "a.com"),
-      ("https://b.com/x", "b.com"),
-      ("https://c.com/anything", "c.com"),
-      ("android-app://a.com.pkg/private/z", "a.com"))
-      .toDF("canonical", "dst_family")
-    val rules = Seq(
-      ("a.com", "/private", false), ("a.com", "/private/ok", true),
-      ("b.com", "/x", true), ("b.com", "/x", false))
-      .toDF("family", "prefix", "allow")
-    val batch = LinkGraph.robotsFilter(urls, rules)
-      .as[(String, String, Boolean, String)].collect().toSet
-    val scan = LinkGraph.robotsFilterScan(urls, rules)
-      .as[(String, String, Boolean, String)].collect()
-    // identical longest-match / tie / fail-open verdicts...
-    assert(scan.toSet == batch && scan.length == 6)
-    // ...but per input ROW: repeats pass through (the frontier buffer
-    // dedups downstream), where robotsFilter would collapse them
-    assert(LinkGraph.robotsFilterScan(urls.union(urls), rules)
-      .count() == 12)
-  }
-
   test("personalizedPageRank: seed-only teleport, hand-computed; unreached cluster scores 0") {
     // a → b → c with seed {a}, plus a two-node cycle x ↔ y nobody
     // trusted links into — the link-farm case global PageRank cannot
