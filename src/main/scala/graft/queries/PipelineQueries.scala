@@ -7998,7 +7998,7 @@ object PipelineQueries {
     // proves three different op orders end in the same logical
     // table; this entry gates one full interleaving end-to-end
     // against DuckDB. Every step's cost stays ∝ its delta (append
-    // routes via the broadcast cluster index, split moves one
+    // routes via the shard table's literal HOF, split moves one
     // shard, coalesce rewrites only the undersized run).
     ("p219_cdx_history", (s, d) => {
       import graft.sources.Warc

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+import graft.operators.DriverCollect
 
 /** WARC (ISO 28500) container ingestion — the byte layer every real
   * LLM data pipeline starts from: crawls interchange fetched content
@@ -273,22 +275,17 @@ object Warc {
     * in), and the `maxFiles` cap keeps that contract loud — a
     * "lookup" naming more files than the cap is a table scan wearing
     * a fetch's clothes and must be run as [[parseWarc]] instead, not
-    * silently absorbed into a driver-sized IN-list.
+    * silently absorbed into a driver-sized IN-list. One job
+    * ([[DriverCollect.distinctValues]]); a null file_id names no file
+    * and is dropped, as the inner join has always dropped such rows.
     */
   private def lookupFileIds(extents: DataFrame, op: String,
                             maxFiles: Int): Seq[Long] = {
     require(maxFiles >= 1, s"$op: maxFiles must be >= 1, got $maxFiles")
-    // a null file_id names no file: the inner join has always dropped
-    // such rows, so the prune list drops them too (collecting one
-    // would NPE with no mention of the contract)
-    val ids = extents.select(col("file_id"))
-      .filter(col("file_id").isNotNull).distinct()
-      .limit(maxFiles + 1).collect().map(_.getLong(0)).toSeq
-    require(ids.length <= maxFiles,
+    DriverCollect.distinctValues[Long](extents, col("file_id"), maxFiles,
       s"$op: the lookup batch touches more than $maxFiles distinct " +
         "files — the collected prune list must stay config-sized; " +
-        "split the batch or raise maxFiles deliberately")
-    ids.sorted
+        "split the batch or raise maxFiles deliberately").sorted
   }
 
   /** [[splitHttp]]'s row: the WARC record's provenance plus the HTTP
@@ -583,14 +580,48 @@ object Warc {
       .sortWithinPartitions(col("surt_key"))
       .write.mode("overwrite").partitionBy("shard").parquet(dir)
 
-  /** The cluster index over [[writeCdxShards]] output: one row per
-    * shard with its FIRST surt key — the config-sized artifact (shard
-    * count, not record count) that routes every lookup. One
-    * map-combined aggregate; at any archive size this stays
-    * broadcastable.
+  /** One row of the driver-side shard table: a shard's FIRST surt key
+    * (null only for a shard whose keys are all null), its id and its
+    * row count.
     */
-  def cdxClusterIndex(shards: DataFrame): DataFrame =
-    shards.groupBy(col("shard")).agg(min(col("surt_key")).as("first_key"))
+  final case class CdxShard(first_key: String, shard: Int, rows: Long)
+
+  /** Spark's string order, the one the range exchange placed the keys
+    * in and the serve's `<=` compares with: unsigned UTF-8 bytes.
+    * `String.compareTo` compares UTF-16 code units instead, which
+    * disagrees once a supplementary character (a surrogate pair) meets
+    * a character in U+E000–U+FFFF.
+    */
+  private val sparkKeyOrder: Ordering[String] =
+    Ordering.fromLessThan((a, b) => UTF8String.fromString(a)
+      .compareTo(UTF8String.fromString(b)) < 0)
+
+  /** The shard table over a [[writeCdxShards]] layout: one
+    * [[CdxShard]] per shard, sorted by first key in Spark's order
+    * (nulls first) — the config-sized artifact (shard count, not record
+    * count) that routes every lookup ([[assignShards]]) and sizes every
+    * coalesce. One job: each partition folds its rows into per-shard
+    * (min key, count), the driver merges the folds. No aggregate, no
+    * shuffle; at any archive size the table stays driver-sized.
+    */
+  def cdxClusterIndex(shards: DataFrame): IndexedSeq[CdxShard] = {
+    val folds = shards.select(col("shard"), col("surt_key"))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val acc = scala.collection.mutable.HashMap.empty[Int, (UTF8String, Long)]
+        rows.foreach { r =>
+          val (lo, n) = acc.getOrElse(r.getInt(0), (null, 0L))
+          val k = if (r.isNullAt(1)) null else r.getUTF8String(1)
+          acc(r.getInt(0)) =
+            (if (k == null || (lo != null && lo.compareTo(k) <= 0)) lo else k.clone(), n + 1)
+        }
+        acc.iterator.map { case (sh, (lo, n)) =>
+          (sh, if (lo == null) null else lo.toString, n) }
+      }.collect()
+    folds.groupBy(_._1).toIndexedSeq.map { case (sh, fs) =>
+      CdxShard(fs.flatMap(f => Option(f._2)).reduceOption(sparkKeyOrder.min(_, _)).orNull,
+        sh, fs.map(_._3).sum)
+    }.sortBy(s => Option(s.first_key))(Ordering.Option(sparkKeyOrder))
+  }
 
   /** Read a [[writeCdxShards]] layout with its schema GIVEN (the index
     * row schema plus the `shard` partition column) instead of inferred:
@@ -604,39 +635,40 @@ object Warc {
     spark.read.schema(indexSchema.add("shard",
         org.apache.spark.sql.types.IntegerType)).parquet(dir)
 
-  /** Route lookup keys to their shard: the sorted (first_key, shard)
-    * array rides a one-row broadcast (the documented broadcast-scalar
-    * pattern — the cluster index is shard-count-sized by
-    * construction), and each key's shard is "the last first_key ≤
-    * key" via a scan-stage array HOF — no join, no shuffle, pure
-    * codegen'd projection. A key below the index floor raises by
-    * default: a FRESH [[writeCdxShards]] build's floor IS the global
-    * min key, so a below-floor key means the cluster index does not
-    * cover the key space and a silent wrong-shard route would serve a
-    * false miss. `clampFloor = true` is the COMPACTED layout's rule
-    * instead: once [[compactCdxShards]] has run, the lowest-keyed
-    * shard owns the open range (-inf, second first_key) — a
-    * below-floor INSERT extends it (and the serve-time cluster index,
-    * re-derived from the shards, then carries the new floor).
+  /** Route lookup keys to their shard: the shard table
+    * ([[cdxClusterIndex]], shard-count-sized by construction) rides
+    * the plan as a typed literal array in its key order, and each key's
+    * shard is "the last first_key ≤ key" via a scan-stage array HOF —
+    * no join, no shuffle, no broadcast, pure codegen'd projection. A
+    * key below the table's floor raises by default: a FRESH
+    * [[writeCdxShards]] build's floor IS the global min key, so a
+    * below-floor key means the table does not cover the key space and
+    * a silent wrong-shard route would serve a false miss.
+    * `clampFloor = true` is the COMPACTED layout's rule instead: once
+    * [[compactCdxShards]] has run, the lowest-keyed shard owns the open
+    * range (-inf, second first_key) — a below-floor INSERT extends it
+    * (and the serve-time table, re-derived from the shards, then
+    * carries the new floor). Over an empty table a clamped key routes
+    * to no shard (null).
     */
   def assignShards(queries: DataFrame, key: Column,
-                   clusterIndex: DataFrame,
+                   table: Seq[CdxShard],
                    clampFloor: Boolean = false): DataFrame = {
-    val idx = clusterIndex.agg(array_sort(
-      collect_list(struct(col("first_key"), col("shard")))).as("__idx"))
+    val routes = table.filter(_.first_key != null)
+    val idx = typedLit(routes)
     val below =
-      if (clampFloor) element_at(col("__idx"), 1).getField("shard")
+      if (clampFloor) routes.headOption.fold(lit(null).cast("int"))(r => lit(r.shard))
       else raise_error(concat(
         lit("assignShards: key '"), key,
         lit("' sorts below the cluster-index floor — the index must " +
           "cover the key space"))).cast("int")
-    queries.crossJoin(broadcast(idx))
-      .withColumn("__pos", size(filter(col("__idx"),
+    queries
+      .withColumn("__pos", size(filter(idx,
         e => e.getField("first_key") <= key)))
       .withColumn("shard", when(col("__pos") >= 1,
-        element_at(col("__idx"), col("__pos")).getField("shard"))
+        element_at(idx, col("__pos")).getField("shard"))
         .otherwise(below))
-      .drop("__idx", "__pos")
+      .drop("__pos")
   }
 
   /** LSM maintenance for the two-level CDX layout — merge an
@@ -684,13 +716,12 @@ object Warc {
     // the layout's schema is the segment schema + shard by the write
     // contract — read it GIVEN rather than inferred (no footer pass)
     val current = readCdxShards(spark, dir, segments.schema)
-    val cluster = cdxClusterIndex(current)
     // the routed delta is consumed twice (the affected-shard collect
     // below and the merge write) and is delta-sized BY CONTRACT —
     // checkpoint it so the segment's plan (typically a parse + index
     // projection) runs once, not once per consumer
-    val assigned = assignShards(segments, col("surt_key"), cluster,
-      clampFloor = true).localCheckpoint(eager = false)
+    val assigned = assignShards(segments, col("surt_key"),
+      cdxClusterIndex(current), clampFloor = true).localCheckpoint(eager = false)
     // the tombstone ledger is consumed twice (the affected-shard probe
     // and the merge anti-join) and takedown-batch-sized by contract —
     // its plan (often a revisit election over an index union) runs once
@@ -702,10 +733,11 @@ object Warc {
     // probe: two separate collects paid a second job's planning/commit
     // latency for rows that union into the same driver array anyway
     val segShardIds = assigned.select(col("shard"))
-    val affected = tombKeys.fold(segShardIds) { t =>
-      segShardIds.unionByName(current.join(broadcast(t),
-        Seq("file_id", "offset")).select(col("shard")))
-    }.distinct().collect().map(_.getInt(0)).sorted
+    val affected = DriverCollect.distinctValues[Int](
+      tombKeys.fold(segShardIds) { t =>
+        segShardIds.unionByName(current.join(broadcast(t),
+          Seq("file_id", "offset")).select(col("shard")))
+      }, col("shard")).sorted
     if (affected.isEmpty) return
     val cols = current.columns.map(col)
     val keep = current.filter(col("shard").isin(affected.map(Int.box): _*))
@@ -756,21 +788,21 @@ object Warc {
   }
 
   /** THE pruned two-level lookup: `keys` (a surt_key frame) route to
-    * their shards through the cluster index derived from `shards`
-    * ([[assignShards]], `clampFloor` as there), the lookup batch's
-    * shard ids — config-bounded by the lookup contract — collect so
-    * the scan prunes statically to those directories, and the routed
-    * keys broadcast-join their shards on (shard, surt_key). A lookup
-    * reads its shards, never the whole index. The routed keys are
-    * lookup-batch-sized and consumed twice (the prune collect AND the
-    * join), so they are routed once and checkpointed.
+    * their shards through the shard table of `shards` (one job,
+    * [[cdxClusterIndex]]; routed by [[assignShards]], `clampFloor` as
+    * there), the lookup batch's shard ids — config-bounded by the
+    * lookup contract — collect in one job so the scan prunes statically
+    * to those directories, and the routed keys broadcast-join their
+    * shards on (shard, surt_key). A lookup reads its shards, never the
+    * whole index. The routed keys are lookup-batch-sized and consumed
+    * twice (the prune collect AND the join), so they are routed once
+    * and checkpointed.
     */
   def serveCdx(shards: DataFrame, keys: DataFrame,
                clampFloor: Boolean = false): DataFrame = {
     val assigned = assignShards(keys, col("surt_key"),
       cdxClusterIndex(shards), clampFloor).localCheckpoint(eager = false)
-    val ids = assigned.select(col("shard")).distinct()
-      .collect().map(_.getInt(0)).sorted
+    val ids = DriverCollect.distinctValues[Int](assigned, col("shard")).sorted
     shards.filter(col("shard").isin(ids.map(Int.box): _*))
       .join(broadcast(assigned), Seq("shard", "surt_key"))
   }
@@ -797,8 +829,8 @@ object Warc {
       if (prepareLayout(spark, dir, "splitCdxShard"))
         Some(readCdxShards(spark, dir, indexSchema))
       else None
-    val shardIds = current.fold(Array.empty[Int])(
-      _.select(col("shard")).distinct().collect().map(_.getInt(0)))
+    val shardIds = current.fold(Seq.empty[Int])(
+      DriverCollect.distinctValues[Int](_, col("shard")))
     require(shardIds.contains(shard),
       s"splitCdxShard: shard $shard not present in $dir " +
         s"(have ${shardIds.sorted.mkString(", ")})")
@@ -844,18 +876,16 @@ object Warc {
     val spark = org.apache.spark.sql.SparkSession.active
     if (!prepareLayout(spark, dir, "coalesceCdxShards")) return
     val current = readCdxShards(spark, dir, indexSchema)
-    // (shard, first_key, rows) in key order — config-sized collect
-    val stats = current.groupBy(col("shard"))
-      .agg(min(col("surt_key")).as("first_key"), count(lit(1)).as("n"))
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
-      .sortBy(_._2)
-    val floor = minRows(stats.map(_._3).sum)
+    // the shard table is the stats pass: (first_key, shard, rows) in
+    // Spark's key order, the order adjacency must follow
+    val stats = cdxClusterIndex(current)
+    val floor = minRows(stats.map(_.rows).sum)
     require(floor >= 1, s"coalesceCdxShards: minRows must be >= 1, got $floor")
     val groups = scala.collection.mutable.ArrayBuffer
       .empty[Vector[(Int, Long)]]
     var cur = Vector.empty[(Int, Long)]
     def close(): Unit = { if (cur.size >= 2) groups += cur; cur = Vector.empty }
-    stats.foreach { case (sh, _, n) =>
+    stats.foreach { case CdxShard(_, sh, n) =>
       if (n >= floor) close() // adequate: never joins a group
       else {
         cur = cur :+ ((sh, n))
@@ -864,7 +894,7 @@ object Warc {
     }
     close()
     if (groups.isEmpty) return
-    val nextId = stats.map(_._1).max + 1
+    val nextId = stats.map(_.shard).max + 1
     // old shard id -> its group's fresh output id
     val mapping = groups.zipWithIndex.flatMap { case (g, gi) =>
       g.map { case (sh, _) => (sh, nextId + gi) }

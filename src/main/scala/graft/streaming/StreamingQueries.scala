@@ -939,17 +939,17 @@ object StreamingQueries {
 
   /** p174's two-level CDX serve AT stream time — lookup batches
     * arrive as a stream against a FROZEN shard layout (the q113
-    * frozen-artifact shape: the sorted shards + cluster index are the
-    * served generation; maintenance is [[graft.sources.Warc
+    * frozen-artifact shape: the sorted shards + their shard table are
+    * the served generation; maintenance is [[graft.sources.Warc
     * .compactCdxShards]]'s separate job). Each micro-batch's keys
-    * route through the SAME scan-stage cluster-index HOF the batch
-    * serve uses (a one-row broadcast riding the stream — no state,
-    * no shuffle on the streaming side) and hit their shards via a
-    * stream-static equi-join on (shard, surt_key); append mode, zero
-    * state rows. The static-side partition pruning of the batch path
-    * becomes the join's shard key here — per-batch static pruning is
-    * the engine's dynamic-filter territory, documented, not faked
-    * with a collect on a stream.
+    * route through the SAME scan-stage shard-table HOF the batch
+    * serve uses (the table collected once at start, riding the plan as
+    * a literal — no state, no join, no shuffle on the streaming side)
+    * and hit their shards via a stream-static equi-join on (shard,
+    * surt_key); append mode, zero state rows. The static-side
+    * partition pruning of the batch path becomes the join's shard key
+    * here — per-batch static pruning is the engine's dynamic-filter
+    * territory, documented, not faked with a collect on a stream.
     */
   def cdxServeStream(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = graft.Tables.documents(spark, sfDir)
@@ -959,7 +959,7 @@ object StreamingQueries {
     val dir = graft.sources.Sinks.tempArtifactDir("cdx_serve_shards")
     graft.sources.Warc.writeCdxShards(cdx, dir, numShards = 8)
     val shards = graft.sources.Warc.readCdxShards(spark, dir, cdx.schema)
-    val cluster = graft.sources.Warc.cdxClusterIndex(shards)
+    val table = graft.sources.Warc.cdxClusterIndex(shards)
     val keys = staged(docs.filter(col("doc_id") % 97 === 0)
         .select(concat(lit("HTTPS://WWW.SRC"),
           (col("doc_id") % 20).cast("string"), lit(".COM:443/p/"),
@@ -968,7 +968,7 @@ object StreamingQueries {
       .select(graft.functions.SourceFamily.surtKey(col("url"))
         .as("surt_key"))
     val assigned = graft.sources.Warc.assignShards(keys, col("surt_key"),
-      cluster)
+      table)
     runToMemory(
       assigned.join(shards, Seq("shard", "surt_key"))
         .select(col("surt_key"), col("target_uri"), col("file_id"),

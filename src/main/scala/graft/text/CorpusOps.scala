@@ -262,9 +262,8 @@ object CorpusOps {
     */
   def evalShingleHashes(evalDocs: DataFrame, evalText: Column,
                         n: Int = 3): Set[String] =
-    evalDocs.select(explode(graft.functions.ShingleMd5(evalText, n)).as("h"))
-      .distinct()
-      .collect().map(_.getString(0)).toSet
+    graft.operators.DriverCollect.distinctValues[String](evalDocs,
+      explode(graft.functions.ShingleMd5(evalText, n))).toSet
 
   /** [[scrubSpans]] as a PURE MAP-SIDE transform: the eval set arrives
     * as a broadcast exact hash set and every document scrubs itself in

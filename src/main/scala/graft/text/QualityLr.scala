@@ -113,8 +113,8 @@ object QualityLr {
     val feat = featureRows(docs, id, text, dim).localCheckpoint()
     val lab = labelRows(docs, id, isGood).localCheckpoint()
     val nDf = lab.agg(count(lit(1)).as("n"))
-    var w: Map[Long, Long] = feat.select(col("bucket")).distinct()
-      .collect().map(_.getLong(0) -> 0L).toMap
+    var w: Map[Long, Long] = graft.operators.DriverCollect
+      .distinctValues[Long](feat, col("bucket")).map(_ -> 0L).toMap
     var bias = 0L
     var it = 0
     while (it < iters) {

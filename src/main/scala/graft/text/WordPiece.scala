@@ -124,9 +124,8 @@ object WordPiece {
   /** [[trainedVocab]] off an already-reduced (word, freq) frame. */
   def trainedVocabFromWords(words: DataFrame, mergesDf: DataFrame,
                             maxAlphabet: Int = 1 << 16): Seq[String] = {
-    val seeds = seedSymbolRows(words).select(col("sym")).distinct()
-      .limit(maxAlphabet + 1).collect().map(_.getString(0))
-    require(seeds.length <= maxAlphabet,
+    val seeds = graft.operators.DriverCollect.distinctValues[String](
+      seedSymbolRows(words), col("sym"), maxAlphabet,
       s"trainedVocab: seed alphabet exceeds $maxAlphabet symbols — not a " +
         "natural-language corpus, or the cap needs an explicit raise")
     val merged = mergesDf.orderBy(col("rank")).select(col("merged"))

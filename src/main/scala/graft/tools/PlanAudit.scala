@@ -59,14 +59,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *  - round-9 entries: p162 SortAggregate (expandSitemaps'
   *    latest-lastmod max-struct election — q20's accepted carry-the-
   *    payload shape, one row per URL per partition); p169 NestedLoop
-  *    (p113's one-row budget-totals scalar priced in byte tokens);
-  *    p174 NestedLoop (assignShards' cluster index — shard-count-
-  *    sized by construction — rides a one-row broadcast cross join,
-  *    p45's accepted shape) + SortAggregate (cdxClusterIndex's
-  *    min(first_key) string election over shard-count groups, q20's
-  *    bounded shape); since p174 serves through Warc.serveCdx, which
-  *    checkpoints its routed keys, both shapes sit upstream of the
-  *    checkpoint and may no longer print.
+  *    (p113's one-row budget-totals scalar priced in byte tokens).
   *  - p189 SortAggregate: conditionalRequests' latest-stored-record
   *    election is a max(struct) carrying the validator payload —
   *    q20's accepted shape, one row per URL per partition.
@@ -74,13 +67,6 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *    type-total scalar rides a broadcast cross join — p45's accepted
   *    one-row shape (q143/q146 run the same scorers stream-static;
   *    p206 scores held-out docs against the even-slice model).
-  *  - round-10: p183 runs p174's serve shapes (assignShards' one-row
-  *    broadcast cross join; cdxClusterIndex's min(first_key)
-  *    SortAggregate) inside compactCdxShards and Warc.serveCdx —
-  *    accepted and documented, though both checkpoint their routed
-  *    keys (and the fetch paths their lookup-sized extents), so the
-  *    final plan this tool inspects sits downstream of them and may
-  *    not print the flags at all.
   *  - also inheriting the same two accepted shapes (verified per
   *    entry): p81/p83/p93/p94/p95 (one-row corpus/stats/class-totals
   *    scalars riding broadcast cross joins — p45/p49's shape),

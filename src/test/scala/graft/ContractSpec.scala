@@ -27,20 +27,8 @@ class ContractSpec extends AnyFunSuite {
   }
 
   test("Tables.table opens each table with the schema spark.read.parquet infers, for all 10 tables and a Spark-written copy, without a Spark job") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def jobsOf[A](body: => A): (A, Int) = {
-      org.apache.spark.graft.BusBridge.drain(spark.sparkContext)
-      jobs.set(0)
-      val a = body
-      org.apache.spark.graft.BusBridge.drain(spark.sparkContext)
-      (a, jobs.get)
-    }
+    import TestSpark.jobsOf
     val copy = java.nio.file.Files.createTempDirectory("graft_footer_").toString
-    spark.sparkContext.addSparkListener(listener)
     try {
       Tables.names.foreach { t =>
         val path = s"${TestSpark.sf}/$t.parquet"
@@ -58,7 +46,6 @@ class ContractSpec extends AnyFunSuite {
       val (opened, openJobs) = jobsOf(Tables.table(spark, copy, "documents").schema)
       assert(openJobs == 0 && opened == inferred)
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(copy))
     }
   }

@@ -1073,4 +1073,46 @@ class OperatorsSpec extends AnyFunSuite {
       Dedup.cdcChunks(docs, col("id"), col("text"), hexZeros = 9)
     }
   }
+
+  test("DriverCollect.distinctValues: the distinct() set without nulls, one job, a cap that refuses iff the global distinct count exceeds it") {
+    import TestSpark.jobsOf
+    // duplicates of every value span all 8 partitions; every 10th row null
+    val df = spark.range(0, 1000, 1, 8).select(
+      when(col("id") % 10 === 0, lit(null)).otherwise(col("id") % 37).as("v"))
+    val (got, jobs) = jobsOf(DriverCollect.distinctValues[Long](df, col("v")))
+    assert(jobs == 1, s"distinctValues ran $jobs jobs")
+    val expect = df.distinct().collect().filterNot(_.isNullAt(0)).map(_.getLong(0))
+    assert(got.length == expect.length && got.toSet == expect.toSet)
+    // exactly `cap` distinct values, one per partition: no partition
+    // alone exceeds the cap, only the union decides
+    val spread = spark.range(0, 8, 1, 8).toDF("v")
+    assert(DriverCollect.distinctValues[Long](spread, col("v"), cap = 8,
+      overCap = "over").sorted == (0L until 8L))
+    val e = intercept[IllegalArgumentException](
+      DriverCollect.distinctValues[Long](spread, col("v"), cap = 7, overCap = "over 7"))
+    assert(e.getMessage == "requirement failed: over 7")
+    // the two capped callers keep their refusals word for word
+    val recs = (0L until 6L).map(i => (i, i, s"body $i")).toDF("f", "i", "b")
+    val files = graft.sources.Warc.writeWarc(recs, col("f"), col("i"),
+      lit("conversion"), concat(lit("https://h.com/p/"), col("i")), col("b"))
+    val extents = graft.sources.Warc.parseWarc(files, col("file_id"), col("payload"))
+      .select(col("file_id"), col("record_idx"), col("offset"), col("record_bytes"))
+    assert(graft.sources.Warc.fetchRecords(files, col("file_id"), col("payload"),
+      extents, maxFiles = 6).count() == 6)
+    val fe = intercept[IllegalArgumentException](graft.sources.Warc.fetchRecords(
+      files, col("file_id"), col("payload"), extents, maxFiles = 5))
+    assert(fe.getMessage == "requirement failed: fetchRecords: the lookup batch " +
+      "touches more than 5 distinct files — the collected prune list must stay " +
+      "config-sized; split the batch or raise maxFiles deliberately")
+    val words = Seq("a", "b", "c", "d", "a", "b", "c", "d").map(_ -> 1L)
+      .toDF("word", "freq").repartition(4)
+    val noMerges = Seq.empty[(Long, String)].toDF("rank", "merged")
+    assert(graft.text.WordPiece.trainedVocabFromWords(words, noMerges,
+      maxAlphabet = 4) == Seq("a", "b", "c", "d"))
+    val we = intercept[IllegalArgumentException](
+      graft.text.WordPiece.trainedVocabFromWords(words, noMerges, maxAlphabet = 3))
+    assert(we.getMessage == "requirement failed: trainedVocab: seed alphabet " +
+      "exceeds 3 symbols — not a natural-language corpus, or the cap needs an " +
+      "explicit raise")
+  }
 }

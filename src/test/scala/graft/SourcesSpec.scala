@@ -424,8 +424,7 @@ class SourcesSpec extends AnyFunSuite {
       // every input row landed exactly once
       assert(shards.count() == 40)
       val cluster = Warc.cdxClusterIndex(shards)
-      val bounds = cluster.orderBy(col("shard"))
-        .collect().map(r => (r.getInt(0), r.getString(1)))
+      val bounds = cluster.sortBy(_.shard).map(s => (s.shard, s.first_key)).toArray
       // ranges are DISJOINT and SORTED: shard i's first key < shard
       // i+1's first key, and every key of shard i sorts below it —
       // the property that makes "route to one shard" correct
@@ -986,5 +985,90 @@ class SourcesSpec extends AnyFunSuite {
       .map(i => (f"com,s${i % 40}%02d)/p/$i", i.toLong)).sorted
     assert(a._1 == expect)
     assert(b._1 == expect && c._1 == expect)
+  }
+
+  test("Warc: coalesceCdxShards orders shards by Spark's UTF-8 key order — an undersized supplementary-character shard never merges across an adequate U+FF01 shard") {
+    import org.apache.spark.sql.functions.col
+    import graft.sources.Warc
+    // UTF-8 bytes order the three first keys \uE000 < \uFF01 < U+1F600;
+    // UTF-16 code units put U+1F600 (a surrogate pair, 0xD83D…) first
+    val keys = Seq(0 -> "com,a)/\uE000", 1 -> "com,a)/\uFF01",
+      1 -> "com,a)/\uFF01x", 1 -> "com,a)/\uFF01y", 2 -> "com,a)/\uD83D\uDE00")
+    val cdx = keys.zipWithIndex
+      .map { case ((sh, k), i) => (k, i.toLong, i * 100L, 50L, s"d$i", sh) }
+      .toDF("surt_key", "file_id", "offset", "record_bytes", "digest", "shard")
+      .withColumn("target_uri", col("surt_key"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_cdx_utf8").toString
+    try {
+      cdx.write.mode("overwrite").partitionBy("shard").parquet(dir)
+      val schema = cdx.drop("shard").schema
+      val table = Warc.cdxClusterIndex(Warc.readCdxShards(spark, dir, schema))
+      assert(table.map(_.shard) == Seq(0, 1, 2), table)
+      // shards 0 and 2 are undersized but not adjacent: nothing merges
+      Warc.coalesceCdxShards(dir, schema, minRows = _ => 2)
+      val after = Warc.readCdxShards(spark, dir, schema)
+      // every key is served from the shard that holds it
+      val served = Warc.serveCdx(after, keys.map(_._2).toDF("surt_key"))
+        .select(col("surt_key")).as[String].collect().sorted.toSeq
+      assert(served == keys.map(_._2).sorted, served)
+      assert(after.select(col("shard")).distinct().as[Int].collect().sorted
+        .toSeq == Seq(0, 1, 2))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  /** A 40-key, 4-shard [[graft.sources.Warc.writeCdxShards]] layout in
+    * a temp dir, removed after `body`.
+    */
+  private def withCdxLayout(body: (String, org.apache.spark.sql.DataFrame) => Unit): Unit = {
+    import org.apache.spark.sql.functions.col
+    val cdx = (0 until 40)
+      .map(i => (f"com,s$i%02d)/p", i.toLong, i.toLong * 100, 50L, s"d$i"))
+      .toDF("surt_key", "file_id", "offset", "record_bytes", "digest")
+      .withColumn("target_uri", col("surt_key"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_cdx_jobs").toString
+    try {
+      graft.sources.Warc.writeCdxShards(cdx, dir, numShards = 4)
+      body(dir, cdx)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  test("Warc: serveCdx runs 4 Spark jobs — the shard table, the shard-id prune collect, the broadcast and the result") {
+    withCdxLayout { (dir, cdx) =>
+      val shards = graft.sources.Warc.readCdxShards(spark, dir, cdx.schema)
+      val keys = Seq("com,s03)/p", "com,s17)/p", "com,s33)/p").toDF("surt_key")
+      // the prune collect also fills the routed keys' checkpoint
+      val (hits, jobs) = TestSpark.jobsOf(
+        graft.sources.Warc.serveCdx(shards, keys).collect())
+      assert(hits.length == 3)
+      assert(jobs == 4, s"serveCdx + collect ran $jobs jobs")
+    }
+  }
+
+  test("Warc: the coalesceCdxShards stats pass is one Spark job") {
+    withCdxLayout { (dir, cdx) =>
+      // every shard adequate: the stats pass runs and nothing publishes
+      val (_, jobs) = TestSpark.jobsOf(
+        graft.sources.Warc.coalesceCdxShards(dir, cdx.schema, minRows = _ => 1))
+      assert(jobs == 1, s"the coalesce stats pass ran $jobs jobs")
+    }
+  }
+
+  test("Warc: fetchRecords plans with 2 Spark jobs — the eager extents checkpoint and one prune collect") {
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    import graft.sources.Warc
+    val recs = (0L until 6L).map(i => (i % 3, i, s"body $i")).toDF("f", "i", "b")
+    val files = Warc.writeWarc(recs, col("f"), col("i"), lit("conversion"),
+      concat(lit("https://h.com/p/"), col("i")), col("b")).localCheckpoint()
+    val extents = Warc.parseWarc(files, col("file_id"), col("payload"))
+      .select(col("file_id"), col("record_idx"), col("offset"),
+        col("record_bytes")).localCheckpoint()
+    val (fetched, jobs) = TestSpark.jobsOf(
+      Warc.fetchRecords(files, col("file_id"), col("payload"), extents))
+    assert(jobs == 2, s"fetchRecords planned with $jobs jobs")
+    assert(fetched.count() == 6)
   }
 }

@@ -39,6 +39,25 @@ object TestSpark {
     try body finally spark.sparkContext.setLogLevel("WARN")
   }
 
+  /** `body`'s result and the number of Spark jobs it started. The
+    * listener bus delivers asynchronously, so it is drained before the
+    * count resets and again before it is read.
+    */
+  def jobsOf[A](body: => A): (A, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.BusBridge.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val a = body
+      org.apache.spark.graft.BusBridge.drain(spark.sparkContext)
+      (a, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   /** Stop a streaming query with the stop-window noise suppressed —
     * callers quiesce with `processAllAvailable()` first, so everything
     * the test asserts is already materialized when this runs. The OFF
